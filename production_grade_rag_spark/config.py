@@ -24,7 +24,6 @@ class EngineConfig:
 
     # embeddings (reference: config/rag_config.yaml:22-27)
     embedding_dim: int = 64            # testdata embeddings are 64-d
-    embedding_model: str = "hash-64"   # deterministic feature-hash embedder
     # backend dispatch (operators/embedding.embed): "hash" | "model" |
     # "auto" (model when sentence-transformers is importable, else the
     # documented hash fallback).  "hash" is the default because query

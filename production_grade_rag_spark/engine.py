@@ -107,13 +107,7 @@ class SparkRagEngine:
         chunks = chunker(kept, text_col=text_col,
                          chunk_size=c.chunk_size, overlap=c.chunk_overlap,
                          min_chars=c.min_chunk_chars)
-        return embedding.embed(chunks, backend=c.embedding_backend,
-                               text_col="content", id_col="chunk_id",
-                               dim=c.embedding_dim,
-                               normalize=c.normalize_embeddings,
-                               model_name=c.model_name,
-                               batch_size=c.model_batch_size,
-                               encoder_factory=c.encoder_factory)
+        return self._embed(chunks)
 
     def build_parent_child_index(self, documents: DataFrame,
                                  text_col: str = "text") -> DataFrame:
@@ -135,29 +129,25 @@ class SparkRagEngine:
             parent_overlap=c.parent_chunk_overlap,
             child_size=c.child_chunk_size,
             child_overlap=c.child_chunk_overlap)
+        return self._embed(chunks)
+
+    def _embed(self, chunks: DataFrame) -> DataFrame:
+        """M3 on the chunk frame with the configured backend."""
+        c = self.config
         return embedding.embed(chunks, backend=c.embedding_backend,
-                               text_col="content", id_col="chunk_id",
                                dim=c.embedding_dim,
                                normalize=c.normalize_embeddings,
                                model_name=c.model_name,
                                batch_size=c.model_batch_size,
                                encoder_factory=c.encoder_factory)
 
-    def _model_backend_active(self) -> bool:
-        """True when build_index would take the model path — the
-        same dispatch condition as operators.embedding.embed."""
-        c = self.config
-        return (c.embedding_backend == "model"
-                or (c.embedding_backend == "auto"
-                    and (embedding.model_available()
-                         or c.encoder_factory is not None)))
-
     def embed_query(self, query_text: str) -> list[float]:
         """Encode a query with the SAME embedder build_index used
         (reference: advanced_search.py:320-324) — the model backend's
         driver-side encoder when active, else the hash twin."""
         c = self.config
-        if self._model_backend_active():
+        if embedding.uses_model_backend(c.embedding_backend,
+                                        c.encoder_factory):
             return embedding.encode_query(
                 query_text, model_name=c.model_name,
                 normalize=c.normalize_embeddings,

@@ -1,24 +1,23 @@
 """Embedding generation (SURVEY §2.8 M3).
 
 The reference embeds with sentence-transformers (document_processor.py:
-125-150).  That model isn't in this container and is nondeterministic
-across platforms, so the engine ships two backends behind one API:
+125-150).  That library is an optional dependency and its model is
+nondeterministic across platforms, so the engine ships two backends
+behind one API (``embed``):
 
-- ``hash_embed``       : deterministic feature-hash embedder, 100%
-  built-in expressions (explode -> md5 bucket/sign -> groupBy ->
-  assemble).  The correctness path — reproducible everywhere, and the
-  shape (one shuffle on the id) is exactly what a model embedder needs.
-- ``hash_embed_pandas``: same math via an Arrow-batched pandas UDF —
-  the slot where a real model (per-executor singleton, batched encode)
-  plugs in; also serves as the UDF-path reference for tests.
+- the deterministic feature-hash embedder, one Arrow-batched pandas
+  UDF (one ArrowEvalPython node, no shuffle, no join) in two views:
+  ``hash_embed_arrow`` (dense vectors) and ``hash_components_arrow``
+  (sparse (id, bucket, val) rows, the oracle-checkable form);
+- ``model_embed``: the per-executor model singleton (sentence-
+  transformers, or any encoder factory) behind the same UDF shape.
+
+``embed_text_py`` is the pure-Python reference of the hash math: the
+query-side encoder and the twin every Spark result is pinned against.
 
 Token hashing: bucket = int(md5(token)[:8], 16) % dim, sign from the
 9th hex nibble — md5 because Spark, DuckDB, and Python all agree on it.
-
-100 TB notes: the builtin path is explode + partial-agg (map-side
-combine) + one shuffle on the row id; no driver collection, no skew
-(ids are unique).  dim stays a column-free constant so Tungsten
-codegens the assembly loop.
+Tokens are ``text.strip().lower().split()``; NULL embeds as "".
 """
 
 from __future__ import annotations
@@ -27,118 +26,23 @@ import hashlib
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import WORD_SPLIT_RE, pystrip
 from .dedup import explode_attr
 
 
-def _bucket(tok: Column, dim: int) -> Column:
-    return F.pmod(F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long"),
-                  F.lit(dim))
-
-
-def _sign(tok: Column) -> Column:
-    nibble = F.conv(F.substring(F.md5(tok), 9, 1), 16, 10).cast("int")
-    return F.when(nibble % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
-def tokenize(col: Column) -> Column:
-    """Whitespace tokens, lowered, Python-strip first (F3 semantics)."""
-    t = F.lower(pystrip(col))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")) \
-            .otherwise(F.split(t, WORD_SPLIT_RE))
-
-
-def hash_components(df: DataFrame, text_col: str = "content",
-                    id_col: str = "chunk_id", dim: int = 64) -> DataFrame:
-    """Sparse components of the feature-hash embedding: one row per
-    (id, bucket) with the signed token-count sum.  This is the partial
-    (pre-assembly, pre-normalization) stage of ``hash_embed`` — exposed
-    because it is fully relational (explode -> hash -> groupBy) and so
-    oracle-checkable without array-stringification hazards."""
-    # r15: project the token array BEFORE exploding it — handing the
-    # generator an inline tokenize() expression makes the optimizer's
-    # inferred non-empty filter re-evaluate the strip+split regex per
-    # row (the dedup.shingles_of lesson); an attribute reference keeps
-    # it to one evaluation.  Same rows, same multiplicity.
-    toks = (df.select(F.col(id_col),
-                      tokenize(F.col(text_col)).alias("__toks"))
-              .select(F.col(id_col),
-                      explode_attr(F.col("__toks")).alias("__tok"))
-              .select(F.col(id_col),
-                      _bucket(F.col("__tok"), dim).alias("bucket"),
-                      _sign(F.col("__tok")).alias("__sign")))
-    return (toks.groupBy(id_col, "bucket")
-                .agg(F.sum("__sign").alias("val")))
-
-
-def hash_embed(df: DataFrame, text_col: str = "content",
-               id_col: str = "chunk_id", dim: int = 64,
-               normalize: bool = True,
-               out_col: str = "embedding") -> DataFrame:
-    """Deterministic feature-hash embedding, builtin-only.
-
-    Plan: explode tokens -> hash to (bucket, sign) -> partial+final sum
-    per (id, bucket) -> assemble dense array via map lookup.  Rows with
-    zero tokens get the zero vector (left join keeps them).
-
-    r15: the assembled array and its norm are materialized as REAL
-    projections before the normalize step.  The old form passed the
-    whole map-assembly tree into ``l2_normalize``, whose per-element
-    division lambda inlines the norm subtree — which itself inlines
-    the dim-element assembly twice — so each row paid O(dim^2)
-    interpreted map lookups (~295k element_at calls per row at the
-    flagship's dim=384).  Factored over attributes the math is the
-    SAME double ops in the same order: the zero-token and zero-norm
-    rows still come out as the raw zero vector (norm(0)=0 hits the
-    same ``when`` branch l2_normalize used), so every consumer oracle
-    stands (pinned by tests/test_embedding.py).
-    """
-    from ..functions.vector import norm
-    sums = (hash_components(df, text_col, id_col, dim)
-            .groupBy(id_col)
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct(F.col("bucket").alias("__bucket"),
-                                        F.col("val").alias("__val")))).alias("__m")))
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: F.coalesce(F.element_at(F.col("__m"), j.cast("long")), F.lit(0.0)),
-    )
-    out = (df.join(sums, id_col, "left")
-             .withColumn("__vec", F.when(F.col("__m").isNull(),
-                                         F.array_repeat(F.lit(0.0), dim))
-                                   .otherwise(vec))
-             .drop("__m"))
-    if normalize:
-        out = (out.withColumn("__n", norm(F.col("__vec")))
-                  .withColumn(out_col, F.when(
-                      F.col("__n") == 0, F.col("__vec"))
-                      .otherwise(F.transform(
-                          F.col("__vec"),
-                          lambda x: x / F.col("__n"))))
-                  .drop("__vec", "__n"))
-    else:
-        out = out.withColumnRenamed("__vec", out_col)
-    return out.withColumn("embedding_model", F.lit(f"hash-{dim}"))
-
-
 # --------------------------------------------------------------------------
-# r16: Arrow-vectorized embedder (optimization guide §4.2/§4.3).
+# Feature-hash embedder.
 #
-# The builtin ``hash_embed`` pays one interpreted md5+conv+pmod chain
-# per token (~225k tokens/corpus at sf0.1) plus two shuffles and a
-# join to assemble the dense array.  The same math per ROW in a batched
-# pandas UDF is one C-speed md5 per DISTINCT token (process-level
-# memo), zero shuffles, zero joins — and it is BIT-identical:
+# The hash math runs per ROW in a batched pandas UDF: one C-speed md5
+# per DISTINCT token (process-level memo), zero shuffles, zero joins.
+# Values are bit-identical to ``embed_text_py``:
 # - bucket sums accumulate ±1.0 in doubles, exact integers (< 2^53);
 # - the norm is sqrt over a sum of exact integer squares — exact in
-#   any order, and IEEE sqrt/division match the JVM's;
-# so the arrow path equals ``embed_text_py`` by construction (same
-# statements) and ``hash_embed`` by the pinned twin test
-# (tests/test_embedding.py).
+#   any order, and IEEE sqrt/division match everywhere;
+# pinned by tests/test_embedding.py.
 # --------------------------------------------------------------------------
 
 # process-level token -> (md5-high-32, sign) memo: tokens are Zipfian,
@@ -159,15 +63,25 @@ def _tok_hs(tok: str) -> tuple[int, float]:
     return c
 
 
+def _fold(text, dim: int) -> dict[int, float]:
+    """Signed token-count sum per touched bucket of one text, in
+    first-touch order (a bucket whose signs cancel keeps its 0.0)."""
+    d: dict[int, float] = {}
+    for tok in ("" if text is None else str(text)).strip().lower().split():
+        h32, sign = _tok_hs(tok)
+        b = h32 % dim
+        d[b] = d.get(b, 0.0) + sign
+    return d
+
+
 def _embed_batch(texts: list, dim: int, normalize: bool) -> list[list[float]]:
-    """Batched twin of ``embed_text_py`` (same statements, memoized
-    md5) — one list of dense vectors per Arrow batch."""
+    """Batched ``embed_text_py``: one list of dense vectors per Arrow
+    batch."""
     out = []
     for t in texts:
         vec = [0.0] * dim
-        for tok in ("" if t is None else str(t)).strip().lower().split():
-            h32, sign = _tok_hs(tok)
-            vec[h32 % dim] += sign
+        for b, v in _fold(t, dim).items():
+            vec[b] = v
         if normalize:
             n = sum(x * x for x in vec) ** 0.5
             if n > 0:
@@ -179,13 +93,10 @@ def _embed_batch(texts: list, dim: int, normalize: bool) -> list[list[float]]:
 def hash_embed_arrow(df: DataFrame, text_col: str = "content",
                      dim: int = 64, normalize: bool = True,
                      out_col: str = "embedding") -> DataFrame:
-    """Dense feature-hash embedding via one ArrowEvalPython node —
-    value-identical to ``hash_embed`` (pinned by tests/test_embedding
-    ::test_hash_embed_arrow_equals_builtin), with the explode/agg/join
-    assembly replaced by a per-row batched computation.  The right
-    backend when the dense vector is what downstream consumes (the
-    flagship cosine); keep ``hash_embed``/``hash_components`` where
-    the sparse relational view is the product."""
+    """Dense feature-hash embedding via one ArrowEvalPython node: every
+    input row keeps its place and gains ``out_col`` (``dim`` doubles,
+    L2-normalized unless ``normalize=False``; zero-token rows get the
+    zero vector) plus ``embedding_model`` = ``hash-{dim}``."""
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def embed_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -197,27 +108,20 @@ def hash_embed_arrow(df: DataFrame, text_col: str = "content",
 
 
 def _components_batch(texts: list, dim: int) -> list[list[dict]]:
-    out = []
-    for t in texts:
-        d: dict[int, float] = {}
-        for tok in ("" if t is None else str(t)).strip().lower().split():
-            h32, sign = _tok_hs(tok)
-            b = h32 % dim
-            d[b] = d.get(b, 0.0) + sign
-        out.append([{"bucket": b, "val": v} for b, v in d.items()])
-    return out
+    return [[{"bucket": b, "val": v} for b, v in _fold(t, dim).items()]
+            for t in texts]
 
 
 def hash_components_arrow(df: DataFrame, text_col: str = "content",
                           id_col: str = "chunk_id",
                           dim: int = 64) -> DataFrame:
-    """Sparse (id, bucket, val) components via one ArrowEvalPython
-    node + explode — same rows as ``hash_components`` (bucket sums are
-    exact signed-integer arithmetic; docs with zero tokens emit no
-    rows in both forms), without the per-token interpreted md5 chain
-    and the (id, bucket) shuffle: each doc's components are folded in
-    the Python worker and only the (small) per-doc component set is
-    exploded.  Pinned equal in tests/test_embedding.py."""
+    """Sparse components of the feature-hash embedding: one
+    (id, bucket, val) row per bucket a document's tokens touch, val the
+    signed token-count sum (the pre-normalization vector; a bucket
+    whose signs cancel keeps its 0.0 row, zero-token docs emit no
+    rows).  Each doc's components are folded in the Python worker and
+    only the small per-doc component set is exploded — no per-token
+    rows, no (id, bucket) shuffle."""
 
     @F.pandas_udf(T.ArrayType(T.StructType([
         T.StructField("bucket", T.LongType()),
@@ -236,7 +140,7 @@ def hash_components_arrow(df: DataFrame, text_col: str = "content",
 
 
 def embed_text_py(text: str, dim: int = 64, normalize: bool = True) -> list[float]:
-    """Pure-Python twin of ``hash_embed`` (for query vectors + tests)."""
+    """Pure-Python twin of ``hash_embed_arrow`` (for query vectors + tests)."""
     vec = [0.0] * dim
     toks = text.strip().lower().split()
     for tok in toks:
@@ -247,21 +151,6 @@ def embed_text_py(text: str, dim: int = 64, normalize: bool = True) -> list[floa
         if n > 0:
             vec = [x / n for x in vec]
     return vec
-
-
-def hash_embed_pandas(df: DataFrame, text_col: str = "content",
-                      dim: int = 64, normalize: bool = True,
-                      out_col: str = "embedding") -> DataFrame:
-    """Arrow-batched UDF backend — the plug point for a real model
-    (sentence-transformers singleton per executor, reference
-    rag_config.yaml:22-27); here it runs the deterministic hash math."""
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def embed_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: embed_text_py(t or "", dim, normalize))
-
-    return (df.withColumn(out_col, embed_udf(F.col(text_col)))
-              .withColumn("embedding_model", F.lit(f"hash-{dim}")))
 
 
 # ===========================================================================
@@ -415,27 +304,35 @@ def model_embed(df: DataFrame, text_col: str = "content",
               .withColumn("embedding_model", F.lit(model_name)))
 
 
+def uses_model_backend(backend: str, encoder_factory=None) -> bool:
+    """True when ``embed`` takes the model path: ``"model"``, or
+    ``"auto"`` with the model library importable or an explicit
+    ``encoder_factory``."""
+    return backend == "model" or (backend == "auto" and
+                                  (model_available()
+                                   or encoder_factory is not None))
+
+
 def embed(df: DataFrame, backend: str = "auto", text_col: str = "content",
-          id_col: str = "chunk_id", dim: int = 64, normalize: bool = True,
+          dim: int = 64, normalize: bool = True,
           out_col: str = "embedding", model_name: str = DEFAULT_MODEL,
           batch_size: int = DEFAULT_BATCH, encoder_factory=None) -> DataFrame:
     """Backend dispatch for M3:
 
-    - ``"hash"``  : deterministic builtin-expression embedder.
+    - ``"hash"``  : deterministic feature-hash embedder
+      (``hash_embed_arrow``).
     - ``"model"`` : sentence-transformers, or whatever
       ``encoder_factory`` supplies (raises if neither is available).
     - ``"auto"``  : model when the library is importable OR an explicit
-      ``encoder_factory`` is given, else the documented hash fallback —
-      the container-safe default.
+      ``encoder_factory`` is given (``uses_model_backend``), else the
+      documented hash fallback — the container-safe default.
     """
-    if backend == "model" or (backend == "auto" and
-                              (model_available()
-                               or encoder_factory is not None)):
+    if uses_model_backend(backend, encoder_factory):
         return model_embed(df, text_col=text_col, model_name=model_name,
                            batch_size=batch_size, normalize=normalize,
                            out_col=out_col,
                            encoder_factory=encoder_factory)
     if backend in ("hash", "auto"):
-        return hash_embed(df, text_col=text_col, id_col=id_col, dim=dim,
-                          normalize=normalize, out_col=out_col)
+        return hash_embed_arrow(df, text_col=text_col, dim=dim,
+                                normalize=normalize, out_col=out_col)
     raise ValueError(f"unknown embedding backend {backend!r}")

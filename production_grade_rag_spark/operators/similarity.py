@@ -281,13 +281,6 @@ def pairwise_similar(corpus: DataFrame, threshold: float,
              .select("id_a", "id_b", F.round("score", 6).alias("score")))
 
 
-def first_chunk_vectors(chunks: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """R6/W3: proxy each document by its FIRST chunk's embedding
-    (vector_store.py:306-342) via min_by — single agg, no window shuffle."""
-    return chunks.groupBy("doc_id").agg(
-        F.min_by(F.col(vec_col), F.col("chunk_index")).alias(vec_col))
-
-
 def ivf_topk(corpus: DataFrame, query_vec: list[float], k: int = 10,
              vec_col: str = "embedding", id_col: str = "vec_id",
              n_lists: int = 16, n_probe: int = 4,

@@ -178,30 +178,6 @@ def fingerprint(df: DataFrame, text_col: str = "text",
                     F.size("fingerprint").alias("fingerprint_size")))
 
 
-def fingerprint_resemblance(fp: DataFrame, threshold: float = 0.5,
-                            id_col: str = "doc_id") -> DataFrame:
-    """Pairwise resemblance from fingerprints (Jaccard over sampled
-    hash sets).  Same pair-pruning rules as the dedup suite apply at
-    scale (LSH-band the fingerprints); exact form here for oracles."""
-    from ..functions.text import nd_pin
-    a = fp.select(F.col(id_col).alias("id_a"), F.col("fingerprint").alias("__fa"))
-    b = fp.select(F.col(id_col).alias("id_b"), F.col("fingerprint").alias("__fb"))
-    # r15: fingerprints are distinct-element arrays, so the union ARRAY
-    # is never built (|A∪B| = |A|+|B|−|A∩B|, same integer, same double
-    # division and round); the intersection size is nd_pin'd so the
-    # threshold filter reads the slot instead of pushdown re-running
-    # the set expression per pair (see dedup.jaccard_verify).
-    res = (F.col("__i").cast("double")
-           / F.greatest(F.size("__fa") + F.size("__fb") - F.col("__i"),
-                        F.lit(1)))
-    return (a.join(b, F.col("id_a") < F.col("id_b"))
-             .withColumn("__i",
-                         nd_pin(F.size(F.array_intersect("__fa", "__fb"))))
-             .withColumn("resemblance", F.round(res, 6))
-             .filter(F.col("resemblance") >= threshold)
-             .select("id_a", "id_b", "resemblance"))
-
-
 # PII/URL redaction patterns — RE2-safe so Spark (Java regex) and the
 # DuckDB oracle agree; EMAIL is the classic conservative form.
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"

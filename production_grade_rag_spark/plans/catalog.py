@@ -487,10 +487,6 @@ def oracle_sql() -> dict[str, str]:
             if spec.oracle is not None}
 
 
-def headline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: spec.build for name, spec in CATALOG.items() if spec.headline}
-
-
 # Side-effect registrations: vector/dedup/text-analysis/events entries
 # live in catalog_ext to keep this file readable.  Imported at the
 # bottom so `register` and `_t` exist when catalog_ext imports back.

@@ -37,11 +37,9 @@ def m3_hash_components(spark: SparkSession, d: str) -> DataFrame:
     """M3: deterministic feature-hash embedder, sparse-component view
     (document_processor.py:125-150 replaced by a library-free embedder,
     SURVEY §2.8/§7.4: torch is a config-flagged backend; this is the
-    correctness path).  r16 (guide §4.2): the per-token interpreted
-    md5 chain + (id, bucket) shuffle is replaced by one batched
-    ArrowEvalPython fold per doc + explode of the per-doc component
-    set — same rows (exact signed-integer bucket sums), pinned equal
-    to the relational form in tests/test_embedding.py."""
+    correctness path).  One batched ArrowEvalPython fold per doc +
+    explode of the per-doc component set; the oracle recomputes the
+    same exact signed-integer bucket sums relationally in DuckDB."""
     docs = _t(spark, d, "documents")
     out = embedding.hash_components_arrow(docs, text_col="text",
                                           id_col="doc_id", dim=64)
@@ -66,16 +64,17 @@ SELECT d.doc_id, 'hash-64' AS embedding_model,
 FROM documents d LEFT JOIN sq s USING (doc_id)
 """)
 def m3_hash_embed(spark: SparkSession, d: str) -> DataFrame:
-    """M3 full path: dense 64-d normalized embedding per document.
-    Components are oracle-checked in m3_hash_components; the assembly +
-    normalization is covered by tests/test_embedding.py (builtin path
-    == pandas-UDF path == pure-Python twin).  The dense output also
+    """M3 full path: dense 64-d normalized embedding per document, one
+    ArrowEvalPython node (embedding.hash_embed_arrow).  Components are
+    oracle-checked in m3_hash_components; the assembly + normalization
+    is pinned to the pure-Python twin embed_text_py in
+    tests/test_embedding.py.  The dense output also
     gets a value oracle on its squared norm: exactly 1.0 after L2
     normalization unless every bucket sum cancels to zero (then the
     zero vector stays zero) — both cases derivable from the component
     sums, no array stringification involved."""
     docs = _t(spark, d, "documents")
-    out = embedding.hash_embed(docs, text_col="text", id_col="doc_id", dim=64)
+    out = embedding.hash_embed_arrow(docs, text_col="text", dim=64)
     return out.select("doc_id", "embedding_model",
                       F.round(F.aggregate(F.col("embedding"), F.lit(0.0),
                                           lambda a, x: a + x * x), 6)

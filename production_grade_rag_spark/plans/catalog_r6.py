@@ -2509,19 +2509,18 @@ def m3_incremental_embed(spark: SparkSession, d: str) -> DataFrame:
     UDF — the expensive stage — runs on the miss minority only."""
     docs = _t(spark, d, "documents")
     h = F.md5(F.coalesce(F.col("text"), F.lit("")))
-    store = (embedding.hash_embed(
+    store = (embedding.hash_embed_arrow(
         docs.filter(F.col("doc_id") % 2 == 0)
         .select(F.col("doc_id"), F.col("text"),
                 h.alias("content_hash")),
-        text_col="text", id_col="doc_id")
+        text_col="text")
         .select("content_hash", F.col("embedding").alias("__cached"))
         .dropDuplicates(["content_hash"]))
     batch = docs.select("doc_id", "text", h.alias("content_hash"))
     joined = batch.join(store, "content_hash", "left")
     misses = (joined.filter(F.col("__cached").isNull())
               .drop("__cached"))
-    fresh = embedding.hash_embed(misses, text_col="text",
-                                 id_col="doc_id")
+    fresh = embedding.hash_embed_arrow(misses, text_col="text")
     hits = (joined.filter(F.col("__cached").isNotNull())
             .withColumn("embedding", F.col("__cached"))
             .select("doc_id", "embedding", F.lit(1).alias("__hit")))

@@ -6,9 +6,9 @@ embed (M3) -> top-k similarity (R4/W1) -> source attribution (R1).
 This is the reference's rag_pipeline + similarity strategy
 (rag_pipeline.py:189-236 -> vector_search.py:37-95 ->
 source_attribution.py:23-129) as ONE DataFrame DAG: Catalyst fuses the
-clean/score/chunk projections into the parquet scan stage, the only
-shuffle is the embedder's (id, bucket) agg, and attribution is an
-AQE-planned hash join (the reference's dict cache, distributed —
+clean/score/chunk projections into the parquet scan stage, the
+embedder is one ArrowEvalPython node (no shuffle), and attribution is
+an AQE-planned hash join (the reference's dict cache, distributed —
 broadcast while the attrs fit, shuffled beyond).
 """
 
@@ -32,10 +32,6 @@ def flagship_search(spark: SparkSession, sf_dir: str, k: int = 10,
     scored = X.with_quality(docs)                               # T2
     kept = X.quality_filter(scored, 0.3)                        # T3
     chunks = chunk_fixed(kept, chunk_size=400, overlap=80)      # T1+M1+T4+W2
-    # r16 (guide §4.2/§4.3): the dense embedder is the Arrow-batched
-    # backend — one ArrowEvalPython node instead of the explode /
-    # (id,bucket)-shuffle / map-assembly chain; bit-identical values
-    # (see operators/embedding.hash_embed_arrow)
     emb = hash_embed_arrow(chunks, text_col="content", dim=dim)  # M3
     qv = embed_text_py(FLAGSHIP_QUERY, dim=dim)
     top = knn_topk(emb, qv, k=k, id_col="chunk_id")             # R4+T5+W1

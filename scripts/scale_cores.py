@@ -25,7 +25,10 @@ import sys
 import time
 from pathlib import Path
 
+# the repo root (the package) and this directory (stress_bench), so
+# the script runs as `python -m scripts.scale_cores` or from any cwd
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from stress_bench import STRESS_DIR, synthesize  # noqa: E402
 

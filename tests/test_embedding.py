@@ -1,96 +1,90 @@
-"""M3 embedder: the three implementations (builtin expressions,
-pandas-UDF, pure Python) must produce identical vectors, and normalized
-vectors must be unit-length."""
+"""M3 embedder: the Arrow kernel's dense and sparse views must equal the
+pure-Python hash math bit for bit, normalized vectors must be
+unit-length, and the backend dispatch must pick the documented path."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 from pyspark.sql import functions as F
 
 from production_grade_rag_spark.operators.embedding import (
     embed_text_py,
-    hash_embed,
-    hash_embed_pandas,
+    hash_components_arrow,
+    hash_embed_arrow,
 )
 from production_grade_rag_spark.sources import load_table
 
 from conftest import SF001
 
+# NULL, empty, whitespace-only, a repeated token, one token, and a
+# token pair whose signs cancel in one dim-32 bucket ("beta" and
+# "query" both land in bucket 16 with opposite signs)
+EDGE_ROWS = [(9001, None), (9002, ""), (9003, "   \t\n  "),
+             (9004, "alpha alpha beta"), (9005, "x"), (9006, "beta query")]
 
-def test_builtin_equals_pandas_equals_python(spark):
-    docs = load_table(spark, SF001, "documents").limit(40) \
+
+def _docs_with_edges(spark, n: int):
+    docs = load_table(spark, SF001, "documents").limit(n) \
         .select("doc_id", F.col("text").alias("content"))
-    a = {r["doc_id"]: r["embedding"] for r in
-         hash_embed(docs, id_col="doc_id", dim=32).collect()}
-    b = {r["doc_id"]: r["embedding"] for r in
-         hash_embed_pandas(docs, dim=32).select("doc_id", "embedding").collect()}
-    texts = {r["doc_id"]: r["content"] for r in docs.collect()}
-    assert set(a) == set(b) == set(texts)
-    for k in a:
-        c = embed_text_py(texts[k], dim=32)
-        for x, y, z in zip(a[k], b[k], c):
-            assert math.isclose(x, y, rel_tol=0, abs_tol=1e-12)
-            assert math.isclose(x, z, rel_tol=0, abs_tol=1e-12)
+    edge = spark.createDataFrame(EDGE_ROWS, "doc_id long, content string")
+    return docs.unionByName(edge)
 
 
-def test_hash_embed_arrow_equals_builtin(spark):
-    # r16: the ArrowEvalPython dense embedder is BIT-identical to the
-    # builtin explode/agg/join form — bucket sums and the norm's sum of
-    # squares are exact integer arithmetic in doubles, sqrt/division
-    # are IEEE-identical across the JVM and CPython.  Edge rows: NULL,
-    # empty, whitespace-only, and a sign-cancelling token pair.
-    from production_grade_rag_spark.operators.embedding import hash_embed_arrow
-    docs = load_table(spark, SF001, "documents").limit(40) \
-        .select("doc_id", F.col("text").alias("content"))
-    edge = spark.createDataFrame(
-        [(9001, None), (9002, ""), (9003, "   \t\n  "),
-         (9004, "alpha alpha beta"), (9005, "x")],
-        "doc_id long, content string")
-    both = docs.unionByName(edge)
-    a = {r["doc_id"]: (r["embedding"], r["embedding_model"]) for r in
-         hash_embed(both, id_col="doc_id", dim=32).collect()}
-    b = {r["doc_id"]: (r["embedding"], r["embedding_model"]) for r in
-         hash_embed_arrow(both, dim=32)
-         .select("doc_id", "embedding", "embedding_model").collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k][1] == b[k][1]
-        assert a[k][0] == b[k][0], f"doc {k} differs"
-    # unnormalized form too (raw integer-count vectors)
-    ar = {r["doc_id"]: r["embedding"] for r in
-          hash_embed(both, id_col="doc_id", dim=32,
-                     normalize=False).collect()}
-    br = {r["doc_id"]: r["embedding"] for r in
-          hash_embed_arrow(both, dim=32, normalize=False)
-          .select("doc_id", "embedding").collect()}
-    assert ar == br
+def _components_ref(text, dim: int) -> dict[int, float]:
+    """Signed token-count sum per touched bucket, straight from md5."""
+    d: dict[int, float] = {}
+    for tok in (text or "").strip().lower().split():
+        h = hashlib.md5(tok.encode()).hexdigest()
+        b = int(h[:8], 16) % dim
+        d[b] = d.get(b, 0.0) + (1.0 if int(h[8], 16) % 2 == 0 else -1.0)
+    return d
 
 
-def test_hash_components_arrow_equals_builtin(spark):
-    # r16: the Arrow sparse-component fold emits exactly the relational
-    # form's (id, bucket, val) rows — zero-token docs emit nothing,
-    # sign-cancelled buckets keep their 0.0 row in both.
-    from production_grade_rag_spark.operators.embedding import (
-        hash_components, hash_components_arrow)
-    docs = load_table(spark, SF001, "documents").limit(60) \
-        .select("doc_id", F.col("text").alias("content"))
-    edge = spark.createDataFrame(
-        [(9001, None), (9002, ""), (9003, "   "), (9004, "only one")],
-        "doc_id long, content string")
-    both = docs.unionByName(edge)
-    a = {(r["doc_id"], r["bucket"]): r["val"] for r in
-         hash_components(both, id_col="doc_id", dim=32).collect()}
-    b = {(r["doc_id"], r["bucket"]): r["val"] for r in
-         hash_components_arrow(both, id_col="doc_id", dim=32).collect()}
-    assert a == b
-    assert not any(k[0] in (9001, 9002, 9003) for k in b)
+def _check_dense_equals_python(spark, normalize: bool) -> None:
+    # bucket sums and the norm's sum of squares are exact integer
+    # arithmetic in doubles, so the Arrow kernel equals the pure-Python
+    # twin exactly on every document and edge row
+    both = _docs_with_edges(spark, 40)
+    texts = {r["doc_id"]: r["content"] for r in both.collect()}
+    assert _components_ref("beta query", 32) == {16: 0.0}
+    rows = (hash_embed_arrow(both, dim=32, normalize=normalize)
+            .select("doc_id", "embedding", "embedding_model").collect())
+    assert sorted(r["doc_id"] for r in rows) == sorted(texts)
+    for r in rows:
+        assert r["embedding_model"] == "hash-32"
+        assert r["embedding"] == embed_text_py(
+            texts[r["doc_id"]] or "", 32, normalize), \
+            f"doc {r['doc_id']} differs (normalize={normalize})"
+
+
+def test_hash_embed_arrow_equals_python(spark):
+    _check_dense_equals_python(spark, normalize=True)
+
+
+def test_hash_embed_arrow_raw_equals_python(spark):
+    # unnormalized form: raw signed token-count vectors
+    _check_dense_equals_python(spark, normalize=False)
+
+
+def test_hash_components_arrow_equals_hashlib_fold(spark):
+    # one (id, bucket, val) row per touched bucket: zero-token docs
+    # emit nothing, sign-cancelled buckets keep their 0.0 row
+    both = _docs_with_edges(spark, 60)
+    want = {(i, b): v for i, t in both.collect()
+            for b, v in _components_ref(t, 32).items()}
+    got = {(r["doc_id"], r["bucket"]): r["val"] for r in
+           hash_components_arrow(both, id_col="doc_id", dim=32).collect()}
+    assert got == want
+    assert not any(k[0] in (9001, 9002, 9003) for k in got)
+    assert got[(9006, 16)] == 0.0
 
 
 def test_normalized_vectors_are_unit_or_zero(spark):
     docs = load_table(spark, SF001, "documents").limit(40) \
         .select("doc_id", F.col("text").alias("content"))
-    for r in hash_embed(docs, id_col="doc_id", dim=32).collect():
+    for r in hash_embed_arrow(docs, dim=32).collect():
         n = math.sqrt(sum(x * x for x in r["embedding"]))
         assert math.isclose(n, 1.0, abs_tol=1e-9) or n == 0.0
 
@@ -122,10 +116,13 @@ def test_embed_backend_dispatch(spark):
     import pytest
     docs = load_table(spark, SF001, "documents").limit(10) \
         .select("doc_id", F.col("text").alias("content"))
-    h = E.embed(docs, backend="hash", id_col="doc_id", dim=16)
+    h = E.embed(docs, backend="hash", dim=16)
     assert h.select("embedding_model").first()["embedding_model"] == "hash-16"
+    assert not E.uses_model_backend("hash", encoder_factory=object())
+    assert E.uses_model_backend("model")
+    assert E.uses_model_backend("auto", encoder_factory=object())
     # auto falls back to hash when the model library is missing
-    a = E.embed(docs, backend="auto", id_col="doc_id", dim=16)
+    a = E.embed(docs, backend="auto", dim=16)
     if E.model_available():
         assert a.select("embedding_model").first()["embedding_model"] \
             == E.DEFAULT_MODEL

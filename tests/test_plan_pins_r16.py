@@ -17,8 +17,9 @@ loudly by asserting the SHAPES the idioms exist to produce:
 - the bind1 sites keep the tokenize subtree to a handful of
   occurrences instead of ~40 per row.
 
-Plus the r16 Arrow-embedder shape (ArrowEvalPython replaces the
-interpreted md5/assembly chain in the flagship + m3 paths).
+Plus the Arrow-embedder shape: the flagship, m3 and engine index
+paths embed in one ArrowEvalPython node, with no interpreted md5
+chain.
 """
 
 from __future__ import annotations
@@ -176,14 +177,19 @@ def test_audit_corr_moments_survive_bigint_overflow(spark):
 
 
 def test_m3_components_via_arrow(spark):
+    # the sparse m3 view and the engine's index build (embed with the
+    # default hash backend) both embed via the Arrow kernel
+    from production_grade_rag_spark.engine import SparkRagEngine
     from production_grade_rag_spark.operators.embedding import (
         hash_components_arrow)
     docs = load_table(spark, SF001, "documents")
-    plan = _fmt_plan(hash_components_arrow(docs, text_col="text",
-                                           id_col="doc_id", dim=64))
-    assert "ArrowEvalPython" in plan
-    assert "conv(substring(md5" not in plan
-    # the component explode must not re-run the UDF in an inferred
-    # filter: no Filter carries a pythonUDF call
-    for cond in _filter_conditions(plan):
-        assert "pythonUDF" not in cond
+    for df in (hash_components_arrow(docs, text_col="text",
+                                     id_col="doc_id", dim=64),
+               SparkRagEngine(spark).build_index(docs)):
+        plan = _fmt_plan(df)
+        assert "ArrowEvalPython" in plan
+        assert "conv(substring(md5" not in plan
+        # the component explode must not re-run the UDF in an inferred
+        # filter: no Filter carries a pythonUDF call
+        for cond in _filter_conditions(plan):
+            assert "pythonUDF" not in cond

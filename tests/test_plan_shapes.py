@@ -91,29 +91,16 @@ def test_attribution_join_broadcasts_doc_side(spark):
 
 
 def test_minhash_candidates_shuffle_on_band_hash(spark):
-    # r16: the candidate set is materialized at build time (the Change
-    # 2 checkpoint — one candidate-scoped shingle pass instead of two
-    # corpus passes), so the banding exchange no longer appears in the
-    # FINAL verify-tail plan; the shape pin moves to the candidate
-    # subplan the operator compiles inside that checkpoint.
-    from pyspark.sql import functions as F
-
+    # the candidate set is materialized at build time (one
+    # candidate-scoped shingle pass instead of two corpus passes), so
+    # the banding exchange does not appear in the FINAL verify-tail
+    # plan; the shape pin reads the candidate plan the operator builds
+    # before that checkpoint.
     from production_grade_rag_spark.operators.dedup import (
-        minhash_band_table, minhash_signatures)
+        minhash_band_table, minhash_candidates, minhash_signatures)
     from production_grade_rag_spark.sources import load_table
     docs = load_table(spark, SF001, "documents")
-    banded = minhash_band_table(minhash_signatures(docs))
-    # the operator's max_bucket skew cap: one window over the same
-    # (band, band_hash) key the self-join reuses
-    from pyspark.sql import Window
-    w = Window.partitionBy("band", "band_hash")
-    banded = (banded.withColumn("__n", F.count("*").over(w))
-              .filter(F.col("__n") <= 1000).drop("__n"))
-    a = banded.select(F.col("doc_id").alias("id_a"), "band", "band_hash")
-    b = banded.select(F.col("doc_id").alias("id_b"), "band", "band_hash")
-    cands = (a.join(b, ["band", "band_hash"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b").count())
+    cands = minhash_candidates(minhash_band_table(minhash_signatures(docs)))
     cp = cands._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in cp
     # the bucket self-join keys on the slim (band, band_hash) pair —
