@@ -412,15 +412,6 @@ def classify_intent(col: Column) -> Column:
     return expr.otherwise(F.lit("general"))
 
 
-def word_tokens(col: Column) -> Column:
-    """Distinct lowercase whitespace tokens (W5 Jaccard input,
-    advanced_search.py:297-311).  r15: one regex pass (\\S+ runs ==
-    strip+split fields; array_distinct keeps first-occurrence order in
-    both forms; empty text gives [] either way)."""
-    return F.array_distinct(
-        F.regexp_extract_all(F.lower(col), F.lit(TOKEN_RUN_RE), 0))
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """F14: Jaccard over token arrays; both-empty -> 1.0, one-empty -> 0.0
     (advanced_search.py:297-311)."""

@@ -319,88 +319,3 @@ def knn_und(spark: SparkSession, d: str, k: int = 5,
         und.coalesce(4).write.mode("overwrite").parquet(path)
         _BUILT.add(tag)
     return spark.read.parquet(path)
-
-
-def connected_components_star(und: DataFrame, all_ids: DataFrame,
-                              id_col: str = "vec_id",
-                              max_rounds: int = 12) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al. 2014, "Connected Components in
-    MapReduce and Beyond", public): each round is two groupBy-min +
-    explode passes over the edge list, and the edge set provably
-    contracts to per-component stars rooted at the minimum id in
-    O(log^2 n) rounds — the scale answer to min-label propagation's
-    diameter-bounded round count (a path-shaped component of length L
-    needs L min-label rounds but only ~log L star rounds; at 100 TB
-    graph diameters are unknowable in advance, which is why the
-    production algorithm must not depend on them).
-
-    large-star(u): for every neighbor v > u, link v to
-    m = min(N(u) u {u}) — strictly-larger neighbors re-hang under the
-    local minimum.  small-star(u): for every neighbor v < u (and u
-    itself), link to m = min(N-(u) u {u}) — the downward edges
-    star-ify.  Both emit canonical (least, greatest) edges; the loop
-    exits when the edge set reaches its fixed point (checked with two
-    anti-join probes, each limit(1)).
-
-    Output: (id_col, component) with component = min id of the
-    component; singletons keep their own id.  Verified two ways in
-    the catalog: equality with the min-label operator AND the DuckDB
-    recursive-closure oracle."""
-    edges = (und.select(F.col("u").cast("long").alias("u"),
-                        F.col("v").cast("long").alias("v"))
-             .filter(F.col("u") != F.col("v")).distinct()
-             .localCheckpoint())
-
-    def canon(df: DataFrame) -> DataFrame:
-        return (df.filter(F.col("x") != F.col("y"))
-                .select(F.least("x", "y").alias("u"),
-                        F.greatest("x", "y").alias("v"))
-                .distinct())
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = (e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-               .unionAll(e.select(F.col("v").alias("a"),
-                                  F.col("u").alias("b"))))
-        m = (sym.groupBy("a")
-             .agg(F.least(F.min("b"), F.first("a")).alias("m")))
-        return canon(sym.join(m, "a")
-                     .filter(F.col("b") > F.col("a"))
-                     .select(F.col("b").alias("x"), F.col("m").alias("y")))
-
-    def small_star(e: DataFrame) -> DataFrame:
-        sym = (e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-               .unionAll(e.select(F.col("v").alias("a"),
-                                  F.col("u").alias("b"))))
-        lt = sym.filter(F.col("b") < F.col("a"))
-        m = lt.groupBy("a").agg(F.min("b").alias("m"))
-        hang = (lt.join(m, "a")
-                .select(F.col("b").alias("x"), F.col("m").alias("y")))
-        self_link = m.select(F.col("a").alias("x"), F.col("m").alias("y"))
-        return canon(hang.unionAll(self_link))
-
-    converged = False
-    for _ in range(max_rounds):
-        nxt = small_star(large_star(edges)).localCheckpoint()
-        changed = (nxt.exceptAll(edges).limit(1).count() > 0
-                   or edges.exceptAll(nxt).limit(1).count() > 0)
-        edges = nxt
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        # a non-fixed-point edge set is NOT star-shaped and reading
-        # labels off it would be silently wrong — fail loudly instead
-        # (O(log^2 n) bound means max_rounds=12 covers any graph this
-        # engine will ever see; a raise here means a bug, not data)
-        raise RuntimeError(
-            "connected_components_star: no fixed point within "
-            f"max_rounds={max_rounds}; raise max_rounds")
-    # terminal state: stars rooted at component minima — (v, root=u)
-    labels = edges.select(F.col("v").alias("id"),
-                          F.col("u").alias("component"))
-    return (all_ids.select(F.col(id_col).alias("id"))
-            .join(labels, "id", "left")
-            .select(F.col("id").alias(id_col),
-                    F.coalesce("component", F.col("id")).cast("long")
-                     .alias("component")))

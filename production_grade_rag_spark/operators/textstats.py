@@ -55,18 +55,6 @@ def _lang_score_vec(toks: Column) -> Column:
             for _, words in LANG_PROFILES]))
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language stopword-hit ratio over whitespace tokens.
-
-    Kept as the per-language dict API; each entry evaluates its own
-    bound pipeline.  detect_language does NOT call this (it needs all
-    four scores per row and binds the score vector once instead)."""
-    toks = _lang_tokens(col)
-    vec = {lang: i for i, (lang, _) in enumerate(LANG_PROFILES)}
-    return {lang: F.element_at(bind1(toks, _lang_score_vec), i + 1)
-            for lang, i in vec.items()}
-
-
 def detect_language(col: Column, min_score: float = 0.05) -> Column:
     """Language-ID: argmax profile coverage, 'unknown' below min_score.
     Ties break in LANG_PROFILES order (first wins) — deterministic and

@@ -281,11 +281,11 @@ FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
 GROUP BY d.doc_id
 """)
 def dd_components(spark: SparkSession, d: str) -> DataFrame:
-    """Exact near-dup clusters: connected components by iterative
-    min-label propagation over the n-gram pair graph (the exact upgrade
-    of dd_keepers' single-pass min-id).  The DuckDB oracle computes the
-    transitive closure recursively — equality proves the propagation
-    converged."""
+    """Exact near-dup clusters: connected components by star
+    contraction over the n-gram pair graph (the exact upgrade of
+    dd_keepers' single-pass min-id).  The DuckDB oracle computes the
+    transitive closure recursively — equality proves the labeling
+    exact."""
     docs = _t(spark, d, "documents")
     pairs = dedup.ngram_jaccard_pairs_index(docs)
     return dedup.connected_components(pairs, docs)

@@ -895,7 +895,7 @@ def _st_sessionize_run(spark: SparkSession, d: str,
 
 # ===========================================================================
 # Graph family consumers of the shared store, wave 2: components
-# (min-label AND log-round star contraction) + personalized PageRank
+# (log-round star contraction) + personalized PageRank
 # ===========================================================================
 
 def _knn_closure_oracle() -> str:
@@ -919,51 +919,38 @@ GROUP BY em.vec_id ORDER BY em.vec_id
 
 @register("g10_knn_components", oracle=_knn_closure_oracle())
 def g10_knn_components(spark: SparkSession, d: str) -> DataFrame:
-    """Connected components of the symmetrized 5-NN graph by min-label
-    propagation over the SHARED edge store — the corpus-fragmentation
-    read beside the census (one giant component = a connected
-    embedding manifold; many components = isolated topical islands
-    that label propagation can never bridge and SemDeDup treats as
-    independent cells).  The DuckDB oracle computes the transitive
-    closure recursively, so propagation convergence is value-checked,
-    not assumed (the dd_components pattern on the vector graph).
+    """Connected components of the symmetrized 5-NN graph over the
+    SHARED edge store — the corpus-fragmentation read beside the
+    census (one giant component = a connected embedding manifold;
+    many components = isolated topical islands that label propagation
+    can never bridge and SemDeDup treats as independent cells).  The
+    DuckDB oracle computes the transitive closure recursively, so the
+    labeling is value-checked, not assumed (the dd_components pattern
+    on the vector graph).  Same operator, same labeling and same plan
+    as g10_components_star, which it returns; the entry keeps its name
+    so the catalog's entry list is unchanged."""
+    return g10_components_star(spark, d)
 
-    Scale shape: each round is one k-bounded edge join + a min
-    aggregate with early fixed-point exit; round count is
-    diameter-bounded — the log-round production swap is
-    g10_components_star below, value-oracled to the SAME closure."""
+
+@register("g10_components_star", oracle=_knn_closure_oracle())
+def g10_components_star(spark: SparkSession, d: str) -> DataFrame:
+    """Components of the 5-NN graph by alternating large-star/small-star
+    contraction (Kiveris 2014; dedup.connected_components) — the
+    O(log^2 n)-round algorithm whose round count does NOT depend on
+    component diameter (a 100 TB near-dup chain can be arbitrarily long
+    and the diameter is unknowable in advance).  Value-oracled against
+    the same recursive-closure SQL as g10_knn_components.
+
+    Scale shape: each round is two groupBy-min passes + canonical
+    dedup over the (shrinking) edge list; fixed point checked with
+    limit(1) anti-join probes."""
     from ..operators.dedup import connected_components
     from ..operators.knn_graph import knn_und
     und = knn_und(spark, d)
     emb = _t(spark, d, "embeddings")
     pairs = und.select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
     return (connected_components(pairs, emb.select("vec_id"),
-                                 id_col="vec_id", max_iter=32)
-            .select("vec_id", F.col("component").cast("long")
-                    .alias("component"))
-            .orderBy("vec_id"))
-
-
-@register("g10_components_star", oracle=_knn_closure_oracle())
-def g10_components_star(spark: SparkSession, d: str) -> DataFrame:
-    """The SAME components by alternating large-star/small-star
-    contraction (Kiveris et al. 2014) — the O(log^2 n)-round
-    production algorithm whose round count does NOT depend on
-    component diameter (min-label propagation needs diameter rounds;
-    a 100 TB near-dup chain can be arbitrarily long and the diameter
-    is unknowable in advance).  Value-oracled against the identical
-    recursive-closure SQL as g10_knn_components: two independent
-    algorithms, one truth — the strongest cross-check the driver can
-    see.
-
-    Scale shape: each round is two groupBy-min passes + canonical
-    dedup over the (shrinking) edge list; fixed point checked with
-    limit(1) anti-join probes."""
-    from ..operators.knn_graph import connected_components_star, knn_und
-    und = knn_und(spark, d)
-    emb = _t(spark, d, "embeddings")
-    return (connected_components_star(und, emb.select("vec_id"),
-                                      id_col="vec_id")
+                                 id_col="vec_id")
             .orderBy("vec_id"))
 
 

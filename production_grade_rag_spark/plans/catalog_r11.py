@@ -145,8 +145,8 @@ def g_ivf_fidelity(spark: SparkSession, d: str) -> DataFrame:
     (build-once parquet; the IVF build is the candidate-bounded
     ivf_knn_join); every read over them is k-bounded joins + tiny
     aggregates; star contraction is O(log^2 n) rounds."""
-    from ..operators.knn_graph import (connected_components_star, knn_nb,
-                                       knn_und)
+    from ..operators.dedup import connected_components
+    from ..operators.knn_graph import knn_nb, knn_und
     from .catalog_r10 import _PPR_TOP, _ppr_rank
     from .catalog_r9 import _census_from_und
     emb = _t(spark, d, "embeddings")
@@ -159,10 +159,15 @@ def g_ivf_fidelity(spark: SparkSession, d: str) -> DataFrame:
     ci = _census_from_und(ui).select(
         F.col("n_triangles").alias("tri_i"),
         F.col("global_clustering").alias("cc_i"))
-    comp_e = (connected_components_star(ue, ids)
-              .agg(F.countDistinct("component").alias("comp_e")))
-    comp_i = (connected_components_star(ui, ids)
-              .agg(F.countDistinct("component").alias("comp_i")))
+
+    def n_components(und: DataFrame, name: str) -> DataFrame:
+        pairs = und.select(F.col("u").alias("id_a"),
+                           F.col("v").alias("id_b"))
+        return (connected_components(pairs, ids, id_col="vec_id")
+                .agg(F.countDistinct("component").alias(name)))
+
+    comp_e = n_components(ue, "comp_e")
+    comp_i = n_components(ui, "comp_i")
     te = _ppr_rank(emb, knn_nb(spark, d)).select("vec_id")
     ti = _ppr_rank(emb, knn_nb(spark, d, method="ivf")).select("vec_id")
     ovl = te.join(ti, "vec_id").agg(F.count("*").alias("n_overlap"))

@@ -863,8 +863,8 @@ def _scene_comp_oracle() -> str:
     # carriers witness nothing), and a scene attaches to its hash's
     # component iff some other doc carries an adjacent hash.  The
     # closure then runs over <= 256 hash nodes instead of the scene
-    # graph.  Equality of this construction with Spark's min-label
-    # propagation over the ACTUAL pair graph is the check: routing
+    # graph.  Equality of this construction with Spark's star
+    # contraction over the ACTUAL pair graph is the check: routing
     # around same-doc corners (two same-doc scenes with equal hashes
     # only connect through a third video) must agree on both sides.
     return f"""
@@ -917,11 +917,8 @@ def mm_scene_components(spark: SparkSession, d: str) -> DataFrame:
     duplication: a scene re-uploaded across five videos chains
     A~B~C~D~E, and the component — whose min (doc, scene) node
     becomes the canonical copy — is the dedup unit).  Spark runs the
-    exact min-label propagation operator over the ACTUAL pair graph
-    (dedup.connected_components, early-exit, max_iter = 20: the
-    8-bit Hamming<=1 hash graph has diameter <= 8 and same-doc
-    detours at most double the path, so 20 rounds bound every
-    corpus this hash width can produce); the oracle proves the SAME
+    exact star-contraction operator over the ACTUAL pair graph
+    (dedup.connected_components); the oracle proves the SAME
     labeling through an independent construction — closure over the
     <= 256-node WITNESSED hash-adjacency graph with per-scene
     attachment — so the same-doc corner (two scenes of one video
@@ -930,10 +927,10 @@ def mm_scene_components(spark: SparkSession, d: str) -> DataFrame:
     never force a quadratic transitive closure in the oracle.
 
     Scale shape: pair generation is the banded join (never
-    all-pairs); propagation rounds are equi-joins on the flat node
-    key with per-round localCheckpoint and an early-exit probe —
-    near-dup clusters are shallow, so real corpora converge in 2-4
-    rounds (the dd_components argument at scene granularity)."""
+    all-pairs); contraction rounds are groupBy-min passes over the
+    flat node-key edge list with per-round localCheckpoint and a
+    fixed-point exit — O(log^2 n) rounds whatever the chain length
+    (the dd_components argument at scene granularity)."""
     from ..operators import dedup
     hsh = _scene_hash_frame(spark, d)
     pairs = _scene_pair_frame(hsh).select(
@@ -941,8 +938,7 @@ def mm_scene_components(spark: SparkSession, d: str) -> DataFrame:
         (F.col("doc_b") * _SCENE_STRIDE + F.col("scene_b")).alias("id_b"))
     nodes = hsh.select((F.col("doc_id") * _SCENE_STRIDE
                         + F.col("scene_id")).alias("node"))
-    comp = dedup.connected_components(pairs, nodes, id_col="node",
-                                      max_iter=20)
+    comp = dedup.connected_components(pairs, nodes, id_col="node")
     return (comp.select(
         F.expr(f"node div {_SCENE_STRIDE}").cast("long").alias("doc_id"),
         F.pmod(F.col("node"), F.lit(_SCENE_STRIDE)).cast("long")

@@ -3250,12 +3250,12 @@ def mm_ahash_components(spark: SparkSession, d: str) -> DataFrame:
     alone under-read duplication: re-encodes of one image chain
     A~B~C without A~C, and the component is the dedup unit whose
     min-id member becomes the keeper).  Reuses the exact
-    min-label-propagation operator (iterative, early-exit) against
+    star-contraction operator (dedup.connected_components) against
     the DuckDB recursive transitive closure — equality proves the
-    propagation converged on this graph too.
+    labeling exact on this graph too.
 
     Scale shape: the pair graph is band-bucketed (never all-pairs);
-    propagation rounds are broadcast-able joins on the id key with
+    contraction rounds are groupBy-min passes on the id key with
     per-round localCheckpoint (dedup.connected_components)."""
     from ..operators import dedup
     docs = _t(spark, d, "documents")

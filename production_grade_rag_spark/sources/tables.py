@@ -149,44 +149,6 @@ def upsert_partitions(df: DataFrame, path: str,
             spark.conf.set(key, prev)
 
 
-def merge_rows(updates: DataFrame, path: str, key_col: str,
-               partition_by: list[str]) -> None:
-    """Row-level upsert over a plain-parquet partitioned table via
-    partition-grained copy-on-write — the closest honest MERGE the
-    format allows (the reference's row-level ``update_one``,
-    document_repository.py:176-208; Delta/Iceberg replace this with a
-    transactional MERGE INTO).
-
-    Plan: collect the (small) set of partition tuples the updates
-    touch -> STATIC partition-pruned read of only those partitions ->
-    anti-join out old versions of the updated keys -> union the
-    updates -> dynamic-partition overwrite.  Partitions without
-    updates are never read and never rewritten; updates may contain
-    both changed rows and brand-new keys.
-
-    ``updates`` must carry the partition columns, and a key must not
-    move between partitions (the old row would survive in its old
-    partition — enforce upstream or delete first)."""
-    from functools import reduce
-
-    spark = updates.sparkSession
-    existing = spark.read.parquet(path)
-    parts = [tuple(r) for r in
-             updates.select(*partition_by).distinct().collect()]
-    if not parts:
-        return
-    cond = reduce(lambda a, b: a | b,
-                  [reduce(lambda a, b: a & b,
-                          [F.col(c).eqNullSafe(F.lit(v))
-                           for c, v in zip(partition_by, t)])
-                   for t in parts])
-    affected = existing.filter(cond)
-    keys = updates.select(key_col).distinct()
-    merged = (affected.join(keys, key_col, "left_anti")
-              .unionByName(updates.select(*affected.columns)))
-    upsert_partitions(merged, path, partition_by)
-
-
 def mark_status(df: DataFrame, status: str) -> DataFrame:
     """S10/S12 status update: recompute-and-rewrite of the status column
     (reference: document_repository.py:176-208, vector_store.py:103-181;

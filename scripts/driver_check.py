@@ -25,8 +25,13 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
+
+# the checkout this script lives in, so a scratch copy or worktree
+# checks its own code
+ENTRY = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
 
 SF = "/root/testdata/sf0.01"
 TABLES = ("region", "nation", "customer", "supplier", "part",
@@ -43,7 +48,7 @@ def norm(df):
 def _load_entry_module():
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -183,27 +183,33 @@ def test_st_sessionize_checkpoint_resume_merges_boundary_sessions(spark):
     assert any(key(r) == key(target) for r in spanning)
 
 
-def test_components_two_algorithms_agree(spark):
-    # min-label propagation and large/small-star contraction are
-    # independent algorithms; identical labelings on the same store
-    ml = {(r["vec_id"], r["component"]) for r in
-          CATALOG["g10_knn_components"].build(spark, SF001).collect()}
-    st = {(r["vec_id"], r["component"]) for r in
-          CATALOG["g10_components_star"].build(spark, SF001).collect()}
-    assert ml == st and len(ml) > 0
+@pytest.mark.parametrize("n", [40, 20000])
+def test_connected_components_labels_long_chain(spark, n):
+    # a chain's diameter is n - 1: a round cap that scales with the
+    # diameter (8 rounds) mislabels the 40-node chain, and the
+    # 20,000-node chain needs 16 star rounds, past a 12-round cap
+    from production_grade_rag_spark.operators import dedup
+    pairs = spark.range(n - 1).select(F.col("id").alias("id_a"),
+                                      (F.col("id") + 1).alias("id_b"))
+    ids = spark.range(n).withColumnRenamed("id", "doc_id")
+    comp = dedup.connected_components(pairs, ids)
+    assert comp.count() == n
+    assert comp.filter(F.col("component") != 0).count() == 0
 
 
 def test_star_contraction_on_path_graph(spark):
-    # a path is the adversarial case for min-label (diameter rounds);
+    # a path is the adversarial case for diameter-bounded rounds;
     # the star contraction must label it in its bounded round budget
-    from production_grade_rag_spark.operators.knn_graph import \
-        connected_components_star
+    from production_grade_rag_spark.operators.dedup import \
+        connected_components
     n = 200
-    und = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)] + [(500, 501)], "u long, v long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)] + [(500, 501)],
+        "id_a long, id_b long")
     ids = spark.range(0, 502).withColumnRenamed("id", "vec_id")
     out = {r["vec_id"]: r["component"]
-           for r in connected_components_star(und, ids).collect()}
+           for r in connected_components(pairs, ids,
+                                         id_col="vec_id").collect()}
     assert all(out[i] == 0 for i in range(n))
     assert out[500] == out[501] == 500
     assert out[300] == 300   # singleton keeps its id

@@ -205,8 +205,7 @@ def test_scene_stride_survives_100_scenes(spark):
     pairs = spark.createDataFrame(
         [(7 * _SCENE_STRIDE + 150, 8 * _SCENE_STRIDE + 150)],
         "id_a long, id_b long")
-    comp = dedup.connected_components(pairs, nodes, id_col="node",
-                                      max_iter=20)
+    comp = dedup.connected_components(pairs, nodes, id_col="node")
     out = {(r["node"] // _SCENE_STRIDE, r["node"] % _SCENE_STRIDE):
            r["component"] for r in comp.collect()}
     # unpacking recovers every (doc, scene) key distinctly

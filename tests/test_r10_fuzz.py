@@ -1,7 +1,7 @@
 """Property fuzz for the round-10 algorithmic tricks that one-corpus
 oracle parity can't generalize:
 
-- connected_components_star (Kiveris large/small-star) must label
+- dedup.connected_components (Kiveris large/small-star) must label
   ARBITRARY graphs identically to a plain union-find reference —
   the catalog checks it on one kNN graph; the contraction's
   correctness argument is graph-shape-independent and so is this
@@ -62,17 +62,17 @@ def _union_find(n_ids, edges):
 @settings(max_examples=12, deadline=None)
 @given(EDGES)
 def test_star_contraction_matches_union_find(spark, edges):
-    from pyspark.sql import functions as F
-    from production_grade_rag_spark.operators.knn_graph import \
-        connected_components_star
+    from production_grade_rag_spark.operators.dedup import \
+        connected_components
     n_ids = 31
-    und_rows = [(min(u, v), max(u, v)) for u, v in edges if u != v]
-    ref = _union_find(n_ids, und_rows)
-    und = (spark.createDataFrame(und_rows or [(0, 0)], "u long, v long")
-           .filter(F.col("u") != F.col("v")))
+    ref = _union_find(n_ids, edges)
+    # raw pairs: either orientation, repeats and self-loops included
+    pairs = spark.createDataFrame(edges or [(0, 0)],
+                                  "id_a long, id_b long")
     ids = spark.range(0, n_ids).withColumnRenamed("id", "vec_id")
     got = {r["vec_id"]: r["component"]
-           for r in connected_components_star(und, ids).collect()}
+           for r in connected_components(pairs, ids,
+                                         id_col="vec_id").collect()}
     assert got == ref
 
 

@@ -293,42 +293,6 @@ def test_salted_ops_under_manufactured_skew(spark):
     assert spread == 8
 
 
-def test_merge_rows_partition_grained_upsert(spark, tmp_path):
-    # row-level MERGE over plain parquet: updated keys replaced, new
-    # keys inserted, rows in touched partitions but not in the update
-    # set preserved — and partitions without updates are NOT rewritten
-    # (their files stay byte-identical on disk).
-    from pathlib import Path
-    from production_grade_rag_spark.sources.tables import merge_rows
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(i, f"day{i % 3}", f"v{i}") for i in range(30)],
-        ["id", "day", "val"])
-    base.write.partitionBy("day").parquet(path)
-    untouched = sorted((str(p), p.stat().st_mtime_ns)
-                       for p in Path(path, "day=day2").glob("part-*"))
-
-    updates = spark.createDataFrame(
-        [(0, "day0", "NEW0"),          # update existing key
-         (3, "day0", "NEW3"),          # update existing key
-         (100, "day1", "NEW100")],     # brand-new key
-        ["id", "day", "val"])
-    merge_rows(updates, path, key_col="id", partition_by=["day"])
-
-    got = {r["id"]: (r["day"], r["val"])
-           for r in spark.read.parquet(path).collect()}
-    assert len(got) == 31
-    assert got[0] == ("day0", "NEW0")
-    assert got[3] == ("day0", "NEW3")
-    assert got[100] == ("day1", "NEW100")
-    assert got[6] == ("day0", "v6")     # same partition, not updated
-    assert got[2] == ("day2", "v2")     # untouched partition
-    after = sorted((str(p), p.stat().st_mtime_ns)
-                   for p in Path(path, "day=day2").glob("part-*"))
-    assert after == untouched, "day2 had no updates: files must not move"
-
-
 def test_paged_dump_custom_datasource(spark, tmp_path):
     """The custom Python DataSource must read page batches in
     EXECUTOR-side partitions (one per dump file), apply its fixed

@@ -97,14 +97,6 @@ def test_word_count_single_pass(docs):
                   X.word_count(F.col("text")), "word_count")
 
 
-def test_word_tokens_single_pass(docs):
-    old = F.when(F.length(F.lower(pystrip(F.col("text")))) == 0,
-                 F.array().cast("array<string>")) \
-           .otherwise(F.array_distinct(
-               F.split(F.lower(pystrip(F.col("text"))), WORD_SPLIT_RE)))
-    _assert_equal(docs, old, X.word_tokens(F.col("text")), "word_tokens")
-
-
 def test_dedup_tokens_single_pass(docs):
     _assert_equal(docs, _old_tokens(F.col("text")),
                   dedup.tokens(F.col("text")), "dedup.tokens")
@@ -119,13 +111,6 @@ def test_detect_language_bound_argmax(docs):
     _assert_equal(docs, _old_detect_language(F.col("text")),
                   textstats.detect_language(F.col("text")),
                   "detect_language")
-
-
-@pytest.mark.parametrize("lang", [lang for lang, _ in LANG_PROFILES])
-def test_lang_scores_bound(docs, lang):
-    _assert_equal(docs, _old_lang_scores(F.col("text"))[lang],
-                  textstats.lang_scores(F.col("text"))[lang],
-                  f"lang_scores[{lang}]")
 
 
 def test_char_shingles_bound(docs):
