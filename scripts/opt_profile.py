@@ -6,6 +6,11 @@ Usage:
     python scripts/opt_profile.py time [query ...]      # 2x count() timings
     python scripts/opt_profile.py noop [query ...]      # noop-sink timings
 
+``time`` and ``noop`` print each repetition's wall time and its Janino
+compile count (``session.codegen_compiles`` delta), so a cold/warm gap
+can be attributed to codegen: a warm repetition of a plan that fits the
+codegen cache compiles (close to) nothing.
+
 Env:
     SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
     OPT_TAG              explain file suffix (default "before")
@@ -33,7 +38,8 @@ def main() -> None:
     names = sys.argv[2:]
 
     from production_grade_rag_spark.plans.catalog import CATALOG
-    from production_grade_rag_spark.session import get_spark
+    from production_grade_rag_spark.session import (codegen_compiles,
+                                                    get_spark)
 
     spark = get_spark("pgrs-opt-profile")
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
@@ -54,9 +60,10 @@ def main() -> None:
         return
 
     for name in names:
-        times = []
+        times, compiles = [], []
         for rep in range(REPS):
             spark.sparkContext.setJobDescription(f"{mode}:{name}#{rep}")
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = CATALOG[name].build(spark, SF_DIR)
             if mode == "noop":
@@ -65,7 +72,8 @@ def main() -> None:
             else:
                 n = df.count()
             times.append(round(time.perf_counter() - t0, 3))
-        print(f"{name}: {times} ({n} rows)")
+            compiles.append(codegen_compiles(spark) - c0)
+        print(f"{name}: {times} s, {compiles} compiles ({n} rows)")
 
 
 if __name__ == "__main__":
