@@ -2,7 +2,14 @@
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+ "queries_warm": {...}, "sf": ..., "steal_pct": ..., "store_build": {...}}
+
+``queries`` is the cold table: each headline query's first timed run.
+``queries_warm`` is each query's minimum over WARM_PASSES further passes
+in catalog order.  A query's cold/warm spread is its own noise floor,
+and rounds compare warm against warm.  ``steal_pct`` is the hypervisor
+steal over the cold loop.
 
 Each query is materialized via a count-style action (``collect`` on
 aggregates, ``count`` on wide outputs) so the full plan executes.
@@ -19,6 +26,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# warm passes after the cold loop; a query's warm time is its minimum
+WARM_PASSES = 2
+LINE_LIMIT = 1900
 
 
 def main() -> None:
@@ -63,38 +73,10 @@ def main() -> None:
     print(f"# shared kNN edge store (one-off ingest build): "
           f"{knn_store_build}s", file=sys.stderr)
 
-    def _cal(name: str = "q1_pricing_summary") -> float:
-        t0 = time.perf_counter()
-        CATALOG[name].build(spark, SF_DIR).count()
-        return round(time.perf_counter() - t0, 3)
-
-    # fixed calibration probe, run first and last: cal_warm is a
-    # host-speed proxy for cross-round comparison (divide per-query
-    # times by it before calling a delta a regression — sessions on
-    # this host show 1.3-1.9x uniform noise), and cold/warm spread
-    # bounds the within-run warmup drift.
-    cal_cold = _cal()
-
-    # VERDICT r11 #6: one probe is too narrow a host factor — r11's
-    # table printed >1.15 "regressions" on six plan-unchanged queries
-    # while every raw number improved, because q1's own jitter WAS the
-    # denominator.  The host factor is now the MEDIAN of three warm
-    # probes spanning plan shapes (scan-bound t1, shuffle-bound q3,
-    # window-bound w4), measured after the headline loop has warmed
-    # them; raw ratios are printed beside normalized ones so the table
-    # reads signal either way.
-    _CAL_PROBES = ("t1_clean_content", "q3_top_revenue_orders",
-                   "w4_running_customer_spend")
-
-    # VERDICT r14 #6: the sub-second probes under-correct whatever
-    # drifts for MULTI-second queries (r14's vs_prev read a
-    # near-uniform +16% on plan-untouched multi-second queries while
-    # the 3-probe median moved the other way) — so the calibration
-    # carries one LARGE warm probe too, and vs_prev normalizes each
-    # query by the size-matched factor (documented per query in
-    # BENCH_LOCAL.json's factor_used map).
-    _CAL_PROBE_LARGE = "dd_minhash_lsh"
-    _LARGE_QUERY_SEC = 2.0
+    # q1 once, untimed, before the loop: BENCH_r01-r16 ran it here as a
+    # calibration probe, so keeping it keeps the loop's q1 (cold) number
+    # comparable with theirs
+    CATALOG["q1_pricing_summary"].build(spark, SF_DIR).count()
 
     # r15: record hypervisor steal across the headline loop — sessions
     # on this host intermittently lose >50% of demanded cycles to the
@@ -115,7 +97,7 @@ def main() -> None:
             if len(vals) <= 7:
                 return None
             return vals[7], sum(vals)
-        except Exception:  # noqa: BLE001 — calibration must not kill the bench
+        except Exception:  # noqa: BLE001 — /proc is best-effort
             return None
     steal0 = _cpu_ticks()
 
@@ -143,168 +125,59 @@ def main() -> None:
         steal_pct = round(100.0 * (steal1[0] - steal0[0])
                           / (steal1[1] - steal0[1]), 2)
 
-    cal_warm = _cal()
-    # the 3-shape probe set: each already ran once in the headline
-    # loop, so these are warm measurements by construction
-    probe_warm = {p: _cal(p) for p in _CAL_PROBES}
-    host_factor = sorted(probe_warm.values())[len(probe_warm) // 2]
-    # the large probe (also warm — it is a headline query itself)
-    try:
-        host_factor_large = _cal(_CAL_PROBE_LARGE)
-    except Exception:  # noqa: BLE001 — calibration must not kill the artifact
-        host_factor_large = None
+    warm: dict[str, float] = {}
+    for _ in range(WARM_PASSES):
+        for name, spec in CATALOG.items():
+            if not spec.headline:
+                continue
+            t0 = time.perf_counter()
+            try:
+                spec.build(spark, SF_DIR).count()
+            except Exception as exc:  # noqa: BLE001 — as in the cold loop
+                errors.setdefault(
+                    name, f"warm: {type(exc).__name__}: {exc}"[:500])
+                print(f"# {name}: warm FAILED {errors[name]}",
+                      file=sys.stderr)
+                continue
+            t = round(time.perf_counter() - t0, 3)
+            warm[name] = min(t, warm.get(name, t))
+
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        "queries_warm": warm,
         "sf": float(sf),
+        "steal_pct": steal_pct,
         "store_build": {"pca_centered_sec": store_build,
                         "knn_edges_sec": knn_store_build},
-        "noise_cal": {
-            "probe": "q1_pricing_summary",
-            "cold_sec": cal_cold,
-            "warm_sec": cal_warm,
-            "cold_over_warm": round(cal_cold / cal_warm, 3)
-            if cal_warm else None,
-            "probes_warm": probe_warm,
-            "host_factor_median": host_factor,
-            "probe_large": _CAL_PROBE_LARGE,
-            "host_factor_large": host_factor_large,
-            "steal_pct": steal_pct,
-        },
     }
     if errors:
         out["errors"] = errors
+    print(fit_line(out))
 
-    # noise-normalized round-over-round deltas (VERDICT r7 #7, widened
-    # r12 per VERDICT r11 #6, compacted r13 per VERDICT r12 #1): divide
-    # each per-query time by this run's host factor and the previous
-    # round's by ITS factor, and keep BOTH the normalized and the raw
-    # ratio.  Sessions on this host show 1.3-1.9x uniform speed noise,
-    # so raw deltas alone are host lottery, not signal.  Only computed
-    # against a previous artifact at the SAME scale factor.
-    #
-    # The PRINTED line carries only summary stats + the 3 worst
-    # normalized deltas — r12's full 27+27-entry tables pushed the line
-    # past the driver's 2000-char tail capture and the round record
-    # came back ``parsed: null``.  The full tables go to stderr and to
-    # BENCH_LOCAL.json beside this script.
-    repo = Path(__file__).resolve().parent
-    full_out = dict(out)
-    prev = _latest_prev_bench(repo)
-    if prev is not None and host_factor:
-        pdata, pname = prev
-        pcal = pdata.get("noise_cal") or {}
-        p_factor = pcal.get("host_factor_median")
-        now_factor = host_factor
-        if not p_factor:
-            # transition round (VERDICT r12 #1b): prev recorded only the
-            # single q1 warm probe, so the comparison must be
-            # like-for-like — q1-warm against q1-warm — NOT our 3-probe
-            # median against its q1 (mixed bases flipped the host-speed
-            # sign in the r12 artifact).
-            p_factor, now_factor = pcal.get("warm_sec"), cal_warm
-        # size-matched factor (VERDICT r14 #6): multi-second queries
-        # normalize by the large probe when BOTH rounds recorded it;
-        # otherwise (transition round — the previous artifact predates
-        # the large probe) everything stays on the like-for-like small
-        # factor, and this round's artifact records the large probe so
-        # the NEXT comparison can use it.
-        p_large = pcal.get("host_factor_large")
 
-        def _norm(q: str, t: float) -> tuple[float, str]:
-            if (p_large and host_factor_large
-                    and t >= _LARGE_QUERY_SEC
-                    and pdata["queries"][q] >= _LARGE_QUERY_SEC):
-                return round((t / host_factor_large)
-                             / (pdata["queries"][q] / p_large), 3), "large"
-            return round((t / now_factor)
-                         / (pdata["queries"][q] / p_factor), 3), "small"
-
-        if pdata.get("sf") == out["sf"] and p_factor and now_factor:
-            ratios, factor_used = {}, {}
-            for q, t in timings.items():
-                if pdata["queries"].get(q):
-                    ratios[q], factor_used[q] = _norm(q, t)
-            raw = {
-                q: round(t / pdata["queries"][q], 3)
-                for q, t in timings.items()
-                if pdata["queries"].get(q)
-            }
-            vals = sorted(ratios.values())
-            rvals = sorted(raw.values())
-            worst = dict(sorted(ratios.items(), key=lambda kv: -kv[1])[:3])
-            out["vs_prev_normalized"] = {
-                "prev": pname,
-                "host_speed_now_over_prev": round(p_factor / now_factor, 3),
-                "n": len(ratios),
-                "n_large_factor": sum(1 for v in factor_used.values()
-                                      if v == "large"),
-                "median": vals[len(vals) // 2] if vals else None,
-                "median_raw": rvals[len(rvals) // 2] if rvals else None,
-                "worst3": worst,
-            }
-            full_out["vs_prev_normalized"] = {
-                **out["vs_prev_normalized"],
-                "queries": ratios,
-                "queries_raw": raw,
-                "factor_used": factor_used,
-            }
-            print(f"# vs {pname} normalized: {ratios}", file=sys.stderr)
-            print(f"# vs {pname} raw: {raw}", file=sys.stderr)
-
+def fit_line(out: dict) -> str:
+    """``out`` as one JSON line of at most LINE_LIMIT characters (a bench
+    record keeps only the last 2000 characters of stdout).  Sheds detail
+    in a fixed order: ``store_build``, then ``errors`` compacted to names
+    and a count (a failing round keeps its failure evidence), then
+    ``queries_warm``.  ``queries`` and ``value`` are never shed."""
+    out = dict(out)
     line = json.dumps(out)
-    # hard guard on the driver's 2000-char tail capture: shed detail
-    # fields (never the per-query timings, and never the failure
-    # evidence — ADVICE r13: a failing round must keep its errors in
-    # the committed artifact, so "errors" is compacted to names + a
-    # count rather than dropped)
-    for victim in ("vs_prev_normalized", "store_build"):
-        if len(line) <= 1900:
-            break
-        out.pop(victim, None)
+    if len(line) > LINE_LIMIT:
+        out.pop("store_build", None)
         line = json.dumps(out)
-    if len(line) > 1900 and errors:
-        out["errors"] = {"error_count": len(errors),
-                         "failed": sorted(errors)}
+    if len(line) > LINE_LIMIT and out.get("errors"):
+        out["errors"] = {"error_count": len(out["errors"]),
+                         "failed": sorted(out["errors"])}
         line = json.dumps(out)
-    try:
-        (repo / "BENCH_LOCAL.json").write_text(json.dumps(full_out, indent=1))
-    except OSError:
-        pass  # the printed line is the artifact of record
-    print(line)
-
-
-def _latest_prev_bench(repo: Path):
-    """(data, name) of the newest BENCH_r*.json that actually carries a
-    per-query table, or None.  Walks newest-first PAST parsed-null
-    driver wrappers (VERDICT r12 #1c: BENCH_r12.json is such a wrapper —
-    stopping at it would silently drop the vs_prev table).  Newest-first
-    is NUMERIC on the round number (ADVICE r13: lexicographic reverse
-    only worked because the artifacts happen to be zero-padded — an
-    unpadded BENCH_r9.json would have sorted above BENCH_r13.json).
-    Never raises — the bench artifact must survive a corrupt or absent
-    predecessor."""
-    import re
-
-    def _round_no(p: Path) -> int:
-        m = re.search(r"r(\d+)", p.stem)
-        return int(m.group(1)) if m else -1
-
-    for path in sorted(repo.glob("BENCH_r*.json"), key=_round_no,
-                       reverse=True):
-        try:
-            data = json.loads(path.read_text())
-            # the round driver wraps the emitted JSON line under "parsed"
-            if isinstance(data.get("parsed"), dict):
-                data = data["parsed"]
-            if isinstance(data.get("queries"), dict):
-                return data, path.name
-        except Exception:  # noqa: BLE001
-            continue
-    return None
+    if len(line) > LINE_LIMIT:
+        out.pop("queries_warm", None)
+        line = json.dumps(out)
+    return line
 
 
 if __name__ == "__main__":

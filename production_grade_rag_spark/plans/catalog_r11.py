@@ -596,8 +596,14 @@ def pr_counts_from(strat: DataFrame, threshold: float = 0.8) -> DataFrame:
                 .localCheckpoint())
 
     from concurrent.futures import ThreadPoolExecutor
+    from pyspark import inheritable_thread_target as inherit
+    # each branch runs on its own copy of the caller's local properties
+    # (job group included); one copy per branch, so a branch's job
+    # description never leaks into another's
+    spark = strat.sparkSession
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cand, f_ex = pool.submit(_b_cand), pool.submit(_b_ex)
+        f_cand = pool.submit(inherit(spark)(_b_cand))
+        f_ex = pool.submit(inherit(spark)(_b_ex))
         cand, ex = f_cand.result(), f_ex.result()
     ns = strat.agg(F.count("*").cast("long").alias("n_stratum"))
     return ns.crossJoin(F.broadcast(cand)).crossJoin(F.broadcast(ex))
@@ -833,8 +839,12 @@ def cc_release_audit(spark: SparkSession, d: str) -> DataFrame:
                 .localCheckpoint())
 
     from concurrent.futures import ThreadPoolExecutor
+    from pyspark import inheritable_thread_target as inherit
+    # each branch runs on its own copy of the caller's local properties
+    # (job group included); one copy per branch, so a branch's job
+    # description never leaks into another's
     with ThreadPoolExecutor(max_workers=6) as pool:
-        futs = [pool.submit(f) for f in
+        futs = [pool.submit(inherit(spark)(f)) for f in
                 (_b_mh, _b_both, _b_rates, _b_m5, _b_drift, _b_ew)]
         mh, both, rates, m5f, drift, ew = [f.result() for f in futs]
     return audit_card_assemble(both, m5f, rates, drift, ew, mh)

@@ -363,3 +363,25 @@ def test_m6_expr_parse_equals_lambda_columns(spark):
     for rp, rl in zip(parsed, lam):
         assert rp["s"] == rl["s"] and rp["vv"] == rl["vv"]
         assert rp["dot"] == rl["dot"] and rp["n"] == rl["n"]
+
+
+# ---------------------------------------------------------------------------
+# branch pools: every job an entry launches carries the caller's job group
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("name", ["cc_release_audit", "cc_ingest_delta",
+                                  "dd_minhash_pr_sampled"])
+def test_pool_jobs_inherit_job_group(spark, name):
+    from conftest import SF01
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    group = f"pool-group-{name}"
+    first = dag.nextJobId()
+    sc.setJobGroup(group, name)
+    try:
+        CATALOG[name].build(spark, SF01).toPandas()
+    finally:
+        sc._jsc.clearJobGroup()
+    window = set(range(first, dag.nextJobId()))
+    assert window
+    assert window <= set(sc.statusTracker().getJobIdsForGroup(group))
