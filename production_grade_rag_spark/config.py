@@ -160,7 +160,6 @@ class EngineConfig:
     # token budget (reference: rag_engine.py:36-37)
     max_context_tokens: int = 128_000
     max_doc_tokens: int = 10_000
-    chars_per_token: int = 4
 
     # feature flags (reference: config/feature_flags.py)
     enable_parent_retrieval: bool = True

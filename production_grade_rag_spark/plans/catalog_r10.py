@@ -362,26 +362,13 @@ def _kmv_sketch(spark: SparkSession, d: str,
 
     ``with_exact`` adds the exact countDistinct twin (the catalog
     audit column); the pure-sketch form (what a 100 TB run compiles)
-    is stress-timed at the 10x tier."""
+    is stress-timed at the 10x tier, and its sketch columns are
+    pinned equal to the audit form's (tests/test_catalog_r10.py)."""
     from ..operators.dedup import shingle_explode
     from .catalog_r9 import _h60
     docs = _t(spark, d, "documents")
     s = (shingle_explode(docs, extra_cols=("source",))
          .select("source", _h60(F.col("sh")).alias("h")))
-    if with_exact:
-        # r16 (guide §2.4): the audit form referenced the corpus
-        # shingle pass TWICE (sketch path + exact countDistinct twin).
-        # The exact twin's unavoidable cost is the distinct-(source,h)
-        # shuffle — materialize that distinct set once and let BOTH
-        # paths read it: the k-minimum set of the distinct hashes
-        # under the pre-filter is the same whether duplicates drop
-        # before or after the per-partition top-k (the cand step
-        # deduplicated anyway), so kept/theta/est are unchanged, and
-        # countDistinct over distinct rows is the same exact twin.
-        # The pure-sketch 100 TB form (with_exact=False) keeps its
-        # map-side prefilter + bounded windows with NO corpus-wide
-        # distinct and NO materialization.
-        s = s.distinct().localCheckpoint()
     surv = s.filter(F.col("h") < _KMV_PREFILTER)
     w_loc = Window.partitionBy("source", "p").orderBy("h")
     cand = (surv.withColumn("p", F.spark_partition_id())
@@ -527,12 +514,8 @@ def a31_kmv_merge(spark: SparkSession, d: str) -> DataFrame:
     from ..operators.dedup import shingle_explode
     from .catalog_r9 import _h60
     docs = _t(spark, d, "documents")
-    # r16: one corpus shingle pass for both the merge sketch and the
-    # exact corpus twin (see _kmv_sketch — same argument, the exact
-    # twin's distinct shuffle is the shared materialization)
     s = (shingle_explode(docs, extra_cols=("source",))
-         .select("source", _h60(F.col("sh")).alias("h"))
-         .distinct().localCheckpoint())
+         .select("source", _h60(F.col("sh")).alias("h")))
     surv = s.filter(F.col("h") < _KMV_PREFILTER)
     w_loc = Window.partitionBy("source", "p").orderBy("h")
     cand = (surv.withColumn("p", F.spark_partition_id())

@@ -567,21 +567,11 @@ def pr_counts_from(strat: DataFrame, threshold: float = 0.8) -> DataFrame:
     from ..operators.dedup import (minhash_dedup_pairs,
                                    ngram_jaccard_pairs_index)
 
-    # r16 (guide §2.6): the LSH-candidate branch and the exact-index
-    # branch are independent 1-row reductions over the materialized
-    # stratum, but the candidate branch's eager steps (the r16
-    # candidate/shingle checkpoints inside minhash_pairs_from_index)
-    # serialized in front of the exact join.  Materialize both 1-row
-    # frames from a 2-thread pool so the exact join runs while the
-    # LSH chain builds.  Values untouched (same plans, same stratum).
-    def _b_cand() -> DataFrame:
-        return (minhash_dedup_pairs(strat, threshold=0.0)
-                .agg(F.count("*").cast("long").alias("n_candidates"),
-                     F.coalesce(F.sum((F.col("jaccard") >= threshold)
-                                      .cast("int")), F.lit(0))
-                     .cast("long").alias("n_true_pos"))
-                .localCheckpoint())
-
+    cand = (minhash_dedup_pairs(strat, threshold=0.0)
+            .agg(F.count("*").cast("long").alias("n_candidates"),
+                 F.coalesce(F.sum((F.col("jaccard") >= threshold)
+                                  .cast("int")), F.lit(0))
+                 .cast("long").alias("n_true_pos")))
     # prefix_filter=False: the stratum is BOUNDED (~2k docs by the
     # derived modulus), so even a worst-case all-boilerplate stratum
     # caps the unguarded enumeration at shingles x 2048^2 — a bounded
@@ -589,22 +579,9 @@ def pr_counts_from(strat: DataFrame, threshold: float = 0.8) -> DataFrame:
     # the documented cheapest plan on bounded frames, and the r15
     # hot-shingle guard (collapse + PPJoin prefix) stays on the
     # FULL-CORPUS consumers where a megacluster is unbounded
-    def _b_ex() -> DataFrame:
-        return (ngram_jaccard_pairs_index(strat, threshold=threshold,
-                                          prefix_filter=False)
-                .agg(F.count("*").cast("long").alias("n_exact"))
-                .localCheckpoint())
-
-    from concurrent.futures import ThreadPoolExecutor
-    from pyspark import inheritable_thread_target as inherit
-    # each branch runs on its own copy of the caller's local properties
-    # (job group included); one copy per branch, so a branch's job
-    # description never leaks into another's
-    spark = strat.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cand = pool.submit(inherit(spark)(_b_cand))
-        f_ex = pool.submit(inherit(spark)(_b_ex))
-        cand, ex = f_cand.result(), f_ex.result()
+    ex = (ngram_jaccard_pairs_index(strat, threshold=threshold,
+                                    prefix_filter=False)
+          .agg(F.count("*").cast("long").alias("n_exact")))
     ns = strat.agg(F.count("*").cast("long").alias("n_stratum"))
     return ns.crossJoin(F.broadcast(cand)).crossJoin(F.broadcast(ex))
 
@@ -784,69 +761,28 @@ def cc_release_audit(spark: SparkSession, d: str) -> DataFrame:
     from .catalog_r12 import (_DQ9_L2_MAX, _DQ9_VR_HI, _DQ9_VR_LO,
                               _dq9_card, _dq9_moments, dq10_ewma_chart)
 
-    # r16 (guide §2.6 — overlap independent jobs): the six monitor
-    # branches are independent until the final assemble, but built
-    # inline their eager steps (the stratum helper's checkpoints, each
-    # 1-row materialization) ran strictly sequentially, so the card's
-    # wall-clock was the SUM of its branches.  Each branch now builds
-    # and materializes its bounded 1-row frame from a driver thread
-    # pool — job descriptions are thread-local, FIFO scheduling
-    # back-fills the tails — so the card costs ~the slowest branch.
-    # Values are untouched: each branch is the identical deterministic
-    # plan, and the assemble reads the same six 1-row frames.
-    def _b_both() -> DataFrame:
-        spark.sparkContext.setJobDescription("audit: risk+corr scan")
-        return audit_risk_corr(audit_doc_groups(docs)).localCheckpoint()
-
-    def _b_m5() -> DataFrame:
-        spark.sparkContext.setJobDescription("audit: isotropy")
-        return (m5_embedding_isotropy(spark, d).select("anisotropy")
-                .localCheckpoint())
-
-    def _b_rates() -> DataFrame:
-        spark.sparkContext.setJobDescription("audit: order clumping")
-        return (t43_order_clumping(spark, d).agg(
-            F.max(F.when(F.col("ordering") == "curriculum",
-                         F.col("same_bucket_rate"))).alias("cur_rate"),
-            F.max(F.when(F.col("ordering") == "doc_id",
-                         F.col("same_bucket_rate"))).alias("nat_rate"))
-            .localCheckpoint())
-
-    def _b_drift() -> DataFrame:
-        spark.sparkContext.setJobDescription("audit: embedding drift")
-        return (_dq9_card(_dq9_moments(_t(spark, d, "embeddings")))
-                .select(F.col("centroid_l2").alias("drift_l2"),
-                        F.col("var_ratio").alias("drift_vr"))
-                .localCheckpoint())
-
-    def _b_ew() -> DataFrame:
-        spark.sparkContext.setJobDescription("audit: error-rate ewma")
-        return (dq10_ewma_chart(spark, d).agg(
-            F.max_by("ewma", "day").alias("ewma_last"),
-            F.bool_or("ooc").alias("any_ooc")).localCheckpoint())
-
-    def _b_mh() -> DataFrame:
-        # the SHARED stratum frame (VERDICT r13 #6): the card's recall
-        # row reads the same helper dd_minhash_pr_sampled wraps — one
-        # implementation of the banding + exact verify, derived
-        # modulus (VERDICT r13 #1), inverted-index exact join
-        spark.sparkContext.setJobDescription("audit: minhash recall stratum")
-        return (pr_stratum_counts(spark, d, threshold=0.8)
-                .select(F.round(F.col("n_true_pos").cast("double")
-                                / F.greatest("n_exact", F.lit(1))
-                                .cast("double"), 6).alias("mh_recall"),
-                        F.col("n_exact").alias("mh_nex"))
-                .localCheckpoint())
-
-    from concurrent.futures import ThreadPoolExecutor
-    from pyspark import inheritable_thread_target as inherit
-    # each branch runs on its own copy of the caller's local properties
-    # (job group included); one copy per branch, so a branch's job
-    # description never leaks into another's
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        futs = [pool.submit(inherit(spark)(f)) for f in
-                (_b_mh, _b_both, _b_rates, _b_m5, _b_drift, _b_ew)]
-        mh, both, rates, m5f, drift, ew = [f.result() for f in futs]
+    # the SHARED stratum frame (VERDICT r13 #6): the card's recall
+    # row reads the same helper dd_minhash_pr_sampled wraps — one
+    # implementation of the banding + exact verify, derived
+    # modulus (VERDICT r13 #1), inverted-index exact join
+    mh = (pr_stratum_counts(spark, d, threshold=0.8)
+          .select(F.round(F.col("n_true_pos").cast("double")
+                          / F.greatest("n_exact", F.lit(1))
+                          .cast("double"), 6).alias("mh_recall"),
+                  F.col("n_exact").alias("mh_nex")))
+    both = audit_risk_corr(audit_doc_groups(docs))
+    rates = t43_order_clumping(spark, d).agg(
+        F.max(F.when(F.col("ordering") == "curriculum",
+                     F.col("same_bucket_rate"))).alias("cur_rate"),
+        F.max(F.when(F.col("ordering") == "doc_id",
+                     F.col("same_bucket_rate"))).alias("nat_rate"))
+    m5f = m5_embedding_isotropy(spark, d).select("anisotropy")
+    drift = (_dq9_card(_dq9_moments(_t(spark, d, "embeddings")))
+             .select(F.col("centroid_l2").alias("drift_l2"),
+                     F.col("var_ratio").alias("drift_vr")))
+    ew = dq10_ewma_chart(spark, d).agg(
+        F.max_by("ewma", "day").alias("ewma_last"),
+        F.bool_or("ooc").alias("any_ooc"))
     return audit_card_assemble(both, m5f, rates, drift, ew, mh)
 
 

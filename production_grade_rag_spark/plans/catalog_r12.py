@@ -507,127 +507,107 @@ def cc_ingest_delta(spark: SparkSession, d: str) -> DataFrame:
     docs = _t(spark, d, "documents")
     batch_raw = docs.filter(F.col("doc_id") % 2 == 1)
 
-    # r16 (guide §2.6): the dq9 drift card reads the EMBEDDINGS table
-    # and depends on nothing in the document chain below — built
-    # inline it serialized one more job onto an already ~12-job
-    # pipeline.  Kick its bounded 1-row materialization off on a
-    # driver thread at entry; the publish stage fetches the result.
-    # Values are untouched (same deterministic plan, same policy).
-    from concurrent.futures import ThreadPoolExecutor
-    from pyspark import inheritable_thread_target as inherit
+    # stage frames are each read by several downstream stages (the
+    # ledger, the bloom, the anti-join, the near-dup delta) —
+    # materialize once per stage, exactly what a production ingest
+    # does when it logs the funnel: stage outputs are tables, not
+    # re-derivations of the whole upstream per read
+    #
+    # r15: gate ONCE and split by parity afterwards — the old
+    # per-split gating ran the clean+quality+language pipeline as two
+    # jobs over two scans (same total expression work, twice the scan
+    # + checkpoint floor); the gate is per-row, so filter-then-gate ==
+    # gate-then-filter row for row.
+    g_all = cc_gate_keyed(docs).localCheckpoint()
+    g_store = g_all.filter(F.col("doc_id") % 2 == 0)
+    g_batch = g_all.filter(F.col("doc_id") % 2 == 1)
 
-    def _b_drift() -> DataFrame:
-        spark.sparkContext.setJobDescription("ingest: dq9 drift gate")
-        return (_dq9_card(_dq9_moments(_t(spark, d, "embeddings")))
+    # --- bloom pre-filter over the store's content hashes (a21) ----
+    jcol = F.explode(F.array(*[F.lit(j) for j in range(_ING_BF_K)])) \
+        .alias("j")
+
+    def positions(df: DataFrame) -> DataFrame:
+        return (df.select("content_hash", jcol)
+                .withColumn("p", F.pmod(
+                    md5_int32(F.concat(F.col("content_hash"),
+                                       F.lit(":bf"),
+                                       F.col("j").cast("string"))),
+                    F.lit(_ING_BF_BITS)))
+                .withColumn("bitval", F.expr(
+                    "shiftleft(cast(1 as bigint), cast(p % 32 as int))")))
+
+    store_hashes = g_store.select("content_hash").distinct()
+    words = (positions(store_hashes)
+             .groupBy(F.expr("p div 32").alias("word"))
+             .agg(F.expr("bit_or(bitval)").alias("wbits")))
+    batch_hashes = g_batch.select("content_hash").distinct()
+    probe = (positions(batch_hashes).withColumn("word", F.expr("p div 32"))
+             .join(F.broadcast(words), "word", "left")
+             .withColumn("hit", F.coalesce(
+                 (F.col("wbits").bitwiseAND(F.col("bitval")) != 0),
+                 F.lit(False)))
+             .groupBy("content_hash")
+             .agg(F.expr("bool_and(hit)").alias("bloom_hit")))
+
+    gb = g_batch.join(probe, "content_hash")
+    # bloom misses are DEFINITELY new (no false negatives); only hits
+    # pay the store-sized anti-join
+    definite = gb.filter(~F.col("bloom_hit"))
+    verified = (gb.filter(F.col("bloom_hit"))
+                .join(store_hashes, "content_hash", "left_anti"))
+    fresh = definite.unionByName(verified).drop("bloom_hit") \
+        .localCheckpoint()
+
+    from pyspark.sql import Window
+    w = Window.partitionBy("content_hash")
+    keepers = (fresh.withColumn("__keeper", F.min("doc_id").over(w))
+               .filter(F.col("doc_id") == F.col("__keeper"))
+               .drop("__keeper").localCheckpoint())
+
+    # --- near-dup vs the resident store (dd_minhash_delta shape) ---
+    base = g_store.select("doc_id", F.col("clean_text").alias("text"))
+    delta = keepers.select("doc_id", F.col("clean_text").alias("text"))
+    pairs = minhash_delta_pairs(base, delta, threshold=0.8,
+                                max_bucket=None)
+    # loser election: the store always wins (it is committed); among
+    # keepers the min id wins.  Sides are recoverable by parity (base
+    # even, delta odd) after the operator's canonicalization.
+    both_delta = (F.col("id_a") % 2 == 1) & (F.col("id_b") % 2 == 1)
+    losers = (pairs.select(
+        F.when(both_delta, F.greatest("id_a", "id_b"))
+         .when(F.col("id_a") % 2 == 1, F.col("id_a"))
+         .otherwise(F.col("id_b")).alias("doc_id"))
+        .distinct())
+    survivors = keepers.join(losers, "doc_id", "left_anti")
+
+    # --- the actual commit: versioned append, ledger reads it back --
+    store_path = _scratch("cc_ingest_store")
+    shutil.rmtree(store_path, ignore_errors=True)
+    write_version(survivors.select("doc_id", "content_hash"),
+                  store_path, 1)
+    committed = read_version(spark, store_path)
+
+    def stage(no: int, name: str, frame: DataFrame) -> DataFrame:
+        return frame.agg(F.count("*").cast("long").alias("docs")) \
+            .select(F.lit(no).cast("long").alias("stage_no"),
+                    F.lit(name).alias("stage"), "docs")
+
+    # --- drift gate on the publish step (VERDICT r12 #7): the dq9
+    # card between the incoming batch's vectors (odd vec parity —
+    # mirroring the odd-doc batch split) and the resident store's
+    # (even), computed INSIDE the ingest plan; the commit is written
+    # either way (it is the versioned staging area), but the batch
+    # only PUBLISHES — ships to consumers — when the embedding
+    # distribution is stable under the stated policy (_DQ9_L2_MAX /
+    # _DQ9_VR bounds; see the policy comment above _DQ9_L2_MAX for
+    # why centroid cosine is NOT the gate).  One extra scan of the
+    # vectors, partial-aggregated to a 1-row broadcast frame.
+    drift_ok = (_dq9_card(_dq9_moments(_t(spark, d, "embeddings")))
                 .select(((F.col("centroid_l2") <= _DQ9_L2_MAX)
                          & (F.col("var_ratio") >= _DQ9_VR_LO)
                          & (F.col("var_ratio") <= _DQ9_VR_HI))
-                        .alias("__drift_ok"))
-                .localCheckpoint())
-
-    # the with-block shuts the pool down on every path, the document
-    # chain raising included; the drift thread runs on a copy of the
-    # caller's local properties (job group included)
-    with ThreadPoolExecutor(max_workers=1) as drift_pool:
-        drift_fut = drift_pool.submit(inherit(spark)(_b_drift))
-        # stage frames are each read by several downstream stages (the
-        # ledger, the bloom, the anti-join, the near-dup delta) —
-        # materialize once per stage, exactly what a production ingest
-        # does when it logs the funnel: stage outputs are tables, not
-        # re-derivations of the whole upstream per read
-        #
-        # r15: gate ONCE and split by parity afterwards — the old
-        # per-split gating ran the clean+quality+language pipeline as two
-        # jobs over two scans (same total expression work, twice the scan
-        # + checkpoint floor); the gate is per-row, so filter-then-gate ==
-        # gate-then-filter row for row.
-        g_all = cc_gate_keyed(docs).localCheckpoint()
-        g_store = g_all.filter(F.col("doc_id") % 2 == 0)
-        g_batch = g_all.filter(F.col("doc_id") % 2 == 1)
-
-        # --- bloom pre-filter over the store's content hashes (a21) ----
-        jcol = F.explode(F.array(*[F.lit(j) for j in range(_ING_BF_K)])) \
-            .alias("j")
-
-        def positions(df: DataFrame) -> DataFrame:
-            return (df.select("content_hash", jcol)
-                    .withColumn("p", F.pmod(
-                        md5_int32(F.concat(F.col("content_hash"),
-                                           F.lit(":bf"),
-                                           F.col("j").cast("string"))),
-                        F.lit(_ING_BF_BITS)))
-                    .withColumn("bitval", F.expr(
-                        "shiftleft(cast(1 as bigint), cast(p % 32 as int))")))
-
-        store_hashes = g_store.select("content_hash").distinct()
-        words = (positions(store_hashes)
-                 .groupBy(F.expr("p div 32").alias("word"))
-                 .agg(F.expr("bit_or(bitval)").alias("wbits")))
-        batch_hashes = g_batch.select("content_hash").distinct()
-        probe = (positions(batch_hashes).withColumn("word", F.expr("p div 32"))
-                 .join(F.broadcast(words), "word", "left")
-                 .withColumn("hit", F.coalesce(
-                     (F.col("wbits").bitwiseAND(F.col("bitval")) != 0),
-                     F.lit(False)))
-                 .groupBy("content_hash")
-                 .agg(F.expr("bool_and(hit)").alias("bloom_hit")))
-
-        gb = g_batch.join(probe, "content_hash")
-        # bloom misses are DEFINITELY new (no false negatives); only hits
-        # pay the store-sized anti-join
-        definite = gb.filter(~F.col("bloom_hit"))
-        verified = (gb.filter(F.col("bloom_hit"))
-                    .join(store_hashes, "content_hash", "left_anti"))
-        fresh = definite.unionByName(verified).drop("bloom_hit") \
-            .localCheckpoint()
-
-        from pyspark.sql import Window
-        w = Window.partitionBy("content_hash")
-        keepers = (fresh.withColumn("__keeper", F.min("doc_id").over(w))
-                   .filter(F.col("doc_id") == F.col("__keeper"))
-                   .drop("__keeper").localCheckpoint())
-
-        # --- near-dup vs the resident store (dd_minhash_delta shape) ---
-        base = g_store.select("doc_id", F.col("clean_text").alias("text"))
-        delta = keepers.select("doc_id", F.col("clean_text").alias("text"))
-        pairs = minhash_delta_pairs(base, delta, threshold=0.8,
-                                    max_bucket=None)
-        # loser election: the store always wins (it is committed); among
-        # keepers the min id wins.  Sides are recoverable by parity (base
-        # even, delta odd) after the operator's canonicalization.
-        both_delta = (F.col("id_a") % 2 == 1) & (F.col("id_b") % 2 == 1)
-        losers = (pairs.select(
-            F.when(both_delta, F.greatest("id_a", "id_b"))
-             .when(F.col("id_a") % 2 == 1, F.col("id_a"))
-             .otherwise(F.col("id_b")).alias("doc_id"))
-            .distinct())
-        survivors = keepers.join(losers, "doc_id", "left_anti")
-
-        # --- the actual commit: versioned append, ledger reads it back --
-        store_path = _scratch("cc_ingest_store")
-        shutil.rmtree(store_path, ignore_errors=True)
-        write_version(survivors.select("doc_id", "content_hash"),
-                      store_path, 1)
-        committed = read_version(spark, store_path)
-
-        def stage(no: int, name: str, frame: DataFrame) -> DataFrame:
-            return frame.agg(F.count("*").cast("long").alias("docs")) \
-                .select(F.lit(no).cast("long").alias("stage_no"),
-                        F.lit(name).alias("stage"), "docs")
-
-        # --- drift gate on the publish step (VERDICT r12 #7): the dq9
-        # card between the incoming batch's vectors (odd vec parity —
-        # mirroring the odd-doc batch split) and the resident store's
-        # (even), computed INSIDE the ingest plan; the commit is written
-        # either way (it is the versioned staging area), but the batch
-        # only PUBLISHES — ships to consumers — when the embedding
-        # distribution is stable under the stated policy (_DQ9_L2_MAX /
-        # _DQ9_VR bounds; see the policy comment above _DQ9_L2_MAX for
-        # why centroid cosine is NOT the gate).  One extra scan of the
-        # vectors, partial-aggregated to a 1-row broadcast frame (built
-        # concurrently with the doc chain — the r16 thread at entry).
-        drift_ok = drift_fut.result()
-    published = (committed.agg(F.count("*").cast("long").alias("__c"))
+                        .alias("__drift_ok")))
+    published =(committed.agg(F.count("*").cast("long").alias("__c"))
                  .crossJoin(F.broadcast(drift_ok))
                  .select(F.lit(6).cast("long").alias("stage_no"),
                          F.lit("published").alias("stage"),

@@ -118,6 +118,17 @@ def test_kmv_prefilter_kept_full_minimum_set(spark):
     assert all(r["n_keep"] <= 64 for r in rows)
 
 
+def test_kmv_pure_sketch_equals_audit_form(spark):
+    # the pure-sketch form (the 100 TB shape, no exact twin) keeps the
+    # same k-minimum state per source as the audited catalog form
+    from production_grade_rag_spark.plans.catalog_r10 import _kmv_sketch
+    cols = ("source", "n_keep", "theta_k", "est_ndv")
+    audit = _kmv_sketch(spark, SF001, with_exact=True).select(*cols)
+    pure = _kmv_sketch(spark, SF001, with_exact=False).select(*cols)
+    rows = audit.collect()
+    assert rows and rows == pure.collect()
+
+
 def test_kmv_merge_equals_direct_corpus_sketch(spark):
     # union-then-recap of the per-source k-sets must estimate from
     # the same theta as a direct corpus-level KMV (the semilattice

@@ -366,7 +366,7 @@ def test_m6_expr_parse_equals_lambda_columns(spark):
 
 
 # ---------------------------------------------------------------------------
-# branch pools: every job an entry launches carries the caller's job group
+# job groups: every job an entry launches carries the caller's job group
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("name", ["cc_release_audit", "cc_ingest_delta",
