@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import TOKEN_RUN_RE, pystrip
+from ..session import materialize
 
 # ---------------------------------------------------------------------------
 # shared hashing primitives (md5 -> 32-bit int; Spark/DuckDB-identical)
@@ -397,8 +398,7 @@ def minhash_pairs_from_index(banded: DataFrame, df: DataFrame,
                                min_band_overlap=min_band_overlap)
 
     def candidate_texts(need: DataFrame) -> DataFrame:
-        return (df.select(id_col, text_col)
-                .join(F.broadcast(need), id_col, "left_semi"))
+        return df.select(id_col, text_col).join(need, id_col, "left_semi")
 
     return _verify_candidates(cands, candidate_texts, text_col, id_col,
                               threshold)
@@ -420,12 +420,12 @@ def _verify_candidates(cands: DataFrame,
     materialized once, so both verify joins read the same subtree —
     one candidate-sized shingle pass, not a full corpus pass per pair
     side (VERDICT r15 #3)."""
-    cands = cands.select("id_a", "id_b").localCheckpoint()
+    cands = materialize(cands.select("id_a", "id_b"), "dedup:candidates")
     need = (cands.select(F.col("id_a").alias(id_col))
             .unionByName(cands.select(F.col("id_b").alias(id_col)))
             .distinct())
-    sh = shingle_frame(candidate_texts(need), text_col,
-                       id_col).localCheckpoint()
+    sh = materialize(shingle_frame(candidate_texts(need), text_col, id_col),
+                     "dedup:candidate_shingles")
     joined = (cands
               .join(sh.select(F.col(id_col).alias("id_a"),
                               F.col("__sh").alias("__sh_a")), "id_a")
@@ -498,7 +498,7 @@ def connected_components(pairs: DataFrame, all_ids: DataFrame,
     local minimum.  small-star(u): for every neighbor v < u (and u
     itself), link to m = min(N-(u) u {u}) — the downward edges
     star-ify.  Both emit canonical (least, greatest) edges; each round
-    is localCheckpointed (flat plans at scale) and the loop exits when
+    is materialized (flat plans at scale) and the loop exits when
     the edge set reaches its fixed point (two limit(1) anti-join
     probes).  A run that finds no fixed point within
     ``STAR_MAX_ROUNDS`` raises instead of returning a partial labeling.
@@ -534,10 +534,10 @@ def connected_components(pairs: DataFrame, all_ids: DataFrame,
         self_link = m.select(F.col("a").alias("x"), F.col("m").alias("y"))
         return canon(hang.unionAll(self_link))
 
-    edges = canon(pairs.select(F.col("id_a").alias("x"),
-                               F.col("id_b").alias("y"))).localCheckpoint()
+    edges = materialize(canon(pairs.select(
+        F.col("id_a").alias("x"), F.col("id_b").alias("y"))), "cc:edges")
     for _ in range(STAR_MAX_ROUNDS):
-        nxt = small_star(large_star(edges)).localCheckpoint()
+        nxt = materialize(small_star(large_star(edges)), "cc:star_round")
         changed = (nxt.exceptAll(edges).limit(1).count() > 0
                    or edges.exceptAll(nxt).limit(1).count() > 0)
         edges = nxt
@@ -681,18 +681,15 @@ def ngram_jaccard_pairs_index(df: DataFrame, text_col: str = "text",
     canon = (shingle_frame(df, text_col, id_col, k)
              .select(F.col(id_col), F.array_sort("__sh").alias("__sh"))
              .withColumn("__key", _set_key(F.col("__sh"))))
-    # members feeds four plan references (two expansion joins + the
-    # intra self-join's two sides) and reps feeds five (freq, prefix,
-    # both verify sides, the key map) — materialize each once so the
-    # text scan + shingle + collapse work never recomputes per
-    # reference (the minhash_delta_pairs lineage discipline)
-    members = canon.select(F.col(id_col).alias("__m"), "__key") \
-        .localCheckpoint()
-    reps = (canon.groupBy("__key")
-            .agg(F.min(id_col).alias("__rid"),
-                 F.first("__sh").alias("__sh"))
-            .withColumn("__n", F.size("__sh"))
-            .localCheckpoint())
+    # members feeds four plan references and reps five: the text scan,
+    # shingling and collapse run once, not once per reference
+    members = materialize(canon.select(F.col(id_col).alias("__m"), "__key"),
+                          "ngram_index:members")
+    reps = materialize(canon.groupBy("__key")
+                       .agg(F.min(id_col).alias("__rid"),
+                            F.first("__sh").alias("__sh"))
+                       .withColumn("__n", F.size("__sh")),
+                       "ngram_index:reps")
 
     # 2. global frequency over REPRESENTATIVES (the clique counts once)
     #    -> per-set prefix under the (freq asc, shingle asc) order.
@@ -1023,21 +1020,19 @@ def minhash_delta_pairs(base: DataFrame, delta: DataFrame,
         cands = cands.filter(F.col("__n_shared") >= min_band_overlap)
 
     def candidate_texts(need: DataFrame) -> DataFrame:
-        # candidate documents only: at scale the base table is read
-        # back just for the docs the index flagged.  A re-ingested id exists in BOTH sides — keep
-        # exactly one text row per id (the DELTA version: a re-ingest
-        # supersedes the resident copy) or the verify joins fan every
-        # pair it touches out twice.  The dedup is an ANTI-join of the
-        # base side against the (batch-sized, broadcast) delta id set
-        # — map-side, no shuffle, no aggregate; a groupBy+min_by form
-        # measured 3x the whole operator's wall-clock on the
-        # adversarial skew tier.
+        # candidate documents only, by a planner-chosen semi-join (the
+        # id set grows with the corpus on a duplicate-heavy input).  A
+        # re-ingested id exists in BOTH sides — keep only its DELTA
+        # text row or the verify joins fan its pairs out twice: an
+        # ANTI-join against the (batch-sized, broadcast) delta id set,
+        # map-side; a groupBy+min_by form measured 3x the whole
+        # operator's wall-clock on the adversarial skew tier.
         base_only = (base.select(id_col, text_col)
-                     .join(F.broadcast(need), id_col, "left_semi")
+                     .join(need, id_col, "left_semi")
                      .join(F.broadcast(delta.select(id_col)), id_col,
                            "left_anti"))
         return (delta.select(id_col, text_col)
-                .join(F.broadcast(need), id_col, "left_semi")
+                .join(need, id_col, "left_semi")
                 .unionByName(base_only))
 
     return _verify_candidates(cands, candidate_texts, text_col, id_col,

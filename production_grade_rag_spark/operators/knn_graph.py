@@ -43,7 +43,9 @@ MongoDB $vectorSearch retrieves; graph structure is new capability).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -58,10 +60,16 @@ _BUILT: set[str] = set()
 
 def _warehouse(name: str) -> str:
     """Repo-local scratch dir (gitignored spark-warehouse) — graph
-    stores must not write outside the repo."""
+    stores must not write outside the repo.  One dir per process,
+    removed at exit, so a concurrent process cannot overwrite a store
+    this one reads (each process rebuilds on first use: ``_BUILT``)."""
     root = os.path.dirname(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
-    return os.path.join(root, "spark-warehouse", name)
+    return os.path.join(root, "spark-warehouse", f"knn_pid{os.getpid()}",
+                        name)
+
+
+atexit.register(lambda: shutil.rmtree(_warehouse(""), ignore_errors=True))
 
 
 def _tag(kind: str, d: str, k: int, method: str,

@@ -675,7 +675,7 @@ def t20_bpe_merges64(spark: SparkSession, d: str) -> DataFrame:
 
     Measured driver-side iteration bound: ~0.2 s/merge flat —
     64 merges run in 13 s at sf0.001 and sf0.01 alike (the loop cost
-    is the per-iteration 1-row arg-max collect + localCheckpoint
+    is the per-iteration 1-row arg-max collect + materialize
     round-trip, NOT corpus- or depth-dependent: the vocab frame is
     checkpointed so iteration k never re-folds the chain, and the
     vocab table itself is corpus-size-independent past the first
@@ -685,7 +685,7 @@ def t20_bpe_merges64(spark: SparkSession, d: str) -> DataFrame:
     not needed at this depth.  pytest pins depth-16 == the first 16
     of this table (the r9 prefix-consistency convention)."""
     from .catalog_r8 import _bpe_learn
-    merges, _ = _bpe_learn(spark, d, n_merges=_BPE64, materialize=True)
+    merges, _ = _bpe_learn(spark, d, n_merges=_BPE64)
     return spark.createDataFrame(
         merges,
         "merge_rank long, lhs string, rhs string, "
@@ -717,7 +717,6 @@ def t20_bpe_curve64(spark: SparkSession, d: str) -> DataFrame:
     checkpointed frame)."""
     from .catalog_r8 import _bpe_learn
     _, _, curve = _bpe_learn(spark, d, n_merges=_BPE64,
-                             materialize=True,
                              curve_at=_BPE64_CURVE_AT)
 
     def summarize(m: int, w: DataFrame) -> DataFrame:

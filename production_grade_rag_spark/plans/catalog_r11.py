@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import _t, register
+from ..session import materialize
 
 
 # ===========================================================================
@@ -406,17 +407,13 @@ def m6_whiten_embeddings(spark: SparkSession, d: str) -> DataFrame:
                "cast(0 as bigint), (acc, x) -> acc + x)")
     vv = F.expr("aggregate(transform(v, x -> x * x), "
                 "cast(0 as bigint), (a, x) -> a + x)")
-    # r16 (guide §2.4/§5): wf feeds SIX subtree references (the count,
-    # the residual aggregate, and both sides of each anisotropy
-    # pair-join) — left as lineage each one re-read the centered store
-    # and re-ran the interpreted whiten map (s/vvq/w HOF expressions).
-    # Materialize the narrow whitened frame once; every consumer reads
-    # slots.  Same rows, same values — pure lineage truncation (the
-    # _pca_centered store-materialization argument, one level up).
-    wf = (j.withColumn("s", s).withColumn("vvq", vv)
-          .withColumn("w", F.expr(
-              "zip_with(cv, v, (cvi, vi) -> cvi - ((s * vi) div vvq))"))
-          .localCheckpoint())
+    # six subtrees (the count, the residual, both sides of each
+    # anisotropy pair-join) read the whitened frame: one whiten map
+    wf = materialize(
+        j.withColumn("s", s).withColumn("vvq", vv)
+        .withColumn("w", F.expr(
+            "zip_with(cv, v, (cvi, vi) -> cvi - ((s * vi) div vvq))")),
+        "m6:whitened")
     wv = F.expr("aggregate(zip_with(w, v, (a, b) -> a * b), "
                 "cast(0 as bigint), (acc, x) -> acc + x)")
     resid = (wf.withColumn("wv", wv)
@@ -550,12 +547,9 @@ def pr_stratum_counts(spark: SparkSession, d: str,
     INVERTED-INDEX exact join (operators/dedup.py::
     ngram_jaccard_pairs_index — sum-of-freq^2 cost, not the
     nested-loop O(stratum^2) enumeration the r13 card paid)."""
-    # the stratum is BOUNDED (~2k docs) by the derived modulus, so
-    # materializing it once is a constant-size localCheckpoint at any
-    # corpus scale — the three consumers below (banding, exact index
-    # join, count) then read a tiny local table instead of each
-    # re-running the scan + filter
-    return pr_counts_from(pr_stratum(spark, d).localCheckpoint(),
+    # the stratum is bounded (~2k docs) by the derived modulus; its three
+    # consumers (banding, exact index join, count) read it, not the scan
+    return pr_counts_from(materialize(pr_stratum(spark, d), "pr:stratum"),
                           threshold=threshold)
 
 
@@ -1210,13 +1204,14 @@ def g12_neighborhood_function(spark: SparkSession, d: str) -> DataFrame:
     for r in range(1, _HB_H + 1):
         absorbed = (ged.join(s.withColumnRenamed("node", "dst"), "dst")
                     .select(F.col("src").alias("node"), "h"))
-        s = (s.unionByName(absorbed).distinct()
-             .withColumn("rn", F.row_number().over(w_node))
-             .filter(F.col("rn") <= _HB_K).select("node", "h")
-             .localCheckpoint())
+        # bounded lineage: hop r reads hop r-1's sketch and exact sets
+        s = materialize(s.unionByName(absorbed).distinct()
+                        .withColumn("rn", F.row_number().over(w_node))
+                        .filter(F.col("rn") <= _HB_K).select("node", "h"),
+                        "g12:sketch_round")
         babs = (ged.join(b.withColumnRenamed("node", "dst"), "dst")
                 .select(F.col("src").alias("node"), "m"))
-        b = b.unionByName(babs).distinct().localCheckpoint()
+        b = materialize(b.unionByName(babs).distinct(), "g12:exact_round")
         per_node = s.groupBy("node").agg(
             F.count("*").cast("long").alias("n_keep"),
             F.max("h").alias("theta_k"))

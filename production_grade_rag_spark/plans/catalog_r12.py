@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import _t, register
+from ..session import materialize
 
 
 # ===========================================================================
@@ -507,18 +508,17 @@ def cc_ingest_delta(spark: SparkSession, d: str) -> DataFrame:
     docs = _t(spark, d, "documents")
     batch_raw = docs.filter(F.col("doc_id") % 2 == 1)
 
-    # stage frames are each read by several downstream stages (the
-    # ledger, the bloom, the anti-join, the near-dup delta) —
-    # materialize once per stage, exactly what a production ingest
-    # does when it logs the funnel: stage outputs are tables, not
-    # re-derivations of the whole upstream per read
+    # the gated and the exact-new frames are each read by several
+    # downstream stages (the ledger, the bloom, the anti-join, the
+    # near-dup delta) — materialized once each, as a production ingest
+    # that logs its funnel keeps stage outputs as tables
     #
     # r15: gate ONCE and split by parity afterwards — the old
     # per-split gating ran the clean+quality+language pipeline as two
     # jobs over two scans (same total expression work, twice the scan
     # + checkpoint floor); the gate is per-row, so filter-then-gate ==
     # gate-then-filter row for row.
-    g_all = cc_gate_keyed(docs).localCheckpoint()
+    g_all = materialize(cc_gate_keyed(docs), "ingest:gated")
     g_store = g_all.filter(F.col("doc_id") % 2 == 0)
     g_batch = g_all.filter(F.col("doc_id") % 2 == 1)
 
@@ -555,14 +555,14 @@ def cc_ingest_delta(spark: SparkSession, d: str) -> DataFrame:
     definite = gb.filter(~F.col("bloom_hit"))
     verified = (gb.filter(F.col("bloom_hit"))
                 .join(store_hashes, "content_hash", "left_anti"))
-    fresh = definite.unionByName(verified).drop("bloom_hit") \
-        .localCheckpoint()
+    fresh = materialize(definite.unionByName(verified).drop("bloom_hit"),
+                        "ingest:fresh")
 
     from pyspark.sql import Window
     w = Window.partitionBy("content_hash")
     keepers = (fresh.withColumn("__keeper", F.min("doc_id").over(w))
                .filter(F.col("doc_id") == F.col("__keeper"))
-               .drop("__keeper").localCheckpoint())
+               .drop("__keeper"))
 
     # --- near-dup vs the resident store (dd_minhash_delta shape) ---
     base = g_store.select("doc_id", F.col("clean_text").alias("text"))
@@ -911,7 +911,7 @@ def mm_scene_components(spark: SparkSession, d: str) -> DataFrame:
 
     Scale shape: pair generation is the banded join (never
     all-pairs); contraction rounds are groupBy-min passes over the
-    flat node-key edge list with per-round localCheckpoint and a
+    flat node-key edge list with a per-round materialize and a
     fixed-point exit — O(log^2 n) rounds whatever the chain length
     (the dd_components argument at scene granularity)."""
     from ..operators import dedup
@@ -1010,8 +1010,8 @@ def g13_ktruss(spark: SparkSession, d: str) -> DataFrame:
     swap); each round is the standard distributed triangle
     enumeration — two k-bounded equi-joins on the flat edge key
     (<= k fanout per edge, the g6 plan) — plus one partial-aggregable
-    support count and one semi-join filter; per-round
-    localCheckpoint keeps lineage flat.  No window, no cartesian,
+    support count and one semi-join filter; a per-round
+    materialize keeps lineage flat.  No window, no cartesian,
     nothing quadratic."""
     from .catalog_r9 import _g6_und
     cur = _g6_und(spark, d)
@@ -1022,8 +1022,8 @@ def g13_ktruss(spark: SparkSession, d: str) -> DataFrame:
                .join(e3, (F.col("e3.u") == F.col("e1.u"))
                      & (F.col("e3.v") == F.col("e2.v")))
                .select(F.col("e1.u").alias("a"), F.col("e1.v").alias("b"),
-                       F.col("e2.v").alias("c"))
-               .localCheckpoint())
+                       F.col("e2.v").alias("c")))
+        tri = materialize(tri, "truss:triangles")
         out.append(
             cur.agg(F.count("*").cast("long").alias("n_edges"))
             .crossJoin(F.broadcast(
@@ -1038,9 +1038,9 @@ def g13_ktruss(spark: SparkSession, d: str) -> DataFrame:
                        .unionAll(tri.select(F.col("a").alias("u"),
                                             F.col("c").alias("v"))))
             sup = contrib.groupBy("u", "v").agg(F.count("*").alias("sup"))
-            cur = (cur.join(sup, ["u", "v"])
-                   .filter(F.col("sup") >= _TRUSS_K - 2)
-                   .select("u", "v").localCheckpoint())
+            cur = materialize(cur.join(sup, ["u", "v"])
+                              .filter(F.col("sup") >= _TRUSS_K - 2)
+                              .select("u", "v"), "truss:round")
     res = out[0]
     for frame in out[1:]:
         res = res.unionByName(frame)
@@ -1445,7 +1445,8 @@ def g14_modularity(spark: SparkSession, d: str) -> DataFrame:
                              F.col("lab").alias("cu")), "u")
           .join(lf.select(F.col("vec_id").alias("v"),
                           F.col("lab").alias("cv")), "v")
-          .select("cu", "cv").localCheckpoint())
+          .select("cu", "cv"))
+    le = materialize(le, "g14:labelled_edges")
     mm = le.agg(F.count("*").cast("long").alias("m"))
     din = (le.filter(F.col("cu") == F.col("cv"))
            .groupBy(F.col("cu").alias("c"))
@@ -1819,8 +1820,7 @@ def dq10_chart_from_days(spark: SparkSession, days: DataFrame) -> DataFrame:
                  "n_events", "n_errors",
                  F.expr(f"(2 * n_errors * {_EW_G} + n_events)"
                         " div (2 * n_events)").cast("long")
-                 .alias("x_q"))
-         .localCheckpoint())
+                 .alias("x_q")))
     wl = spark.createDataFrame(
         [Row(j=j, w=w) for j, w in enumerate(_EW_WL)])
     wp = spark.createDataFrame(

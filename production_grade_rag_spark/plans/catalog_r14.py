@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import _t, register
+from ..session import materialize
 
 # ===========================================================================
 # MinHash-LSH band planner: the S-curve as a value-oracled card
@@ -388,7 +389,8 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         sp = batch_df.sparkSession
-        good = batch_df.filter(~F.col("malformed")).localCheckpoint()
+        good = materialize(batch_df.filter(~F.col("malformed")),
+                           "st_audit:batch")
         # IDEMPOTENT versioned writes (ADVICE r14): see epoch_write /
         # epoch_prior above — replays skip committed snapshots, priors
         # read as-of the previous epoch.
@@ -407,8 +409,8 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
               .select("doc_id", F.col("r.text").alias("text"),
                       F.col("r.source").alias("source"),
                       F.col("r.doc_lang").alias("lang"),
-                      F.col("r.n_chars").alias("n_chars"))
-              .localCheckpoint())
+                      F.col("r.n_chars").alias("n_chars")))
+        bd = materialize(bd, "st_audit:docs")
         inc = audit_doc_groups(bd)
         p = prior(S["qi"])
         cols = ("n", "sx", "sy", "sxy", "sxx", "syy")
@@ -447,8 +449,7 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
         bv = (good.filter(F.col("lang") == "vec")
               .select(F.col("page_id").cast("long").alias("vec_id"),
                       F.from_json("title", "array<float>")
-                      .alias("embedding"))
-              .localCheckpoint())
+                      .alias("embedding")))
         dinc = _dq9_moments(bv)
         p = prior(S["dq9"])
         dmer = dinc if p is None else (
@@ -460,7 +461,6 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
         front = prior(S["m5front"])
         avail = bv if front is None else \
             front.unionByName(bv).dropDuplicates(["vec_id"])
-        avail = avail.localCheckpoint()
         bids = bv.select("vec_id")
         a = avail.select(F.col("vec_id").alias("ia"),
                          to_double_array(F.col("embedding")).alias("va"))
@@ -493,7 +493,6 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
         p = prior(S["m5seen"])
         seen = bids if p is None else \
             p.unionByName(bids).distinct()
-        seen = seen.localCheckpoint()
         write(seen, S["m5seen"])
         ls = seen.select((F.col("vec_id") + 1).alias("vec_id"),
                          F.lit(True).alias("__ls"))
@@ -566,7 +565,7 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
                  md5_int32(F.concat(F.lit("pr:"),
                                     F.col("doc_id").cast("string"))),
                  F.lit(mod)) == 0)
-             .select("doc_id", "text").localCheckpoint())
+             .select("doc_id", "text"))
     mh = (pr_counts_from(strat)
           .select(F.round(F.col("n_true_pos").cast("double")
                           / F.greatest("n_exact", F.lit(1))

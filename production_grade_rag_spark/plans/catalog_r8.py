@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import _t, register
+from ..session import materialize
 
 
 # ===========================================================================
@@ -815,7 +816,7 @@ def t20_bpe_merges(spark: SparkSession, d: str) -> DataFrame:
 
 
 def _bpe_learn(spark: SparkSession, d: str, n_merges: int = _BPE_K,
-               materialize: bool = False, curve_at: tuple | None = None):
+               curve_at: tuple | None = None):
     """Run the merge loop; returns (merge table rows, the words frame
     with the FULLY-merged symbol representation) — plus, when
     ``curve_at`` is given, a third element [(m, vocab frame at m
@@ -824,12 +825,12 @@ def _bpe_learn(spark: SparkSession, d: str, n_merges: int = _BPE_K,
 
     ``n_merges`` parameterizes the depth (real vocab training runs
     thousands of merges; the catalog_r9 entries run 16 — VERDICT r8
-    #7).  ``materialize`` localCheckpoints the vocab frame after each
-    merge rewrite: per-iteration work stays vocab-table-sized instead
-    of re-folding the whole chain from r0 (O(k^2) fold applications
-    and a k-deep codegen expression without it) — the honest
-    driver-side bound is the 1-row arg-max collect per merge, exactly
-    like the PageRank rank vector."""
+    #7).  The vocab frame is materialized after each merge rewrite:
+    per-iteration work stays vocab-table-sized instead of re-folding
+    the whole chain from r0 (O(k^2) fold applications and a k-deep
+    codegen expression without it) — the honest driver-side bound is
+    the 1-row arg-max collect per merge, exactly like the PageRank rank
+    vector."""
     from ..operators.dedup import tokens
     docs = _t(spark, d, "documents")
     words = (docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
@@ -863,9 +864,8 @@ def _bpe_learn(spark: SparkSession, d: str, n_merges: int = _BPE_K,
                                        F.length(acc) - F.lit(len(a))),
                             F.lit(a + b)))
              .otherwise(F.concat(acc, F.lit(" "), x)))
-        w = w.withColumn("syms", F.split(folded, " "))
-        if materialize:
-            w = w.localCheckpoint(eager=True)
+        w = materialize(w.withColumn("syms", F.split(folded, " ")),
+                        "bpe:rewrite")
         if curve_at is not None and (k + 1) in curve_at:
             curve.append((k + 1, w))
     if curve_at is not None:
@@ -1542,20 +1542,12 @@ def _nb_doc_scores(spark: SparkSession, d: str) -> DataFrame:
     from ..operators.curation_rules import gopher_flags
     from ..operators.dedup import tokens
     docs = _t(spark, d, "documents")
-    # r15 (guide §8's "compute the proxy once" discipline): this frame
-    # feeds THREE separate reductions (class-conditional token counts,
-    # the doc-count prior, the final score join) — left as lineage,
-    # each re-ran the scan + Gopher gate + tokenizer, and the giant
-    # generated function compiled once per consumer (measured 5.7 s ->
-    # 1.7 s cold / 1.6 -> 1.3 s warm at sf0.1 from this one line).
-    # At 100 TB the materialized token frame is ~1x corpus on
-    # executor-local disk, vs 3 full re-scans each paying the gate +
-    # tokenize expression — the same trade the guide's worked example
-    # makes for its fingerprint table.
-    base = docs.select(
+    # three reductions (class counts, doc prior, score join) read the
+    # gated, tokenized frame: one cut instead of three gate + tokenize runs
+    base = materialize(docs.select(
         "doc_id",
         gopher_flags(F.col("text"))["gopher_pass"].alias("pos"),
-        tokens(F.col("text")).alias("toks")).localCheckpoint()
+        tokens(F.col("text")).alias("toks")), "t21:tokens")
     return _nb_scores_from(base)
 
 
@@ -1573,16 +1565,11 @@ def _nb_scores_from(base: DataFrame) -> DataFrame:
     tk = base.select("doc_id", "pos",
                      explode_attr(F.col("toks")).alias("tok"))
     pos_i = F.col("pos").cast("int")
-    # r16 (guide §2.4/§5): the class-conditional count table feeds
-    # THREE broadcast builds (consts inside lr, lr itself, pri) — left
-    # as lineage each broadcast job re-ran the token explode + the
-    # vocabulary shuffle (the plan's dominant cost, ~3x).  The table
-    # is VOCABULARY-sized (the same bounded-training-artifact argument
-    # that justifies broadcasting it), so materializing it once is a
-    # bounded local checkpoint at any corpus size.
-    cls = tk.groupBy("tok").agg(
+    # vocabulary-sized table read by three broadcast builds (consts, lr,
+    # pri): one explode + vocabulary shuffle instead of three
+    cls = materialize(tk.groupBy("tok").agg(
         F.sum(pos_i).cast("double").alias("c_pos"),
-        F.sum(1 - pos_i).cast("double").alias("c_neg")).localCheckpoint()
+        F.sum(1 - pos_i).cast("double").alias("c_neg")), "t21:class_counts")
     consts = (cls.agg(F.sum("c_pos").alias("n_pos_tok"),
                       F.sum("c_neg").alias("n_neg_tok"),
                       F.count("*").cast("double").alias("v"))

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import _t, register
+from ..session import materialize
 
 
 # ===========================================================================
@@ -476,7 +477,7 @@ def t20_bpe_merges16(spark: SparkSession, d: str) -> DataFrame:
     iteration is the 1-row arg-max (the PageRank-rank-vector bound,
     documented honestly)."""
     from .catalog_r8 import _bpe_learn
-    merges, _ = _bpe_learn(spark, d, n_merges=_BPE16, materialize=True)
+    merges, _ = _bpe_learn(spark, d, n_merges=_BPE16)
     return spark.createDataFrame(
         merges,
         "merge_rank long, lhs string, rhs string, "
@@ -509,7 +510,7 @@ def t20_bpe_curve(spark: SparkSession, d: str) -> DataFrame:
     extra cost over learning is four vocab-sized scans."""
     from .catalog_r8 import _bpe_learn
     _, _, curve = _bpe_learn(spark, d, n_merges=_BPE16,
-                             materialize=True, curve_at=_BPE_CURVE_AT)
+                             curve_at=_BPE_CURVE_AT)
 
     def summarize(m: int, w: DataFrame) -> DataFrame:
         return w.agg(
@@ -2051,9 +2052,10 @@ def g7_kcore_peel(spark: SparkSession, d: str) -> DataFrame:
                 .agg(F.count("*").alias("c"))
                 .filter(F.col("c") >= _KCORE_K)
                 .select("node"))
-        cur = (cur.join(keep.withColumnRenamed("node", "u"), "u")
-               .join(keep.withColumnRenamed("node", "v"), "v")
-               .select("u", "v").localCheckpoint())
+        # bounded lineage: each peel round reads the last round's edges
+        cur = materialize(cur.join(keep.withColumnRenamed("node", "u"), "u")
+                          .join(keep.withColumnRenamed("node", "v"), "v")
+                          .select("u", "v"), "kcore:round")
         out.append(
             keep.agg(F.count("*").alias("n_nodes"))
             .crossJoin(cur.agg(F.count("*").alias("n_edges")))
@@ -2995,13 +2997,14 @@ def ev_attribution_removal(spark: SparkSession, d: str) -> DataFrame:
         F.col("event_type").alias("s"),
         F.coalesce(F.lead("event_type").over(w), F.lit("END")).alias("t"),
         F.row_number().over(w).alias("rn"))
-    trans = (seq.groupBy("s", "t").agg(F.count("*").alias("c"))
-             .unionByName(
-                 seq.filter(F.col("rn") == 1)
-                 .groupBy(F.col("s").alias("t"))
-                 .agg(F.count("*").alias("c"))
-                 .select(F.lit("START").alias("s"), "t", "c"))
-             .localCheckpoint())
+    trans = materialize(
+        seq.groupBy("s", "t").agg(F.count("*").alias("c"))
+        .unionByName(
+            seq.filter(F.col("rn") == 1)
+            .groupBy(F.col("s").alias("t"))
+            .agg(F.count("*").alias("c"))
+            .select(F.lit("START").alias("s"), "t", "c")),
+        "attribution:transitions")
     r = trans.groupBy("s").agg(F.sum("c").cast("long").alias("rs"))
 
     def absorb(removed: str | None):
@@ -3021,10 +3024,11 @@ def ev_attribution_removal(spark: SparkSession, d: str) -> DataFrame:
                      .otherwise(F.coalesce("qt_prev", F.lit(0)))
             num = (j.groupBy("s")
                    .agg(F.sum(F.col("c") * qt).cast("long").alias("nm")))
-            q = (r.join(num, "s", "left")
-                 .select("s", F.expr("coalesce(nm, 0) div rs")
-                         .cast("long").alias("q"))
-                 .localCheckpoint())
+            # bounded lineage: step k+1 joins step k's values
+            q = materialize(r.join(num, "s", "left")
+                            .select("s", F.expr("coalesce(nm, 0) div rs")
+                                    .cast("long").alias("q")),
+                            "attribution:absorb_step")
         return q.filter(F.col("s") == "START").select("q")
 
     base = absorb(None).select(F.col("q").alias("base_conv_q"))
@@ -3139,7 +3143,8 @@ def w13_kcenter_coreset(spark: SparkSession, d: str) -> DataFrame:
                    dist_to(centers[0][1]).cast("long").alias("mind"))
     rows = []
     for k in range(1, _KC_K):
-        m = m.localCheckpoint()
+        # bounded lineage: round k reads round k-1's distances
+        m = materialize(m, "kcenter:round")
         rows.append((k - 1, centers[-1][0],
                      m.agg(F.max("mind")).collect()[0][0]))
         far = (m.orderBy(F.desc("mind"), "vec_id").limit(1)
@@ -3256,7 +3261,7 @@ def mm_ahash_components(spark: SparkSession, d: str) -> DataFrame:
 
     Scale shape: the pair graph is band-bucketed (never all-pairs);
     contraction rounds are groupBy-min passes on the id key with
-    per-round localCheckpoint (dedup.connected_components)."""
+    a per-round materialize (dedup.connected_components)."""
     from ..operators import dedup
     docs = _t(spark, d, "documents")
     pairs = (_ahash_pairs(spark, d)

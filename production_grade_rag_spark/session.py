@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Generated-class cache entries. One session running all 412 catalog
 # entries fills 7075 (the 28 headline entries 737, the five perfbench
@@ -80,3 +80,21 @@ def codegen_compiles(spark: SparkSession) -> int:
     repeat means every class came from the cache."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def materialize(df: DataFrame, step: str) -> DataFrame:
+    """Compute ``df`` now and cut its lineage: the package's one lineage
+    cut.  Without a checkpoint dir this is ``df.localCheckpoint()``
+    (executor-local blocks, lost with their executor); with
+    ``sparkContext.setCheckpointDir`` set it is a reliable eager
+    ``checkpoint()`` that survives executor loss.  The checkpoint job
+    carries ``step`` as its job description; the caller's is restored."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(step)
+    try:
+        if sc.getCheckpointDir() is not None:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setJobDescription(prev)

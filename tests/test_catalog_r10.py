@@ -35,6 +35,29 @@ def test_knn_store_materializes_once(spark):
     assert und1.count() == und2.count()
 
 
+def test_knn_store_is_per_process(spark):
+    # a second process publishing the same tag must not replace this
+    # process's store (its own dir is gone once it exits)
+    import subprocess
+    import sys
+    from production_grade_rag_spark.operators import knn_graph as KG
+    tag = KG._tag("knn_und", SF001, 5, "exact", 16, 4)
+    n = KG.knn_und(spark, SF001).count()
+    path = KG._warehouse(tag)
+    before = sorted(os.listdir(path))
+    other = subprocess.run(
+        [sys.executable, "-c",
+         "import os, sys; from production_grade_rag_spark.operators "
+         "import knn_graph as KG; p = KG._warehouse(sys.argv[1]); "
+         "os.makedirs(p); open(os.path.join(p, 'part-0.parquet'), "
+         "'w').write('x'); print(p)", tag],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, check=True).stdout.strip()
+    assert other != path and not os.path.exists(other)
+    assert sorted(os.listdir(path)) == before
+    assert KG.knn_und(spark, SF001).count() == n
+
+
 def test_knn_store_edges_canonical_and_k_bounded(spark):
     from production_grade_rag_spark.operators import knn_graph as KG
     und = KG.knn_und(spark, SF001)

@@ -113,6 +113,53 @@ def test_minhash_candidates_shuffle_on_band_hash(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_candidate_id_semi_join_follows_broadcast_conf(spark, monkeypatch):
+    # the verify tail's candidate-id set grows with the corpus on a
+    # duplicate-heavy input, so no hint forces its semi-join to
+    # broadcast: with broadcasting disabled by conf the planner
+    # shuffles it, and the pairs are the default-conf pairs
+    from production_grade_rag_spark.operators import dedup
+    from production_grade_rag_spark.sources import load_table
+    docs = load_table(spark, SF001, "documents")
+    base = docs.filter(docs.doc_id % 2 == 0)
+    delta = docs.filter(docs.doc_id % 2 == 1)
+
+    def build():
+        return [dedup.minhash_dedup_pairs(docs),
+                dedup.minhash_delta_pairs(base, delta)]
+
+    default = [set(df.collect()) for df in build()]
+    plans = []
+    real = dedup.materialize
+
+    def spy(df, step):
+        out = real(df, step)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(dedup, "materialize", spy)
+    confs = ("spark.sql.autoBroadcastJoinThreshold",
+             "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k in confs:
+        spark.conf.set(k, "-1")
+    try:
+        dfs = build()
+        rows = [set(df.collect()) for df in dfs]
+        plans += [df._jdf.queryExecution().executedPlan().toString()
+                  for df in dfs]
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert rows == default and all(default)
+    semi = [ln for p in plans for ln in p.splitlines() if "LeftSemi" in ln]
+    assert semi
+    assert not [ln for ln in semi if "BroadcastHashJoin" in ln], semi
+
+
 def test_flagship_ends_in_take_ordered(spark):
     plan = _plan(spark, "flagship_dim384")
     assert "TakeOrderedAndProject" in plan
