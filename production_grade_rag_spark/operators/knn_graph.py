@@ -43,33 +43,17 @@ MongoDB $vectorSearch retrieves; graph structure is new capability).
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine, to_double_array
+from ..session import scratch
 
-# tags already materialized by THIS process (the _pca_centered
-# convention: a file left by a previous process is trusted only after
-# this process has re-derived it once per tag)
+# tags materialized by this process (a write that raised leaves no tag,
+# so the next call rebuilds over the torn dir)
 _BUILT: set[str] = set()
-
-
-def _warehouse(name: str) -> str:
-    """Repo-local scratch dir (gitignored spark-warehouse) — graph
-    stores must not write outside the repo.  One dir per process,
-    removed at exit, so a concurrent process cannot overwrite a store
-    this one reads (each process rebuilds on first use: ``_BUILT``)."""
-    root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(root, "spark-warehouse", f"knn_pid{os.getpid()}",
-                        name)
-
-
-atexit.register(lambda: shutil.rmtree(_warehouse(""), ignore_errors=True))
 
 
 def _tag(kind: str, d: str, k: int, method: str,
@@ -293,7 +277,7 @@ def knn_nb(spark: SparkSession, d: str, k: int = 5,
     the recall gates."""
     n_lists, n_probe = _resolve_ivf(spark, d, method, n_lists, n_probe)
     tag = _tag("knn_nb", d, k, method, n_lists, n_probe)
-    path = _warehouse(tag)
+    path = scratch(tag)
     if rebuild or tag not in _BUILT or not os.path.exists(path):
         nb = _build_nb(spark, d, k, method, n_lists, n_probe, centroids)
         # narrow table, bounded file count (local[32] stand-in for a
@@ -316,7 +300,7 @@ def knn_und(spark: SparkSession, d: str, k: int = 5,
     derive from corpus size (see knn_nb)."""
     n_lists, n_probe = _resolve_ivf(spark, d, method, n_lists, n_probe)
     tag = _tag("knn_und", d, k, method, n_lists, n_probe)
-    path = _warehouse(tag)
+    path = scratch(tag)
     if rebuild or tag not in _BUILT or not os.path.exists(path):
         nb = knn_nb(spark, d, k=k, method=method, n_lists=n_lists,
                     n_probe=n_probe, centroids=centroids,

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators import chunking, dedup, embedding, similarity, textstats
 from ..functions.text import URL_RE as _URL_RE_FOR_ORACLE
+from ..session import scratch
 from . import oracle_sql as O
 from . import oracle_vec as OV
 from .flagship import flagship_oracle_sql
@@ -807,15 +808,6 @@ def t6_field_projection(spark: SparkSession, d: str) -> DataFrame:
 # S1/S2: JSON page-dump source (notion_collector.py:56-144)
 # ===========================================================================
 
-def _scratch(name: str) -> str:
-    """Repo-local scratch dir (gitignored spark-warehouse) for dump
-    roundtrips — catalog entries must not write outside the repo."""
-    import os
-    root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(root, "spark-warehouse", name)
-
-
 @register("s1_json_page_scan", oracle="""
 SELECT doc_id AS page_id, source AS title, n_chars
 FROM documents WHERE doc_id % 7 = 0
@@ -831,7 +823,7 @@ def s1_json_page_scan(spark: SparkSession, d: str) -> DataFrame:
     docs = (_t(spark, d, "documents").filter(F.col("doc_id") % 7 == 0)
             .select(F.col("doc_id").alias("page_id"),
                     F.col("source").alias("title"), "n_chars"))
-    path = _scratch("s1_json_dump")
+    path = scratch("s1_json_dump")
     J.write_json_dump(docs, path,
                       corrupt_lines=['{"page_id": broken', 'not json'])
     df = J.read_json_dump(
@@ -857,7 +849,7 @@ def s2_json_db_scan(spark: SparkSession, d: str) -> DataFrame:
                     F.struct(F.col("source").alias("title"),
                              F.col("lang").alias("lang")).alias("properties"),
                     "n_chars"))
-    path = _scratch("s2_json_dump")
+    path = scratch("s2_json_dump")
     J.write_json_dump(docs, path, corrupt_lines=['{"entry_id": 1, "properties": }'])
     df = J.read_json_dump(
         spark, path,
@@ -933,7 +925,7 @@ def r4_ivf_store(spark: SparkSession, d: str) -> DataFrame:
     partition directories, asserted in tests/test_similarity.py.
     Approximate by design -> rows-only; recall floor is pytest-pinned."""
     emb = _t(spark, d, "embeddings")
-    path = _scratch("ivf_store")
+    path = scratch("ivf_store")
     similarity.ivf_build_store(emb, path, n_lists=8)
     out = similarity.ivf_search_store(spark, path, QUERY_VEC,
                                       k=10, n_probe=4)
@@ -1357,7 +1349,7 @@ def r4_ivf_store_recall(spark: SparkSession, d: str) -> DataFrame:
     directory-pruned scan) vs exact top-k — the disk-layout twin of
     r4_ivf_recall; floor 0.5 per tests/test_similarity.py:106-107."""
     emb = _t(spark, d, "embeddings")
-    path = _scratch("ivf_store_recall")
+    path = scratch("ivf_store_recall")
     similarity.ivf_build_store(emb, path, n_lists=8)
     exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
     approx = similarity.ivf_search_store(spark, path, QUERY_VEC,
@@ -1397,7 +1389,7 @@ def r4_ivf_rebuild_loop(spark: SparkSession, d: str) -> DataFrame:
     in tests/test_similarity.py (needs a directional query; the
     decision+retention half here is deterministic and SQL-checkable)."""
     emb = _t(spark, d, "embeddings")
-    path = _scratch("ivf_rebuild_loop")
+    path = scratch("ivf_rebuild_loop")
     similarity.ivf_build_store(emb, path, n_lists=8)
     drifted = emb.select(
         (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"),

@@ -563,13 +563,12 @@ def st_kmv_ingest(spark: SparkSession, d: str) -> DataFrame:
     """Streaming KMV maintenance — the BOUNDED-STATE member of the
     streaming-summary family (VERDICT r9 #2: st_theta_ingest's
     fixed-theta survivor store grows linearly with the corpus; this
-    store is <= k rows FOREVER): documents arrive through the
-    checkpointed paged-dump stream in two tranches (even ids, then
-    odd), each micro-batch computes its own k smallest distinct
-    shingle hashes (a batch-bounded TakeOrdered, per-partition heaps)
-    and the store merge is union-then-recap — keep the k smallest of
-    (prior k-set UNION batch k-set).  Union-then-recap is a
-    semilattice (idempotent, commutative, associative — a31_kmv_merge
+    store is <= k rows FOREVER): each micro-batch of the paged
+    document tranches computes its own k smallest distinct shingle
+    hashes (a batch-bounded TakeOrdered, per-partition heaps) and the
+    fold is union-then-recap — keep the k smallest of (prior k-set
+    UNION batch k-set).  Union-then-recap is a semilattice
+    (idempotent, commutative, associative — a31_kmv_merge
     value-oracles the same algebra in batch), so out-of-order and
     duplicated deliveries cannot corrupt the state, and the drained
     k-set must equal the batch-built corpus KMV row for row (this
@@ -580,68 +579,27 @@ def st_kmv_ingest(spark: SparkSession, d: str) -> DataFrame:
     a k-row TakeOrdered; the merge reads and writes k rows — the
     never-ending-crawl registry whose state genuinely never grows."""
     import shutil
-    from pathlib import Path
 
     from ..operators.dedup import shingle_explode
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..session import scratch
+    from ..sources.tables import fold_version, read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
     from .catalog_r9 import _h60
 
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_kmv_dump")
-    store = _scratch("st_kmv_store")
-    ckpt = _scratch("st_kmv_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    store = scratch("st_kmv_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("doc_id").cast("string").alias("page_id"),
-            F.col("text").alias("title"),
-            "lang", "n_chars")).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        inc = (shingle_explode(rows.select(F.col("title").alias("text")))
+               .select(_h60(F.col("sh")).alias("h"))
+               .distinct().orderBy("h").limit(_KMV_K))
+        fold_version(rows.sparkSession, store, epoch_id, inc,
+                     lambda p, i: (p.unionByName(i).distinct()
+                                   .orderBy("h").limit(_KMV_K)))
 
-    page_rows(docs.filter(F.col("doc_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            batch_docs = (batch_df.filter(~F.col("malformed"))
-                          .select(F.col("title").alias("text")))
-            inc = (shingle_explode(batch_docs)
-                   .select(_h60(F.col("sh")).alias("h"))
-                   .distinct().orderBy("h").limit(_KMV_K))
-            sp = batch_df.sparkSession
-            versions = (list_versions(sp, store)
-                        if os.path.exists(store) else [])
-            if versions:
-                prior = read_version(sp, store)
-                merged = (prior.unionByName(inc).distinct()
-                          .orderBy("h").limit(_KMV_K))
-            else:
-                merged = inc
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(docs.filter(F.col("doc_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_kmv",
+                            SP.parity_tranches(SP.doc_pages(docs)), merge)
 
     return read_version(spark, store).select("h").orderBy("h")
 
@@ -805,10 +763,9 @@ def _st_sessionize_run(spark: SparkSession, d: str,
     resume boundary falls."""
     import datetime as _dt
     import shutil
-    from pathlib import Path
 
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
+    from ..session import scratch
 
     raw = spark.read.parquet(f"{d}/events.parquet")
     ts_type = dict(raw.dtypes)["ts"]
@@ -825,21 +782,13 @@ def _st_sessionize_run(spark: SparkSession, d: str,
                 if ts_type == "bigint"
                 else F.lit(sent_dt).cast(ts_type))
 
-    sdir = _scratch("st_sess_stream")
-    store = _scratch("st_sess_store")
-    ckpt = _scratch("st_sess_ckpt")
+    sdir = scratch("st_sess_stream")
+    store = scratch("st_sess_store")
+    ckpt = scratch("st_sess_ckpt")
     for p in (sdir, store, ckpt):
         shutil.rmtree(p, ignore_errors=True)
 
-    def ship(part: DataFrame, tag: str) -> None:
-        tmp = sdir + "_" + tag
-        shutil.rmtree(tmp, ignore_errors=True)
-        part.repartition(2).write.parquet(tmp)
-        Path(sdir).mkdir(parents=True, exist_ok=True)
-        for i, f in enumerate(sorted(Path(tmp).glob("part-*"))):
-            f.rename(Path(sdir) / f"{tag}-{i:05d}.parquet")
-
-    ship(raw.filter(nts <= F.lit(split)), "t1")
+    SP.ship_parquet(raw.filter(nts <= F.lit(split)), sdir, "t1")
 
     def drain() -> None:
         stream = (spark.readStream.schema(raw.schema).parquet(sdir))
@@ -850,10 +799,10 @@ def _st_sessionize_run(spark: SparkSession, d: str,
         def sink(batch_df: DataFrame, epoch_id: int) -> None:
             batch_df.write.mode("append").parquet(store)
 
-        SP._run_foreach(sess, sink, 180, ckpt)
+        SP._run_foreach(sess, sink, ckpt)
 
     drain()
-    ship(raw.filter(nts > F.lit(split)), "t2")
+    SP.ship_parquet(raw.filter(nts > F.lit(split)), sdir, "t2")
     drain()
     # sentinel: one far-future event advances the watermark past every
     # real session's close, flushing the full closed set
@@ -865,7 +814,7 @@ def _st_sessionize_run(spark: SparkSession, d: str,
         sent_col.alias("ts") if c == "ts"
         else F.col(c)
         for c in raw.columns])
-    ship(sent, "t3")
+    SP.ship_parquet(sent, sdir, "t3")
     drain()
 
     return (spark.read.parquet(store)
@@ -1155,10 +1104,9 @@ SELECT src, dst FROM nb ORDER BY src, dst
 
 @register("st_knn_edges", oracle=_st_knn_oracle())
 def st_knn_edges(spark: SparkSession, d: str) -> DataFrame:
-    """Incremental EXACT kNN-graph maintenance: vectors arrive through
-    the checkpointed paged-dump stream in two out-of-order tranches
-    (even vec_ids, then odd), and each micro-batch updates a versioned
-    edge store so that after the drain the DIRECTED 5-NN edge list is
+    """Incremental EXACT kNN-graph maintenance: each micro-batch of the
+    paged vector tranches folds into a versioned vector store and a
+    versioned edge store so that after the drain the DIRECTED 5-NN edge list is
     byte-identical to the batch build (this oracle: DuckDB recomputes
     the full all-pairs kNN) — the ingest form of the shared graph
     store operators/knn_graph.py builds offline, completing the
@@ -1183,90 +1131,58 @@ def st_knn_edges(spark: SparkSession, d: str) -> DataFrame:
     nodes' lists update in place, untouched partitions never
     rewrite."""
     import shutil
-    from pathlib import Path
 
     from ..functions.vector import cosine, to_double_array
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..session import scratch
+    from ..sources.tables import epoch_prior, fold_version, read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
     from .catalog_r8b import _LP_K
 
     emb = _t(spark, d, "embeddings")
-    dump = _scratch("st_knn_dump")
-    vstore = _scratch("st_knn_vstore")
-    estore = _scratch("st_knn_estore")
-    ckpt = _scratch("st_knn_ckpt")
-    for p in (dump, vstore, estore, ckpt):
+    pages = emb.select(
+        F.col("vec_id").cast("string").alias("page_id"),
+        F.to_json(to_double_array(F.col("embedding"))).alias("title"),
+        F.lit("vec").alias("lang"), F.lit(64).cast("long").alias("n_chars"))
+    vstore = scratch("st_knn_vstore")
+    estore = scratch("st_knn_estore")
+    for p in (vstore, estore):
         shutil.rmtree(p, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("vec_id").cast("string").alias("page_id"),
-            F.to_json(to_double_array(F.col("embedding"))).alias("title"),
-            F.lit("vec").alias("lang"),
-            F.lit(64).cast("long").alias("n_chars"))).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        sp = rows.sparkSession
+        B = rows.select(F.col("page_id").cast("long").alias("vec_id"),
+                        F.from_json("title", "array<double>").alias("emb"))
+        if B.isEmpty():
+            return
+        V = epoch_prior(sp, vstore, epoch_id)
+        resid = B.unionByName(V) if V is not None else B
+        # arrivals score against the FULL resident set (and each
+        # other), residents score against arrivals only — the
+        # bounded-merge semilattice makes that sufficient
+        q = B.select(F.col("vec_id").alias("src"),
+                     F.col("emb").alias("qv"))
+        c = resid.select(F.col("vec_id").alias("dst"),
+                         F.col("emb").alias("cv"))
+        e1 = (c.crossJoin(F.broadcast(q))
+              .filter(F.col("src") != F.col("dst"))
+              .select("src", "dst",
+                      cosine(F.col("qv"), F.col("cv")).alias("cos")))
+        cand = e1.unionByName(
+            e1.select(F.col("dst").alias("src"),
+                      F.col("src").alias("dst"), "cos"))
+        E = epoch_prior(sp, estore, epoch_id)
+        if E is not None:
+            cand = cand.unionByName(E)
+        w = Window.partitionBy("src").orderBy(F.desc("cos"), "dst")
+        nb = (cand.dropDuplicates(["src", "dst"])
+              .withColumn("rn", F.row_number().over(w))
+              .filter(F.col("rn") <= _LP_K)
+              .select("src", "dst", "cos"))
+        fold_version(sp, estore, epoch_id, nb)
+        fold_version(sp, vstore, epoch_id, resid)
 
-    page_rows(emb.filter(F.col("vec_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            sp = batch_df.sparkSession
-            B = (batch_df.filter(~F.col("malformed"))
-                 .select(F.col("page_id").cast("long").alias("vec_id"),
-                         F.from_json("title", "array<double>")
-                         .alias("emb")))
-            if B.isEmpty():
-                return
-            ev = (list_versions(sp, vstore)
-                  if os.path.exists(vstore) else [])
-            V = read_version(sp, vstore) if ev else None
-            resid = B.unionByName(V) if V is not None else B
-            # arrivals score against the FULL resident set (and each
-            # other), residents score against arrivals only — the
-            # bounded-merge semilattice makes that sufficient
-            q = B.select(F.col("vec_id").alias("src"),
-                         F.col("emb").alias("qv"))
-            c = resid.select(F.col("vec_id").alias("dst"),
-                             F.col("emb").alias("cv"))
-            e1 = (c.crossJoin(F.broadcast(q))
-                  .filter(F.col("src") != F.col("dst"))
-                  .select("src", "dst",
-                          cosine(F.col("qv"), F.col("cv")).alias("cos")))
-            cand = e1.unionByName(
-                e1.select(F.col("dst").alias("src"),
-                          F.col("src").alias("dst"), "cos"))
-            ee = (list_versions(sp, estore)
-                  if os.path.exists(estore) else [])
-            if ee:
-                cand = cand.unionByName(read_version(sp, estore))
-            w = Window.partitionBy("src").orderBy(F.desc("cos"), "dst")
-            nb = (cand.dropDuplicates(["src", "dst"])
-                  .withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") <= _LP_K)
-                  .select("src", "dst", "cos"))
-            write_version(nb, estore, (ee[-1] + 1) if ee else 1)
-            write_version(resid, vstore, (ev[-1] + 1) if ev else 1)
-
-        SP._run_foreach(stream, merge, 180, ckpt)
-
-    drain()
-
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(emb.filter(F.col("vec_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_knn", SP.parity_tranches(pages),
+                            merge)
 
     return (read_version(spark, estore)
             .select("src", "dst").orderBy("src", "dst"))

@@ -872,10 +872,9 @@ def st_funnel(spark: SparkSession, d: str) -> DataFrame:
     closed sessions."""
     import datetime as _dt
     import shutil
-    from pathlib import Path
 
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
+    from ..session import scratch
 
     raw = spark.read.parquet(f"{d}/events.parquet")
     ts_type = dict(raw.dtypes)["ts"]
@@ -889,21 +888,13 @@ def st_funnel(spark: SparkSession, d: str) -> DataFrame:
                 if ts_type == "bigint"
                 else F.lit(sent_dt).cast(ts_type))
 
-    sdir = _scratch("st_funnel_stream")
-    store = _scratch("st_funnel_store")
-    ckpt = _scratch("st_funnel_ckpt")
+    sdir = scratch("st_funnel_stream")
+    store = scratch("st_funnel_store")
+    ckpt = scratch("st_funnel_ckpt")
     for p in (sdir, store, ckpt):
         shutil.rmtree(p, ignore_errors=True)
 
-    def ship(part: DataFrame, tag: str) -> None:
-        tmp = sdir + "_" + tag
-        shutil.rmtree(tmp, ignore_errors=True)
-        part.repartition(2).write.parquet(tmp)
-        Path(sdir).mkdir(parents=True, exist_ok=True)
-        for i, f in enumerate(sorted(Path(tmp).glob("part-*"))):
-            f.rename(Path(sdir) / f"{tag}-{i:05d}.parquet")
-
-    ship(raw.filter(nts <= F.lit(split)), "t1")
+    SP.ship_parquet(raw.filter(nts <= F.lit(split)), sdir, "t1")
 
     def drain() -> None:
         stream = spark.readStream.schema(raw.schema).parquet(sdir)
@@ -918,10 +909,10 @@ def st_funnel(spark: SparkSession, d: str) -> DataFrame:
         def sink(batch_df: DataFrame, epoch_id: int) -> None:
             batch_df.write.mode("append").parquet(store)
 
-        SP._run_foreach(sess, sink, 180, ckpt)
+        SP._run_foreach(sess, sink, ckpt)
 
     drain()
-    ship(raw.filter(nts > F.lit(split)), "t2")
+    SP.ship_parquet(raw.filter(nts > F.lit(split)), sdir, "t2")
     drain()
     sent = raw.limit(1).select(*[
         F.lit(-1).cast(dict(raw.dtypes)["event_id"]).alias("event_id")
@@ -931,7 +922,7 @@ def st_funnel(spark: SparkSession, d: str) -> DataFrame:
         sent_col.alias("ts") if c == "ts"
         else F.col(c)
         for c in raw.columns])
-    ship(sent, "t3")
+    SP.ship_parquet(sent, sdir, "t3")
     drain()
 
     closed = (spark.read.parquet(store)
@@ -1297,28 +1288,19 @@ def st_rolling_distinct(spark: SparkSession, d: str) -> DataFrame:
     top-k; store state is days x k rows forever; checkpoint resume is
     the second drain."""
     import shutil
-    from pathlib import Path
 
     from pyspark.sql import Window as W
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..sources.tables import fold_version, read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
+    from ..session import scratch
     from .catalog_r9 import _h60
 
     raw = spark.read.parquet(f"{d}/events.parquet")
-    sdir = _scratch("st_rdist_stream")
-    store = _scratch("st_rdist_store")
-    ckpt = _scratch("st_rdist_ckpt")
+    sdir = scratch("st_rdist_stream")
+    store = scratch("st_rdist_store")
+    ckpt = scratch("st_rdist_ckpt")
     for p in (sdir, store, ckpt):
         shutil.rmtree(p, ignore_errors=True)
-
-    def ship(part: DataFrame, tag: str) -> None:
-        tmp = sdir + "_" + tag
-        shutil.rmtree(tmp, ignore_errors=True)
-        part.repartition(2).write.parquet(tmp)
-        Path(sdir).mkdir(parents=True, exist_ok=True)
-        for i, f in enumerate(sorted(Path(tmp).glob("part-*"))):
-            f.rename(Path(sdir) / f"{tag}-{i:05d}.parquet")
 
     w_day = W.partitionBy("day").orderBy("h")
 
@@ -1335,27 +1317,19 @@ def st_rolling_distinct(spark: SparkSession, d: str) -> DataFrame:
         stream = spark.readStream.schema(raw.schema).parquet(sdir)
 
         def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            sp = batch_df.sparkSession
-            inc = day_ksets(batch_df)
-            versions = (list_versions(sp, store)
-                        if os.path.exists(store) else [])
-            if versions:
-                prior = read_version(sp, store)
-                merged = (prior.unionByName(inc).distinct()
-                          .withColumn("rn", F.row_number().over(w_day))
-                          .filter(F.col("rn") <= _RD_K)
-                          .select("day", "h"))
-            else:
-                merged = inc
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
+            fold_version(batch_df.sparkSession, store, epoch_id,
+                         day_ksets(batch_df),
+                         lambda p, i: (p.unionByName(i).distinct()
+                                       .withColumn("rn", F.row_number()
+                                                   .over(w_day))
+                                       .filter(F.col("rn") <= _RD_K)
+                                       .select("day", "h")))
 
-        SP._run_foreach(stream, merge, 180, ckpt)
+        SP._run_foreach(stream, merge, ckpt)
 
-    ship(raw.filter(F.col("user_id") % 2 == 0), "t1")
+    SP.ship_parquet(raw.filter(F.col("user_id") % 2 == 0), sdir, "t1")
     drain()
-    ship(raw.filter(F.col("user_id") % 2 == 1), "t2")
+    SP.ship_parquet(raw.filter(F.col("user_id") % 2 == 1), sdir, "t2")
     drain()
 
     daily = read_version(spark, store)

@@ -272,13 +272,12 @@ ORDER BY id_a, id_b
 
 @register("st_minhash_ingest", oracle=_st_minhash_oracle)
 def st_minhash_ingest(spark: SparkSession, d: str) -> DataFrame:
-    """Streaming MinHash band-index ingest: documents arrive through
-    the paged-dump stream in two checkpointed tranches (even ids,
-    then odd), each micro-batch computes its own signatures + band
-    rows map-side (the batch plan on batch-sized input) and appends
-    (doc_id, band, band_hash) rows to the versioned registry.  Band
-    rows are a pure function of content, so the merge is SET UNION —
-    a semilattice, idempotent under micro-batch replays (the
+    """Streaming MinHash band-index ingest: each micro-batch of the
+    paged document tranches computes its own signatures + band rows
+    map-side (the batch plan on batch-sized input) and folds (doc_id,
+    band, band_hash) rows into the versioned registry.  Band rows are
+    a pure function of content, so the fold is SET UNION — a
+    semilattice, idempotent under micro-batch replays (the
     st_ahash_ingest argument with the (id, band) pair as the key).
     The final near-dup pair set computed FROM THE DRAINED REGISTRY
     (operators/dedup.minhash_pairs_from_index — the identical
@@ -296,69 +295,27 @@ def st_minhash_ingest(spark: SparkSession, d: str) -> DataFrame:
     over the registry is the bucketed join, never all-pairs.
     Checkpoint resume is pinned in tests/test_catalog_r12.py."""
     import shutil
-    from pathlib import Path
 
     from ..operators.dedup import (minhash_band_table,
                                    minhash_pairs_from_index,
                                    minhash_signatures)
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..session import scratch
+    from ..sources.tables import fold_version, read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_minhash_dump")
-    store = _scratch("st_minhash_store")
-    ckpt = _scratch("st_minhash_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    store = scratch("st_minhash_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("doc_id").cast("string").alias("page_id"),
-            F.col("text").alias("title"),
-            "lang", "n_chars")).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        inc = minhash_band_table(minhash_signatures(rows.select(
+            F.col("page_id").cast("long").alias("doc_id"),
+            F.col("title").alias("text"))))
+        fold_version(rows.sparkSession, store, epoch_id, inc,
+                     lambda p, i: p.unionByName(i).distinct())
 
-    page_rows(docs.filter(F.col("doc_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            batch_docs = (batch_df.filter(~F.col("malformed"))
-                          .select(F.col("page_id").cast("long")
-                                  .alias("doc_id"),
-                                  F.col("title").alias("text")))
-            inc = minhash_band_table(
-                minhash_signatures(batch_docs))
-            sp = batch_df.sparkSession
-            versions = (list_versions(sp, store)
-                        if os.path.exists(store) else [])
-            if versions:
-                prior = read_version(sp, store)
-                merged = prior.unionByName(inc).distinct()
-            else:
-                merged = inc
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(docs.filter(F.col("doc_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_minhash",
+                            SP.parity_tranches(SP.doc_pages(docs)), merge)
 
     registry = read_version(spark, store)
     return (minhash_pairs_from_index(registry, docs)
@@ -469,7 +426,7 @@ def cc_ingest_delta(spark: SparkSession, d: str) -> DataFrame:
     Jaccard >= 0.8 with any resident doc — the store always wins, it
     is already committed — or with a smaller-id keeper) ->
     committed (the survivors APPENDED to the versioned store,
-    sources/tables.write_version, and the ledger row read back from
+    sources/tables.fold_version, and the ledger row read back from
     the store — the count that survived the actual commit) ->
     published (VERDICT r12 #7: the dq9 embedding-drift card computed
     between the batch's vectors and the resident store's INSIDE this
@@ -501,8 +458,8 @@ def cc_ingest_delta(spark: SparkSession, d: str) -> DataFrame:
     import shutil
 
     from ..operators.dedup import md5_int32, minhash_delta_pairs
-    from ..sources.tables import read_version, write_version
-    from .catalog_more import _scratch
+    from ..sources.tables import fold_version, read_version
+    from ..session import scratch
     from .catalog_r6 import cc_gate_keyed
 
     docs = _t(spark, d, "documents")
@@ -581,10 +538,10 @@ def cc_ingest_delta(spark: SparkSession, d: str) -> DataFrame:
     survivors = keepers.join(losers, "doc_id", "left_anti")
 
     # --- the actual commit: versioned append, ledger reads it back --
-    store_path = _scratch("cc_ingest_store")
+    store_path = scratch("cc_ingest_store")
     shutil.rmtree(store_path, ignore_errors=True)
-    write_version(survivors.select("doc_id", "content_hash"),
-                  store_path, 1)
+    fold_version(spark, store_path, 0,
+                 survivors.select("doc_id", "content_hash"))
     committed = read_version(spark, store_path)
 
     def stage(no: int, name: str, frame: DataFrame) -> DataFrame:
@@ -1316,6 +1273,13 @@ def _dq9_moments(emb: DataFrame) -> DataFrame:
         F.sum(F.col("q") * F.col("q")).cast("long").alias("s2"))
 
 
+def _dq9_add(prior: DataFrame, inc: DataFrame) -> DataFrame:
+    """Fold of two _dq9_moments frames: the moment sums add."""
+    return (prior.unionByName(inc).groupBy("side", "dim")
+            .agg(*[F.sum(c).cast("long").alias(c)
+                   for c in ("n", "s1", "s2")]))
+
+
 def _dq9_card(moments: DataFrame) -> DataFrame:
     """The 1-row drift card from the per-(side, dim) moment sums —
     shared by the batch entry and its streaming twin (identical
@@ -1599,18 +1563,17 @@ def q_rfm_segments(spark: SparkSession, d: str) -> DataFrame:
 @register("st_drift_monitor", oracle=_dq9_oracle())
 def st_drift_monitor(spark: SparkSession, d: str) -> DataFrame:
     """Streaming embedding-drift MONITOR: the dq9 card maintained
-    through checkpointed micro-batches — vectors arrive through the
-    paged-dump stream in two out-of-order tranches (even vec_ids,
-    then odd), each batch folds its per-(side, dim) integer moment
-    sums (n, s1, s2 on the 1e-6 grid — _dq9_moments) into a
-    versioned store by PURE ADDITION (the CMS merge property:
-    mergeable sufficient statistics are what make a drift monitor a
-    streaming operator at all), and the drained card — computed by
-    the IDENTICAL _dq9_card arithmetic the batch entry compiles —
-    must equal batch dq9_embedding_drift through its own value
-    oracle.  Vectors travel PRE-QUANTIZED (the st_ivf_ingest
-    convention), so serialization is integer-exact and the stream
-    sums are bit-equal to the batch scan's.
+    through checkpointed micro-batches — each micro-batch of the paged
+    vector tranches folds its per-(side, dim) integer moment sums (n,
+    s1, s2 on the 1e-6 grid) into a versioned store by PURE ADDITION
+    (the CMS merge property: mergeable sufficient statistics are what
+    make a drift monitor a streaming operator at all; addition is why
+    the fold is epoch-keyed), and the drained card — computed by the
+    IDENTICAL _dq9_card arithmetic the batch entry compiles — must
+    equal batch dq9_embedding_drift through its own value oracle.
+    Vectors travel PRE-QUANTIZED (the st_ivf_ingest convention), so
+    serialization is integer-exact and the stream sums are bit-equal
+    to the batch scan's.
 
     This is the production shape: a vector-ingest pipeline never
     re-scans the resident corpus to re-check drift — it adds each
@@ -1621,82 +1584,40 @@ def st_drift_monitor(spark: SparkSession, d: str) -> DataFrame:
     partial-agg); state is 2d rows of BIGINTs regardless of corpus;
     the card is a d-row aggregate off the state."""
     import shutil
-    from pathlib import Path
 
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import list_versions, read_version, write_version
-    from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
     from ..functions.vector import to_double_array
+    from ..session import scratch
+    from ..sources.tables import fold_version, read_version
+    from ..streaming import pipeline as SP
 
     emb = _t(spark, d, "embeddings")
     qv = F.transform(to_double_array(F.col("embedding")),
                      lambda x: F.round(x * _DQ9_G).cast("long"))
+    pages = emb.select(F.col("vec_id").cast("string").alias("page_id"),
+                       F.to_json(qv).alias("title"),
+                       F.lit("vec").alias("lang"),
+                       F.lit(0).cast("long").alias("n_chars"))
+    store = scratch("st_dq9_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    dump = _scratch("st_dq9_dump")
-    store = _scratch("st_dq9_store")
-    ckpt = _scratch("st_dq9_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        b = rows.select(F.col("page_id").cast("long").alias("vec_id"),
+                        F.from_json(F.col("title"), "array<bigint>")
+                        .alias("qv"))
+        inc = (b.select((F.col("vec_id") % 2).alias("side"),
+                        F.posexplode(F.col("qv")).alias("pos", "q"))
+               .select("side", (F.col("pos") + 1).cast("long")
+                       .alias("dim"), "q")
+               .groupBy("side", "dim")
+               .agg(F.count("*").cast("long").alias("n"),
+                    F.sum("q").cast("long").alias("s1"),
+                    F.sum(F.col("q") * F.col("q")).cast("long")
+                    .alias("s2")))
+        fold_version(rows.sparkSession, store, epoch_id, inc,
+                     _dq9_add)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("vec_id").cast("string").alias("page_id"),
-            F.to_json(qv).alias("title"),
-            F.lit("vec").alias("lang"),
-            F.lit(0).cast("long").alias("n_chars"))).alias("value"))
-
-    page_rows(emb.filter(F.col("vec_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            b = (batch_df.filter(~F.col("malformed"))
-                 .select(F.col("page_id").cast("long").alias("vec_id"),
-                         F.from_json(F.col("title"), "array<bigint>")
-                          .alias("qv")))
-            inc = (b.select((F.col("vec_id") % 2).alias("side"),
-                            F.posexplode(F.col("qv")).alias("pos", "q"))
-                   .select("side", (F.col("pos") + 1).cast("long")
-                           .alias("dim"), "q")
-                   .groupBy("side", "dim")
-                   .agg(F.count("*").cast("long").alias("n"),
-                        F.sum("q").cast("long").alias("s1"),
-                        F.sum(F.col("q") * F.col("q")).cast("long")
-                        .alias("s2")))
-            sp = batch_df.sparkSession
-            versions = (list_versions(sp, store)
-                        if os.path.exists(store) else [])
-            if versions:
-                prior = read_version(sp, store)
-                merged = (prior.unionByName(inc)
-                          .groupBy("side", "dim")
-                          .agg(F.sum("n").cast("long").alias("n"),
-                               F.sum("s1").cast("long").alias("s1"),
-                               F.sum("s2").cast("long").alias("s2")))
-            else:
-                merged = inc
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(emb.filter(F.col("vec_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_dq9", SP.parity_tranches(pages),
+                            merge)
 
     return _dq9_card(read_version(spark, store))
 

@@ -169,10 +169,11 @@ def r4_ivfpq_opq_recall(spark: SparkSession, d: str) -> DataFrame:
     is ledgered in STRESS_r14).  Proves the rotation path end to end:
     train, persist, encode, rotated-lut search, exact rescore."""
     from ..operators import pq, similarity
-    from .catalog_more import _recall_summary, _scratch
+    from ..session import scratch
+    from .catalog_more import _recall_summary
     from .catalog_r6 import QUERY_VEC
     emb = _t(spark, d, "embeddings")
-    path = _scratch("ivfpq_opq_recall")
+    path = scratch("ivfpq_opq_recall")
     pq.ivfpq_build_store(emb, path, n_lists=8, m=8, k_codes=32,
                          rotate=True)
     exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
@@ -228,57 +229,16 @@ def _sra_oracle() -> str:
     return _audit_oracle()
 
 
-# ---------------------------------------------------------------------------
-# Epoch-idempotent versioned store writes (ADVICE r14): the snapshot
-# version IS epoch_id + 1, so a micro-batch replayed after a crash
-# between the store writes and the checkpoint commit cannot fold its
-# delta twice — module-level so tests/test_catalog_r15.py can exercise
-# the replay semantics directly.
-# ---------------------------------------------------------------------------
-
-def epoch_write(df: DataFrame, store: str, epoch_id: int) -> None:
-    """Write ``df`` as the store snapshot for this epoch — version
-    epoch_id + 1.  A snapshot that already COMMITTED (_SUCCESS
-    present) is skipped: the fold is deterministic per epoch (the
-    checkpointed source replays the same batch), so the existing
-    snapshot IS this write.  A torn directory (no _SUCCESS) is
-    rewritten in place."""
-    import os
-
-    from ..sources.tables import write_version
-    ver = int(epoch_id) + 1
-    if os.path.exists(f"{store}/v={ver}/_SUCCESS"):
-        return
-    write_version(df, store, ver)
-
-
-def epoch_prior(sp: SparkSession, store: str,
-                epoch_id: int) -> DataFrame | None:
-    """The store snapshot AS-OF the previous epoch (version <=
-    epoch_id), or None before the first fold — so a partially-applied
-    replay merges every store against the RIGHT base independently of
-    which sibling stores already committed this epoch."""
-    import os
-
-    from ..sources.tables import list_versions, read_version
-    if not (os.path.exists(store) and list_versions(sp, store)):
-        return None
-    try:
-        return read_version(sp, store, as_of=int(epoch_id))
-    except ValueError:   # no snapshot at or before this epoch
-        return None
-
-
 @register("st_release_audit", oracle=_sra_oracle)
 def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
     """STREAMING release audit (VERDICT r13 #3): every monitor on the
     7-row cc_release_audit card has a mergeable state, so the card
     drains from incrementally-maintained stores instead of ever
     re-scanning the resident corpus.  Documents, vectors and events
-    arrive MULTIPLEXED through one paged-dump stream (one ingest
-    pipeline, one checkpoint — the production shape) in two
-    checkpointed out-of-order tranches (even ids, then odd), and each
-    micro-batch folds its delta into six stores:
+    arrive MULTIPLEXED through one paged tranche stream (one ingest
+    pipeline, one checkpoint — the production shape), and each
+    micro-batch folds its delta into the stores below, each fold
+    epoch-keyed:
 
     - qi store (dq8 risk + t44 correlation): per-(source, lang,
       len_bucket) integer sums — PURE ADDITION (audit_doc_groups is
@@ -317,8 +277,7 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
     policy constants the batch card compiles, and this entry's oracle
     IS cc_release_audit's — drained == batch, value-oracled row for
     row (and pinned against the batch entry in
-    tests/test_catalog_r14.py).  Checkpoint resume: the second
-    tranche drains against the same checkpoint directory.
+    tests/test_catalog_r14.py).
 
     Scale shape: per-batch work is batch-sized (quality scoring +
     grouped partial sums + bounded joins against narrow stores);
@@ -326,79 +285,63 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
     days + the chain frontier + a ~2k-doc stratum — none corpus-sized
     except the narrow manifest id table the batch t43 also keeps."""
     import shutil
-    from pathlib import Path
 
     from ..functions import text as X
     from ..functions.vector import to_double_array
     from ..operators.dedup import md5_int32
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import read_version
+    from ..session import scratch
+    from ..sources.tables import epoch_prior, fold_version, read_version
     from ..streaming import pipeline as SP
     from .catalog import _t
-    from .catalog_more import _scratch
     from .catalog_r10 import t43_clump_base
-    from .catalog_r11 import (audit_card_assemble, audit_risk_corr,
-                              audit_stratum_mod, pr_counts_from)
-    from .catalog_r11 import audit_doc_groups
-    from .catalog_r12 import _dq9_card, _dq9_moments, dq10_chart_from_days
+    from .catalog_r11 import (audit_card_assemble, audit_doc_groups,
+                              audit_risk_corr, audit_stratum_mod,
+                              pr_counts_from)
+    from .catalog_r12 import (_dq9_add, _dq9_card, _dq9_moments,
+                              dq10_chart_from_days)
 
     docs = _t(spark, d, "documents")
     emb = _t(spark, d, "embeddings")
     ev = _t(spark, d, "events")
 
-    dump = _scratch("st_audit_dump")
-    ckpt = _scratch("st_audit_ckpt")
-    S = {k: _scratch(f"st_audit_{k}") for k in
+    S = {k: scratch(f"st_audit_{k}") for k in
          ("qi", "man", "dq9", "day", "m5pair", "m5front", "m5seen",
           "mhreg", "mhcnt")}
-    for p in (dump, ckpt, *S.values()):
+    for p in S.values():
         shutil.rmtree(p, ignore_errors=True)
 
-    def page_rows(parity: int) -> DataFrame:
-        pd_ = docs.filter(F.col("doc_id") % 2 == parity).select(
-            F.to_json(F.struct(
-                F.col("doc_id").cast("string").alias("page_id"),
-                F.to_json(F.struct(
-                    "text", "source",
-                    F.col("lang").alias("doc_lang"), "n_chars"))
-                .alias("title"),
-                F.lit("doc").alias("lang"),
-                F.col("n_chars").cast("long").alias("n_chars")))
-            .alias("value"))
-        pv = emb.filter(F.col("vec_id") % 2 == parity).select(
-            F.to_json(F.struct(
-                F.col("vec_id").cast("string").alias("page_id"),
-                F.to_json(F.col("embedding")).alias("title"),
-                F.lit("vec").alias("lang"),
-                F.lit(0).cast("long").alias("n_chars"))).alias("value"))
-        pe = ev.filter(F.col("event_id") % 2 == parity).select(
-            F.to_json(F.struct(
-                F.col("event_id").cast("string").alias("page_id"),
-                F.to_json(F.struct(
-                    F.expr("CAST(unix_timestamp(ts) AS BIGINT) div 86400")
-                    .alias("dd"),
-                    (F.col("event_type") == "error").alias("err")))
-                .alias("title"),
-                F.lit("ev").alias("lang"),
-                F.lit(0).cast("long").alias("n_chars"))).alias("value"))
-        return pd_.unionByName(pv).unionByName(pe)
+    pd_ = docs.select(
+        F.col("doc_id").cast("string").alias("page_id"),
+        F.to_json(F.struct("text", "source", F.col("lang").alias("doc_lang"),
+                           "n_chars")).alias("title"),
+        F.lit("doc").alias("lang"),
+        F.col("n_chars").cast("long").alias("n_chars"))
+    pv = emb.select(
+        F.col("vec_id").cast("string").alias("page_id"),
+        F.to_json(F.col("embedding")).alias("title"),
+        F.lit("vec").alias("lang"), F.lit(0).cast("long").alias("n_chars"))
+    pe = ev.select(
+        F.col("event_id").cast("string").alias("page_id"),
+        F.to_json(F.struct(
+            F.expr("CAST(unix_timestamp(ts) AS BIGINT) div 86400")
+            .alias("dd"),
+            (F.col("event_type") == "error").alias("err"))).alias("title"),
+        F.lit("ev").alias("lang"), F.lit(0).cast("long").alias("n_chars"))
+    pages = pd_.unionByName(pv).unionByName(pe)
 
-    page_rows(0).repartition(2).write.text(dump)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        sp = rows.sparkSession
+        good = materialize(rows, "st_audit:batch")
 
-    def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        sp = batch_df.sparkSession
-        good = materialize(batch_df.filter(~F.col("malformed")),
-                           "st_audit:batch")
-        # IDEMPOTENT versioned writes (ADVICE r14): see epoch_write /
-        # epoch_prior above — replays skip committed snapshots, priors
-        # read as-of the previous epoch.
-        def write(df, store):
-            epoch_write(df, store, epoch_id)
+        def fold(store, inc, combine=None):
+            fold_version(sp, S[store], epoch_id, inc, combine)
 
         def prior(store):
-            return epoch_prior(sp, store, epoch_id)
+            return epoch_prior(sp, S[store], epoch_id)
+
+        def add(keys, cols):
+            return lambda p, i: (p.unionByName(i).groupBy(*keys).agg(
+                *[F.sum(c).cast("long").alias(c) for c in cols]))
 
         # ---- documents ----
         bd = (good.filter(F.col("lang") == "doc")
@@ -411,54 +354,37 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
                       F.col("r.doc_lang").alias("lang"),
                       F.col("r.n_chars").alias("n_chars")))
         bd = materialize(bd, "st_audit:docs")
-        inc = audit_doc_groups(bd)
-        p = prior(S["qi"])
-        cols = ("n", "sx", "sy", "sxy", "sxx", "syy")
-        merged = inc if p is None else (
-            p.unionByName(inc).groupBy("source", "lang", "len_bucket")
-            .agg(*[F.sum(c).cast("long").alias(c) for c in cols]))
-        write(merged, S["qi"])
+        fold("qi", audit_doc_groups(bd),
+             add(("source", "lang", "len_bucket"),
+                 ("n", "sx", "sy", "sxy", "sxx", "syy")))
         minc = (X.with_quality(bd.select("doc_id", "text"))
                 .select("doc_id",
                         F.least(F.lit(9),
                                 F.floor(F.round(F.col("quality_score"), 6)
                                         * 10).cast("long")).alias("bucket"))
                 .join(bd.select("doc_id", "source"), "doc_id"))
-        p = prior(S["man"])
-        man = minc if p is None else \
-            p.unionByName(minc).dropDuplicates(["doc_id"])
-        write(man, S["man"])
-        p = prior(S["mhcnt"])
+        fold("man", minc,
+             lambda p, i: p.unionByName(i).dropDuplicates(["doc_id"]))
+        p = prior("mhcnt")
         n_prev = p.collect()[0]["n_total"] if p is not None else 0
         n_total = n_prev + bd.count()
-        write(sp.createDataFrame([(n_total,)], "n_total long"),
-              S["mhcnt"])
+        fold("mhcnt", sp.createDataFrame([(n_total,)], "n_total long"))
         mod = audit_stratum_mod(n_total)
         in_strat = (F.pmod(
             md5_int32(F.concat(F.lit("pr:"),
                                F.col("doc_id").cast("string"))),
             F.lit(mod)) == 0)
-        reg_inc = bd.select("doc_id", "text").filter(in_strat)
-        p = prior(S["mhreg"])
-        reg = reg_inc if p is None else (
-            p.unionByName(reg_inc).dropDuplicates(["doc_id"])
-            .filter(in_strat))   # nested strata: prune as mod grows
-        write(reg, S["mhreg"])
+        fold("mhreg", bd.select("doc_id", "text").filter(in_strat),
+             lambda p, i: (p.unionByName(i).dropDuplicates(["doc_id"])
+                           .filter(in_strat)))  # nested strata: prune
 
         # ---- vectors ----
         bv = (good.filter(F.col("lang") == "vec")
               .select(F.col("page_id").cast("long").alias("vec_id"),
                       F.from_json("title", "array<float>")
                       .alias("embedding")))
-        dinc = _dq9_moments(bv)
-        p = prior(S["dq9"])
-        dmer = dinc if p is None else (
-            p.unionByName(dinc).groupBy("side", "dim")
-            .agg(F.sum("n").cast("long").alias("n"),
-                 F.sum("s1").cast("long").alias("s1"),
-                 F.sum("s2").cast("long").alias("s2")))
-        write(dmer, S["dq9"])
-        front = prior(S["m5front"])
+        fold("dq9", _dq9_moments(bv), _dq9_add)
+        front = prior("m5front")
         avail = bv if front is None else \
             front.unionByName(bv).dropDuplicates(["vec_id"])
         bids = bv.select("vec_id")
@@ -484,16 +410,11 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
         pinc = pairs.agg(F.count("*").cast("long").alias("n_pairs"),
                          F.coalesce(F.sum("cos_q"), F.lit(0))
                          .cast("long").alias("s_cos"))
-        p = prior(S["m5pair"])
-        pmer = pinc if p is None else (
-            p.unionByName(pinc)
-            .agg(F.sum("n_pairs").cast("long").alias("n_pairs"),
-                 F.sum("s_cos").cast("long").alias("s_cos")))
-        write(pmer, S["m5pair"])
-        p = prior(S["m5seen"])
+        fold("m5pair", pinc, add((), ("n_pairs", "s_cos")))
+        p = prior("m5seen")
         seen = bids if p is None else \
             p.unionByName(bids).distinct()
-        write(seen, S["m5seen"])
+        fold("m5seen", seen)
         ls = seen.select((F.col("vec_id") + 1).alias("vec_id"),
                          F.lit(True).alias("__ls"))
         rs = seen.select((F.col("vec_id") - 1).alias("vec_id"),
@@ -503,7 +424,7 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
                 .filter(~(F.coalesce("__ls", F.lit(False))
                           & F.coalesce("__rs", F.lit(False))))
                 .select("vec_id", "embedding"))
-        write(fnew, S["m5front"])
+        fold("m5front", fnew)
 
         # ---- events ----
         be = (good.filter(F.col("lang") == "ev")
@@ -514,25 +435,10 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
             F.count("*").cast("long").alias("n_events"),
             F.sum(F.col("err").cast("int")).cast("long")
             .alias("n_errors"))
-        p = prior(S["day"])
-        emer = einc if p is None else (
-            p.unionByName(einc).groupBy("d")
-            .agg(F.sum("n_events").cast("long").alias("n_events"),
-                 F.sum("n_errors").cast("long").alias("n_errors")))
-        write(emer, S["day"])
+        fold("day", einc, add(("d",), ("n_events", "n_errors")))
 
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-        SP._run_foreach(stream, merge, 240, ckpt)
-
-    drain()
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(1).repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_audit", SP.parity_tranches(pages),
+                            merge)
 
     # ---- drained card: the batch tails over the stores ----
     from pyspark.sql import Window as W

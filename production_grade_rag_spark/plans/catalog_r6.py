@@ -279,9 +279,9 @@ def r4_ivfpq_store(spark: SparkSession, d: str) -> DataFrame:
     candidates.  The production-shaped endpoint of the ANN family
     (exact < SQ < IVF | PQ < IVFPQ); recall gated by
     r4_ivfpq_recall and tests/test_pq.py."""
-    from .catalog_more import _scratch
+    from ..session import scratch
     emb = _t(spark, d, "embeddings")
-    path = _scratch("ivfpq_store")
+    path = scratch("ivfpq_store")
     pq.ivfpq_build_store(emb, path, n_lists=8, m=8, k_codes=32)
     return pq.ivfpq_search_store(spark, path, QUERY_VEC, k=10,
                                  n_probe=4)
@@ -296,9 +296,10 @@ def r4_ivfpq_recall(spark: SparkSession, d: str) -> DataFrame:
     binding miss source — same floor as r4_ivf_recall; PQ's residual
     coding + 16x exact rescore loses little on top)."""
     from ..operators import similarity
-    from .catalog_more import _recall_summary, _scratch
+    from ..session import scratch
+    from .catalog_more import _recall_summary
     emb = _t(spark, d, "embeddings")
-    path = _scratch("ivfpq_recall")
+    path = scratch("ivfpq_recall")
     pq.ivfpq_build_store(emb, path, n_lists=8, m=8, k_codes=32)
     exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
     approx = pq.ivfpq_search_store(spark, path, QUERY_VEC, k=10,
@@ -447,8 +448,8 @@ def st_incremental_rollup(spark: SparkSession, d: str) -> DataFrame:
     is pinned in tests/test_streaming.py with a 3-file source."""
     import shutil
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
-    store = _scratch("st_rollup_store")
+    from ..session import scratch
+    store = scratch("st_rollup_store")
     shutil.rmtree(store, ignore_errors=True)
     ev = SP.read_event_stream(spark, d)
     SP.run_rollup_merge(ev, store)
@@ -491,8 +492,8 @@ def st_foreach_sink(spark: SparkSession, d: str) -> DataFrame:
     other st_* entries use."""
     import shutil
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
-    out = _scratch("st_foreach_sink")
+    from ..session import scratch
+    out = scratch("st_foreach_sink")
     shutil.rmtree(out, ignore_errors=True)
     ev = SP.read_event_stream(spark, d) \
         .select("event_id", "user_id", "event_type")
@@ -519,16 +520,16 @@ def s18_custom_source(spark: SparkSession, d: str) -> DataFrame:
     import os
     import shutil
     from ..sources.paged_source import PagedDumpDataSource
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    dump = _scratch("s18_page_dump")
+    dump = scratch("s18_page_dump")
     shutil.rmtree(dump, ignore_errors=True)
     (docs.select(F.to_json(F.struct(
             F.col("doc_id").alias("page_id"),
             F.substring("text", 1, 32).alias("title"),
             "lang", "n_chars")).alias("value"))
      .repartition(4).write.text(dump))
-    with open(os.path.join(dump, "part-zz-corrupt.txt"), "w") as fh:
+    with open(os.path.join(dump, "part-corrupt.txt"), "w") as fh:
         fh.write('{"page_id": broken json\n')
     # runtime-settable; reader implements pushFilters, which Spark
     # refuses to plan while this conf is off (sessions built outside
@@ -554,9 +555,9 @@ def s19_sorted_ingest(spark: SparkSession, d: str) -> DataFrame:
     carried a PartitionFilters entry — i.e. pruning actually planned,
     not just hoped for."""
     import shutil
-    from .catalog_more import _scratch
+    from ..session import scratch
     ev = _t(spark, d, "events")
-    path = _scratch("s19_events_bydate")
+    path = scratch("s19_events_bydate")
     shutil.rmtree(path, ignore_errors=True)
     (ev.withColumn("event_date",
                    F.date_trunc("DAY", F.col("ts").cast("timestamp"))
@@ -588,22 +589,18 @@ def st_custom_source_stream(spark: SparkSession, d: str) -> DataFrame:
     tests/test_sources.py).  A full availableNow drain must equal the
     batch projection — the oracle."""
     import shutil
-    from ..sources.paged_source import PagedDumpDataSource
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_page_dump")
+    dump = scratch("st_page_dump")
     shutil.rmtree(dump, ignore_errors=True)
     (docs.select(F.to_json(F.struct(
             F.col("doc_id").alias("page_id"),
             F.substring("text", 1, 32).alias("title"),
             "lang", "n_chars")).alias("value"))
      .repartition(4).write.text(dump))
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-    stream = (spark.readStream.format("paged_dump")
-              .option("path", dump).load())
-    return SP.run_available_now(stream, "st_custom_source_stream",
+    return SP.run_available_now(SP.paged_stream(spark, dump),
+                                "st_custom_source_stream",
                                 output_mode="append")
 
 
@@ -622,9 +619,9 @@ def s20_custom_sink(spark: SparkSession, d: str) -> DataFrame:
     of the protocol is pinned in tests/test_sources.py."""
     import shutil
     from ..sources.paged_source import PagedDumpDataSource
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    dump = _scratch("s20_sink_dump")
+    dump = scratch("s20_sink_dump")
     shutil.rmtree(dump, ignore_errors=True)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(PagedDumpDataSource)
@@ -678,14 +675,14 @@ def s23_csv_source(spark: SparkSession, d: str) -> DataFrame:
     newline; the quote/escape options are the correctness surface."""
     import os
     import shutil
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    path = _scratch("s23_csv")
+    path = scratch("s23_csv")
     shutil.rmtree(path, ignore_errors=True)
     (docs.select("doc_id", "text", "lang", "n_chars")
      .write.option("header", "false").option("quoteAll", "true")
      .csv(path))
-    with open(os.path.join(path, "part-zz-bad.csv"), "w") as fh:
+    with open(os.path.join(path, "part-bad.csv"), "w") as fh:
         fh.write('"not,a,number","x","en","NaNope"\n')
     schema = ("doc_id long, text string, lang string, n_chars long, "
               "_corrupt_record string")
@@ -720,9 +717,9 @@ def s17_compact(spark: SparkSession, d: str) -> DataFrame:
     so compaction never touches cold data."""
     import glob
     import shutil
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    small_dir, packed = _scratch("s17_small"), _scratch("s17_packed")
+    small_dir, packed = scratch("s17_small"), scratch("s17_packed")
     shutil.rmtree(small_dir, ignore_errors=True)
     shutil.rmtree(packed, ignore_errors=True)
     docs.repartition(64).write.parquet(small_dir)
@@ -974,7 +971,7 @@ SELECT 'v2_latest',
 """)
 def s24_versioned_read(spark: SparkSession, d: str) -> DataFrame:
     """SNAPSHOT VERSIONING + time travel on plain parquet
-    (sources.tables.write_version/read_version): v1 = the even-doc
+    (sources.tables.fold_version/read_version): v1 = the even-doc
     snapshot, v2 = the full corpus; an as-of-1 read must return
     exactly v1 and the default read exactly v2 — both pinned by row
     count and id checksum.  Writers land immutable ``v=N`` snapshot
@@ -982,12 +979,14 @@ def s24_versioned_read(spark: SparkSession, d: str) -> DataFrame:
     directory convention for commit logs with the same read API."""
     import shutil
     from ..sources import tables as TB
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    store = _scratch("s24_versions")
+    store = scratch("s24_versions")
     shutil.rmtree(store, ignore_errors=True)
-    TB.write_version(docs.filter(F.col("doc_id") % 2 == 0), store, 1)
-    TB.write_version(docs, store, 2)
+    # a plain snapshot write is a fold without a combine: epoch e
+    # commits version e + 1
+    TB.fold_version(spark, store, 0, docs.filter(F.col("doc_id") % 2 == 0))
+    TB.fold_version(spark, store, 1, docs)
 
     def summarize(df: DataFrame, which: str) -> DataFrame:
         return df.agg(F.count("*").alias("n_rows"),
@@ -2168,9 +2167,9 @@ def s22_schema_evolution(spark: SparkSession, d: str) -> DataFrame:
     one migration read, but production pins the merged schema in the
     table catalog afterwards so scans go back to single-schema."""
     import shutil
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    path = _scratch("s22_evolving")
+    path = scratch("s22_evolving")
     shutil.rmtree(path, ignore_errors=True)
     old = docs.filter(F.col("doc_id") % 2 == 1) \
         .select("doc_id", "source")
@@ -2904,7 +2903,7 @@ def ev_incremental_rollup(spark: SparkSession, d: str) -> DataFrame:
     increment are rewritten (dynamic partition overwrite — the
     sources.tables upsert pattern)."""
     import shutil
-    from .catalog_more import _scratch
+    from ..session import scratch
     ev = _t(spark, d, "events").withColumn(
         "day", F.date_trunc("DAY", F.col("ts").cast("timestamp"))
         .cast("date").cast("string"))
@@ -2916,7 +2915,7 @@ def ev_incremental_rollup(spark: SparkSession, d: str) -> DataFrame:
                      F.sum(scaled).alias("value_scaled")))
 
     cut = "2024-01-15"
-    store = _scratch("ev_rollup_store")
+    store = scratch("ev_rollup_store")
     shutil.rmtree(store, ignore_errors=True)
     rollup(ev.filter(F.col("day") < cut)).write.parquet(store)
     increment = rollup(ev.filter(F.col("day") >= cut))
@@ -3212,8 +3211,8 @@ def s21_bucketed_join(spark: SparkSession, d: str) -> DataFrame:
     the one-off bucketed write is amortized across every downstream
     join on the same key."""
     import shutil
-    from .catalog_more import _scratch
-    wh = _scratch("s21_bucketed")
+    from ..session import scratch
+    wh = scratch("s21_bucketed")
     shutil.rmtree(wh, ignore_errors=True)
     li = _t(spark, d, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount")

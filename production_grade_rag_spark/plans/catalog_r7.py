@@ -56,46 +56,36 @@ def m2_parent_child_rows(spark: SparkSession, d: str) -> DataFrame:
 # ===========================================================================
 
 def _cc_incremental_merge(spark: SparkSession, batch_docs: DataFrame,
-                          store_path: str) -> None:
+                          store_path: str, epoch_id: int) -> None:
     """Fold one micro-batch of documents into the versioned curated
     store.  Per-batch work: the SAME fused gate projection as batch
     cc_curate (cc_gate_keyed), partial-aggregated per content_hash;
-    merge re-aggregates store + increment with min-struct keeper
+    the fold re-aggregates store + increment with min-struct keeper
     election and group_size summation (algebraic partials — a keeper
     can be displaced by a smaller doc_id arriving later, and counts
-    add).  Each merge commits a NEW immutable version
-    (sources.tables.write_version), so readers time-travel the
-    curation history and a crash mid-write never clobbers the prior
-    snapshot.  Cost per batch: O(batch + store), never O(history)."""
+    add, which is why the fold is epoch-keyed).  Cost per batch:
+    O(batch + store), never O(history)."""
     from ..functions import text as X
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..sources.tables import fold_version
     from .catalog_r6 import cc_gate_keyed
 
-    import os
-
-    keyed = cc_gate_keyed(batch_docs)
-    inc = (keyed.groupBy("content_hash")
+    keep = ("content_hash", "__k.doc_id", "__k.detected_lang", "__k.q",
+            "__k.est_tokens", "group_size")
+    inc = (cc_gate_keyed(batch_docs).groupBy("content_hash")
            .agg(F.min(F.struct("doc_id", "detected_lang", "q",
                                X.token_estimate(F.col("clean_text"))
                                .alias("est_tokens"))).alias("__k"),
                 F.count("*").alias("group_size"))
-           .select("content_hash", "__k.doc_id", "__k.detected_lang",
-                   "__k.q", "__k.est_tokens", "group_size"))
-    versions = (list_versions(spark, store_path)
-                if os.path.exists(store_path) else [])
-    if versions:
-        prior = read_version(spark, store_path)
-        merged = (prior.unionByName(inc)
-                  .groupBy("content_hash")
-                  .agg(F.min(F.struct("doc_id", "detected_lang", "q",
-                                      "est_tokens")).alias("__k"),
-                       F.sum("group_size").alias("group_size"))
-                  .select("content_hash", "__k.doc_id",
-                          "__k.detected_lang", "__k.q", "__k.est_tokens",
-                          "group_size"))
-    else:
-        merged = inc
-    write_version(merged, store_path, (versions[-1] + 1) if versions else 1)
+           .select(*keep))
+
+    def combine(prior: DataFrame, inc: DataFrame) -> DataFrame:
+        return (prior.unionByName(inc).groupBy("content_hash")
+                .agg(F.min(F.struct("doc_id", "detected_lang", "q",
+                                    "est_tokens")).alias("__k"),
+                     F.sum("group_size").alias("group_size"))
+                .select(*keep))
+
+    fold_version(spark, store_path, epoch_id, inc, combine)
 
 
 def _cc_curate_oracle() -> str:
@@ -107,76 +97,33 @@ def _cc_curate_oracle() -> str:
 
 @register("st_cc_curate", oracle=_cc_curate_oracle())
 def st_cc_curate(spark: SparkSession, d: str) -> DataFrame:
-    """Continuous corpus curation end to end: documents arrive through
-    the custom paged-dump STREAM (sorted-file-index offsets — the
-    reference's has_more cursor), each micro-batch runs the cc_curate
-    gate and merges keeper partials into a VERSIONED store, and a
-    second tranche of late-arriving pages resumes from the persistent
-    checkpoint without re-reading tranche one.  The final snapshot
-    must equal batch cc_curate over the full corpus — same oracle,
-    value-hashed.  (reference: the feature pipeline re-runs curation
-    per crawl batch, rag_pipeline.py:40-210 — here it is one
-    incremental loop with time-travelable history.)"""
+    """Continuous corpus curation end to end: each micro-batch of the
+    paged tranches runs the cc_curate gate and folds keeper partials
+    into a versioned store; the final snapshot must equal batch
+    cc_curate over the full corpus — same oracle, value-hashed.
+    (reference: the feature pipeline re-runs curation per crawl batch,
+    rag_pipeline.py:40-210 — here it is one incremental loop with
+    time-travelable history.)"""
     import shutil
-    from pathlib import Path
-    from ..sources.paged_source import PagedDumpDataSource
+    from ..session import scratch
     from ..sources.tables import read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_cc_dump")
-    store = _scratch("st_cc_store")
-    ckpt = _scratch("st_cc_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    store = scratch("st_cc_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        # title carries the FULL text: the curation needs it, and the
-        # paged schema's title field is just a string column
-        return part.select(F.to_json(F.struct(
-            F.col("doc_id").cast("string").alias("page_id"),
-            F.col("text").alias("title"),
-            "lang", "n_chars")).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        batch_docs = rows.select(F.col("page_id").cast("long").alias("doc_id"),
+                                 F.col("title").alias("text"))
+        _cc_incremental_merge(rows.sparkSession, batch_docs, store, epoch_id)
 
-    # tranche 1: even doc ids, the initial dump
-    page_rows(docs.filter(F.col("doc_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_docs = (batch_df.filter(~F.col("malformed"))
-                          .select(F.col("page_id").cast("long")
-                                  .alias("doc_id"),
-                                  F.col("title").alias("text")))
-            _cc_incremental_merge(batch_df.sparkSession, batch_docs, store)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-
-    # tranche 2: odd doc ids arrive later; files named to sort AFTER
-    # tranche 1 (the stream offset is an index into the sorted list)
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(docs.filter(F.col("doc_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        # must match the reader's part-* glob AND sort after tranche
-        # one's part-0000N files ('z' > '0' lexically)
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()   # resumes from the committed offset: tranche 2 only
-
-    final = read_version(spark, store)
-    return (final.select("doc_id", "detected_lang",
-                         F.round("q", 6).alias("quality_score"),
-                         "est_tokens", "group_size"))
+    SP.drain_paged_tranches(spark, "st_cc",
+                            SP.parity_tranches(SP.doc_pages(docs)), merge)
+    return (read_version(spark, store)
+            .select("doc_id", "detected_lang",
+                    F.round("q", 6).alias("quality_score"),
+                    "est_tokens", "group_size"))
 
 
 # ===========================================================================
@@ -485,9 +432,9 @@ def s28_orc_roundtrip(spark: SparkSession, d: str) -> DataFrame:
     the oracle compares against the parquet original, so any
     encode/decode fidelity loss (strings, ints) flips the hash."""
     import shutil
-    from .catalog_more import _scratch
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    path = _scratch("s28_orc")
+    path = scratch("s28_orc")
     shutil.rmtree(path, ignore_errors=True)
     docs.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
@@ -510,15 +457,16 @@ def s27_vacuum_versions(spark: SparkSession, d: str) -> DataFrame:
     horizon now fails — the lifecycle bound that keeps st_cc_curate's
     per-batch version history from growing without limit."""
     import shutil
-    from ..sources.tables import (list_versions, read_version,
-                                  vacuum_versions, write_version)
-    from .catalog_more import _scratch
+    from ..sources.tables import (fold_version, list_versions,
+                                  read_version, vacuum_versions)
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    path = _scratch("s27_versions")
+    path = scratch("s27_versions")
     shutil.rmtree(path, ignore_errors=True)
     for v in range(1, 5):
-        write_version(docs.filter(F.col("doc_id") % 4 < v)
-                      .select("doc_id", "lang"), path, v)
+        fold_version(spark, path, v - 1,
+                     docs.filter(F.col("doc_id") % 4 < v)
+                     .select("doc_id", "lang"))
     n_before = len(list_versions(spark, path))
     removed = vacuum_versions(spark, path, keep_last=2)
     after = list_versions(spark, path)
@@ -934,8 +882,8 @@ def _ivfpq_store32(spark: SparkSession, d: str) -> str:
     they would in production, instead of each re-running KMeans + PQ
     training."""
     from ..operators import pq
-    from .catalog_more import _scratch
-    path = _scratch(f"ivfpq32_{abs(hash(d)) % 10 ** 8}")
+    from ..session import scratch
+    path = scratch("ivfpq32_" + d.strip("/").replace("/", "_"))
     if d not in _IVFPQ32_BUILT:
         emb = _t(spark, d, "embeddings")
         pq.ivfpq_build_store(emb, path, n_lists=32, m=8, k_codes=32)

@@ -1058,7 +1058,7 @@ def a11_quantile_sketch(spark: SparkSession, d: str) -> DataFrame:
 # ===========================================================================
 
 def _line_dedup_merge(spark: SparkSession, batch_docs: DataFrame,
-                      store: str) -> None:
+                      store: str, epoch_id: int) -> None:
     """Fold one micro-batch into the line-dedup state.  The election
     is a MIN-SEMILATTICE (per line hash, min(struct(doc_id,pos,ln)))
     — order-independent and incrementally mergeable, so tranches may
@@ -1066,38 +1066,24 @@ def _line_dedup_merge(spark: SparkSession, batch_docs: DataFrame,
     batch answer (a later-arriving smaller doc_id retroactively
     steals keeper status at merge time).  Blanks and per-doc line
     counts are append-only (each doc arrives exactly once)."""
-    import os
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..sources.tables import fold_version
 
     lines = batch_docs.select(
         "doc_id", F.posexplode(F.split("text", "\n")).alias("pos", "ln"))
     blank = F.regexp_replace("ln", r"^\s+|\s+$", "") == ""
     lines = lines.withColumn("blank", blank)
-    inc = {
-        "elect": (lines.filter(~F.col("blank"))
-                  .groupBy(F.md5("ln").alias("h"))
-                  .agg(F.min(F.struct("doc_id", "pos", "ln"))
-                       .alias("f"))),
-        "blanks": lines.filter(F.col("blank"))
-                       .select("doc_id", "pos", "ln"),
-        "counts": lines.groupBy("doc_id")
-                       .agg(F.count("*").alias("n_lines")),
-    }
-    for name, frame in inc.items():
-        path = f"{store}/{name}"
-        versions = (list_versions(spark, path)
-                    if os.path.exists(path) else [])
-        if versions:
-            prior = read_version(spark, path)
-            if name == "elect":
-                merged = (prior.unionByName(frame)
-                          .groupBy("h").agg(F.min("f").alias("f")))
-            else:
-                merged = prior.unionByName(frame)
-        else:
-            merged = frame
-        write_version(merged, path,
-                      (versions[-1] + 1) if versions else 1)
+    fold_version(spark, f"{store}/elect", epoch_id,
+                 lines.filter(~F.col("blank"))
+                 .groupBy(F.md5("ln").alias("h"))
+                 .agg(F.min(F.struct("doc_id", "pos", "ln")).alias("f")),
+                 lambda p, i: (p.unionByName(i)
+                               .groupBy("h").agg(F.min("f").alias("f"))))
+    fold_version(spark, f"{store}/blanks", epoch_id,
+                 lines.filter(F.col("blank")).select("doc_id", "pos", "ln"),
+                 DataFrame.unionByName)
+    fold_version(spark, f"{store}/counts", epoch_id,
+                 lines.groupBy("doc_id").agg(F.count("*").alias("n_lines")),
+                 DataFrame.unionByName)
 
 
 def _st_line_dedup_oracle() -> str:
@@ -1110,62 +1096,27 @@ def _st_line_dedup_oracle() -> str:
 @register("st_dd_line_dedup", oracle=_st_line_dedup_oracle())
 def st_dd_line_dedup(spark: SparkSession, d: str) -> DataFrame:
     """Continuous corpus-wide line dedup — the production shape of
-    dd_line_dedup for a crawl that never stops: documents arrive
-    through the custom paged-dump STREAM in two tranches (EVEN doc
-    ids first, then odd — deliberately NOT doc_id order, proving the
-    min-semilattice election is arrival-order independent), each
-    micro-batch merges its per-hash min-structs / blanks / counts
-    into a versioned store, the second tranche resumes from the
-    persistent checkpoint, and the final reassembly over the store
-    alone (the corpus is never re-read) hash-matches batch
+    dd_line_dedup for a crawl that never stops: each micro-batch of
+    the paged tranches folds its per-hash min-structs / blanks /
+    counts into versioned stores, and the final reassembly over the
+    stores alone (the corpus is never re-read) hash-matches batch
     dd_line_dedup's oracle."""
     import shutil
-    from pathlib import Path
-    from ..sources.paged_source import PagedDumpDataSource
+    from ..session import scratch
     from ..sources.tables import read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_ld_dump")
-    store = _scratch("st_ld_store")
-    ckpt = _scratch("st_ld_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    store = scratch("st_ld_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("doc_id").cast("string").alias("page_id"),
-            F.col("text").alias("title"),
-            "lang", "n_chars")).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        batch_docs = rows.select(F.col("page_id").cast("long").alias("doc_id"),
+                                 F.col("title").alias("text"))
+        _line_dedup_merge(rows.sparkSession, batch_docs, store, epoch_id)
 
-    page_rows(docs.filter(F.col("doc_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_docs = (batch_df.filter(~F.col("malformed"))
-                          .select(F.col("page_id").cast("long")
-                                  .alias("doc_id"),
-                                  F.col("title").alias("text")))
-            _line_dedup_merge(batch_df.sparkSession, batch_docs, store)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(docs.filter(F.col("doc_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_ld",
+                            SP.parity_tranches(SP.doc_pages(docs)), merge)
 
     elect = read_version(spark, f"{store}/elect") \
         .select("f.doc_id", "f.pos", "f.ln")
@@ -2142,11 +2093,9 @@ SELECT vec_id, cluster, dist_q FROM af ORDER BY vec_id
 def st_ivf_ingest(spark: SparkSession, d: str) -> DataFrame:
     """Streaming INDEX MAINTENANCE — the ingest half of the IVF story
     for a corpus that never stops growing: cluster layout is trained
-    OFFLINE once (the exact k-means fit above, frozen), and vectors
-    then arrive through the custom paged-dump stream in two tranches
-    (even vec_ids, then odd, resuming from the persistent
-    checkpoint); each micro-batch assigns its arrivals map-side
-    against the frozen centroid literals and appends to a
+    OFFLINE once (the exact k-means fit above, frozen), and each
+    micro-batch of the paged vector tranches assigns its arrivals
+    map-side against the frozen centroid literals and appends to a
     cluster-partitioned store — exactly how a 100 TB vector index
     absorbs a crawl: no refit, no reshuffle of existing cells, new
     files land inside their cell partition.  The final store must
@@ -2156,38 +2105,22 @@ def st_ivf_ingest(spark: SparkSession, d: str) -> DataFrame:
     input vector.  Vectors travel PRE-QUANTIZED (the 1e-6 BIGINT
     grid) so serialization is integer-exact."""
     import shutil
-    from pathlib import Path
-
-    from ..sources.paged_source import PagedDumpDataSource
+    from ..functions.vector import to_double_array
+    from ..session import scratch
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     _, cents = _km_run(spark, d)
 
     emb = _t(spark, d, "embeddings")
-    from ..functions.vector import to_double_array
     qv = F.transform(
         F.slice(to_double_array(F.col("embedding")), 1, _KM_D),
         lambda x: F.floor(x * _KM_SCALE + 0.5).cast("long"))
-
-    dump = _scratch("st_ivf_dump")
-    store = _scratch("st_ivf_store")
-    ckpt = _scratch("st_ivf_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
-
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("vec_id").cast("string").alias("page_id"),
-            F.to_json(qv).alias("title"),
-            F.lit("vec").alias("lang"),
-            F.lit(_KM_D).cast("long").alias("n_chars"))).alias("value"))
-
-    page_rows(emb.filter(F.col("vec_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
+    pages = emb.select(F.col("vec_id").cast("string").alias("page_id"),
+                       F.to_json(qv).alias("title"),
+                       F.lit("vec").alias("lang"),
+                       F.lit(_KM_D).cast("long").alias("n_chars"))
+    store = scratch("st_ivf_store")
+    shutil.rmtree(store, ignore_errors=True)
 
     def best_struct(cs):
         arr = F.array(*[
@@ -2199,31 +2132,17 @@ def st_ivf_ingest(spark: SparkSession, d: str) -> DataFrame:
             for c, cv in enumerate(cs)])
         return F.sort_array(arr).getItem(0)
 
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
+    def assign(rows: DataFrame, epoch_id: int) -> None:
+        b = rows.select(F.col("page_id").cast("long").alias("vec_id"),
+                        F.from_json(F.col("title"), "array<bigint>")
+                        .alias("qv"))
+        best = best_struct(cents)
+        (b.select("vec_id", best["cluster"].alias("cluster"),
+                  best["d"].alias("dist_q"))
+         .write.mode("append").partitionBy("cluster").parquet(store))
 
-        def assign(batch_df: DataFrame, epoch_id: int) -> None:
-            b = (batch_df.filter(~F.col("malformed"))
-                 .select(F.col("page_id").cast("long").alias("vec_id"),
-                         F.from_json(F.col("title"), "array<bigint>")
-                          .alias("qv")))
-            best = best_struct(cents)
-            (b.select("vec_id", best["cluster"].alias("cluster"),
-                      best["d"].alias("dist_q"))
-             .write.mode("append").partitionBy("cluster").parquet(store))
-
-        SP._run_foreach(stream, assign, 120, ckpt)
-
-    drain()
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(emb.filter(F.col("vec_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
-
+    SP.drain_paged_tranches(spark, "st_ivf", SP.parity_tranches(pages),
+                            assign)
     return (spark.read.parquet(store)
             .select("vec_id", F.col("cluster").cast("long").alias("cluster"),
                     "dist_q")
@@ -2817,23 +2736,22 @@ def s31_version_diff(spark: SparkSession, d: str) -> DataFrame:
     bumps n_chars on every 7th), then compute the per-key
     added/removed/changed/unchanged ledger by FULL OUTER JOIN of the
     two time-travel reads.  The Spark side goes THROUGH the store
-    (write_version -> read_version as_of) — proving the lineage
+    (fold_version -> read_version as_of) — proving the lineage
     path; the oracle checks the diff semantics.  At 100 TB the diff
     is one co-partitioned full-outer join on the snapshot key."""
     import shutil
-    from ..sources.tables import read_version, write_version
-    from .catalog_more import _scratch
+    from ..sources.tables import fold_version, read_version
+    from ..session import scratch
     docs = _t(spark, d, "documents")
-    path = _scratch("s31_diff")
+    path = scratch("s31_diff")
     shutil.rmtree(path, ignore_errors=True)
-    write_version(docs.filter(F.col("doc_id") % 3 != 0)
-                  .select("doc_id", "lang", "n_chars"), path, 1)
-    write_version(docs.filter(F.col("doc_id") % 5 != 0)
-                  .select("doc_id", "lang",
-                          (F.col("n_chars")
-                           + F.when(F.col("doc_id") % 7 == 0, 1)
-                              .otherwise(0)).alias("n_chars")),
-                  path, 2)
+    fold_version(spark, path, 0, docs.filter(F.col("doc_id") % 3 != 0)
+                 .select("doc_id", "lang", "n_chars"))
+    fold_version(spark, path, 1, docs.filter(F.col("doc_id") % 5 != 0)
+                 .select("doc_id", "lang",
+                         (F.col("n_chars")
+                          + F.when(F.col("doc_id") % 7 == 0, 1)
+                             .otherwise(0)).alias("n_chars")))
     a = read_version(spark, path, as_of=1).alias("a")
     b = read_version(spark, path, as_of=2).alias("b")
     j = a.join(b, F.col("a.doc_id") == F.col("b.doc_id"), "full_outer")
@@ -3139,9 +3057,9 @@ def st_late_data_audit(spark: SparkSession, d: str) -> DataFrame:
     import shutil
 
     from ..streaming import pipeline as sp
-    from .catalog_more import _scratch
+    from ..session import scratch
 
-    root = _scratch("st_late_audit")
+    root = scratch("st_late_audit")
     shutil.rmtree(root, ignore_errors=True)
     src = os.path.join(root, "src")
     os.makedirs(src)

@@ -568,9 +568,9 @@ def _pca_centered(spark: SparkSession, d: str) -> DataFrame:
     parquet roundtrip is lossless and every g4 oracle is unchanged."""
     import os
     from ..functions.vector import to_double_array
-    from .catalog_more import _scratch
+    from ..session import scratch
     D = _PCA_D
-    path = _scratch("pca_c_" + d.strip("/").replace("/", "_"))
+    path = scratch("pca_c_" + d.strip("/").replace("/", "_"))
     if d not in _PCA_C_BUILT or not os.path.exists(path):
         emb = _t(spark, d, "embeddings").select(
             "vec_id",
@@ -1816,82 +1816,46 @@ def _cms_batch_cells(batch_docs: DataFrame) -> DataFrame:
             .agg(F.sum("n").cast("long").alias("cell_sum")))
 
 
+def _cms_fold(spark: SparkSession, store: str, epoch_id: int,
+              batch_docs: DataFrame) -> None:
+    """Fold one micro-batch's cells into the sketch store: cell sums
+    add."""
+    from ..sources.tables import fold_version
+    fold_version(spark, store, epoch_id, _cms_batch_cells(batch_docs),
+                 lambda p, i: (p.unionByName(i).groupBy("i", "bucket")
+                               .agg(F.sum("cell_sum").cast("long")
+                                    .alias("cell_sum"))))
+
+
 @register("st_cms_ingest", oracle=_cms_cells_oracle())
 def st_cms_ingest(spark: SparkSession, d: str) -> DataFrame:
-    """Streaming count-min-sketch maintenance: documents arrive
-    through the custom paged-dump stream in two checkpointed
-    tranches (even doc ids, then odd), each micro-batch folds its
-    partial cells (integer sums over the same 3x512 salted-hash
-    grid as a20_heavy_hitters) into a versioned sketch store, and
-    the DRAINED sketch must equal the batch-built sketch cell for
-    cell — the mergeability property that makes CMS the right
-    frequency state for a crawl that never stops (and for map-side
-    partial aggregation generally: the merge operator IS addition).
+    """Streaming count-min-sketch maintenance: each micro-batch of the
+    paged document tranches folds its partial cells (integer sums over
+    the same 3x512 salted-hash grid as a20_heavy_hitters) into a
+    versioned sketch store, and the DRAINED sketch must equal the
+    batch-built sketch cell for cell — the mergeability property that
+    makes CMS the right frequency state for a crawl that never stops
+    (and for map-side partial aggregation generally: the merge
+    operator IS addition, so the fold is epoch-keyed).
 
     Scale shape: per-batch state is the batch's own vocabulary-
     capped count table collapsed to <=1,536 cells; the store carries
     only the 1,536-cell sketch regardless of corpus size."""
     import shutil
-    from pathlib import Path
-
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..session import scratch
+    from ..sources.tables import read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_cms_dump")
-    store = _scratch("st_cms_store")
-    ckpt = _scratch("st_cms_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    store = scratch("st_cms_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("doc_id").cast("string").alias("page_id"),
-            F.col("text").alias("title"),
-            "lang", "n_chars")).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        _cms_fold(rows.sparkSession, store, epoch_id,
+                  rows.select(F.col("title").alias("text")))
 
-    page_rows(docs.filter(F.col("doc_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            batch_docs = (batch_df.filter(~F.col("malformed"))
-                          .select(F.col("title").alias("text")))
-            inc = _cms_batch_cells(batch_docs)
-            sp = batch_df.sparkSession
-            versions = (list_versions(sp, store)
-                        if os.path.exists(store) else [])
-            if versions:
-                prior = read_version(sp, store)
-                merged = (prior.unionByName(inc)
-                          .groupBy("i", "bucket")
-                          .agg(F.sum("cell_sum").cast("long")
-                               .alias("cell_sum")))
-            else:
-                merged = inc
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(docs.filter(F.col("doc_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_cms",
+                            SP.parity_tranches(SP.doc_pages(docs)), merge)
 
     final = read_version(spark, store)
     return final.select("i", F.col("bucket").cast("long").alias("bucket"),

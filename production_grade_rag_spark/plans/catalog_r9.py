@@ -319,16 +319,13 @@ def st_semdedup(spark: SparkSession, d: str) -> DataFrame:
     dd_semdedup, completing the layer stack next to st_dd_line_dedup
     (exact) and st_ivf_ingest (index): the k=4 cluster layout is
     trained OFFLINE once (the same seeded fit dd_semdedup uses,
-    frozen), vectors then arrive through the custom paged-dump stream
-    in two tranches (EVEN vec_ids first, then odd — deliberately not
-    id order), each micro-batch assigns its arrivals MAP-SIDE against
-    the frozen centroid table and appends to a cell-partitioned
-    member store, and the second tranche resumes from the persistent
-    checkpoint.  The keeper election (drop v iff some same-cell
-    member with a smaller id has cosine >= 0.3 to it) is evaluated at
-    READ time over the store alone — per-cell quadratic work reading
-    only cell partitions, never a corpus re-scan — and is
-    order-independent BY CONSTRUCTION: membership of the dropped set
+    frozen), and each micro-batch of the paged vector tranches assigns
+    its arrivals MAP-SIDE against the frozen centroid table and
+    appends to a cell-partitioned member store.  The keeper election
+    (drop v iff some same-cell member with a smaller id has cosine >=
+    0.3 to it) is evaluated at READ time over the store alone —
+    per-cell quadratic work reading only cell partitions, never a
+    corpus re-scan — and is order-independent BY CONSTRUCTION: membership of the dropped set
     depends only on the final member multiset, so out-of-order
     tranches cannot change it (the same argument as the line-dedup
     min-semilattice, with "min similar id exists" as the monotone
@@ -344,62 +341,34 @@ def st_semdedup(spark: SparkSession, d: str) -> DataFrame:
     the election is an equi-join on the cell key exactly like batch
     SemDeDup."""
     import shutil
-    from pathlib import Path
 
-    from ..functions.vector import cosine, to_double_array
+    from ..functions.vector import to_double_array
     from ..operators import dedup
     from ..operators.similarity import assign_cells, fit_centroids
-    from ..sources.paged_source import PagedDumpDataSource
+    from ..session import scratch
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     emb = _t(spark, d, "embeddings")
 
     # offline: the frozen layout (identical seeded fit to dd_semdedup)
     cents = fit_centroids(emb, n_lists=4)
+    pages = emb.select(
+        F.col("vec_id").cast("string").alias("page_id"),
+        F.to_json(to_double_array(F.col("embedding"))).alias("title"),
+        F.lit("vec").alias("lang"), F.lit(64).cast("long").alias("n_chars"))
+    store = scratch("st_sd_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    dump = _scratch("st_sd_dump")
-    store = _scratch("st_sd_store")
-    ckpt = _scratch("st_sd_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    def assign(rows: DataFrame, epoch_id: int) -> None:
+        b = rows.select(F.col("page_id").cast("long").alias("vec_id"),
+                        F.from_json(F.col("title"), "array<double>")
+                        .alias("v"))
+        (assign_cells(b, cents, vec_col="v", id_col="vec_id")
+         .select("vec_id", "v", "cell")
+         .write.mode("append").partitionBy("cell").parquet(store))
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("vec_id").cast("string").alias("page_id"),
-            F.to_json(to_double_array(F.col("embedding"))).alias("title"),
-            F.lit("vec").alias("lang"),
-            F.lit(64).cast("long").alias("n_chars"))).alias("value"))
-
-    page_rows(emb.filter(F.col("vec_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def assign(batch_df: DataFrame, epoch_id: int) -> None:
-            b = (batch_df.filter(~F.col("malformed"))
-                 .select(F.col("page_id").cast("long").alias("vec_id"),
-                         F.from_json(F.col("title"), "array<double>")
-                          .alias("v")))
-            (assign_cells(b, cents, vec_col="v", id_col="vec_id")
-             .select("vec_id", "v", "cell")
-             .write.mode("append").partitionBy("cell").parquet(store))
-
-        SP._run_foreach(stream, assign, 120, ckpt)
-
-    drain()
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(emb.filter(F.col("vec_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_sd", SP.parity_tranches(pages),
+                            assign)
 
     # election over the store alone (dedup-on-read keeps replayed
     # batches idempotent: each row is a pure function of the input)
@@ -1881,9 +1850,8 @@ def s33_compaction_plan(spark: SparkSession, d: str) -> DataFrame:
 SELECT DISTINCT h FROM s WHERE h < {_THETA} ORDER BY h
 """)
 def st_theta_ingest(spark: SparkSession, d: str) -> DataFrame:
-    """Streaming theta-sketch maintenance: documents arrive through
-    the paged-dump stream in two checkpointed tranches (even ids,
-    then odd), each micro-batch computes its own below-theta shingle
+    """Streaming theta-sketch maintenance: each micro-batch of the
+    paged document tranches computes its own below-theta shingle
     survivors MAP-SIDE and set-unions them into a versioned store,
     and the drained survivor set must equal the batch-built one
     row for row — theta sketches merge by UNION (a semilattice:
@@ -1899,66 +1867,25 @@ def st_theta_ingest(spark: SparkSession, d: str) -> DataFrame:
     k-capped twin whose store never exceeds k rows is st_kmv_ingest
     (catalog_r10, VERDICT r9 #2)."""
     import shutil
-    from pathlib import Path
 
     from ..operators.dedup import shingle_explode
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..session import scratch
+    from ..sources.tables import fold_version, read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_theta_dump")
-    store = _scratch("st_theta_store")
-    ckpt = _scratch("st_theta_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    store = scratch("st_theta_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("doc_id").cast("string").alias("page_id"),
-            F.col("text").alias("title"),
-            "lang", "n_chars")).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        inc = (shingle_explode(rows.select(F.col("title").alias("text")))
+               .select(_h60(F.col("sh")).alias("h"))
+               .filter(F.col("h") < _THETA).distinct())
+        fold_version(rows.sparkSession, store, epoch_id, inc,
+                     lambda p, i: p.unionByName(i).distinct())
 
-    page_rows(docs.filter(F.col("doc_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            batch_docs = (batch_df.filter(~F.col("malformed"))
-                          .select(F.col("title").alias("text")))
-            inc = (shingle_explode(batch_docs)
-                   .select(_h60(F.col("sh")).alias("h"))
-                   .filter(F.col("h") < _THETA).distinct())
-            sp = batch_df.sparkSession
-            versions = (list_versions(sp, store)
-                        if os.path.exists(store) else [])
-            if versions:
-                prior = read_version(sp, store)
-                merged = prior.unionByName(inc).distinct()
-            else:
-                merged = inc
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(docs.filter(F.col("doc_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_theta",
+                            SP.parity_tranches(SP.doc_pages(docs)), merge)
 
     return read_version(spark, store).select("h").orderBy("h")
 
@@ -4183,84 +4110,41 @@ a29_equidepth_histogram.__doc__ = \
 
 @register("st_ahash_ingest", oracle=_ahash_oracle())
 def st_ahash_ingest(spark: SparkSession, d: str) -> DataFrame:
-    """Streaming aHash registry: documents arrive through the
-    paged-dump stream in two checkpointed tranches (even ids, then
-    odd), each micro-batch runs the SAME grid_features Arrow decode
-    + hash fold map-side and appends (doc_id, ahash) rows to a
-    versioned registry — per-id hashes are a pure function of
-    content, so the merge is id-keyed set union (idempotent under
-    replays, the st_theta semilattice argument with the id as the
-    key).  The final near-dup pair set computed FROM THE DRAINED
-    REGISTRY must hash-match batch mm_ahash_neardup — incremental
-    image dedup for a crawl that never stops, completing the
-    streaming-ingest family across modalities (text lines, CMS
-    counts, theta survivors, IVF cells, SemDeDup keepers, now
-    perceptual hashes).
+    """Streaming aHash registry: each micro-batch of the paged
+    document tranches runs the SAME grid_features Arrow decode + hash
+    fold map-side and folds (doc_id, ahash) rows into a versioned
+    registry — per-id hashes are a pure function of content, so the
+    merge is id-keyed set union (idempotent under replays, the
+    st_theta semilattice argument with the id as the key).  The final
+    near-dup pair set computed FROM THE DRAINED REGISTRY must
+    hash-match batch mm_ahash_neardup — incremental image dedup for a
+    crawl that never stops, completing the streaming-ingest family
+    across modalities (text lines, CMS counts, theta survivors, IVF
+    cells, SemDeDup keepers, now perceptual hashes).
 
     Scale shape: per-batch work is the batch's own decode + hash
     (map-side, Arrow-batched); the registry carries one 16-bit hash
     per image ever seen; pair generation over the registry is the
     band-bucketed join (never all-pairs)."""
     import shutil
-    from pathlib import Path
 
-    from ..sources.paged_source import PagedDumpDataSource
-    from ..sources.tables import list_versions, read_version, write_version
+    from ..session import scratch
+    from ..sources.tables import fold_version, read_version
     from ..streaming import pipeline as SP
-    from .catalog_more import _scratch
 
     docs = _t(spark, d, "documents")
-    dump = _scratch("st_ahash_dump")
-    store = _scratch("st_ahash_store")
-    ckpt = _scratch("st_ahash_ckpt")
-    for p in (dump, store, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    store = scratch("st_ahash_store")
+    shutil.rmtree(store, ignore_errors=True)
 
-    def page_rows(part: DataFrame) -> DataFrame:
-        return part.select(F.to_json(F.struct(
-            F.col("doc_id").cast("string").alias("page_id"),
-            F.col("text").alias("title"),
-            "lang", "n_chars")).alias("value"))
+    def merge(rows: DataFrame, epoch_id: int) -> None:
+        inc = _ahash_hashes(rows.select(
+            F.col("page_id").cast("long").alias("doc_id"),
+            F.col("title").alias("text")))
+        fold_version(rows.sparkSession, store, epoch_id, inc,
+                     lambda p, i: p.unionByName(i).distinct())
 
-    page_rows(docs.filter(F.col("doc_id") % 2 == 0)) \
-        .repartition(2).write.text(dump)
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
-
-    def drain() -> None:
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
-        def merge(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-            batch_docs = (batch_df.filter(~F.col("malformed"))
-                          .select(F.col("page_id").cast("long")
-                                  .alias("doc_id"),
-                                  F.col("title").alias("text")))
-            inc = _ahash_hashes(batch_docs)
-            sp = batch_df.sparkSession
-            versions = (list_versions(sp, store)
-                        if os.path.exists(store) else [])
-            if versions:
-                prior = read_version(sp, store)
-                merged = prior.unionByName(inc).distinct()
-            else:
-                merged = inc
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
-
-        SP._run_foreach(stream, merge, 120, ckpt)
-
-    drain()
-
-    tmp2 = dump + "_t2"
-    shutil.rmtree(tmp2, ignore_errors=True)
-    page_rows(docs.filter(F.col("doc_id") % 2 == 1)) \
-        .repartition(2).write.text(tmp2)
-    for i, f in enumerate(sorted(Path(tmp2).glob("part-*"))):
-        f.rename(Path(dump) / f"part-zz-{i:05d}.txt")
-    drain()
+    SP.drain_paged_tranches(spark, "st_ahash",
+                            SP.parity_tranches(SP.doc_pages(docs)), merge)
 
     registry = read_version(spark, store)
     return (_ahash_pairs_from_hashes(registry)

@@ -21,7 +21,9 @@ compile counter, so a cold/warm gap can be attributed to codegen.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -98,3 +100,16 @@ def materialize(df: DataFrame, step: str) -> DataFrame:
         return df.localCheckpoint(eager=True)
     finally:
         sc.setJobDescription(prev)
+
+
+def scratch(name: str) -> str:
+    """Path of the scratch dir ``name`` (dump round trips, versioned
+    stores, graph stores) under this process's scratch root: one dir
+    per process in the repo's gitignored ``spark-warehouse``, removed
+    at exit.  A concurrent process can neither overwrite a store this
+    one reads nor leave its own behind."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.path.join(root, "spark-warehouse", f"pid{os.getpid()}", name)
+
+
+atexit.register(lambda: shutil.rmtree(scratch(""), ignore_errors=True))

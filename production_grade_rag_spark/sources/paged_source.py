@@ -97,28 +97,14 @@ class PagedDumpReader(DataSourceReader):
         return [InputPartition(f) for f in files]
 
     def read(self, partition: InputPartition):
-        with open(partition.value, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    rec = json.loads(line)
-                    row = (str(rec["page_id"]), rec.get("title"),
-                           rec.get("lang"),
-                           int(rec["n_chars"]), False)
-                except (ValueError, KeyError, TypeError):
-                    # record-level tolerance: malformed line -> marker
-                    # row (the PERMISSIVE _corrupt_record convention).
-                    # Marker rows honor pushed filters too (a pushed
-                    # lang='en' can't emit a NULL-lang row).
-                    if self._pushed:
-                        continue
-                    yield (None, None, None, None, True)
-                    continue
-                keyed = dict(zip(("page_id", "title", "lang"), row[:3]))
-                if all(keyed.get(a) == v for a, v in self._pushed):
-                    yield row
+        # record-level tolerance: a malformed line is a marker row (the
+        # PERMISSIVE _corrupt_record convention); pushed filters hold
+        # on every yielded row, so a pushed lang='en' drops the marker's
+        # NULL-lang row too
+        for row in _read_page_file(partition.value):
+            keyed = dict(zip(("page_id", "title", "lang"), row[:3]))
+            if all(keyed[a] == v for a, v in self._pushed):
+                yield row
 
 
 def _list_page_files(path: str) -> list[str]:
@@ -141,6 +127,15 @@ def _parse_line(line: str):
                 int(rec["n_chars"]), False)
     except (ValueError, KeyError, TypeError):
         return (None, None, None, None, True)
+
+
+def _read_page_file(path: str):
+    """Schema tuples of one page file, blank lines skipped."""
+    with open(path, encoding="utf-8") as fh:
+        for line in fh:
+            line = line.strip()
+            if line:
+                yield _parse_line(line)
 
 
 class PagedDumpStreamReader(SimpleDataSourceStreamReader):
@@ -168,30 +163,20 @@ class PagedDumpStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):
         files = self._files()
         i = int(start["file_idx"])
-        # materialized list, not a generator: the Simple reader API
-        # prefetches the batch driver-side and pickles it (that is its
+        # an iterator over a materialized list: the Simple reader API
+        # prefetches the batch driver-side and pickles it (its
         # documented design point — page batches are bounded; a
         # high-throughput source graduates to DataSourceStreamReader
-        # with executor-side partitions like the batch reader's)
-        rows = []
-        for f in files[i:]:
-            with open(f, encoding="utf-8") as fh:
-                rows.extend(_parse_line(ln.strip())
-                            for ln in fh if ln.strip())
-        # iterator over the materialized list, NOT a lazy generator:
-        # the Simple reader API prefetches the batch driver-side, and
-        # its no-advance probe (add_result_to_cache) calls next() on
-        # the return value — a bare list breaks that contract (surfaced
-        # by availableNow+foreachBatch, which polls one extra time
-        # after the last file is consumed)
+        # with executor-side partitions), and its no-advance probe
+        # (add_result_to_cache) calls next() on the return value, which
+        # a bare list breaks (surfaced by availableNow+foreachBatch,
+        # which polls once more after the last file is consumed)
+        rows = [row for f in files[i:] for row in _read_page_file(f)]
         return iter(rows), {"file_idx": len(files)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         for f in self._files()[int(start["file_idx"]):int(end["file_idx"])]:
-            with open(f, encoding="utf-8") as fh:
-                for line in fh:
-                    if line.strip():
-                        yield _parse_line(line.strip())
+            yield from _read_page_file(f)
 
 
 @dataclass

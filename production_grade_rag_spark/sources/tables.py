@@ -6,12 +6,19 @@ through ``spark.read.parquet`` so Catalyst pushes filters and prunes
 columns down to the parquet reader (check: ``PushedFilters`` /
 ``ReadSchema`` in ``.explain("formatted")``).
 
+Versioned tables (``write_version`` .. ``fold_version``) are one
+immutable parquet snapshot per ``v=<n>/`` directory; the streaming
+twins commit every micro-batch through ``fold_version``, keyed by its
+epoch.
+
 100 TB notes: each table is a parquet directory; partition `documents`
 by a bucket of doc_id and `events` by date(ts) at write time so scans
 prune.  Nothing here collects to the driver.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -185,7 +192,6 @@ def compact_parquet(spark: SparkSession, path: str,
     table formats with transactions (Delta/Iceberg OPTIMIZE) replace
     the temp-swap dance."""
     import math
-    import os
     import shutil
 
     if "://" in path and not path.startswith("file://"):
@@ -218,7 +224,6 @@ def write_version(df: DataFrame, path: str, version: int) -> None:
 
 
 def list_versions(spark: SparkSession, path: str) -> list[int]:
-    import os
     import re
     if not os.path.isdir(path):
         return []
@@ -241,7 +246,6 @@ def vacuum_versions(spark: SparkSession, path: str,
     limit; Delta's retention window closes it).  Returns the removed
     version numbers; time-travel reads older than the horizon now
     raise, by design."""
-    import os
     import shutil
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
@@ -269,3 +273,33 @@ def read_version(spark: SparkSession, path: str,
     if pick is None:
         raise ValueError(f"no version <= {as_of} under {path}")
     return spark.read.parquet(f"{path}/v={pick}")
+
+
+def epoch_prior(spark: SparkSession, path: str,
+                epoch_id: int) -> DataFrame | None:
+    """The snapshot a micro-batch folds onto: the newest version <=
+    ``epoch_id`` (the previous epoch's), or None before the first
+    fold.  Reading as-of rather than latest lets a replayed batch
+    merge each of its stores against the right base, whichever
+    sibling stores already committed that epoch."""
+    older = [v for v in list_versions(spark, path) if v <= int(epoch_id)]
+    return spark.read.parquet(f"{path}/v={older[-1]}") if older else None
+
+
+def fold_version(spark: SparkSession, path: str, epoch_id: int,
+                 inc: DataFrame, combine=None) -> None:
+    """Commit micro-batch ``epoch_id`` to a versioned store: version
+    ``epoch_id + 1`` holds ``combine(prior, inc)`` over
+    ``epoch_prior``, or ``inc`` itself before the first fold or when
+    there is no ``combine`` (a plain snapshot write).  A version that
+    already committed (``_SUCCESS`` present) is skipped: its batch is
+    being replayed, the checkpointed source re-delivers the same rows,
+    so the committed snapshot IS this write, and an additive fold
+    cannot count the batch twice.  A torn version (no ``_SUCCESS``) is
+    rewritten in place."""
+    version = int(epoch_id) + 1
+    if os.path.exists(f"{path}/v={version}/_SUCCESS"):
+        return
+    prior = epoch_prior(spark, path, epoch_id) if combine else None
+    write_version(inc if prior is None else combine(prior, inc),
+                  path, version)

@@ -21,10 +21,40 @@ partitioned by arrival date; the aggregation state is keyed by
 (window/user) and sharded across executors by the same groupBy keys as
 the batch plan; the watermark bounds state size, and
 availableNow/trigger intervals control micro-batch sizing.
+
+Incremental ingest (the ``st_*`` paged twins) is one protocol:
+
+- **Tranches.** ``drain_paged_tranches`` lands each tranche, a
+  ``(page_id, title, lang, n_chars)`` frame, in a fresh page dump as
+  JSON-lines files named ``part-<tranche>-<file>`` (``write.text`` of
+  ``to_json``, then a rename): the stream offset is an index into the
+  sorted file list, so tranche two is exactly the next offset range.
+  After each landing the dump drains (availableNow) from ONE
+  persistent checkpoint, so tranche two resumes without re-reading
+  tranche one; each micro-batch's well-formed rows reach
+  ``on_batch(rows, epoch_id)``.  The connector's own append writer
+  (``PagedDumpWriter``, whose ``_MANIFEST`` commit orders appended
+  files the same way) would replace the rename, but each of its
+  writes starts two driver-side Python processes (plan and commit):
+  0.7-1.3 s more per twin at sf0.01 on 4 cores, more than the twins'
+  run-to-run spread.
+- **Epoch fold.** A twin keeps its state in versioned stores
+  (``sources.tables``) and commits each micro-batch with
+  ``fold_version``: snapshot ``epoch_id + 1`` = ``combine(snapshot as
+  of epoch_id, increment)``.  A batch that Spark replays after a
+  crash between the store write and the checkpoint commit finds its
+  snapshot committed and skips it, so additive folds (counts, sums,
+  moments) never count a batch twice.  Append-only stores whose rows
+  are pure functions of the input dedup on read instead.
+
+Every drain waits at most ``DRAIN_TIMEOUT_S`` and raises when time
+runs out: a drain that stopped early has left a partial sink.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
 import numpy as np
@@ -34,6 +64,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+from ..session import scratch
+from ..sources.paged_source import PagedDumpDataSource
+
+# Upper bound on one availableNow drain.  A drain returns as soon as
+# its input is consumed, so the bound only decides how long a stuck
+# drain runs before it raises.
+DRAIN_TIMEOUT_S = 600
+
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """Raw file schema for the stream source, from one batch footer
@@ -232,7 +271,6 @@ def dedup_stream_watermarked(events: DataFrame) -> DataFrame:
 
 
 def run_foreach_parquet(result: DataFrame, out_path: str,
-                        timeout_s: int = 120,
                         checkpoint_path: str | None = None) -> None:
     """Drain the streaming plan into a parquet directory via
     foreachBatch — the production sink shape: the checkpoint ties batch
@@ -251,10 +289,21 @@ def run_foreach_parquet(result: DataFrame, out_path: str,
     def write_batch(df: DataFrame, epoch_id: int) -> None:
         df.write.mode("append").parquet(out_path)
 
-    _run_foreach(result, write_batch, timeout_s, checkpoint_path)
+    _run_foreach(result, write_batch, checkpoint_path)
 
 
-def _run_foreach(result: DataFrame, batch_fn, timeout_s: int,
+def _await_drain(q) -> None:
+    """Wait for an availableNow query to finish; stop it and raise if
+    it is still running after ``DRAIN_TIMEOUT_S``."""
+    finished = q.awaitTermination(DRAIN_TIMEOUT_S)
+    q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"stream drain {q.name or q.id} still running after "
+            f"{DRAIN_TIMEOUT_S}s; stopped with a partial sink")
+
+
+def _run_foreach(result: DataFrame, batch_fn,
                  checkpoint_path: str | None) -> None:
     """availableNow foreachBatch drain, with a persistent checkpoint
     when given (survives the call -> restarts skip completed batches)
@@ -266,14 +315,76 @@ def _run_foreach(result: DataFrame, batch_fn, timeout_s: int,
                 .start())
 
     if checkpoint_path is not None:
-        q = _start(checkpoint_path)
-        q.awaitTermination(timeout_s)
-        q.stop()
+        _await_drain(_start(checkpoint_path))
         return
     with tempfile.TemporaryDirectory(prefix="pgrs_ckpt_") as ckpt:
-        q = _start(ckpt)
-        q.awaitTermination(timeout_s)
-        q.stop()
+        _await_drain(_start(ckpt))
+
+
+def paged_stream(spark: SparkSession, dump: str) -> DataFrame:
+    """Streaming read of a ``paged_dump`` directory (offset = index
+    into its file list), with the connector registered and its
+    filter pushdown enabled."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(PagedDumpDataSource)
+    return spark.readStream.format("paged_dump").option("path", dump).load()
+
+
+def doc_pages(docs: DataFrame) -> DataFrame:
+    """Documents as pages: the title field carries the full text."""
+    return docs.select(F.col("doc_id").cast("string").alias("page_id"),
+                       F.col("text").alias("title"), "lang", "n_chars")
+
+
+def parity_tranches(pages: DataFrame) -> list[DataFrame]:
+    """Even page ids, then odd: an arrival order that is deliberately
+    not id order, so a fold that depends on it shows."""
+    pid = F.col("page_id").cast("long")
+    return [pages.filter(pid % 2 == 0), pages.filter(pid % 2 == 1)]
+
+
+def drain_paged_tranches(spark: SparkSession, name: str,
+                         tranches: list[DataFrame], on_batch) -> None:
+    """The tranche protocol of the module docstring: for each tranche,
+    land it in the page dump under ``scratch(name)`` and drain the new
+    pages from one checkpoint, passing each micro-batch's well-formed
+    rows (``page_id, title, lang, n_chars``) to
+    ``on_batch(rows, epoch_id)``."""
+    root = scratch(name)
+    shutil.rmtree(root, ignore_errors=True)
+    dump, ckpt = os.path.join(root, "dump"), os.path.join(root, "ckpt")
+    stream = paged_stream(spark, dump)
+
+    def batch(df: DataFrame, epoch_id: int) -> None:
+        on_batch(df.filter(~F.col("malformed")).drop("malformed"), epoch_id)
+
+    for i, pages in enumerate(tranches):
+        tmp = f"{dump}_t{i}"
+        (pages.select(F.to_json(F.struct(*pages.columns)).alias("value"))
+         .repartition(2).write.text(tmp))
+        _move_parts(tmp, dump, f"part-{i:05d}", "txt")
+        _run_foreach(stream, batch, ckpt)
+
+
+def _move_parts(tmp: str, into: str, prefix: str, ext: str) -> None:
+    """Move the part files of the Spark output dir ``tmp`` into
+    ``into`` as ``{prefix}-NNNNN.{ext}``, then drop ``tmp``."""
+    os.makedirs(into, exist_ok=True)
+    parts = sorted(f for f in os.listdir(tmp) if f.startswith("part-"))
+    for j, f in enumerate(parts):
+        os.rename(os.path.join(tmp, f),
+                  os.path.join(into, f"{prefix}-{j:05d}.{ext}"))
+    shutil.rmtree(tmp)
+
+
+def ship_parquet(part: DataFrame, sdir: str, tag: str) -> None:
+    """Land one tranche in the parquet file-source directory ``sdir``
+    as ``{tag}-NNNNN.parquet`` files (the file source picks up every
+    file it has not yet seen; the tag keeps tranche names apart)."""
+    tmp = f"{sdir}_{tag}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    part.repartition(2).write.parquet(tmp)
+    _move_parts(tmp, sdir, tag, "parquet")
 
 
 def rollup_store_read(spark, store_path: str) -> DataFrame:
@@ -281,7 +392,6 @@ def rollup_store_read(spark, store_path: str) -> DataFrame:
     crash landed between the two renames of the promote sequence (old
     -> .bak, tmp -> store): at every instant at least one complete
     store directory exists."""
-    import os
     bak = store_path + ".bak"
     if not os.path.exists(store_path) and os.path.exists(bak):
         os.rename(bak, store_path)
@@ -289,7 +399,6 @@ def rollup_store_read(spark, store_path: str) -> DataFrame:
 
 
 def run_rollup_merge(events: DataFrame, store_path: str,
-                     timeout_s: int = 120,
                      checkpoint_path: str | None = None) -> None:
     """STREAMING materialized-view maintenance: each micro-batch is
     partial-aggregated to (day, event_type) counts/scaled-sums and
@@ -309,9 +418,6 @@ def run_rollup_merge(events: DataFrame, store_path: str,
     atomic-per-directory, not transactional across readers — a
     Delta/Iceberg sink turns this into a real MERGE with snapshot
     isolation."""
-    import os
-    import shutil
-
     def rollup(df: DataFrame) -> DataFrame:
         scaled = F.round(F.col("value") * 10000).cast("long")
         return (df.withColumn(
@@ -342,21 +448,18 @@ def run_rollup_merge(events: DataFrame, store_path: str,
         os.rename(tmp, store_path)
         shutil.rmtree(bak, ignore_errors=True)
 
-    _run_foreach(events, merge_batch, timeout_s, checkpoint_path)
+    _run_foreach(events, merge_batch, checkpoint_path)
 
 
 def run_available_now(result: DataFrame, table_name: str,
-                      timeout_s: int = 120,
                       output_mode: str = "complete") -> DataFrame:
     """Drain all available input through the streaming plan into an
     in-memory sink and return the sink contents as a DataFrame."""
     with tempfile.TemporaryDirectory(prefix="pgrs_ckpt_") as ckpt:
-        q = (result.writeStream.format("memory")
-             .queryName(table_name)
-             .outputMode(output_mode)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination(timeout_s)
-        q.stop()
+        _await_drain(result.writeStream.format("memory")
+                     .queryName(table_name)
+                     .outputMode(output_mode)
+                     .option("checkpointLocation", ckpt)
+                     .trigger(availableNow=True)
+                     .start())
     return result.sparkSession.table(table_name)

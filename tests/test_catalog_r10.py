@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from production_grade_rag_spark.plans.catalog import CATALOG
+from production_grade_rag_spark.session import scratch
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -23,7 +24,7 @@ def spark():
 def test_knn_store_materializes_once(spark):
     from production_grade_rag_spark.operators import knn_graph as KG
     und1 = KG.knn_und(spark, SF001)
-    path = KG._warehouse(KG._tag("knn_und", SF001, 5, "exact", 16, 4))
+    path = scratch(KG._tag("knn_und", SF001, 5, "exact", 16, 4))
     assert os.path.exists(path)
     mtime = max(os.path.getmtime(os.path.join(path, f))
                 for f in os.listdir(path))
@@ -43,12 +44,12 @@ def test_knn_store_is_per_process(spark):
     from production_grade_rag_spark.operators import knn_graph as KG
     tag = KG._tag("knn_und", SF001, 5, "exact", 16, 4)
     n = KG.knn_und(spark, SF001).count()
-    path = KG._warehouse(tag)
+    path = scratch(tag)
     before = sorted(os.listdir(path))
     other = subprocess.run(
         [sys.executable, "-c",
-         "import os, sys; from production_grade_rag_spark.operators "
-         "import knn_graph as KG; p = KG._warehouse(sys.argv[1]); "
+         "import os, sys; from production_grade_rag_spark.session "
+         "import scratch; p = scratch(sys.argv[1]); "
          "os.makedirs(p); open(os.path.join(p, 'part-0.parquet'), "
          "'w').write('x'); print(p)", tag],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -167,11 +168,10 @@ def test_kmv_merge_equals_direct_corpus_sketch(spark):
 def test_st_kmv_store_stays_k_bounded(spark):
     # every persisted version of the streaming store holds <= k rows
     # (the bounded-state claim st_theta_ingest could not make)
-    from production_grade_rag_spark.plans.catalog_more import _scratch
     from production_grade_rag_spark.sources.tables import (
         list_versions, read_version)
     CATALOG["st_kmv_ingest"].build(spark, SF001).collect()
-    store = _scratch("st_kmv_store")
+    store = scratch("st_kmv_store")
     for v in list_versions(spark, store):
         assert read_version(spark, store, v).count() <= 64
 
@@ -296,13 +296,12 @@ def test_cusum_flags_sustained_shift(spark):
 
 
 def test_st_knn_edges_fanout_and_versions(spark):
-    from production_grade_rag_spark.plans.catalog_more import _scratch
     from production_grade_rag_spark.sources.tables import list_versions
     out = CATALOG["st_knn_edges"].build(spark, SF001)
     fan = out.groupBy("src").count()
     assert fan.filter(F.col("count") != 5).count() == 0
     # the store really went through multiple incremental merges
-    assert len(list_versions(spark, _scratch("st_knn_estore"))) >= 2
+    assert len(list_versions(spark, scratch("st_knn_estore"))) >= 2
 
 
 def test_order_clumping_interleave_kills_bucket_adjacency(spark):

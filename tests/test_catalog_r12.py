@@ -131,10 +131,8 @@ def test_st_minhash_checkpoint_resume(spark, tmp_path):
 
     from production_grade_rag_spark.operators.dedup import (
         minhash_band_table, minhash_signatures)
-    from production_grade_rag_spark.sources.paged_source import \
-        PagedDumpDataSource
     from production_grade_rag_spark.sources.tables import (
-        list_versions, read_version, write_version)
+        fold_version, list_versions, read_version)
     from production_grade_rag_spark.streaming import pipeline as sp
 
     docs = spark.read.parquet(f"{SF001}/documents.parquet").limit(40)
@@ -145,28 +143,17 @@ def test_st_minhash_checkpoint_resume(spark, tmp_path):
         F.col("doc_id").cast("string").alias("page_id"),
         F.col("text").alias("title"), "lang", "n_chars")).alias("value"))
      .repartition(2).write.text(dump))
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(PagedDumpDataSource)
 
     def drain():
-        stream = (spark.readStream.format("paged_dump")
-                  .option("path", dump).load())
-
         def merge(batch_df, epoch_id):
-            import os
             bd = (batch_df.filter(~F.col("malformed"))
                   .select(F.col("page_id").cast("long").alias("doc_id"),
                           F.col("title").alias("text")))
             inc = minhash_band_table(minhash_signatures(bd))
-            s = batch_df.sparkSession
-            versions = (list_versions(s, store)
-                        if os.path.exists(store) else [])
-            merged = (read_version(s, store).unionByName(inc).distinct()
-                      if versions else inc)
-            write_version(merged, store,
-                          (versions[-1] + 1) if versions else 1)
+            fold_version(batch_df.sparkSession, store, epoch_id, inc,
+                         lambda p, i: p.unionByName(i).distinct())
 
-        sp._run_foreach(stream, merge, 120, ckpt)
+        sp._run_foreach(sp.paged_stream(spark, dump), merge, ckpt)
 
     drain()
     v1 = list_versions(spark, store)

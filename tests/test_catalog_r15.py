@@ -163,12 +163,12 @@ def test_ivfpq_rebuild_rotate_off_ignores_stale_rotation(spark):
     import shutil
 
     from production_grade_rag_spark.operators import pq
-    from production_grade_rag_spark.plans.catalog_more import _scratch
     from production_grade_rag_spark.plans.oracle_vec import QUERY_VEC
+    from production_grade_rag_spark.session import scratch
     from production_grade_rag_spark.sources import load_table
     emb = load_table(spark, SF001, "embeddings")
-    toggled = _scratch("r15_opq_toggle")
-    fresh = _scratch("r15_opq_fresh")
+    toggled = scratch("r15_opq_toggle")
+    fresh = scratch("r15_opq_fresh")
     pq.ivfpq_build_store(emb, toggled, n_lists=4, m=8, k_codes=8,
                          rotate=True)
     rotated = [tuple(r) for r in pq.ivfpq_search_store(
@@ -225,18 +225,15 @@ def test_epoch_write_replay_is_idempotent(spark, tmp_path):
     import os
 
     from pyspark.sql import functions as F
-    from production_grade_rag_spark.plans.catalog_r14 import (
-        epoch_prior, epoch_write)
-    from production_grade_rag_spark.sources.tables import list_versions
+    from production_grade_rag_spark.sources.tables import (fold_version,
+                                                           list_versions)
     store = str(tmp_path / "qi_store")
 
     def fold(epoch_id, inc_rows):
         inc = spark.createDataFrame(inc_rows, "k string, n long")
-        p = epoch_prior(spark, store, epoch_id)
-        merged = inc if p is None else (
-            p.unionByName(inc).groupBy("k")
-            .agg(F.sum("n").cast("long").alias("n")))
-        epoch_write(merged, store, epoch_id)
+        fold_version(spark, store, epoch_id, inc,
+                     lambda p, i: (p.unionByName(i).groupBy("k")
+                                   .agg(F.sum("n").cast("long").alias("n"))))
 
     def state():
         from production_grade_rag_spark.sources.tables import read_version

@@ -268,7 +268,7 @@ def test_incremental_curation_matches_batch(spark):
     batch cc_curate over the same corpus, and must leave a multi-
     version history behind (each merge commits a snapshot)."""
     from production_grade_rag_spark.plans.catalog import CATALOG
-    from production_grade_rag_spark.plans.catalog_more import _scratch
+    from production_grade_rag_spark.session import scratch
     from production_grade_rag_spark.sources.tables import list_versions
 
     cols = ["doc_id", "detected_lang", "quality_score", "est_tokens",
@@ -276,6 +276,6 @@ def test_incremental_curation_matches_batch(spark):
     got = _rows(CATALOG["st_cc_curate"].build(spark, SF001), cols)
     want = _rows(CATALOG["cc_curate"].build(spark, SF001), cols)
     assert got == want
-    versions = list_versions(spark, _scratch("st_cc_store"))
+    versions = list_versions(spark, scratch("st_cc_store"))
     assert len(versions) >= 2, \
         "two tranches must commit at least two store versions"
