@@ -15,46 +15,14 @@ Parity rules (enforced by tests/test_oracle_parity.py):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as X
 from ..operators import chunk_gates, chunking
-from ..sources import load_table
 from . import oracle_sql as O
-
-
-@dataclass(frozen=True)
-class QuerySpec:
-    build: Callable[[SparkSession, str], DataFrame]
-    # None -> rows-only check (non-SQL op).  A zero-arg CALLABLE is a
-    # LAZY oracle, resolved at oracle_sql() time: entries whose oracle
-    # text is assembled from OTHER entries' oracles must not read
-    # CATALOG at registration time — when a test imports a mid-chain
-    # catalog module directly, that module's own registrations run
-    # LAST (re-entrant partial import), so an eager cross-entry read
-    # during the chain KeyErrors.
-    oracle: str | Callable[[], str] | None = None
-    headline: bool = False         # include in bench.py
-
-    def oracle_text(self) -> str | None:
-        return self.oracle() if callable(self.oracle) else self.oracle
-
-
-CATALOG: dict[str, QuerySpec] = {}
-
-
-def register(name: str, oracle: str | None = None, headline: bool = False):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        CATALOG[name] = QuerySpec(build=fn, oracle=oracle, headline=headline)
-        return fn
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from .registry import CATALOG, _t, register
 
 
 # ===========================================================================
@@ -487,26 +455,159 @@ def oracle_sql() -> dict[str, str]:
             if spec.oracle is not None}
 
 
-# Side-effect registrations: vector/dedup/text-analysis/events entries
-# live in catalog_ext to keep this file readable.  Imported at the
-# bottom so `register` and `_t` exist when catalog_ext imports back.
-#
-# REGISTRATION ORDER IS LOAD-BEARING: the round driver's correctness
-# snapshot checks exactly the FIRST 50 registered entries (verified
-# r6/r7: list(queries())[:50] == its key set).  Never reorder or
-# insert entries in this file / catalog_ext ahead of the existing
-# ones — append new entries in the newest catalog_r* module, imported
-# last below.
-from . import catalog_ext  # noqa: E402,F401  (registration side effects)
-from . import catalog_more  # noqa: E402,F401  (registration side effects)
-from . import catalog_r6  # noqa: E402,F401  (registration side effects)
-from . import catalog_r7  # noqa: E402,F401  (registration side effects)
-from . import catalog_r8  # noqa: E402,F401  (registration side effects)
-from . import catalog_r8b  # noqa: E402,F401  (registration side effects)
-from . import catalog_r9  # noqa: E402,F401  (registration side effects)
-from . import catalog_r10  # noqa: E402,F401  (registration side effects)
-from . import catalog_r11  # noqa: E402,F401  (registration side effects)
-from . import catalog_r12  # noqa: E402,F401  (registration side effects)
-from . import catalog_r13  # noqa: E402,F401  (registration side effects)
-from . import catalog_r14  # noqa: E402,F401  (registration side effects)
-from . import catalog_r15  # noqa: E402,F401  (registration side effects)
+# Domain modules register their entries on import; the manifest below,
+# not the import order, sets the registration order.
+from . import retrieval  # noqa: E402,F401
+from . import catalog_ext  # noqa: E402,F401
+from . import catalog_more  # noqa: E402,F401
+from . import catalog_r6  # noqa: E402,F401
+from . import catalog_r7  # noqa: E402,F401
+from . import catalog_r8  # noqa: E402,F401
+from . import catalog_r8b  # noqa: E402,F401
+from . import catalog_r9  # noqa: E402,F401
+from . import catalog_r10  # noqa: E402,F401
+from . import catalog_r11  # noqa: E402,F401
+from . import catalog_r12  # noqa: E402,F401
+from . import catalog_r13  # noqa: E402,F401
+from . import catalog_r14  # noqa: E402,F401
+from . import catalog_r15  # noqa: E402,F401
+
+# Registration order of every entry: queries(), oracle_sql() and the
+# driver's correctness snapshot (the first 50 names) follow it.  A new
+# entry is registered in its domain module and appended here.
+MANIFEST = """
+q1_pricing_summary q3_top_revenue_orders q5_nation_revenue
+w1_top_orders_per_customer w4_running_customer_spend w2_order_sequence
+u1_union_distinct a5_corpus_stats_cube s11_cascading_delete
+ev_hourly_event_counts t1_clean_content t2_quality_score
+t3_quality_filter t3_quality_filter_030 s4_extract_links_seeded
+f3_word_count f5_intent_classification f8_token_estimate
+s4_extract_links t7_token_budget_prefix m1_chunk_fixed
+m1_chunk_recursive r4_knn_topk r4_knn_filtered r5_self_similar
+r6_label_proxy_similarity r7_hybrid_bm25 r7_hybrid_bm25_std
+r7_hybrid_tfidf r7_hybrid_fusion a3_multi_strategy_fusion
+r1_attribution_join a4_best_doc_per_source a6_source_stats
+a7_confidence_score dd_exact dd_minhash_lsh dd_ngram_jaccard
+dd_simhash_signatures dd_simhash_pairs dd_embedding_neardup
+ta_language_id ta_token_counts ta_fingerprint ev_sessionize
+ev_rolling_metrics w6_last_events_per_user ev_json_props m2_parent_child
+r2_parent_context_recursive r3_parent_child_map_recursive
+w5_greedy_diversity m3_hash_components m3_hash_embed m3_model_embed
+r4_knn_join_batch r4_knn_euclidean r4_ivf_topk r5_lsh_pairs dd_keepers
+ta_quality_ratios ev_sliding_counts dd_components s3_blocks_markdown
+ev_user_rolling f12_slack_format m4_context_grouping
+s7_ordered_chunk_scan m2_parent_child_fixed r2_parent_context
+r3_parent_child_map t7_greedy_budget mm_decode_features mm_frame_sample
+s5_title_fallback st_user_running_state ev_skew_salted_agg t4_min_length
+t5_score_threshold t6_field_projection s1_json_page_scan s2_json_db_scan
+eng_semantic_postfilter eng_filtered_pool r4_ivf_store st_dedup_stream
+mm_audio_windows ev_salted_join ta_length_quantiles flagship_dim384
+eng_hybrid_bm25 eng_multi_similarity eng_multi_parent_child
+r4_ivf_recall r4_ivf_store_recall r5_lsh_recall r4_ivf_rebuild_loop
+m1_recursive_gate m2_recursive_gate ta_repetition_stats dd_domain_cap
+ta_redact r4_sq_recall a5_approx_gate ev_asof_join t9_hash_sample
+ev_funnel mm_feature_knn pk_sequence_pack ta_unigram_logprob
+ta_ngram_repetition cc_curate t10_stratified_sample
+t10_stratified_cutoff ev_window_join r4_pq_topk r4_ivfpq_store
+r4_ivfpq_recall eng_ann_recall r4_ivf_join r4_ivf_join_recall
+r4_pq_recall st_enrich_join st_dedup_watermarked st_incremental_rollup
+st_stream_join st_foreach_sink s18_custom_source s19_sorted_ingest
+st_custom_source_stream s20_custom_sink ev_value_histogram
+s23_csv_source s17_compact ev_multitouch_attribution ta_zipf_slope
+flagship_valuecheck m1_chunk_udtf s25_user_erasure s24_versioned_read
+dq_rules obs_pipeline_metrics s14_storage_stats mm_modality_router
+ev_seasonality t14_dedup_aware_sample ev_active_users
+ev_active_users_hll ev_error_bursts dd_cluster_sizes a14_null_profile
+t18_minmax_normalize ta_source_vocab t17_winsorize ev_new_vs_returning
+ev_activity_concentration ev_session_stats ev_week_overlap_hll
+ev_path_transitions ta_keywords_tfidf ev_scd2_islands ev_rollup_sets
+pk_pack_stats ta_langid_confusion t12_quality_deciles
+w7_quality_percentile ev_gap_distribution s22_schema_evolution
+u6_except_intersect f19_sql_udfs ta_token_entropy t13_mix_oversample
+dd_impact_report dd_decontaminate t11_source_mix m3_incremental_embed
+q6_forecast_revenue q10_returned_items q4_priority_semijoin
+q12_priority_by_linestatus q14_promo_revenue q17_small_quantity_revenue
+q22_active_without_errors q18_large_volume_customers ev_anomaly_zscore
+ev_incremental_rollup ev_type_pivot ev_heavy_hitters r7_hybrid_rrf
+w8_mmr_rerank ev_heavy_hitters_approx ev_retention_cohorts
+s21_bucketed_join s15_incremental_ingest q7_volume_shipping
+q8_market_share q13_order_count_distribution q19_disjunctive_revenue
+q21_waiting_supplier ev_rfm_segments q_basket_lift dd_link_canon
+a15_cardinality_profile ev_stickiness s26_version_diff q_fulfillment_lag
+w9_interorder_gap q9_profit_proxy q15_top_supplier
+m1_chunk_recursive_rows m2_parent_child_rows st_cc_curate
+r7_hybrid_bm25_stem t16_dsir_weight r8_hard_negatives r8_triplets
+dd_semdedup dd_semdedup_recall s28_orc_roundtrip s27_vacuum_versions
+mm_resize cc_curate_modern g1_trade_pagerank dd_line_dedup
+ta_gopher_gate t14_c4_line_filter r7_hybrid_bm25_en r4_ivfpq_rerank
+r4_ivfpq_rerank_recall eng_ivfpq_recall r2_parent_context_rows
+t17_dsir_resample t17_dsir_mix ta_perplexity cc_curate_modern_ppl
+dd_span_dedup r4_ivfpq_adaptive_recall t18_seq_packing t18_packing_stats
+t19_domain_mix t19_domain_mix_report r9_bitext_pairs t20_bpe_merges
+t20_bpe_apply r10_matryoshka_topk r10_matryoshka_overlap
+a10_hll_cardinality a11_quantile_sketch st_dd_line_dedup
+dd_dupgram_profile ir1_eval_per_query ir2_eval_summary t21_nb_quality
+t21_nb_confusion t21_nb_filter s29_zorder_layout s30_layout_pruning
+a16_skew_probe g2_kmeans_clusters g2_kmeans_assign st_ivf_ingest
+ir3_eval_matryoshka t22_bpe_fertility a17_join_estimate_audit
+cc_release_funnel t21_nb_calibration ev_markov_transitions dq2_psi_drift
+w9_skyline_curation s31_version_diff a19_source_gini r11_prf_terms
+r11_prf_rerank mm_keyframes st_late_data_audit r12_maxsim_topk
+eng_prf_terms t23_scorer_correlation t24_temp_mix t24_temp_mix_report
+t25_rule_ablation w10_quality_pernorm a20_heavy_hitters
+g3_cluster_balanced_sample g4_pca_power g4_pca_explained
+a21_bloom_prefilter t26_eval_split t26_eval_split_report
+ta_backoff_heldout t27_weighted_sample g5_label_prop
+g5_label_prop_report s32_analyze_stats t28_icp_pack t28_icp_adjacency
+g4_pca_power2 ev_path_3grams t26_split_leakage st_cms_ingest
+ir4_diversity_eval ev_growth_accounting w11_facility_location
+ta_heaps_curve t29_mix_tuning ta_perplexity_approx
+cc_release_funnel_approx eng_ivfpq_adaptive_recall r9_bitext_ivf
+r9_bitext_ivf_recall st_semdedup t20_bpe_merges16 t20_bpe_curve
+t31_epoch_allocation w12_curriculum_interleave ir5_sign_test
+t33_neyman_alloc dq3_ks_drift mm_vad_segments t34_ngram_contamination
+ev_retention_triangle ev_anomaly_mad a22_theta_ndv a23_theta_setops
+ta_zipf_fit g6_triangle_census ir7_kendall_tau mm_ahash_neardup
+s33_compaction_plan st_theta_ingest g7_kcore_peel t35_span_corruption
+ta_burstiness mm_audio_fingerprint t36_dup_quality_matrix g2_silhouette
+ta_source_tfidf ev_funnel_ttc a24_sampled_join_estimate eng_lsh_recall
+ev_attribution_removal w13_kcenter_coreset dq4_seasonality_chi2
+mm_ahash_components dq5_benford dq6_error_pchart dq7_ab_ztest
+g8_hub_attack ta_pmi_pairs ev_value_deciles dd_threshold_curve
+dd_minhash_pr g9_assortativity ev_funnel_tenure a29_equidepth_histogram
+st_ahash_ingest dd_soft_dedup dd_soft_dedup_ess t40_packing_waste_curve
+g_knn_edges g_knn_edges_ivf g_knn_edges_ivf_recall
+w10_quality_pernorm_approx t41_soft_dedup_sample t41_softsample_mix
+a30_kmv_ndv a31_kmv_merge st_kmv_ingest t20_bpe_merges64 t20_bpe_curve64
+st_sessionize g10_knn_components g10_components_star g11_ppr_seed
+dq7_cusum_shift st_knn_edges t43_order_clumping dq8_kanonymity
+m5_embedding_isotropy t44_quality_length_corr g_ivf_fidelity
+s32_analyze_stats_approx m6_whiten_embeddings cc_release_audit st_funnel
+ev_rolling_distinct_kmv g12_neighborhood_function st_rolling_distinct
+mm_scene_table dd_minhash_delta dd_minhash_delta_pr a29_equidepth_approx
+st_minhash_ingest cc_ingest_delta mm_scene_dedup mm_scene_components
+g13_ktruss ir6_bootstrap_ci dq9_embedding_drift g14_modularity
+q_rfm_segments st_drift_monitor dq10_ewma_chart ta_goodturing
+dd_minhash_pr_sampled g15_bucket_containment dd_band_plan
+r4_ivfpq_opq_recall eng_ann_derived_recall st_release_audit
+dd_minhash_planned r4_opq_gain
+""".split()
+
+
+def _order_catalog() -> None:
+    """Reorder CATALOG in place (other modules hold the dict itself) to
+    the manifest; raise when the two name sets differ."""
+    listed = set(MANIFEST)
+    missing = [n for n in MANIFEST if n not in CATALOG]
+    extra = [n for n in CATALOG if n not in listed]
+    if missing or extra or len(listed) != len(MANIFEST):
+        raise ImportError(
+            f"catalog manifest mismatch: not registered {missing}, "
+            f"not in the manifest {extra}, listed twice "
+            f"{sorted(n for n in listed if MANIFEST.count(n) > 1)}")
+    specs = dict(CATALOG)
+    CATALOG.clear()
+    CATALOG.update((n, specs[n]) for n in MANIFEST)
+
+
+_order_catalog()

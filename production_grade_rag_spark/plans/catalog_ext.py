@@ -1,7 +1,7 @@
-"""Catalog extension: vector search, fusion/attribution, dedup suite,
-text analysis, events analytics (SURVEY §2.3-2.6, §2.9-2.10, §7.2
-phases 2+5).  Imported by plans.catalog at the bottom so every entry
-lands in the same CATALOG/queries()/oracle_sql() registry.
+"""Catalog extension: multi-strategy fusion, dedup suite, text
+analysis, events analytics (SURVEY §2.3-2.6, §2.9-2.10, §7.2 phases
+2+5).  Imported by plans.catalog so every entry lands in the same
+CATALOG/queries()/oracle_sql() registry.
 
 Conventions repeated from catalog.py: identical column aliases on both
 sides, floats rounded in-query, deterministic tiebreaks on every top-k.
@@ -12,369 +12,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine, to_double_array
-from ..operators import attribution as attr
-from ..operators import chunk_gates, chunking, dedup, fusion, similarity, textstats
+from ..functions.vector import to_double_array
+from ..operators import chunk_gates, dedup, fusion, textstats
 from . import oracle_vec as OV
-from .catalog import _t, register
-from .oracle_sql import sql_str
-
-# Deterministic query literals shared by Spark and oracle sides
-# (canonical definitions in oracle_vec — a leaf module — so
-# catalog_more's decoration-time oracles never import from HERE while
-# this module is mid-initialization).
-QUERY_TERMS = OV.QUERY_TERMS
-QUERY_VEC = OV.QUERY_VEC   # dim 64
-
-
-def _qvec_col():
-    return F.array(*[F.lit(float(x)) for x in QUERY_VEC])
-
-
-def _qvec_norm() -> float:
-    """||QUERY_VEC|| with the same left-to-right IEEE double fold as
-    functions.vector.norm (aggregate over zip_with, acc starts 0.0) and
-    the same correctly-rounded sqrt, so the literal is bit-identical to
-    what the in-plan norm(_qvec_col()) computed per row."""
-    import math
-    acc = 0.0
-    for x in QUERY_VEC:
-        acc += float(x) * float(x)
-    return math.sqrt(acc)
-
-
-def with_cosine_q(df: DataFrame, emb_col: str = "embedding",
-                  out: str = "__cos_q") -> DataFrame:
-    """``out`` = cosine(embedding, QUERY_VEC) with the per-row work
-    factored (r15, guide §1.2 step 2): the double-cast of the embedding
-    is materialized ONCE as a real projection (the inline form
-    re-evaluated it three times — in the dot product and twice inside
-    the row norm), and the query norm — constant per row but NOT
-    constant-folded by Catalyst because HOF folds are CodegenFallback —
-    is a Python-precomputed literal.  dot/(sqrt(selfdot)*qnorm) is the
-    same double ops in the same order as cosine(); pinned bit-identical
-    on every corpus row by tests/test_catalog_r15.py."""
-    from ..functions.vector import dot
-    e = F.col("__e")
-    return (df.withColumn("__e", to_double_array(F.col(emb_col)))
-              .withColumn("__d", dot(e, _qvec_col()))
-              .withColumn("__s", dot(e, e))
-              .withColumn(out, F.col("__d")
-                          / (F.sqrt("__s") * F.lit(_qvec_norm())))
-              .drop("__e", "__d", "__s"))
-
-
-def _overlap_score(col):
-    """Text-branch relevance: |distinct tokens ∩ query terms| / |query|."""
-    toks = F.array_distinct(dedup.tokens(col))
-    q = F.array(*[F.lit(t) for t in QUERY_TERMS])
-    return F.size(F.array_intersect(toks, q)).cast("double") / len(QUERY_TERMS)
+from .registry import _t, register
+from .oracle_vec import QUERY_TERMS, QUERY_VEC
+from .retrieval import _overlap_score, _qvec_col, with_cosine_q
 
 
 # ===========================================================================
-# Vector search (R4/R5/R6) on the embeddings table
+# Multi-strategy fusion, per-source stats, confidence (A3, A4, A6, A7)
 # ===========================================================================
-
-@register("r4_knn_topk", headline=True, oracle=f"""
-SELECT vec_id, label, round({OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))}, 6) AS score
-FROM embeddings
-ORDER BY {OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))} DESC, vec_id
-LIMIT 20
-""")
-def r4_knn_topk(spark: SparkSession, d: str) -> DataFrame:
-    """R4: exact top-k cosine for one query vector (vector_search.py:
-    37-95).  Broadcast-literal query, JVM-side score, orderBy+limit
-    compiles to TakeOrderedAndProject — no corpus shuffle."""
-    emb = _t(spark, d, "embeddings")
-    out = similarity.knn_topk(emb, QUERY_VEC, k=20)
-    return out.select("vec_id", "label", F.round("score", 6).alias("score"))
-
-
-@register("r4_knn_filtered", oracle=f"""
-SELECT vec_id, round({OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))}, 6) AS score
-FROM embeddings
-WHERE {OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))} >= 0.1
-ORDER BY {OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))} DESC, vec_id
-LIMIT 50
-""")
-def r4_knn_filtered(spark: SparkSession, d: str) -> DataFrame:
-    """R4+T5+T6: filtered search — score, min_score filter, project,
-    top-k (vector_search.py:207-275: match AFTER score, before limit)."""
-    emb = _t(spark, d, "embeddings")
-    out = similarity.knn_topk(emb, QUERY_VEC, k=50, min_score=0.1)
-    return out.select("vec_id", F.round("score", 6).alias("score"))
-
-
-@register("r5_self_similar", oracle=f"""
-SELECT b.vec_id, round({OV.cosine_sql('b.embedding', 'a.embedding')}, 6) AS score
-FROM embeddings a JOIN embeddings b ON b.vec_id <> 0
-WHERE a.vec_id = 0
-ORDER BY {OV.cosine_sql('b.embedding', 'a.embedding')} DESC, b.vec_id
-LIMIT 10
-""")
-def r5_self_similar(spark: SparkSession, d: str) -> DataFrame:
-    """R5: rows similar to an existing row, self excluded
-    (vector_search.py:488-533)."""
-    emb = _t(spark, d, "embeddings")
-    out = similarity.self_similar(emb, 0, k=10)
-    return out.select("vec_id", F.round("score", 6).alias("score"))
-
-
-@register("r6_label_proxy_similarity", oracle=f"""
-WITH proxy AS (
-  SELECT label, arg_min(embedding, vec_id) AS embedding
-  FROM embeddings GROUP BY label
-)
-SELECT a.label AS label_a, b.label AS label_b,
-       round({OV.cosine_sql('a.embedding', 'b.embedding')}, 6) AS score
-FROM proxy a JOIN proxy b ON a.label < b.label
-""")
-def r6_label_proxy_similarity(spark: SparkSession, d: str) -> DataFrame:
-    """R6+W3: proxy each group by its FIRST member's vector (min_by ==
-    'first chunk embedding', vector_store.py:306-342), then pairwise
-    group-to-group similarity."""
-    emb = _t(spark, d, "embeddings")
-    proxy = emb.groupBy("label").agg(
-        F.min_by("embedding", "vec_id").alias("embedding"))
-    a = proxy.select(F.col("label").alias("label_a"),
-                     to_double_array(F.col("embedding")).alias("__va"))
-    b = proxy.select(F.col("label").alias("label_b"),
-                     to_double_array(F.col("embedding")).alias("__vb"))
-    return (a.join(b, F.col("label_a") < F.col("label_b"))
-             .select("label_a", "label_b",
-                     F.round(cosine(F.col("__va"), F.col("__vb")), 6).alias("score")))
-
-
-# ===========================================================================
-# Hybrid + fusion (R7, A1-A4, A7, R1, A6)
-# ===========================================================================
-
-_HYBRID_ORACLE = f"""
-WITH vec AS (
-  SELECT vec_id AS id, {OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))} AS vector_score,
-         NULL::DOUBLE AS text_score
-  FROM embeddings
-  ORDER BY vector_score DESC, vec_id LIMIT 40
-), txt AS (
-  SELECT doc_id AS id, NULL::DOUBLE AS vector_score,
-         {OV.overlap_score_sql('text', QUERY_TERMS)} AS text_score
-  FROM documents
-  ORDER BY text_score DESC, doc_id LIMIT 40
-), unioned AS (
-  SELECT * FROM vec UNION ALL SELECT * FROM txt
-), merged AS (
-  SELECT id, max(vector_score) AS vector_score, max(text_score) AS text_score
-  FROM unioned GROUP BY id
-)
-SELECT id, round(coalesce(vector_score, 0), 6) AS vector_score,
-       round(coalesce(text_score, 0), 6) AS text_score,
-       round({fusion.VECTOR_WEIGHT} * coalesce(vector_score, 0)
-             + {fusion.TEXT_WEIGHT} * coalesce(text_score, 0), 6) AS score
-FROM merged
-ORDER BY {fusion.VECTOR_WEIGHT} * coalesce(vector_score, 0)
-         + {fusion.TEXT_WEIGHT} * coalesce(text_score, 0) DESC, id
-LIMIT 20
-"""
-
-
-def _tfidf_sql(terms: list[str]) -> tuple[str, str]:
-    """(CTE prefix, score expression) for the smoothed TF-IDF twin of
-    operators.textscore.tfidf_score — same fold order so doubles match
-    bit-for-bit."""
-    toks = OV.tokens_sql("text")
-    dfs = ", ".join(
-        f"sum((len(list_filter(toks, x -> x = {sql_str(t)})) > 0)::INT) AS df_{i}"
-        for i, t in enumerate(terms))
-    cte = (f"tf AS (SELECT doc_id, {toks} AS toks FROM documents), "
-           f"stats AS (SELECT count(*) AS n_docs, {dfs} FROM tf)")
-    score = "0.0" + "".join(
-        f" + len(list_filter(toks, x -> x = {sql_str(t)}))::DOUBLE"
-        f" * (ln((1.0 + n_docs) / (1.0 + df_{i})) + 1.0)"
-        for i, t in enumerate(terms))
-    return cte, score
-
-
-def _tfidf_hybrid_oracle() -> str:
-    cte, score = _tfidf_sql(QUERY_TERMS)
-    return f"""
-WITH {cte},
-vec AS (
-  SELECT vec_id AS id, {OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))} AS vector_score,
-         NULL::DOUBLE AS text_score
-  FROM embeddings
-  ORDER BY vector_score DESC, vec_id LIMIT 40
-), txt AS (
-  SELECT doc_id AS id, NULL::DOUBLE AS vector_score, {score} AS text_score
-  FROM tf, stats
-  ORDER BY text_score DESC, doc_id LIMIT 40
-), unioned AS (
-  SELECT * FROM vec UNION ALL SELECT * FROM txt
-), merged AS (
-  SELECT id, max(vector_score) AS vector_score, max(text_score) AS text_score
-  FROM unioned GROUP BY id
-)
-SELECT id, round(coalesce(vector_score, 0), 6) AS vector_score,
-       round(coalesce(text_score, 0), 6) AS text_score,
-       round({fusion.VECTOR_WEIGHT} * coalesce(vector_score, 0)
-             + {fusion.TEXT_WEIGHT} * coalesce(text_score, 0), 6) AS score
-FROM merged
-ORDER BY {fusion.VECTOR_WEIGHT} * coalesce(vector_score, 0)
-         + {fusion.TEXT_WEIGHT} * coalesce(text_score, 0) DESC, id
-LIMIT 20
-"""
-
-
-# canonical definition moved to oracle_vec (leaf module, no cycle);
-# alias kept for this module's own oracle builders below.
-_bm25_sql = OV.bm25_sql
-
-
-def _bm25_hybrid_oracle(toks: str | None = None,
-                        terms: list[str] | None = None) -> str:
-    cte, score = _bm25_sql(terms if terms is not None else QUERY_TERMS,
-                           toks=toks)
-    return f"""
-WITH {cte},
-vec AS (
-  SELECT vec_id AS id, {OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))} AS vector_score,
-         NULL::DOUBLE AS text_score
-  FROM embeddings
-  ORDER BY vector_score DESC, vec_id LIMIT 40
-), txt AS (
-  SELECT doc_id AS id, NULL::DOUBLE AS vector_score, {score} AS text_score
-  FROM tf, stats
-  ORDER BY text_score DESC, doc_id LIMIT 40
-), unioned AS (
-  SELECT * FROM vec UNION ALL SELECT * FROM txt
-), merged AS (
-  SELECT id, max(vector_score) AS vector_score, max(text_score) AS text_score
-  FROM unioned GROUP BY id
-)
-SELECT id, round(coalesce(vector_score, 0), 6) AS vector_score,
-       round(coalesce(text_score, 0), 6) AS text_score,
-       round({fusion.VECTOR_WEIGHT} * coalesce(vector_score, 0)
-             + {fusion.TEXT_WEIGHT} * coalesce(text_score, 0), 6) AS score
-FROM merged
-ORDER BY {fusion.VECTOR_WEIGHT} * coalesce(vector_score, 0)
-         + {fusion.TEXT_WEIGHT} * coalesce(text_score, 0) DESC, id
-LIMIT 20
-"""
-
-
-@register("r7_hybrid_bm25", oracle=_bm25_hybrid_oracle())
-def r7_hybrid_bm25(spark: SparkSession, d: str) -> DataFrame:
-    """R7 with the Okapi-BM25 text branch — the faithful twin of the
-    reference's Lucene-$search side (vector_search.py:141-160; k1=1.2,
-    b=0.75): saturation and length norm included, corpus stats one
-    broadcast row.  Same fusion pipeline as r7_hybrid_fusion — only
-    the text relevance changes."""
-    from ..operators import textscore
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    vec = (with_cosine_q(emb)
-           .select(F.col("vec_id").alias("id"),
-                   F.col("__cos_q").alias("vector_score"))
-           .orderBy(F.desc("vector_score"), "id").limit(40))
-    txt = (textscore.bm25_score(docs, QUERY_TERMS, text_col="text")
-           .select(F.col("doc_id").alias("id"), "text_score")
-           .orderBy(F.desc("text_score"), "id").limit(40))
-    merged = fusion.hybrid_union(vec, txt)
-    fused = fusion.weighted_fusion(merged)
-    return (fused
-            .select("id",
-                    F.round(F.coalesce("vector_score", F.lit(0.0)), 6).alias("vector_score"),
-                    F.round(F.coalesce("text_score", F.lit(0.0)), 6).alias("text_score"),
-                    F.round("score", 6).alias("score"),
-                    F.col("score").alias("__raw"))
-            .orderBy(F.desc("__raw"), "id").limit(20).drop("__raw"))
-
-
-@register("r7_hybrid_bm25_std",
-          oracle=_bm25_hybrid_oracle(toks=OV.std_tokens_sql("text")))
-def r7_hybrid_bm25_std(spark: SparkSession, d: str) -> DataFrame:
-    """R7 BM25 with the Lucene-standard analyzer twin — the analyzer
-    the reference's $search text index actually declares
-    (index_manager.py:117-152): punctuation-stripped word tokens, so
-    "vector," and "Vector" both match query term "vector" (the
-    whitespace twin r7_hybrid_bm25 misses them).  Document-frequency,
-    length norm, and term counts all shift with the tokenization; the
-    fusion pipeline is unchanged."""
-    from ..operators import textscore
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    vec = (with_cosine_q(emb)
-           .select(F.col("vec_id").alias("id"),
-                   F.col("__cos_q").alias("vector_score"))
-           .orderBy(F.desc("vector_score"), "id").limit(40))
-    txt = (textscore.bm25_score(docs, QUERY_TERMS, text_col="text",
-                                analyzer="standard")
-           .select(F.col("doc_id").alias("id"), "text_score")
-           .orderBy(F.desc("text_score"), "id").limit(40))
-    merged = fusion.hybrid_union(vec, txt)
-    fused = fusion.weighted_fusion(merged)
-    return (fused
-            .select("id",
-                    F.round(F.coalesce("vector_score", F.lit(0.0)), 6).alias("vector_score"),
-                    F.round(F.coalesce("text_score", F.lit(0.0)), 6).alias("text_score"),
-                    F.round("score", 6).alias("score"),
-                    F.col("score").alias("__raw"))
-            .orderBy(F.desc("__raw"), "id").limit(20).drop("__raw"))
-
-
-@register("r7_hybrid_tfidf", oracle=_tfidf_hybrid_oracle())
-def r7_hybrid_tfidf(spark: SparkSession, d: str) -> DataFrame:
-    """R7 with the TF-IDF text branch (SURVEY §7.2 phase 4): the
-    reference's $search side is Lucene BM25 (vector_search.py:141-160);
-    smoothed TF-IDF is the documented stand-in (operators/textscore.py
-    header records the deviation).  Same fusion pipeline as
-    r7_hybrid_fusion — only the text relevance changes."""
-    from ..operators import textscore
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    vec = (with_cosine_q(emb)
-           .select(F.col("vec_id").alias("id"),
-                   F.col("__cos_q").alias("vector_score"))
-           .orderBy(F.desc("vector_score"), "id").limit(40))
-    txt = (textscore.tfidf_score(docs, QUERY_TERMS, text_col="text")
-           .select(F.col("doc_id").alias("id"), "text_score")
-           .orderBy(F.desc("text_score"), "id").limit(40))
-    merged = fusion.hybrid_union(vec, txt)
-    fused = fusion.weighted_fusion(merged)
-    return (fused
-            .select("id",
-                    F.round(F.coalesce("vector_score", F.lit(0.0)), 6).alias("vector_score"),
-                    F.round(F.coalesce("text_score", F.lit(0.0)), 6).alias("text_score"),
-                    F.round("score", 6).alias("score"),
-                    F.col("score").alias("__raw"))
-            .orderBy(F.desc("__raw"), "id").limit(20).drop("__raw"))
-
-
-@register("r7_hybrid_fusion", headline=True, oracle=_HYBRID_ORACLE)
-def r7_hybrid_fusion(spark: SparkSession, d: str) -> DataFrame:
-    """R7+A1+A2+U2+W1: hybrid search — vector branch (2k) ∪ text branch
-    (2k), group-dedup by id with max per score, weighted fusion
-    0.7/0.3, global top-k (vector_search.py:98-204).  The embeddings
-    row id doubles as the document id (testdata convention)."""
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    vec = (with_cosine_q(emb)
-           .select(F.col("vec_id").alias("id"),
-                   F.col("__cos_q").alias("vector_score"))
-           .orderBy(F.desc("vector_score"), "id").limit(40))
-    txt = (docs.select(
-        F.col("doc_id").alias("id"),
-        _overlap_score(F.col("text")).alias("text_score"))
-        .orderBy(F.desc("text_score"), "id").limit(40))
-    merged = fusion.hybrid_union(vec, txt)
-    fused = fusion.weighted_fusion(merged)
-    return (fused
-            .select("id",
-                    F.round(F.coalesce("vector_score", F.lit(0.0)), 6).alias("vector_score"),
-                    F.round(F.coalesce("text_score", F.lit(0.0)), 6).alias("text_score"),
-                    F.round("score", 6).alias("score"),
-                    F.col("score").alias("__raw"))
-            .orderBy(F.desc("__raw"), "id").limit(20).drop("__raw"))
-
 
 _A3_ORACLE = f"""
 WITH s1 AS (
@@ -432,31 +80,6 @@ def a3_multi_strategy_fusion(spark: SparkSession, d: str) -> DataFrame:
     return fused.select(
         "id", F.round("fused_score", 6).alias("fused_score"),
         F.array_join("strategies_used", ",").alias("strategies_used"))
-
-
-@register("r1_attribution_join", headline=True, oracle=f"""
-WITH results AS (
-  SELECT vec_id AS doc_id, {OV.cosine_sql('embedding', OV.vec_lit_sql(QUERY_VEC))} AS score
-  FROM embeddings ORDER BY score DESC, vec_id LIMIT 20
-)
-SELECT r.doc_id, round(r.score, 6) AS score, d.source, d.lang
-FROM results r LEFT JOIN documents d USING (doc_id)
-ORDER BY r.score DESC, r.doc_id
-""")
-def r1_attribution_join(spark: SparkSession, d: str) -> DataFrame:
-    """R1: attach document attribution to each result via broadcast
-    left equi-join — the reference's dict cache + per-miss find_one
-    (source_attribution.py:23-129) as a real join."""
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    results = (with_cosine_q(emb)
-               .select(F.col("vec_id").alias("doc_id"),
-                       F.col("__cos_q").alias("score"))
-               .orderBy(F.desc("score"), "doc_id").limit(20))
-    out = attr.attribution_join(results, docs)
-    return (out.select("doc_id", F.round("score", 6).alias("score"),
-                       "source", "lang")
-               .orderBy(F.desc("score"), "doc_id"))
 
 
 @register("a4_best_doc_per_source", oracle="""
@@ -742,32 +365,6 @@ def m2_parent_child(spark: SparkSession, d: str) -> DataFrame:
     (TRUE, 0 × 7) when the hierarchy is correct."""
     docs = _t(spark, d, "documents")
     return chunk_gates.m2_parent_child_invariants(docs)
-
-
-@register("r2_parent_context_recursive",
-          oracle=chunk_gates.R2_PARENT_CONTEXT_ORACLE)
-def r2_parent_context_recursive(spark: SparkSession, d: str) -> DataFrame:
-    """R2 parent-context join over the recursive hierarchy
-    (parent_child_chunker.py:118-151) — driver-visible as a
-    constant-pinned invariant gate: the join is total (one row per
-    child), null-free, attaches exactly the parent chunk's content,
-    and that content contains the child.  The raw joined rows ship as
-    r2_parent_context_rows in catalog_r7; the fixed-stride
-    value-oracled twin is r2_parent_context in catalog_more."""
-    docs = _t(spark, d, "documents")
-    return chunk_gates.r2_parent_context_invariants(docs)
-
-
-@register("r3_parent_child_map_recursive")   # rows-only: recursive splitter
-def r3_parent_child_map_recursive(spark: SparkSession, d: str) -> DataFrame:
-    """R3 over the recursive-splitter hierarchy (rows-only); the
-    oracle-checked form is r3_parent_child_map in catalog_more
-    (parent_child_chunker.py:165-186)."""
-    docs = _t(spark, d, "documents")
-    chunks = chunking.chunk_parent_child(docs)
-    return (chunking.parent_child_map(chunks)
-            .select("parent_id", "child_count",
-                    F.array_join("child_ids", ",").alias("child_ids")))
 
 
 def _w5_oracle() -> str:

@@ -1,7 +1,6 @@
-"""Catalog extension 2: embedding generation (M3), batched knn join
-(R4), dedup keep/drop resolution, Notion-style block rendering (S3),
-title fallback (S5).  Imported by plans.catalog after catalog_ext; same
-registry and parity conventions.
+"""Catalog extension 2: embedding generation (M3), dedup keep/drop
+resolution, Notion-style block rendering (S3), title fallback (S5).
+Imported by plans.catalog; same registry and parity conventions.
 """
 
 from __future__ import annotations
@@ -14,8 +13,7 @@ from ..functions.text import URL_RE as _URL_RE_FOR_ORACLE
 from ..session import scratch
 from . import oracle_sql as O
 from . import oracle_vec as OV
-from .flagship import flagship_oracle_sql
-from .catalog import _t, register
+from .registry import _t, register
 from .oracle_vec import QUERY_VEC
 from .oracle_sql import sql_str
 
@@ -105,85 +103,6 @@ def m3_model_embed(spark: SparkSession, d: str) -> DataFrame:
         F.size("embedding").alias("dim"),
         F.round(F.aggregate(F.col("embedding"), F.lit(0.0),
                             lambda a, x: a + x * x), 6).alias("sq_norm"))
-
-
-# ===========================================================================
-# R4 batched: many query vectors at once
-# ===========================================================================
-
-_KNN_JOIN_ORACLE = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, c.vec_id AS result_id,
-         {OV.cosine_sql('c.embedding', 'q.embedding')} AS score
-  FROM embeddings c CROSS JOIN q
-), ranked AS (
-  SELECT query_id, result_id, round(score, 6) AS score,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, result_id) AS rank
-  FROM scored
-)
-SELECT query_id, result_id, score, rank FROM ranked WHERE rank <= 5
-"""
-
-
-@register("r4_knn_join_batch", oracle=_KNN_JOIN_ORACLE)
-def r4_knn_join_batch(spark: SparkSession, d: str) -> DataFrame:
-    """R4 batched (vector_search.py:37-95 for a query SET): broadcast
-    the small query side against the corpus, per-query top-k via
-    row_number — one shuffle on query_id only, corpus never shuffles."""
-    emb = _t(spark, d, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    out = similarity.knn_join(queries, emb, k=5, q_id="vec_id")
-    return out.select("query_id", "result_id",
-                      F.round("score", 6).alias("score"), "rank")
-
-
-_EUC_SQL = ("sqrt(list_sum(list_transform(list_zip(embedding, {q}), "
-            "p -> (p[1]::DOUBLE - p[2]::DOUBLE) * (p[1]::DOUBLE - p[2]::DOUBLE))))")
-
-
-def _euc_oracle() -> str:
-    e = _EUC_SQL.format(q=OV.vec_lit_sql(QUERY_VEC))
-    return f"""
-SELECT vec_id, round({e}, 6) AS distance
-FROM embeddings
-ORDER BY {e}, vec_id
-LIMIT 10
-"""
-
-
-@register("r4_knn_euclidean", oracle=_euc_oracle())
-def r4_knn_euclidean(spark: SparkSession, d: str) -> DataFrame:
-    """R4 with the euclidean metric (index_manager.py:57-60 metric
-    choices cosine/euclidean/dotProduct — cosine is r4_knn_topk, dot is
-    inside a3): nearest-by-distance top-k."""
-    emb = _t(spark, d, "embeddings")
-    out = similarity.knn_topk(emb, QUERY_VEC, k=10, metric="euclidean")
-    return out.select("vec_id", F.round(-F.col("score"), 6).alias("distance"))
-
-
-@register("r4_ivf_topk")   # rows-only: IVF is approximate by design
-def r4_ivf_topk(spark: SparkSession, d: str) -> DataFrame:
-    """R4 approximate: IVF top-k (16 cells, probe 4) — the ANN scale
-    path next to the exact r4_knn_topk and the LSH pair join.  Recall
-    vs exact is asserted in tests/test_similarity.py; the driver
-    records a rows-only check because ANN misses are semantic."""
-    emb = _t(spark, d, "embeddings")
-    out = similarity.ivf_topk(emb, QUERY_VEC, k=10)
-    return out.select("vec_id", F.round("score", 6).alias("score"))
-
-
-@register("r5_lsh_pairs")   # rows-only: LSH candidate recall is approximate
-def r5_lsh_pairs(spark: SparkSession, d: str) -> DataFrame:
-    """R5 at scale: BucketedRandomProjectionLSH near-dup pairs (cosine
-    threshold mapped exactly to a euclidean radius on the unit sphere).
-    Exact twin dd_embedding_neardup is the oracle-checked baseline;
-    recall is asserted in tests/test_similarity.py."""
-    emb = _t(spark, d, "embeddings")
-    out = similarity.lsh_similar_pairs(emb, threshold=0.3)
-    return out.select("id_a", "id_b", "score")
 
 
 # ===========================================================================
@@ -422,7 +341,7 @@ def m4_context_grouping(spark: SparkSession, d: str) -> DataFrame:
     concatenate their texts separator-joined in rank order
     (rag_engine.py:296-347).  The LLM call itself is out of scope
     (BASELINE.md); this is the data shaping that feeds it."""
-    from .catalog_ext import with_cosine_q
+    from .retrieval import with_cosine_q
     docs = _t(spark, d, "documents")
     emb = _t(spark, d, "embeddings")
     ranked = (with_cosine_q(docs.join(emb, docs.doc_id == emb.vec_id))
@@ -460,27 +379,7 @@ def s7_ordered_chunk_scan(spark: SparkSession, d: str) -> DataFrame:
             .select("chunk_id", "doc_id", "chunk_index", "word_count"))
 
 
-_M2F_CTE = """
-WITH parents AS (
-  SELECT doc_id, p_idx::INT AS p_idx,
-         substr(text, p_idx::INT * 1600 + 1, 2000) AS p_content
-  FROM documents, LATERAL unnest(range(0,
-    CASE WHEN length(text) = 0 THEN 0
-         ELSE (length(text) - 1) // 1600 + 1 END)) AS t(p_idx)
-), p2 AS (
-  SELECT *, (CASE WHEN length(p_content) = 0 THEN 0
-                  ELSE (length(p_content) - 1) // 300 + 1 END)::INT AS child_count
-  FROM parents
-), p3 AS (
-  SELECT *, coalesce(sum(child_count + 1) OVER (
-              PARTITION BY doc_id ORDER BY p_idx
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::INT AS p_global,
-         doc_id || '_parent_' || p_idx AS parent_id
-  FROM p2
-)
-"""
-
-_M2F_ORACLE = _M2F_CTE + """
+_M2F_ORACLE = O.PARENT_CHILD_FIXED_CTE + """
 SELECT parent_id AS chunk_id, doc_id, p_global AS chunk_index,
        'parent' AS chunk_type, parent_id, child_count,
        NULL::INT AS child_index, length(p_content)::INT AS content_len
@@ -506,43 +405,6 @@ def m2_parent_child_fixed(spark: SparkSession, d: str) -> DataFrame:
     return out.select("chunk_id", "doc_id", "chunk_index", "chunk_type",
                       "parent_id", "child_count", "child_index",
                       F.length("content").cast("int").alias("content_len"))
-
-
-@register("r2_parent_context", oracle=_M2F_CTE + """
-SELECT parent_id || '_child_' || c_idx AS chunk_id, doc_id, parent_id,
-       length(p_content)::INT AS parent_len
-FROM p3, LATERAL unnest(range(0, child_count)) AS t(c_idx)
-""")
-def r2_parent_context(spark: SparkSession, d: str) -> DataFrame:
-    """R2: child -> parent text via self equi-join on the fixed-stride
-    hierarchy (replaces the reference's parent_content
-    denormalization, parent_child_chunker.py:118-151).  Oracle replays
-    the hierarchy CTE and emits each child with its parent's length.
-    The recursive-splitter twin is r2_parent_context_recursive."""
-    docs = _t(spark, d, "documents")
-    chunks = chunking.chunk_parent_child_fixed(docs)
-    return chunking.parent_context(chunks).select(
-        "chunk_id", "doc_id", "parent_id",
-        F.length("parent_content").cast("int").alias("parent_len"))
-
-
-@register("r3_parent_child_map", oracle=_M2F_CTE + """
-SELECT parent_id, count(*)::BIGINT AS child_count,
-       string_agg(parent_id || '_child_' || c_idx, ','
-                  ORDER BY parent_id || '_child_' || c_idx) AS child_ids
-FROM p3, LATERAL unnest(range(0, child_count)) AS t(c_idx)
-GROUP BY parent_id
-""")
-def r3_parent_child_map(spark: SparkSession, d: str) -> DataFrame:
-    """R3: child ids grouped under parents on the fixed-stride
-    hierarchy (parent_child_chunker.py:165-186); child_ids joined in
-    lexicographic order on both sides.  The recursive-splitter twin is
-    r3_parent_child_map_recursive."""
-    docs = _t(spark, d, "documents")
-    chunks = chunking.chunk_parent_child_fixed(docs)
-    return (chunking.parent_child_map(chunks)
-            .select("parent_id", "child_count",
-                    F.array_join("child_ids", ",").alias("child_ids")))
 
 
 # ===========================================================================
@@ -778,7 +640,7 @@ def t5_score_threshold(spark: SparkSession, d: str) -> DataFrame:
     top-k (vector_search.py:249-253 / advanced_search.py:224 — the
     threshold is its own operator; r4_knn_filtered composes it with
     the limit)."""
-    from .catalog_ext import with_cosine_q
+    from .retrieval import with_cosine_q
     emb = _t(spark, d, "embeddings")
     # r15: the raw score previously appeared TWICE in the projection
     # (rounded + filter column) and so computed twice per row; the
@@ -861,75 +723,6 @@ def s2_json_db_scan(spark: SparkSession, d: str) -> DataFrame:
                        F.col("properties.title").alias("db_title"),
                        F.col("properties.lang").alias("lang"),
                        "n_chars")
-
-
-# ===========================================================================
-# Engine API surface: filter placement pinned by value oracles
-# ===========================================================================
-
-_ENG_COS = OV.cosine_sql("embedding", OV.vec_lit_sql(QUERY_VEC))
-
-
-@register("eng_semantic_postfilter", oracle=f"""
-WITH topk AS (
-  SELECT vec_id, label, {_ENG_COS} AS score
-  FROM embeddings
-  ORDER BY score DESC, vec_id LIMIT 10
-)
-SELECT vec_id, label, round(score, 6) AS score
-FROM topk WHERE label = 3
-""")
-def eng_semantic_postfilter(spark: SparkSession, d: str) -> DataFrame:
-    """Engine search(search_type='semantic') filter placement: the
-    $match runs AFTER $vectorSearch's limit (vector_search.py:61-95),
-    so equality filters subset the UNFILTERED top-k — here 3 of the
-    top-10 carry label 3, and exactly those come back."""
-    from ..engine import SparkRagEngine
-    eng = SparkRagEngine(spark)
-    emb = _t(spark, d, "embeddings")
-    out = eng.search(emb, query_vector=QUERY_VEC, search_type="semantic",
-                     limit=10, filters={"label": 3}, id_col="vec_id")
-    return out.select("vec_id", "label", F.round("score", 6).alias("score"))
-
-
-@register("eng_filtered_pool", oracle=f"""
-WITH pool AS (
-  SELECT vec_id, label, {_ENG_COS} AS score
-  FROM embeddings
-  ORDER BY score DESC, vec_id LIMIT 10
-)
-SELECT vec_id, label, round(score, 6) AS score
-FROM pool WHERE score >= 0.2 AND label = 0
-ORDER BY score DESC, vec_id LIMIT 5
-""")
-def eng_filtered_pool(spark: SparkSession, d: str) -> DataFrame:
-    """Engine search(search_type='filtered') candidate pooling: the
-    filtered strategy retrieves limit*2 candidates, then applies the
-    score threshold and equality filters, then the final limit
-    (vector_search.py:234-275) — label-0 rows OUTSIDE the top-10 pool
-    never surface even though fewer than 5 rows survive."""
-    from ..engine import SparkRagEngine
-    eng = SparkRagEngine(spark)
-    emb = _t(spark, d, "embeddings")
-    out = eng.search(emb, query_vector=QUERY_VEC, search_type="filtered",
-                     limit=5, min_score=0.2, filters={"label": 0},
-                     id_col="vec_id")
-    return out.select("vec_id", "label", F.round("score", 6).alias("score"))
-
-
-@register("r4_ivf_store")   # rows-only: ANN + KMeans assignment
-def r4_ivf_store(spark: SparkSession, d: str) -> DataFrame:
-    """R4 scale path end-to-end: build the cell-partitioned IVF store
-    (ivf_build_store writes data/cell=N/ + a centroids table), then
-    probe it (ivf_search_store) — the probe predicate prunes whole
-    partition directories, asserted in tests/test_similarity.py.
-    Approximate by design -> rows-only; recall floor is pytest-pinned."""
-    emb = _t(spark, d, "embeddings")
-    path = scratch("ivf_store")
-    similarity.ivf_build_store(emb, path, n_lists=8)
-    out = similarity.ivf_search_store(spark, path, QUERY_VEC,
-                                      k=10, n_probe=4)
-    return out.select("vec_id", F.round("score", 6).alias("score"))
 
 
 @register("st_dedup_stream", oracle="""
@@ -1015,394 +808,6 @@ def ta_length_quantiles(spark: SparkSession, d: str) -> DataFrame:
         F.expr("round(percentile(n_chars, 0.5), 6)").alias("p50"),
         F.expr("round(percentile(n_chars, 0.9), 6)").alias("p90"),
         F.expr("round(percentile(n_chars, 0.99), 6)").alias("p99"))
-
-
-@register("flagship_dim384", headline=True,
-          oracle=flagship_oracle_sql(dim=384))
-def flagship_dim384(spark: SparkSession, d: str) -> DataFrame:
-    """Flagship pipeline at the reference's production embedding width
-    (384-dim all-MiniLM, settings.py:40) — the bench-honesty variant
-    the round-3 verdict asked for: clean -> chunk -> hash-embed at
-    dim=384 -> knn -> attribution, same DAG as entry()'s dim-64 run,
-    6x the embedding assembly and cosine width.  Since round 6 it is
-    also VALUE-checked end to end by the shared flagship oracle
-    (plans/flagship.flagship_oracle_sql at dim=384), so the bench
-    entry and the correctness entry are the same plan."""
-    from .flagship import flagship_search
-    out = flagship_search(spark, d, k=10, dim=384)
-    return out.select("chunk_id", "doc_id", "content", "score",
-                      "source_type", "doc_lang",
-                      F.round("quality_score", 6).alias("quality_score"))
-
-
-def _eng_hybrid_oracle() -> str:
-    from .oracle_vec import QUERY_TERMS, bm25_sql as _bm25_sql
-    from ..operators import fusion
-    cte, score = _bm25_sql(QUERY_TERMS)
-    cos = OV.cosine_sql("e.embedding", OV.vec_lit_sql(QUERY_VEC))
-    return f"""
-WITH {cte},
-vec AS (
-  SELECT d.doc_id AS id, {cos} AS vector_score, NULL::DOUBLE AS text_score
-  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-  ORDER BY vector_score DESC, id LIMIT 20
-), txt AS (
-  SELECT doc_id AS id, NULL::DOUBLE AS vector_score, {score} AS text_score
-  FROM tf, stats
-  ORDER BY text_score DESC, id LIMIT 20
-), unioned AS (
-  SELECT * FROM vec UNION ALL SELECT * FROM txt
-), merged AS (
-  SELECT id, max(vector_score) AS vector_score, max(text_score) AS text_score
-  FROM unioned GROUP BY id
-), fused AS (
-  SELECT id, vector_score, text_score,
-         {fusion.VECTOR_WEIGHT} * coalesce(vector_score, 0)
-         + {fusion.TEXT_WEIGHT} * coalesce(text_score, 0) AS score
-  FROM merged
-)
-SELECT f.id AS doc_id,
-       round(coalesce(f.vector_score, 0), 6) AS vector_score,
-       round(coalesce(f.text_score, 0), 6) AS text_score,
-       round(f.score, 6) AS score
-FROM fused f JOIN documents d ON d.doc_id = f.id
-WHERE d.lang = 'en'
-ORDER BY f.score DESC, f.id LIMIT 10
-"""
-
-
-@register("eng_hybrid_bm25", oracle=_eng_hybrid_oracle())
-def eng_hybrid_bm25(spark: SparkSession, d: str) -> DataFrame:
-    """Engine search(search_type='hybrid') end-to-end with the BM25
-    text branch: candidate pools of 2k per branch are UNFILTERED,
-    max-dedup + 0.7/0.3 fusion, then the $match filter runs on the
-    FUSED set before the final top-k (vector_search.py:98-205) — the
-    engine-level twin of r7_hybrid_bm25 that additionally pins the
-    post-fusion filter placement and the __f_-prefixed attribute
-    join."""
-    from .oracle_vec import QUERY_TERMS
-    from ..engine import SparkRagEngine
-    eng = SparkRagEngine(spark)
-    docs = _t(spark, d, "documents")
-    emb = _t(spark, d, "embeddings")
-    index = (docs.join(emb, docs.doc_id == emb.vec_id)
-             .select("doc_id", F.col("text").alias("content"),
-                     "embedding", "lang"))
-    out = eng.search(index, query_text=" ".join(QUERY_TERMS),
-                     query_vector=QUERY_VEC, search_type="hybrid",
-                     limit=10, filters={"lang": "en"}, id_col="doc_id")
-    return out.select(
-        "doc_id",
-        F.round(F.coalesce("vector_score", F.lit(0.0)), 6).alias("vector_score"),
-        F.round(F.coalesce("text_score", F.lit(0.0)), 6).alias("text_score"),
-        F.round("score", 6).alias("score"))
-
-
-def _eng_multi_oracle() -> str:
-    """Recursive-CTE replay of multi_strategy_search with the
-    similarity strategy: retrieval depth 15 -> threshold -> caller
-    limit 10 -> weighted-mean fusion ((s*w)/w, same double ops) ->
-    greedy diversity as a bitmask walk (the _w5_oracle pattern) ->
-    final top-k."""
-    from .oracle_vec import QUERY_TERMS
-    from ..operators import fusion
-    from ..operators.embedding import embed_text_py
-    qtext = " ".join(QUERY_TERMS)
-    qv = embed_text_py(qtext, 64, True)   # engine.embed_query twin
-    cos = OV.cosine_sql("e.embedding", OV.vec_lit_sql(qv))
-    toks = OV.tokens_sql("text")
-    w = fusion.STRATEGY_WEIGHTS["similarity"]
-    fused = f"(score * {w!r}::DOUBLE) / {w!r}::DOUBLE"
-    return f"""
-WITH RECURSIVE knn AS (
-  SELECT d.doc_id, {cos} AS score, d.text
-  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-  ORDER BY score DESC, d.doc_id LIMIT 15
-), branch AS (
-  SELECT doc_id, score, text FROM knn WHERE score >= 0.0::DOUBLE
-  ORDER BY score DESC, doc_id LIMIT 10
-), cand AS (
-  SELECT doc_id, {fused} AS score, text,
-         list_distinct({toks}) AS toks,
-         row_number() OVER (ORDER BY {fused} DESC, text, doc_id) AS rn
-  FROM branch
-), pairj AS (
-  SELECT a.rn AS rn_a, b.rn AS rn_b,
-         CASE WHEN len(a.toks) = 0 AND len(b.toks) = 0 THEN 1.0
-              WHEN len(a.toks) = 0 OR len(b.toks) = 0 THEN 0.0
-              ELSE len(list_intersect(a.toks, b.toks))::DOUBLE
-                   / len(list_distinct(a.toks || b.toks)) END AS j
-  FROM cand a JOIN cand b ON a.rn < b.rn
-), viol AS (
-  SELECT rn_b, sum(1::BIGINT << rn_a)::BIGINT AS vmask
-  FROM pairj WHERE j > 0.85 GROUP BY rn_b
-), walk AS (
-  SELECT 0::BIGINT AS rn, 0::BIGINT AS mask
-  UNION ALL
-  SELECT c.rn,
-         w.mask | (CASE WHEN (w.mask & coalesce(v.vmask, 0::BIGINT)) = 0
-                        THEN (1::BIGINT << c.rn) ELSE 0::BIGINT END)
-  FROM walk w
-  JOIN cand c ON c.rn = w.rn + 1
-  LEFT JOIN viol v ON v.rn_b = c.rn
-)
-SELECT c.doc_id, round(c.score, 6) AS score,
-       'similarity' AS strategies_used
-FROM cand c, (SELECT mask FROM walk ORDER BY rn DESC LIMIT 1) m
-WHERE ((m.mask >> c.rn) & 1) = 1
-ORDER BY c.score DESC, c.doc_id LIMIT 10
-"""
-
-
-@register("eng_multi_similarity", oracle=_eng_multi_oracle())
-def eng_multi_similarity(spark: SparkSession, d: str) -> DataFrame:
-    """§2.9 orchestrator end-to-end under a value oracle: engine
-    multi_strategy_search (advanced_search.py:68-206) with the
-    similarity strategy — per-strategy retrieval depth (max_results
-    15) BEFORE thresholding, caller truncation, weighted-mean fusion
-    (A3), greedy Jaccard diversity (W5), final top-k.  The query
-    vector goes through engine.embed_query (hash twin inlined in the
-    oracle), so the whole driver->plan->fusion->diversity chain is
-    hash-checked, not just its operator pieces."""
-    from .oracle_vec import QUERY_TERMS
-    from ..config import EngineConfig
-    from ..engine import SparkRagEngine
-    eng = SparkRagEngine(spark, EngineConfig(similarity_threshold=0.0))
-    docs = _t(spark, d, "documents")
-    emb = _t(spark, d, "embeddings")
-    index = (docs.join(emb, docs.doc_id == emb.vec_id)
-             .select("doc_id", F.col("text").alias("content"), "embedding"))
-    out = eng.multi_strategy_search(index, " ".join(QUERY_TERMS),
-                                    limit=10, strategies=["similarity"],
-                                    id_col="doc_id")
-    return out.select("doc_id", F.round("score", 6).alias("score"),
-                      F.array_join("strategies_used", ",")
-                       .alias("strategies_used"))
-
-
-def _eng_multi_pc_oracle() -> str:
-    """Recursive-CTE replay of multi_strategy_search with the
-    parent_child strategy over a parent/child hash-embedded index:
-    fixed-stride hierarchy (the _M2F_CTE) -> per-chunk feature-hash
-    components -> cosine against the hash query vector (sparse form:
-    dot(val, q)/||val||; the query vector is unit-norm so the second
-    norm is the identity at round-6) -> the branch's dual
-    threshold/limit ladder (2m=16 -> >=0 -> 8 -> >=0 -> 10) ->
-    weighted-mean fusion -> greedy-diversity bitmask walk -> top-k ->
-    parent-content length attached to child rows only."""
-    from .oracle_vec import QUERY_TERMS
-    from ..operators import fusion
-    from ..operators.embedding import embed_text_py
-    qtext = " ".join(QUERY_TERMS)
-    qv = embed_text_py(qtext, 64, True)   # engine.embed_query twin
-    qlit = OV.vec_lit_sql(qv)
-    toks = OV.tokens_sql("content")
-    w = fusion.STRATEGY_WEIGHTS["parent_child"]
-    fused = f"(score * {w!r}::DOUBLE) / {w!r}::DOUBLE"
-    cte = _M2F_CTE.replace("WITH ", "WITH RECURSIVE ", 1).rstrip()
-    return cte + f""",
-chunks AS (
-  SELECT parent_id AS chunk_id, parent_id, 'parent' AS chunk_type,
-         p_content AS content
-  FROM p3
-  UNION ALL
-  SELECT parent_id || '_child_' || c_idx AS chunk_id, parent_id,
-         'child' AS chunk_type,
-         substr(p_content, c_idx::INT * 300 + 1, 400) AS content
-  FROM p3, LATERAL unnest(range(0, child_count)) AS t(c_idx)
-), ctoks AS (
-  SELECT chunk_id, unnest({toks}) AS tok FROM chunks
-), comps AS (
-  SELECT chunk_id,
-         ('0x' || substr(md5(tok), 1, 8))::BIGINT % 64 AS bucket,
-         sum(CASE WHEN ('0x' || substr(md5(tok), 9, 1))::BIGINT % 2 = 0
-                  THEN 1 ELSE -1 END)::DOUBLE AS val
-  FROM ctoks GROUP BY chunk_id, bucket
-), scored AS (
-  SELECT chunk_id,
-         sum(val * list_extract({qlit}, bucket::INT + 1))
-           / sqrt(sum(val * val)) AS score
-  FROM comps GROUP BY chunk_id
-), knn AS (
-  SELECT s.chunk_id, s.score, c.content, c.parent_id, c.chunk_type
-  FROM scored s JOIN chunks c USING (chunk_id)
-  ORDER BY s.score DESC, s.chunk_id LIMIT 16
-), branch AS (
-  SELECT * FROM (
-    SELECT * FROM knn WHERE score >= 0.0::DOUBLE
-    ORDER BY score DESC, chunk_id LIMIT 8)
-  WHERE score >= 0.0::DOUBLE
-  ORDER BY score DESC, chunk_id LIMIT 10
-), cand AS (
-  SELECT chunk_id, {fused} AS score, content, parent_id, chunk_type,
-         list_distinct({toks}) AS ctk,
-         row_number() OVER (ORDER BY {fused} DESC, content, chunk_id) AS rn
-  FROM branch
-), pairj AS (
-  SELECT a.rn AS rn_a, b.rn AS rn_b,
-         CASE WHEN len(a.ctk) = 0 AND len(b.ctk) = 0 THEN 1.0
-              WHEN len(a.ctk) = 0 OR len(b.ctk) = 0 THEN 0.0
-              ELSE len(list_intersect(a.ctk, b.ctk))::DOUBLE
-                   / len(list_distinct(a.ctk || b.ctk)) END AS j
-  FROM cand a JOIN cand b ON a.rn < b.rn
-), viol AS (
-  SELECT rn_b, sum(1::BIGINT << rn_a)::BIGINT AS vmask
-  FROM pairj WHERE j > 0.85 GROUP BY rn_b
-), walk AS (
-  SELECT 0::BIGINT AS rn, 0::BIGINT AS mask
-  UNION ALL
-  SELECT c.rn,
-         w.mask | (CASE WHEN (w.mask & coalesce(v.vmask, 0::BIGINT)) = 0
-                        THEN (1::BIGINT << c.rn) ELSE 0::BIGINT END)
-  FROM walk w
-  JOIN cand c ON c.rn = w.rn + 1
-  LEFT JOIN viol v ON v.rn_b = c.rn
-)
-SELECT c.chunk_id, round(c.score, 6) AS score,
-       'parent_child' AS strategies_used,
-       CASE WHEN c.chunk_type = 'child'
-            THEN length(p.p_content) END::INT AS parent_len
-FROM cand c
-LEFT JOIN p3 p ON c.chunk_type = 'child' AND p.parent_id = c.parent_id,
-     (SELECT mask FROM walk ORDER BY rn DESC LIMIT 1) m
-WHERE ((m.mask >> c.rn) & 1) = 1
-ORDER BY c.score DESC, c.chunk_id LIMIT 10
-"""
-
-
-@register("eng_multi_parent_child", oracle=_eng_multi_pc_oracle())
-def eng_multi_parent_child(spark: SparkSession, d: str) -> DataFrame:
-    """§2.9 parent_child strategy end-to-end under a value oracle:
-    build_parent_child_index (M2 fixed-stride hierarchy, every chunk
-    hash-embedded) -> multi_strategy_search with the parent_child
-    branch's dual threshold ladder (advanced_search.py:338-361,
-    vector_search.py:234-275) -> fusion -> diversity -> parent content
-    recovered by the search-time join (_attach_parent_content; the
-    reference denormalizes it into child metadata instead,
-    parent_child_chunker.py:118-151).  Thresholds are 0.0 (hash-cosine
-    scores sit far below the reference's 0.75/0.65 MiniLM bands) and
-    quality_threshold 0.0 keeps the whole corpus, so the oracle replays
-    the hierarchy without a quality CTE."""
-    from ..config import EngineConfig
-    from ..engine import SparkRagEngine
-    from .oracle_vec import QUERY_TERMS
-    eng = SparkRagEngine(spark, EngineConfig(
-        quality_threshold=0.0,
-        parent_child_search_threshold=0.0,
-        parent_child_threshold=0.0))
-    docs = _t(spark, d, "documents")
-    index = eng.build_parent_child_index(docs)
-    out = eng.multi_strategy_search(index, " ".join(QUERY_TERMS),
-                                    limit=10, strategies=["parent_child"])
-    return out.select("chunk_id", F.round("score", 6).alias("score"),
-                      F.array_join("strategies_used", ",")
-                       .alias("strategies_used"),
-                      F.length("parent_content").cast("int")
-                       .alias("parent_len"))
-
-
-# ===========================================================================
-# ANN recall oracles: make approximate-search QUALITY driver-visible
-# ===========================================================================
-
-def _recall_summary(exact: DataFrame, approx: DataFrame,
-                    keys: list[str], floor: float,
-                    extra_checked: str | None = None) -> DataFrame:
-    """One-row recall gate: full-outer join exact vs approx result
-    keys, recall = |∩|/|exact|, emit floor_met (the approximate side's
-    only driver-checkable property — the recall VALUE is data- and
-    implementation-dependent, the floor is the contract).  The exact
-    side's cardinality is emitted too: it IS deterministic, so the
-    oracle value-checks it."""
-    e = exact.select(*keys).withColumn("__e", F.lit(1))
-    a = approx.select(*keys).withColumn("__a", F.lit(1))
-    j = e.join(a, keys, "full")
-    agg = j.agg(F.sum("__e").alias("__n_exact"),
-                F.sum(F.col("__e") * F.col("__a")).alias("__n_hit"))
-    cols = [F.col("__n_exact").cast("long").alias("n_exact"),
-            (F.coalesce(F.col("__n_hit"), F.lit(0))
-             / F.col("__n_exact") >= floor).alias("floor_met")]
-    return agg.select(*cols)
-
-
-@register("r4_ivf_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_ivf_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for r4_ivf_topk (16 cells, probe 4) vs the exact
-    r4_knn_topk, computed IN-PLAN: the driver now sees ANN quality,
-    not just row counts.  Floor 0.5 matches the pytest pin
-    (tests/test_similarity.py:16-24).  The exact side's top-k
-    cardinality is value-checked; floor_met flips the hash red if a
-    regression (bad centroids, broken probe pruning) drops recall."""
-    emb = _t(spark, d, "embeddings")
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = similarity.ivf_topk(emb, QUERY_VEC, k=10)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.5)
-
-
-@register("r4_ivf_store_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_ivf_store_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for the partitioned IVF store (8 cells, probe 4,
-    directory-pruned scan) vs exact top-k — the disk-layout twin of
-    r4_ivf_recall; floor 0.5 per tests/test_similarity.py:106-107."""
-    emb = _t(spark, d, "embeddings")
-    path = scratch("ivf_store_recall")
-    similarity.ivf_build_store(emb, path, n_lists=8)
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = similarity.ivf_search_store(spark, path, QUERY_VEC,
-                                         k=10, n_probe=4)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.5)
-
-
-@register("r5_lsh_recall", oracle=f"""
-WITH exact AS ({OV.embedding_pairs_sql(0.3).strip()})
-SELECT count(*)::BIGINT AS n_exact, TRUE AS floor_met FROM exact
-""")
-def r5_lsh_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for the LSH pair join vs the exact O(n^2) pairwise
-    baseline at cosine>=0.3: the exact pair COUNT is value-checked by
-    the oracle (deterministic), the LSH side must recover >=0.8 of
-    those pairs (the pytest pin, tests/test_similarity.py:44-53).
-    Guards the cosine<->euclidean radius mapping and the normalization
-    step — either breaking silently would tank recall."""
-    emb = _t(spark, d, "embeddings")
-    exact = similarity.pairwise_similar(emb, threshold=0.3)
-    approx = similarity.lsh_similar_pairs(emb, threshold=0.3)
-    return _recall_summary(exact, approx, ["id_a", "id_b"], floor=0.8)
-
-
-@register("r4_ivf_rebuild_loop", oracle="""
-SELECT TRUE AS rebuilt, FALSE AS rebuilt_again,
-       (SELECT count(*) * 2 FROM embeddings)::BIGINT AS n_rows
-""")
-def r4_ivf_rebuild_loop(spark: SparkSession, d: str) -> DataFrame:
-    """The drift->rebuild closed loop, driver-visible: build the IVF
-    store, append a drifted batch (every corpus vector scaled 3x — an
-    unnormalized/new-model ingest; mean-sq-dist jumps far past the
-    1.5x rebuild ratio), and assert via the value oracle that
-    ivf_maybe_rebuild fires exactly once: True on the drifted store,
-    False immediately after (baseline reset), with every row retained
-    through the refit.  The recall-recovery half of the loop is pinned
-    in tests/test_similarity.py (needs a directional query; the
-    decision+retention half here is deterministic and SQL-checkable)."""
-    emb = _t(spark, d, "embeddings")
-    path = scratch("ivf_rebuild_loop")
-    similarity.ivf_build_store(emb, path, n_lists=8)
-    drifted = emb.select(
-        (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"),
-        F.transform(F.col("embedding"),
-                    lambda x: x * F.lit(3.0)).alias("embedding"),
-        "label")
-    similarity.ivf_append_store(drifted, path)
-    rebuilt = similarity.ivf_maybe_rebuild(spark, path)
-    again = similarity.ivf_maybe_rebuild(spark, path)
-    n = spark.read.parquet(f"{path}/data").count()
-    return spark.createDataFrame(
-        [(bool(rebuilt), bool(again), int(n))],
-        "rebuilt boolean, rebuilt_again boolean, n_rows long")
 
 
 @register("m1_recursive_gate", oracle="""
@@ -1561,26 +966,6 @@ def ta_redact(spark: SparkSession, d: str) -> DataFrame:
     (map-only, codegen-fused) — the standard pre-training redaction
     step, value-oracled end to end including the rewritten lengths."""
     return textstats.redact(_t(spark, d, "documents"))
-
-
-@register("r4_sq_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_sq_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for 8-bit scalar-quantized search with 4x exact
-    rescoring vs exact top-k.  SQ is the third ANN scale path next to
-    IVF and LSH: the quantized table is 4-8x narrower than the float
-    corpus (what a 100 TB scan actually reads), and full-width vectors
-    are touched only for the k*rescore candidate rows.  8-bit cells
-    with rescoring should recover essentially everything — floor 0.9,
-    above the IVF/LSH gates."""
-    emb = _t(spark, d, "embeddings")
-    los, his = similarity.sq_bounds(emb)
-    enc = similarity.sq_encode(emb, los, his).drop("embedding")
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = similarity.sq_topk(enc, emb, QUERY_VEC, los, his,
-                                k=10, rescore=4)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.9)
 
 
 @register("a5_approx_gate", oracle="""

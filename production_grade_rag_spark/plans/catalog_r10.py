@@ -7,9 +7,6 @@ approx-percentile knob on the per-domain quality cut
 composition (t41), the BPE depth-64 curve (t20_bpe_merges64), and the
 watermarked streaming sessionize twin (st_sessionize).
 
-Registered after catalog_r9 so the driver's existing correctness
-window is unchanged (REGISTRATION ORDER IS LOAD-BEARING — see
-plans/catalog.py).
 """
 
 from __future__ import annotations
@@ -17,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 
 
 # ===========================================================================
@@ -104,7 +101,7 @@ def g_knn_edges_ivf_recall(spark: SparkSession, d: str) -> DataFrame:
     certifies, and since r13 it certifies the DEFAULT build
     (VERDICT r12 #3)."""
     from ..operators.knn_graph import knn_und
-    from .catalog_more import _recall_summary
+    from .retrieval import _recall_summary
     exact = knn_und(spark, d)
     approx = knn_und(spark, d, method="ivf")
     return _recall_summary(exact, approx, ["u", "v"], floor=0.9)
@@ -953,7 +950,6 @@ def g11_ppr_seed(spark: SparkSession, d: str) -> DataFrame:
     join back to the node table.  No window, no cartesian; the
     final top-20 is TakeOrdered."""
     from ..operators.knn_graph import knn_nb
-    from .catalog_r8b import _LP_K  # noqa: F401 (oracle parity: k=5)
     emb = _t(spark, d, "embeddings")
     nb = knn_nb(spark, d)
     return _ppr_rank(emb, nb)

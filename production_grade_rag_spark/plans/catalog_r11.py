@@ -11,9 +11,6 @@ card (cc_release_audit, VERDICT #7).  VERDICT #1 (the IVF crossover)
 and #4 (the kmv_pure tier) are ledger/operator work in
 operators/similarity.py and scripts/stress_bench.py.
 
-Registered after catalog_r10 so the driver's existing correctness
-window is unchanged (REGISTRATION ORDER IS LOAD-BEARING — see
-plans/catalog.py).
 """
 
 from __future__ import annotations
@@ -21,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 from ..session import materialize
 
 
@@ -267,7 +264,7 @@ def _s32_stats_r11(spark: SparkSession, d: str,
 
 
 def _s32_approx_oracle() -> str:
-    from .catalog import CATALOG
+    from .registry import CATALOG
     base = CATALOG["s32_analyze_stats"].oracle
     return base.replace(
         "SELECT col, n_rows, n_nulls, ndv, min_v, max_v FROM (",
@@ -643,7 +640,7 @@ def audit_risk_corr(g: DataFrame) -> DataFrame:
 
 def _audit_oracle() -> str:
     from . import oracle_vec as OV
-    from .catalog import CATALOG
+    from .registry import CATALOG
     from .catalog_r12 import _DQ9_L2_MAX, _DQ9_VR_HI, _DQ9_VR_LO
     m5 = CATALOG["m5_embedding_isotropy"].oracle
     dq8 = CATALOG["dq8_kanonymity"].oracle
@@ -752,8 +749,7 @@ def cc_release_audit(spark: SparkSession, d: str) -> DataFrame:
     docs = _t(spark, d, "documents")
     from .catalog_r10 import (m5_embedding_isotropy,  # noqa: F401
                               t43_order_clumping)
-    from .catalog_r12 import (_DQ9_L2_MAX, _DQ9_VR_HI, _DQ9_VR_LO,
-                              _dq9_card, _dq9_moments, dq10_ewma_chart)
+    from .catalog_r12 import _dq9_card, _dq9_moments, dq10_ewma_chart
 
     # the SHARED stratum frame (VERDICT r13 #6): the card's recall
     # row reads the same helper dd_minhash_pr_sampled wraps — one
@@ -833,7 +829,7 @@ def audit_card_assemble(both: DataFrame, m5f: DataFrame,
 # ===========================================================================
 
 def _st_funnel_oracle() -> str:
-    from .catalog import CATALOG
+    from .registry import CATALOG
     return CATALOG["ev_funnel"].oracle
 
 

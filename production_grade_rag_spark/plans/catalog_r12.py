@@ -14,9 +14,6 @@ approx knob compiled), and scene-granular multimodal dedup
 sweep), #6 (bench noise calibration) and #8 (theta state ledger) are
 scripts/stress_bench.py / bench.py work.
 
-Registered after catalog_r11 so the driver's existing correctness
-window is unchanged (REGISTRATION ORDER IS LOAD-BEARING — see
-plans/catalog.py).
 """
 
 from __future__ import annotations
@@ -24,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 from ..session import materialize
 
 
@@ -224,7 +221,7 @@ def _a29_hist_r12(spark: SparkSession, d: str,
 
 
 def _a29_approx_oracle() -> str:
-    from .catalog import CATALOG
+    from .registry import CATALOG
     base = CATALOG["a29_equidepth_histogram"].oracle
     return (f"SELECT bucket, lo_cents, hi_cents, n_rows, "
             f"TRUE AS approx_ok FROM ({base})")
@@ -1006,148 +1003,6 @@ def g13_ktruss(spark: SparkSession, d: str) -> DataFrame:
 
 g13_ktruss.__doc__ = g13_ktruss.__doc__.format(
     SUP=_TRUSS_K - 2, R=_TRUSS_ROUNDS, K=_TRUSS_K)
-
-
-# ===========================================================================
-# Paired bootstrap CI on the ir3 ranker comparison — the interval
-# companion to ir5's sign test (completes the ir1-ir7 run).
-# ===========================================================================
-
-_IR6_B = 200      # bootstrap replicas
-_IR6_LO = 5       # rank of the 2.5th percentile replica (B = 200)
-_IR6_HI = 196     # rank of the 97.5th percentile replica
-
-
-def _ir6_oracle() -> str:
-    from .catalog_r8 import _ir_cte_parts
-    return ("WITH " + _ir_cte_parts(None, "_f") + ", "
-            + _ir_cte_parts(16, "_t") + f"""
-, j AS (
-  SELECT f.query_id,
-         CAST(round(f.ndcg_10 * 1000000) AS BIGINT)
-         - CAST(round(t.ndcg_10 * 1000000) AS BIGINT) AS dq
-  FROM perq_f f JOIN perq_t t USING (query_id)
-), dl AS (
-  SELECT dq, row_number() OVER (ORDER BY query_id) - 1 AS pos FROM j
-), nn AS (
-  SELECT count(*)::BIGINT AS n, CAST(sum(dq) AS BIGINT) AS point
-  FROM dl
-), draws AS (
-  SELECT t.b, unnest(range((SELECT n FROM nn))) AS i
-  FROM range({_IR6_B}) AS t(b)
-), picked AS (
-  SELECT d.b,
-         ('0x' || substr(md5('ir6:' || d.b::VARCHAR || ':'
-                              || d.i::VARCHAR), 1, 8))::BIGINT
-           % (SELECT n FROM nn) AS pos
-  FROM draws d
-), reps AS (
-  SELECT p.b, CAST(sum(dl.dq) AS BIGINT) AS s
-  FROM picked p JOIN dl ON dl.pos = p.pos
-  GROUP BY p.b
-), ranked AS (
-  SELECT s, row_number() OVER (ORDER BY s, b) AS rk FROM reps
-)
-SELECT (SELECT n FROM nn) AS n_queries,
-       {_IR6_B}::BIGINT AS n_replicas,
-       round((SELECT point FROM nn)::DOUBLE
-             / (SELECT n FROM nn)::DOUBLE / 1000000, 6) AS mean_delta,
-       round((SELECT s FROM ranked WHERE rk = {_IR6_LO})::DOUBLE
-             / (SELECT n FROM nn)::DOUBLE / 1000000, 6) AS boot_ci_lo,
-       round((SELECT s FROM ranked WHERE rk = {_IR6_HI})::DOUBLE
-             / (SELECT n FROM nn)::DOUBLE / 1000000, 6) AS boot_ci_hi,
-       round((SELECT sum((s > 0)::INT) FROM reps)::DOUBLE
-             / {_IR6_B}, 6) AS frac_positive,
-       ((SELECT s FROM ranked WHERE rk = {_IR6_LO}) > 0
-        OR (SELECT s FROM ranked WHERE rk = {_IR6_HI}) < 0)
-         AS significant
-""")
-
-
-@register("ir6_bootstrap_ci", oracle=_ir6_oracle())
-def ir6_bootstrap_ci(spark: SparkSession, d: str) -> DataFrame:
-    """Paired bootstrap confidence interval on the per-query nDCG
-    delta between the full-64-dim ranker and the 16-dim Matryoshka
-    truncation (Efron 1979; the bootstrap IR-significance recipe of
-    Sakai 2006 / Smucker et al. 2007, public) — the INTERVAL
-    companion to ir5's win/loss sign test, completing the ir1-ir7
-    eval family: {B} bootstrap replicas resample the query set with
-    replacement, and the 2.5th/97.5th percentile replica means
-    bracket the delta (a CI excluding 0 is the "significant"
-    read the sign test can only approximate).
-
-    Determinism is the whole trick: replica b's i-th draw picks
-    query position md5('ir6:b:i') mod n — the repo's seedless
-    hash-randomness convention (t9_hash_sample), so both engines
-    generate the IDENTICAL resample and every replica sum is an
-    exact BIGINT on the 1e-6 nDCG grid (deltas summed as integers;
-    one display division).  Percentile ranks are fixed module
-    constants ({LO}/{HI} of {B}) with (sum, replica-id) tiebreak —
-    no interpolation lottery.
-
-    Scale shape: per-query deltas are the two _ir_per_query passes
-    ir3/ir5 already pay; everything after runs on the EVAL-SET-sized
-    delta table (the only window orders that bounded table) — draws
-    are {B}xN rows of integer hashing joined back by position
-    (broadcast), replica sums partial-aggregate, and the rank
-    window runs over {B} rows.  Corpus size never enters."""
-    from pyspark.sql import Window
-    from ..operators.dedup import md5_int32
-    from .catalog_r8 import _ir_per_query
-    f = _ir_per_query(spark, d).select(
-        "query_id", F.col("ndcg_10").alias("nf"))
-    t = _ir_per_query(spark, d, dim=16).select(
-        "query_id", F.col("ndcg_10").alias("nt"))
-    j = f.join(t, "query_id").select(
-        "query_id",
-        (F.round(F.col("nf") * 1000000).cast("long")
-         - F.round(F.col("nt") * 1000000).cast("long")).alias("dq"))
-    wp = Window.orderBy("query_id")
-    dl = j.select("dq",
-                  (F.row_number().over(wp) - 1).cast("long").alias("pos"))
-    nn = dl.agg(F.count("*").cast("long").alias("n"),
-                F.sum("dq").cast("long").alias("point"))
-    draws = (spark.range(_IR6_B).select(F.col("id").alias("b"))
-             .crossJoin(F.broadcast(nn))
-             .select("b", F.explode(
-                 F.sequence(F.lit(0).cast("long"), F.col("n") - 1))
-                 .alias("i"), "n"))
-    picked = draws.select(
-        "b",
-        F.pmod(md5_int32(F.concat(F.lit("ir6:"),
-                                  F.col("b").cast("string"),
-                                  F.lit(":"),
-                                  F.col("i").cast("string"))),
-               F.col("n")).alias("pos"))
-    reps = (picked.join(F.broadcast(dl), "pos")
-            .groupBy("b").agg(F.sum("dq").cast("long").alias("s")))
-    wr = Window.orderBy("s", "b")
-    ranked = reps.withColumn("rk", F.row_number().over(wr))
-    lo = ranked.filter(F.col("rk") == _IR6_LO).select(
-        F.col("s").alias("slo"))
-    hi = ranked.filter(F.col("rk") == _IR6_HI).select(
-        F.col("s").alias("shi"))
-    fp = reps.agg(F.round(
-        F.sum((F.col("s") > 0).cast("int")).cast("double") / _IR6_B, 6)
-        .alias("frac_positive"))
-    den = F.col("n").cast("double")
-    return (nn.crossJoin(F.broadcast(lo)).crossJoin(F.broadcast(hi))
-            .crossJoin(F.broadcast(fp))
-            .select(F.col("n").alias("n_queries"),
-                    F.lit(_IR6_B).cast("long").alias("n_replicas"),
-                    F.round(F.col("point").cast("double") / den
-                            / 1000000, 6).alias("mean_delta"),
-                    F.round(F.col("slo").cast("double") / den
-                            / 1000000, 6).alias("boot_ci_lo"),
-                    F.round(F.col("shi").cast("double") / den
-                            / 1000000, 6).alias("boot_ci_hi"),
-                    "frac_positive",
-                    ((F.col("slo") > 0) | (F.col("shi") < 0))
-                    .alias("significant")))
-
-
-ir6_bootstrap_ci.__doc__ = ir6_bootstrap_ci.__doc__.format(
-    B=_IR6_B, LO=_IR6_LO, HI=_IR6_HI)
 
 
 # ===========================================================================

@@ -1,5 +1,4 @@
-"""Round-13 catalog additions (appended LAST — the first-50
-registration window is load-bearing, see plans/catalog.py).
+"""Round-13 catalog additions.
 
 Two entries productizing the round's themes:
 
@@ -29,7 +28,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 
 # ===========================================================================
 # Sampled-stratum MinHash P/R scoreboard (the 100 TB recall estimator)

@@ -1,5 +1,4 @@
-"""Round-14 catalog additions (appended LAST — the first-50
-registration window is load-bearing, see plans/catalog.py).
+"""Round-14 catalog additions.
 
 - ``dd_band_plan``: the MinHash-LSH operating-point planner (VERDICT
   r13 #7) — the standard S-curve 1-(1-j^r)^b evaluated over every
@@ -24,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 from ..session import materialize
 
 # ===========================================================================
@@ -146,79 +145,6 @@ def dd_band_plan(spark: SparkSession, d: str) -> DataFrame:
 
 
 # ===========================================================================
-# OPQ-rotated IVFPQ recall gate (VERDICT r13 #4): the rotation is a
-# store OPTION (pq.ivfpq_build_store(rotate=True)); this entry
-# certifies the rotated store end to end at the catalog operating
-# point, beside the unrotated r4_ivfpq_recall gate.
-# ===========================================================================
-
-@register("r4_ivfpq_opq_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_ivfpq_opq_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for the OPQ-ROTATED composed IVFPQ store (VERDICT
-    r13 #4, Ge et al. 2013): build with rotate=True (residuals
-    encoded in the learned orthogonal frame, rotation persisted
-    beside the codebooks, query lut rotated at search), search at the
-    same (8 lists, probe 4) operating point as r4_ivfpq_recall, gate
-    recall vs exact top-k at the same 0.5 floor (probing is the
-    binding miss source on this corpus; MEASURED 0.9 at sf0.01 —
-    equal to the unrotated gate, as expected where the per-dim-
-    independent geometry leaves no covariance for the rotation to
-    reclaim; the 2.1x ADC-error win on correlated-spectrum geometry
-    is ledgered in STRESS_r14).  Proves the rotation path end to end:
-    train, persist, encode, rotated-lut search, exact rescore."""
-    from ..operators import pq, similarity
-    from ..session import scratch
-    from .catalog_more import _recall_summary
-    from .catalog_r6 import QUERY_VEC
-    emb = _t(spark, d, "embeddings")
-    path = scratch("ivfpq_opq_recall")
-    pq.ivfpq_build_store(emb, path, n_lists=8, m=8, k_codes=32,
-                         rotate=True)
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = pq.ivfpq_search_store(spark, path, QUERY_VEC, k=10,
-                                   n_probe=4)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.5)
-
-
-# ===========================================================================
-# Engine-level derived-ANN gate: the facade consumes the measured
-# geometry too (VERDICT r13 #2 extended past the graph store).
-# ===========================================================================
-
-@register("eng_ann_derived_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def eng_ann_derived_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Engine-level gate for the DERIVED ANN operating point:
-    EngineConfig(ann_backend='ivf', ann_n_lists=None,
-    ann_n_probe=None) makes the facade derive both knobs from the
-    indexed corpus at dispatch — ~sqrt(n) lists, probe fraction from
-    the MEASURED anisotropy (the knn_graph derivation the graph-store
-    builds already certify) — and the same search call must keep
-    recall >= 0.5 vs the exact backend (eng_ann_recall's floor at its
-    explicit (8, 4) point; on this corpus the derivation resolves to
-    (16, 8), measured recall 1.0 at sf0.01).  Proves a user can say
-    'ivf, figure out the knobs' and get a certified default."""
-    from ..config import EngineConfig
-    from ..engine import SparkRagEngine
-    from .catalog_more import _recall_summary
-    emb = _t(spark, d, "embeddings")
-    exact = SparkRagEngine(spark).search(
-        emb, query_vector=_qv(), limit=10, id_col="vec_id")
-    approx = SparkRagEngine(spark, EngineConfig(
-        ann_backend="ivf", ann_n_lists=None, ann_n_probe=None)).search(
-        emb, query_vector=_qv(), limit=10, id_col="vec_id")
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.5)
-
-
-def _qv() -> list:
-    from .oracle_vec import QUERY_VEC
-    return QUERY_VEC
-
-
-# ===========================================================================
 # Streaming release audit (VERDICT r13 #3): the 7-row card maintained
 # through checkpointed out-of-order tranches — the release card a
 # never-ending crawl actually publishes.
@@ -292,7 +218,6 @@ def st_release_audit(spark: SparkSession, d: str) -> DataFrame:
     from ..session import scratch
     from ..sources.tables import epoch_prior, fold_version, read_version
     from ..streaming import pipeline as SP
-    from .catalog import _t
     from .catalog_r10 import t43_clump_base
     from .catalog_r11 import (audit_card_assemble, audit_doc_groups,
                               audit_risk_corr, audit_stratum_mod,

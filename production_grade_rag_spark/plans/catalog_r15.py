@@ -1,5 +1,4 @@
-"""Round-15 catalog additions (appended LAST — the first-50
-registration window is load-bearing, see plans/catalog.py).
+"""Round-15 catalog additions.
 
 The round's theme is HARDENING the round-14 machinery against
 adversarial inputs and closing the "card published, not consumed"
@@ -8,12 +7,7 @@ gaps (VERDICT r14):
 - ``dd_minhash_planned``: minhash_dedup_pairs(num_bands=None) — the
   band-planner recommendation (dd_band_plan's flagged row) CONSUMED
   as a derived default, value-oracled at the resolved 16/8 point.
-- ``r4_opq_gain``: the OPQ decision card (opq_gain_report) — sample
-  quantization error plain-PQ vs rotated on the store's own training
-  sample, with the rotation-pays gate; on this per-dim-independent
-  corpus family the honest answer is FALSE (measured ~1.02-1.22x;
-  the correlated-geometry TRUE case is pytest-pinned on the
-  synthesize_correlated shape).
+- ``r4_opq_gain`` (now in plans/retrieval.py): the OPQ decision card.
 
 The hot-shingle guard itself (identical-set collapse + PPJoin prefix
 filtering in operators/dedup.ngram_jaccard_pairs_index) needs no new
@@ -31,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from . import oracle_vec as OV
-from .catalog import _t, register
+from .registry import _t, register
 
 
 @register("dd_minhash_planned",
@@ -54,35 +48,3 @@ def dd_minhash_planned(spark: SparkSession, d: str) -> DataFrame:
                                      num_bands=None)
 
 
-@register("r4_opq_gain", oracle="""
-SELECT 8::BIGINT AS m, 32::BIGINT AS k_codes,
-       TRUE AS errs_positive, TRUE AS opq_not_worse,
-       FALSE AS rotation_pays
-""")
-def r4_opq_gain(spark: SparkSession, d: str) -> DataFrame:
-    """The OPQ DECISION card (VERDICT r14 #5): pq.opq_gain_report on
-    the embeddings table — sample quantization error under plain PQ
-    vs under the learned rotation on the SAME bounded deterministic
-    sample both trainers use, so an operator sees whether rotation
-    pays for THEIR corpus BEFORE paying a store rebuild (the
-    measured-geometry-drives-defaults pattern applied to PQ; raw
-    err_plain/err_opq/err_ratio are the card's other columns, read
-    via opq_gain_report directly — they are corpus-scale-dependent,
-    so this entry oracles the scale-invariant decision columns).
-
-    The honest verdict on THIS corpus family is on the oracle:
-    ``rotation_pays`` = FALSE — hash embeddings are per-dim
-    independent, there is no cross-dimension covariance for the
-    rotation to reclaim (measured 1.02-1.22x vs the 1.5x pays bar;
-    STRESS_r14 measured 1.99x on the correlated-spectrum tier, where
-    the TRUE branch is pytest-pinned on the synthesize_correlated
-    shape — tests/test_catalog_r15.py)."""
-    from pyspark.sql import functions as F
-
-    from ..operators import pq
-    emb = _t(spark, d, "embeddings")
-    return pq.opq_gain_report(emb).select(
-        "m", "k_codes",
-        ((F.col("err_plain") > 0) & (F.col("err_opq") > 0))
-        .alias("errs_positive"),
-        "opq_not_worse", "rotation_pays")

@@ -21,12 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as X
-from ..operators import dedup, embedding, pq, textstats
+from ..operators import dedup, embedding, textstats
 from . import oracle_sql as O
 from . import oracle_vec as OV
-from . import flagship as FL
-from .catalog import _t, register
-from .oracle_vec import QUERY_VEC
+from .registry import _t, register
 
 
 # ===========================================================================
@@ -249,142 +247,6 @@ def ev_window_join(spark: SparkSession, d: str) -> DataFrame:
             .agg(F.count("v_us").alias("n_prior_views"),
                  F.round(F.coalesce(F.sum("v_value"), F.lit(0.0)), 4)
                  .alias("view_value_sum")))
-
-
-# ===========================================================================
-# Product-quantization ANN (R4 compressed-index scale path)
-# ===========================================================================
-
-@register("r4_pq_topk")   # rows-only: PQ is approximate by design
-def r4_pq_topk(spark: SparkSession, d: str) -> DataFrame:
-    """R4 approximate, compressed-index form: PQ (8 subspaces x 32
-    codewords over the 64-dim corpus) with ADC candidate scoring over
-    the narrow code table and exact cosine rescoring of k*16
-    candidates.  Deterministic end to end (hash-ordered training
-    sample, seeded k-means, id tiebreaks); recall vs the exact
-    r4_knn_topk is asserted in tests/test_pq.py and gated in-plan by
-    r4_pq_recall — the driver records a rows-only check here because
-    ANN misses are semantic, like r4_ivf_topk."""
-    emb = _t(spark, d, "embeddings")
-    books = pq.pq_train(emb, k_codes=32)
-    encoded = pq.pq_encode(emb, books).select("vec_id", "pq_codes")
-    return pq.pq_topk(encoded, emb, QUERY_VEC, books, k=10, rescore=16)
-
-
-@register("r4_ivfpq_store")   # rows-only: approximate by design
-def r4_ivfpq_store(spark: SparkSession, d: str) -> DataFrame:
-    """IVF x PQ composed ANN over a cell-partitioned store: probes
-    prune partition directories, residual PQ codes make the candidate
-    scan column-narrow, full vectors are read only for the rescored
-    candidates.  The production-shaped endpoint of the ANN family
-    (exact < SQ < IVF | PQ < IVFPQ); recall gated by
-    r4_ivfpq_recall and tests/test_pq.py."""
-    from ..session import scratch
-    emb = _t(spark, d, "embeddings")
-    path = scratch("ivfpq_store")
-    pq.ivfpq_build_store(emb, path, n_lists=8, m=8, k_codes=32)
-    return pq.ivfpq_search_store(spark, path, QUERY_VEC, k=10,
-                                 n_probe=4)
-
-
-@register("r4_ivfpq_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_ivfpq_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for the composed IVFPQ store vs exact top-k,
-    in-plan like the other ANN gates.  Floor 0.5 (IVF probing is the
-    binding miss source — same floor as r4_ivf_recall; PQ's residual
-    coding + 16x exact rescore loses little on top)."""
-    from ..operators import similarity
-    from ..session import scratch
-    from .catalog_more import _recall_summary
-    emb = _t(spark, d, "embeddings")
-    path = scratch("ivfpq_recall")
-    pq.ivfpq_build_store(emb, path, n_lists=8, m=8, k_codes=32)
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = pq.ivfpq_search_store(spark, path, QUERY_VEC, k=10,
-                                   n_probe=4)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.5)
-
-
-@register("eng_ann_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def eng_ann_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Engine-LEVEL ANN gate: the same SparkRagEngine.search call with
-    config.ann_backend='ivf' must keep recall >= 0.5 vs the exact
-    backend — proving the backend dispatch (engine._vector_topk)
-    drives the production path end to end, not just the operator in
-    isolation.  Companion of tests/test_engine.py's dispatch test,
-    made driver-visible."""
-    from ..config import EngineConfig
-    from ..engine import SparkRagEngine
-    from .catalog_more import _recall_summary
-    emb = _t(spark, d, "embeddings")
-    exact = SparkRagEngine(spark).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    approx = SparkRagEngine(spark, EngineConfig(
-        ann_backend="ivf", ann_n_lists=8, ann_n_probe=4)).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.5)
-
-
-@register("r4_ivf_join")   # rows-only: approximate by design
-def r4_ivf_join(spark: SparkSession, d: str) -> DataFrame:
-    """Batch ANN join: every query meets the corpus on an equi-join on
-    IVF cell (similarity.ivf_knn_join) instead of knn_join's
-    crossJoin — each query scores n_probe/n_lists of the corpus, the
-    scalable form of r4_knn_join_batch.  Measured pair recall at this
-    operating point (16 lists, probe 4): 0.80-0.84 across sf0.01/0.1;
-    gated by r4_ivf_join_recall."""
-    from ..operators import similarity
-    emb = _t(spark, d, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    out = similarity.ivf_knn_join(queries, emb, k=5,
-                                  n_lists=16, n_probe=4, q_id="vec_id")
-    return out.select("query_id", "result_id",
-                      F.round("score", 6).alias("score"), "rank")
-
-
-@register("r4_ivf_join_recall", oracle="""
-SELECT 25::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_ivf_join_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for the batch ANN join vs the exact knn_join over
-    the same 5-query set, on (query, result) PAIRS — floor 0.5, well
-    under the measured 0.80-0.84, so only a real regression (broken
-    cell assignment, probe ranking, or join key) trips it."""
-    from ..operators import similarity
-    from .catalog_more import _recall_summary
-    emb = _t(spark, d, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = similarity.knn_join(queries, emb, k=5, q_id="vec_id")
-    approx = similarity.ivf_knn_join(queries, emb, k=5,
-                                     n_lists=16, n_probe=4,
-                                     q_id="vec_id")
-    return _recall_summary(exact, approx, ["query_id", "result_id"],
-                           floor=0.5)
-
-
-@register("r4_pq_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_pq_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for r4_pq_topk (8x16 codebooks, ADC + 8x exact
-    rescore) vs exact top-k, computed in-plan so the driver sees PQ
-    quality, not just row counts — the compressed-index sibling of
-    r4_ivf_recall / r4_sq_recall.  Floor 0.5 matches the pytest pin
-    (tests/test_pq.py::test_pq_recall_and_exact_scores); measured
-    recall at this operating point (32 codewords, 16x rescore) is 0.9
-    on the sf0.01 corpus, so the gate has real margin."""
-    from ..operators import similarity
-    from .catalog_more import _recall_summary
-    emb = _t(spark, d, "embeddings")
-    books = pq.pq_train(emb, k_codes=32)
-    encoded = pq.pq_encode(emb, books).select("vec_id", "pq_codes")
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = pq.pq_topk(encoded, emb, QUERY_VEC, books, k=10, rescore=16)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.5)
 
 
 # ===========================================================================
@@ -842,23 +704,6 @@ def ta_zipf_slope(spark: SparkSession, d: str) -> DataFrame:
         F.count("*").alias("n_types"),
         F.round(F.covar_pop("lc", "lr") / F.var_pop("lr"), 4)
         .alias("zipf_slope"))
-
-
-@register("flagship_valuecheck", oracle=FL.flagship_oracle_sql())
-def flagship_valuecheck(spark: SparkSession, d: str) -> DataFrame:
-    """The FLAGSHIP pipeline value-checked end to end: the same
-    clean -> quality gate -> chunk -> hash-embed -> cosine top-k ->
-    attribution DAG behind entry(), compared against a full DuckDB
-    replication (chunking, per-chunk hash-embed components, cosine
-    from raw integer components, attribution + quality recompute).
-    Every stage was already oracled in isolation (t2/m1/m3/r4/r1);
-    this pins their COMPOSITION — join keys, filter placement, score
-    normalization — as one value-hashed result."""
-    from .flagship import flagship_search
-    out = flagship_search(spark, d, k=10, dim=64)
-    return out.select("chunk_id", "doc_id", "content", "score",
-                      "source_type", "doc_lang",
-                      F.round("quality_score", 6).alias("quality_score"))
 
 
 @register("m1_chunk_udtf", oracle=O.chunk_fixed_sql())
@@ -2982,65 +2827,6 @@ def ev_heavy_hitters(spark: SparkSession, d: str) -> DataFrame:
             .orderBy(F.desc("n"), "user_id").limit(10))
 
 
-def _rrf_oracle() -> str:
-    from .catalog_ext import QUERY_TERMS
-    cos = OV.cosine_sql("embedding", OV.vec_lit_sql(QUERY_VEC))
-    ovlp = OV.overlap_score_sql("text", QUERY_TERMS)
-    return f"""
-WITH vec AS (
-  SELECT id, rnk FROM (
-    SELECT vec_id AS id,
-           row_number() OVER (ORDER BY {cos} DESC, vec_id) AS rnk
-    FROM embeddings) WHERE rnk <= 40
-), txt AS (
-  SELECT id, rnk FROM (
-    SELECT doc_id AS id,
-           row_number() OVER (ORDER BY {ovlp} DESC, doc_id) AS rnk
-    FROM documents) WHERE rnk <= 40
-), unioned AS (
-  SELECT id, rnk FROM vec UNION ALL SELECT id, rnk FROM txt
-), fused AS (
-  SELECT id, round(sum(1.0 / (60 + rnk)), 6) AS rrf_score,
-         count(*) AS n_branches
-  FROM unioned GROUP BY id
-)
-SELECT id, rrf_score, CAST(n_branches AS INT) AS n_branches
-FROM fused ORDER BY rrf_score DESC, id LIMIT 20
-"""
-
-
-@register("r7_hybrid_rrf", oracle=_rrf_oracle())
-def r7_hybrid_rrf(spark: SparkSession, d: str) -> DataFrame:
-    """Hybrid fusion by RECIPROCAL RANK (RRF, k=60) — the fusion Atlas
-    $rankFusion and Elastic standardize on, next to the reference's
-    weighted-score fusion (r7_hybrid_fusion): each branch contributes
-    1/(60+rank), so fusion is SCALE-FREE — no score-normalization
-    problem between cosine in [-1,1] and unbounded overlap counts,
-    the exact mismatch A2's 0.7/0.3 weights paper over.  Ranks carry
-    id tiebreaks, making the fusion integer-deterministic; the only
-    float is the final reciprocal sum, rounded on both sides.  Same
-    two branch scans and k-bounded shuffles as r7_hybrid_fusion."""
-    from .catalog_ext import _overlap_score, with_cosine_q
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    wv = Window.orderBy(F.desc("__cos_q"), F.col("vec_id"))
-    vec = (with_cosine_q(emb)
-           .select(F.col("vec_id").alias("id"),
-                   F.row_number().over(wv).alias("rnk"))
-           .filter(F.col("rnk") <= 40))
-    wt = Window.orderBy(F.desc(_overlap_score(F.col("text"))),
-                        F.col("doc_id"))
-    txt = (docs.select(F.col("doc_id").alias("id"),
-                       F.row_number().over(wt).alias("rnk"))
-           .filter(F.col("rnk") <= 40))
-    unioned = vec.unionByName(txt)
-    return (unioned.groupBy("id")
-            .agg(F.round(F.sum(1.0 / (60 + F.col("rnk"))), 6)
-                 .alias("rrf_score"),
-                 F.count("*").cast("int").alias("n_branches"))
-            .orderBy(F.desc("rrf_score"), "id").limit(20))
-
-
 def _mmr_oracle(lam: float = 0.7, k: int = 5) -> str:
     """Unrolled-step SQL replay of full MMR over the top-10 overlap
     candidates: per step, remaining candidates score
@@ -3048,8 +2834,7 @@ def _mmr_oracle(lam: float = 0.7, k: int = 5) -> str:
     selected set (ties -> lowest rank index, matching the operator's
     strict-> first-in-order rule).  Float literals carry Python's
     exact repr so both engines compute bit-identical MMR values."""
-    from .catalog_ext import QUERY_TERMS
-    ov = OV.overlap_score_sql("text", QUERY_TERMS)
+    ov = OV.overlap_score_sql("text", OV.QUERY_TERMS)
     toks = OV.tokens_sql("text")
     one_minus = repr(1 - lam)
     parts = [f"""
@@ -3104,7 +2889,7 @@ def w8_mmr_rerank(spark: SparkSession, d: str) -> DataFrame:
     float literals) — the strongest determinism claim a greedy
     reranker can make."""
     from ..operators import fusion
-    from .catalog_ext import _overlap_score
+    from .retrieval import _overlap_score
     docs = _t(spark, d, "documents")
     results = (docs.select(
         F.lit("q1").alias("query_id"),
@@ -3793,54 +3578,6 @@ def a15_cardinality_profile(spark: SparkSession, d: str) -> DataFrame:
     for r in rows[1:]:
         out = out.unionAll(r)
     return out
-
-
-@register("ev_stickiness", oracle="""
-WITH daily AS (
-  SELECT CAST(date_trunc('week', ts) AS DATE) AS week,
-         CAST(ts AS DATE) AS day, user_id
-  FROM events GROUP BY 1, 2, 3
-), dau AS (
-  SELECT week, day, count(*) AS n_dau FROM daily GROUP BY 1, 2
-), mau AS (
-  SELECT week, count(DISTINCT user_id) AS n_wau
-  FROM daily GROUP BY 1
-)
-SELECT CAST(d.week AS VARCHAR) AS week,
-       CAST(round(avg(d.n_dau)) AS BIGINT) AS avg_dau,
-       m.n_wau AS wau,
-       round(CAST(round(avg(d.n_dau)) AS DOUBLE) / m.n_wau, 4)
-         AS stickiness
-FROM dau d JOIN mau m ON m.week = d.week
-GROUP BY d.week, m.n_wau
-""")
-def ev_stickiness(spark: SparkSession, d: str) -> DataFrame:
-    """DAU/WAU stickiness per week: how much of the weekly audience
-    shows up on an average day.  The (week, day, user) DISTINCT
-    collapse happens FIRST — one shuffle on the compound key drops
-    the fact table to at most users x days rows, and both the daily
-    counts and the weekly distinct ride that collapsed frame (the
-    distinct-first discipline of ev_retention_cohorts).  avg(n_dau)
-    is rounded to an integer before the ratio so the compare is
-    FP-robust; week cast to string on both sides (the DATE
-    stringify gotcha)."""
-    daily = (_t(spark, d, "events")
-             .select(F.date_trunc("week", "ts").cast("date")
-                     .alias("week"),
-                     F.to_date("ts").alias("day"), "user_id")
-             .distinct())
-    dau = (daily.groupBy("week", "day")
-           .agg(F.count("*").alias("n_dau")))
-    mau = (daily.groupBy("week")
-           .agg(F.count_distinct("user_id").alias("n_wau")))
-    return (dau.join(mau, "week")
-            .groupBy("week", "n_wau")
-            .agg(F.round(F.avg("n_dau")).cast("long").alias("avg_dau"),
-                 F.round(F.round(F.avg("n_dau")).cast("double")
-                         / F.col("n_wau"), 4).alias("stickiness"))
-            .select(F.col("week").cast("string").alias("week"),
-                    "avg_dau", F.col("n_wau").alias("wau"),
-                    "stickiness"))
 
 
 @register("s26_version_diff", oracle="""

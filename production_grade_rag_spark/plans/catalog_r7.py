@@ -4,13 +4,9 @@
   entries became constant-pinned invariant gates (operators/chunk_gates
   explains why the raw rows cannot be value-oracled): rows-only by
   design, semantics pinned by tests/test_chunking*.py and the gates.
-- Two-stage IVFPQ retrieval (ADC shortlist -> exact rerank) + recall
-  gate, closing the compressed-ANN quality gap (VERDICT r6 #2).
-- Porter-lite stemming twin for the hybrid BM25 text branch
-  (VERDICT r6 #6).
+- The round's retrieval entries (two-stage IVFPQ, the stemmed and
+  English-analyzer BM25 hybrids) now live in plans/retrieval.py.
 
-Registered after catalog_r6 so the driver's first-50 correctness
-window is unchanged.
 """
 
 from __future__ import annotations
@@ -19,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import chunking
-from .catalog import _t, register
+from .registry import _t, register
 
 
 # ===========================================================================
@@ -91,11 +87,11 @@ def _cc_incremental_merge(spark: SparkSession, batch_docs: DataFrame,
 def _cc_curate_oracle() -> str:
     """The streaming twin's oracle IS batch cc_curate's: a full
     incremental drain must equal the one-shot curation."""
-    from .catalog import CATALOG
+    from .registry import CATALOG
     return CATALOG["cc_curate"].oracle
 
 
-@register("st_cc_curate", oracle=_cc_curate_oracle())
+@register("st_cc_curate", oracle=_cc_curate_oracle)
 def st_cc_curate(spark: SparkSession, d: str) -> DataFrame:
     """Continuous corpus curation end to end: each micro-batch of the
     paged tranches runs the cc_curate gate and folds keeper partials
@@ -124,60 +120,6 @@ def st_cc_curate(spark: SparkSession, d: str) -> DataFrame:
             .select("doc_id", "detected_lang",
                     F.round("q", 6).alias("quality_score"),
                     "est_tokens", "group_size"))
-
-
-# ===========================================================================
-# Stemmed-analyzer BM25 hybrid: the lucene.english-shaped twin
-# (reference $search analyzer family, index_manager.py:117-152)
-# ===========================================================================
-
-def _stem_oracle() -> str:
-    from ..functions.text import stem_py
-    from . import oracle_vec as OV
-    from .catalog_ext import _bm25_hybrid_oracle
-    return _bm25_hybrid_oracle(
-        toks=OV.stemmed_tokens_sql("text"),
-        terms=[stem_py(t) for t in OV.QUERY_TERMS])
-
-
-@register("r7_hybrid_bm25_stem", oracle=_stem_oracle())
-def r7_hybrid_bm25_stem(spark: SparkSession, d: str) -> DataFrame:
-    """R7 BM25 under the Porter-lite stemmed analyzer — closes the
-    remaining Lucene-analyzer gap vs the reference's $search index
-    (index_manager.py:117-152): "filtering"/"filtered"/"filters" in a
-    document all match query term "filter".  Query terms go through
-    the SAME stem chain as the index side (Atlas applies the analyzer
-    to both); document-frequency, length norm, and term counts all
-    shift with the stemming; fusion pipeline unchanged.  STEM_RULES
-    are shared verbatim with the DuckDB oracle — analyzer parity is
-    value-hashed, not asserted."""
-    from ..functions.text import stem_py
-    from ..functions.vector import cosine, to_double_array
-    from ..operators import fusion, textscore
-    from . import oracle_vec as OV
-    from .catalog_ext import with_cosine_q
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    terms = [stem_py(t) for t in OV.QUERY_TERMS]
-    vec = (with_cosine_q(emb)
-           .select(F.col("vec_id").alias("id"),
-                   F.col("__cos_q").alias("vector_score"))
-           .orderBy(F.desc("vector_score"), "id").limit(40))
-    txt = (textscore.bm25_score(docs, terms, text_col="text",
-                                analyzer="stemmed")
-           .select(F.col("doc_id").alias("id"), "text_score")
-           .orderBy(F.desc("text_score"), "id").limit(40))
-    merged = fusion.hybrid_union(vec, txt)
-    fused = fusion.weighted_fusion(merged)
-    return (fused
-            .select("id",
-                    F.round(F.coalesce("vector_score", F.lit(0.0)), 6)
-                     .alias("vector_score"),
-                    F.round(F.coalesce("text_score", F.lit(0.0)), 6)
-                     .alias("text_score"),
-                    F.round("score", 6).alias("score"),
-                    F.col("score").alias("__raw"))
-            .orderBy(F.desc("__raw"), "id").limit(20).drop("__raw"))
 
 
 # ===========================================================================
@@ -253,123 +195,6 @@ def t16_dsir_weight(spark: SparkSession, d: str) -> DataFrame:
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_tokens"),
                  F.round(F.avg(lr), 6).alias("log_ratio")))
-
-
-def _hardneg_oracle() -> str:
-    from . import oracle_vec as OV
-    cos = OV.cosine_sql("a.embedding", "b.embedding")
-    return f"""
-WITH scored AS (
-  SELECT a.vec_id AS anchor_id, a.label AS anchor_label,
-         b.vec_id AS negative_id, b.label AS negative_label,
-         round({cos}, 6) AS score,
-         row_number() OVER (PARTITION BY a.vec_id
-                            ORDER BY round({cos}, 6) DESC, b.vec_id)
-           AS rank
-  FROM embeddings a JOIN embeddings b
-    ON a.vec_id < 5 AND b.vec_id <> a.vec_id AND b.label <> a.label
-)
-SELECT anchor_id, negative_id, anchor_label, negative_label,
-       score, rank
-FROM scored WHERE rank <= 5
-"""
-
-
-@register("r8_hard_negatives", oracle=_hardneg_oracle())
-def r8_hard_negatives(spark: SparkSession, d: str) -> DataFrame:
-    """Hard-negative mining for embedding-model training (the standard
-    contrastive-pair recipe, e.g. DPR/SBERT practice): for each anchor
-    vector, the top-5 most-similar vectors carrying a DIFFERENT label
-    — maximally confusable negatives, the ones worth training on.
-
-    Plan: broadcast the (small) anchor set against the corpus, filter
-    label mismatch BEFORE the per-anchor top-k window (a negative must
-    be eligible, not merely ranked), one shuffle on anchor_id.  At
-    100 TB anchors are batched and the corpus side is the scan — the
-    ivf_knn_join cell-scoped form drops in when the anchor batch
-    outgrows broadcast."""
-    from ..functions.vector import cosine, to_double_array
-    emb = _t(spark, d, "embeddings")
-    anchors = (emb.filter(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("anchor_id"),
-                       F.col("label").alias("anchor_label"),
-                       to_double_array(F.col("embedding")).alias("__av")))
-    cand = emb.select(F.col("vec_id").alias("negative_id"),
-                      F.col("label").alias("negative_label"),
-                      to_double_array(F.col("embedding")).alias("__cv"))
-    scored = (cand.crossJoin(F.broadcast(anchors))
-              .filter((F.col("negative_id") != F.col("anchor_id"))
-                      & (F.col("negative_label") != F.col("anchor_label")))
-              .withColumn("score",
-                          F.round(cosine(F.col("__cv"), F.col("__av")), 6)))
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("score"), "negative_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("anchor_id", "negative_id", "anchor_label",
-                    "negative_label", "score", "rank"))
-
-
-def _triplet_oracle() -> str:
-    from . import oracle_vec as OV
-    cos = OV.cosine_sql("a.embedding", "b.embedding")
-    return f"""
-WITH pairs AS (
-  SELECT a.vec_id AS anchor_id, b.vec_id AS other_id,
-         (b.label = a.label) AS same, round({cos}, 6) AS score
-  FROM embeddings a JOIN embeddings b
-    ON a.vec_id < 5 AND b.vec_id <> a.vec_id
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY anchor_id, same
-                               ORDER BY score DESC, other_id) AS rn
-  FROM pairs
-)
-SELECT p.anchor_id, p.other_id AS positive_id,
-       n.other_id AS negative_id, p.score AS pos_score,
-       n.score AS neg_score, round(p.score - n.score, 6) AS margin
-FROM ranked p JOIN ranked n USING (anchor_id)
-WHERE p.same AND p.rn = 1 AND NOT n.same AND n.rn = 1
-"""
-
-
-@register("r8_triplets", oracle=_triplet_oracle())
-def r8_triplets(spark: SparkSession, d: str) -> DataFrame:
-    """Contrastive training triplets: per anchor, the nearest
-    SAME-label vector (positive) and the nearest DIFFERENT-label
-    vector (hard negative), with the margin between them — the
-    (anchor, positive, negative) manifest an embedding-model trainer
-    consumes; small/negative margins are the valuable examples.  One
-    broadcast crossJoin, one (anchor, same)-keyed window, one self
-    join of the two rank-1 rows."""
-    from ..functions.vector import cosine, to_double_array
-    emb = _t(spark, d, "embeddings")
-    anchors = (emb.filter(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("anchor_id"),
-                       F.col("label").alias("__al"),
-                       to_double_array(F.col("embedding")).alias("__av")))
-    cand = emb.select(F.col("vec_id").alias("other_id"),
-                      F.col("label").alias("__cl"),
-                      to_double_array(F.col("embedding")).alias("__cv"))
-    pairs = (cand.crossJoin(F.broadcast(anchors))
-             .filter(F.col("other_id") != F.col("anchor_id"))
-             .select("anchor_id", "other_id",
-                     (F.col("__cl") == F.col("__al")).alias("same"),
-                     F.round(cosine(F.col("__cv"), F.col("__av")), 6)
-                      .alias("score")))
-    w = Window.partitionBy("anchor_id", "same").orderBy(
-        F.desc("score"), "other_id")
-    ranked = pairs.withColumn("rn", F.row_number().over(w))
-    pos = ranked.filter(F.col("same") & (F.col("rn") == 1)).select(
-        "anchor_id", F.col("other_id").alias("positive_id"),
-        F.col("score").alias("pos_score"))
-    neg = ranked.filter(~F.col("same") & (F.col("rn") == 1)).select(
-        "anchor_id", F.col("other_id").alias("negative_id"),
-        F.col("score").alias("neg_score"))
-    return (pos.join(neg, "anchor_id")
-            .select("anchor_id", "positive_id", "negative_id",
-                    "pos_score", "neg_score",
-                    F.round(F.col("pos_score") - F.col("neg_score"), 6)
-                     .alias("margin")))
 
 
 # ===========================================================================
@@ -818,150 +643,3 @@ def t14_c4_line_filter(spark: SparkSession, d: str) -> DataFrame:
     return docs.select(
         "doc_id", *[c.alias(n) for n, c in stats.items()]
     ).orderBy("doc_id")
-
-
-def _en_oracle() -> str:
-    from ..functions.text import english_analyze_py
-    from . import oracle_vec as OV
-    from .catalog_ext import _bm25_hybrid_oracle
-    return _bm25_hybrid_oracle(
-        toks=OV.english_tokens_sql("text"),
-        terms=english_analyze_py(" ".join(OV.QUERY_TERMS)))
-
-
-@register("r7_hybrid_bm25_en", oracle=_en_oracle())
-def r7_hybrid_bm25_en(spark: SparkSession, d: str) -> DataFrame:
-    """R7 BM25 under the full lucene.english-shaped analyzer chain —
-    StandardTokenizer -> lowercase -> Lucene English stop set ->
-    Porter-lite stem — completing the analyzer family next to the
-    whitespace/standard/stemmed twins (reference $search index,
-    index_manager.py:117-152).  Stop-word removal changes document
-    LENGTHS, so BM25's length norm shifts too, not just the term
-    counts; the oracle value-hashes the whole chain."""
-    from ..functions.text import english_analyze_py
-    from ..functions.vector import cosine, to_double_array
-    from ..operators import fusion, textscore
-    from . import oracle_vec as OV
-    from .catalog_ext import with_cosine_q
-    emb = _t(spark, d, "embeddings")
-    docs = _t(spark, d, "documents")
-    terms = english_analyze_py(" ".join(OV.QUERY_TERMS))
-    vec = (with_cosine_q(emb)
-           .select(F.col("vec_id").alias("id"),
-                   F.col("__cos_q").alias("vector_score"))
-           .orderBy(F.desc("vector_score"), "id").limit(40))
-    txt = (textscore.bm25_score(docs, terms, text_col="text",
-                                analyzer="english")
-           .select(F.col("doc_id").alias("id"), "text_score")
-           .orderBy(F.desc("text_score"), "id").limit(40))
-    merged = fusion.hybrid_union(vec, txt)
-    fused = fusion.weighted_fusion(merged)
-    return (fused
-            .select("id",
-                    F.round(F.coalesce("vector_score", F.lit(0.0)), 6)
-                     .alias("vector_score"),
-                    F.round(F.coalesce("text_score", F.lit(0.0)), 6)
-                     .alias("text_score"),
-                    F.round("score", 6).alias("score"),
-                    F.col("score").alias("__raw"))
-            .orderBy(F.desc("__raw"), "id").limit(20).drop("__raw"))
-
-
-# ===========================================================================
-# Two-stage IVFPQ retrieval: ADC shortlist -> exact rerank
-# (reference numCandidates over-fetch-then-refine, vector_search.py:67)
-# ===========================================================================
-
-_IVFPQ32_BUILT: set[str] = set()
-
-
-def _ivfpq_store32(spark: SparkSession, d: str) -> str:
-    """Shared 32-list/m8/k32 IVFPQ store over the sf's embeddings —
-    built once per (process, sf): three entries (r4_ivfpq_rerank, its
-    recall gate, eng_ivfpq_recall) search the same offline index, as
-    they would in production, instead of each re-running KMeans + PQ
-    training."""
-    from ..operators import pq
-    from ..session import scratch
-    path = scratch("ivfpq32_" + d.strip("/").replace("/", "_"))
-    if d not in _IVFPQ32_BUILT:
-        emb = _t(spark, d, "embeddings")
-        pq.ivfpq_build_store(emb, path, n_lists=32, m=8, k_codes=32)
-        _IVFPQ32_BUILT.add(d)
-    return path
-
-
-def _ivfpq_rerank_pair(spark: SparkSession, d: str):
-    """Build (exact top-10, two-stage IVFPQ top-10) at the production
-    operating point: 32 lists, probe 16 (half the directory pruned),
-    numCandidates=640 shortlist, exact cosine rerank on those 640 rows
-    only.  Measured recall@10 = 1.0 at sf0.01/sf0.1-equivalents; the
-    gate floor is 0.9."""
-    from ..operators import pq, similarity
-    from .oracle_vec import QUERY_VEC
-    emb = _t(spark, d, "embeddings")
-    path = _ivfpq_store32(spark, d)
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = pq.ivfpq_search_store(spark, path, QUERY_VEC, k=10,
-                                   n_probe=16, n_candidates=640)
-    return exact, approx
-
-
-@register("r4_ivfpq_rerank")   # rows-only: approximate by design
-def r4_ivfpq_rerank(spark: SparkSession, d: str) -> DataFrame:
-    """Two-stage compressed ANN: ADC-score the probed cells reading
-    only the narrow code column, shortlist numCandidates=640 rows,
-    join back the full vectors for exact cosine on those rows alone,
-    re-sort.  The production retrieval form of r4_ivfpq_store (which
-    gates the compressed index itself at a thriftier operating
-    point); recall gated >= 0.9 by r4_ivfpq_rerank_recall."""
-    _, approx = _ivfpq_rerank_pair(spark, d)
-    return approx
-
-
-@register("r4_ivfpq_rerank_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_ivfpq_rerank_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for the two-stage IVFPQ path, floor 0.9 — the
-    production bar the r6 verdict asked for (plain IVFPQ at thrifty
-    probes gates at 0.5).  In-plan like every other ANN gate."""
-    from .catalog_more import _recall_summary
-    exact, approx = _ivfpq_rerank_pair(spark, d)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.9)
-
-
-@register("eng_ivfpq_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def eng_ivfpq_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Engine-LEVEL two-stage gate: SparkRagEngine.search with
-    ann_backend='ivfpq' (prebuilt compressed store + numCandidates
-    rerank) must keep recall >= 0.9 vs the exact backend — proving the
-    production index-at-ingest shape drives the SAME search API end to
-    end, columns included (the k winners re-join the live index)."""
-    from ..config import EngineConfig
-    from ..engine import SparkRagEngine
-    from .catalog_more import _recall_summary
-    from .oracle_vec import QUERY_VEC
-    emb = _t(spark, d, "embeddings")
-    path = _ivfpq_store32(spark, d)
-    exact = SparkRagEngine(spark).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    approx = SparkRagEngine(spark, EngineConfig(
-        ann_backend="ivfpq", ann_store_path=path, ann_n_probe=16,
-        ann_n_candidates=640)).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.9)
-
-
-@register("r2_parent_context_rows")    # rows-only: splitter is not SQL
-def r2_parent_context_rows(spark: SparkSession, d: str) -> DataFrame:
-    """R2 raw rows over the recursive hierarchy
-    (parent_child_chunker.py:118-151); join invariants driver-checked
-    by the r2_parent_context_recursive gate."""
-    docs = _t(spark, d, "documents")
-    chunks = chunking.chunk_parent_child(docs)
-    return chunking.parent_context(chunks).select(
-        "chunk_id", "doc_id", "parent_id",
-        F.length("parent_content").alias("parent_len"))

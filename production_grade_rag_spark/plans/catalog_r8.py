@@ -15,9 +15,6 @@ Closes the VERDICT r7 task list beyond the in-place fixes:
   (Raffel et al. 2020 §2.2) — with the same skew-safe min-struct
   first-occurrence election dd_line_dedup uses.
 
-Registered after catalog_r7 so the driver's existing correctness
-window is unchanged (REGISTRATION ORDER IS LOAD-BEARING — see
-plans/catalog.py).
 """
 
 from __future__ import annotations
@@ -25,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 from ..session import materialize
 
 
@@ -406,36 +403,6 @@ def dd_span_dedup(spark: SparkSession, d: str) -> DataFrame:
 
 
 # ===========================================================================
-# Adaptive multi-probe IVFPQ recall gate (VERDICT r7 #2)
-# ===========================================================================
-
-@register("r4_ivfpq_adaptive_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def r4_ivfpq_adaptive_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for ADAPTIVE multi-probe IVFPQ (VERDICT r7 #2):
-    probe cells nearest-first until the cumulative query-to-centroid
-    mass share passes 0.9 (inverse-squared-distance weights,
-    similarity.adaptive_probe_cells), scaling the exact-rerank
-    shortlist with the probe count so ADC error doesn't become the
-    new binding loss.  Floor 0.9 vs the exact backend on the shared
-    32-list store; at the 10x stress tier this lifts recall@10 from
-    the fixed-p16 ceiling 0.8 to 1.0 (STRESS_r08, probe counts
-    recorded per mass target)."""
-    from ..operators import pq, similarity
-    from .catalog_more import _recall_summary
-    from .catalog_r7 import _ivfpq_store32
-    from .oracle_vec import QUERY_VEC
-    emb = _t(spark, d, "embeddings")
-    path = _ivfpq_store32(spark, d)
-    exact = similarity.knn_topk(emb, QUERY_VEC, k=10)
-    approx = pq.ivfpq_search_store(spark, path, QUERY_VEC, k=10,
-                                   n_probe=8, n_candidates=640,
-                                   mass_target=0.9)
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.9)
-
-
-# ===========================================================================
 # Sequence packing: the step between curation and the trainer — docs
 # are concatenated per shard and cut into fixed-length sequences
 # ===========================================================================
@@ -641,96 +608,6 @@ def t19_domain_mix_report(spark: SparkSession, d: str) -> DataFrame:
 
 
 # ===========================================================================
-# Bitext mining: margin-based mutual nearest neighbors across two
-# embedding groups (Artetxe & Schwenk 2019 — the parallel-corpus miner)
-# ===========================================================================
-
-def _bitext_oracle() -> str:
-    from . import oracle_vec as OV
-    cos = OV.cosine_sql("a.embedding", "b.embedding")
-    return f"""
-WITH pairs AS (
-  SELECT a.vec_id AS a_id, b.vec_id AS b_id, round({cos}, 6) AS cos
-  FROM embeddings a JOIN embeddings b ON a.label = 0 AND b.label = 1
-), ra AS (
-  SELECT *, row_number() OVER (PARTITION BY a_id
-                               ORDER BY cos DESC, b_id) AS rka
-  FROM pairs
-), rb AS (
-  SELECT *, row_number() OVER (PARTITION BY b_id
-                               ORDER BY cos DESC, a_id) AS rkb
-  FROM pairs
-), a4 AS (
-  SELECT a_id, avg(cos) AS avg_a FROM ra WHERE rka <= 4 GROUP BY a_id
-), b4 AS (
-  SELECT b_id, avg(cos) AS avg_b FROM rb WHERE rkb <= 4 GROUP BY b_id
-), m AS (
-  SELECT p.a_id, p.b_id, p.cos,
-         round(p.cos / ((a4.avg_a + b4.avg_b) / 2.0::DOUBLE), 6)
-           AS margin
-  FROM pairs p JOIN a4 USING (a_id) JOIN b4 USING (b_id)
-), ranked AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY a_id
-                            ORDER BY margin DESC, b_id) AS best_a,
-         row_number() OVER (PARTITION BY b_id
-                            ORDER BY margin DESC, a_id) AS best_b
-  FROM m
-)
-SELECT a_id, b_id, cos, margin
-FROM ranked WHERE best_a = 1 AND best_b = 1
-"""
-
-
-@register("r9_bitext_pairs", oracle=_bitext_oracle())
-def r9_bitext_pairs(spark: SparkSession, d: str) -> DataFrame:
-    """Margin-based bitext mining (Artetxe & Schwenk 2019, public —
-    the standard parallel-corpus miner behind CCMatrix/LASER): across
-    two embedding groups (labels 0 and 1 as the two 'languages'),
-    score every cross pair by the RATIO MARGIN — cosine divided by
-    the mean of both sides' top-4 neighborhood cosines (penalizing
-    hubs that are near everything) — and keep MUTUAL best pairs only.
-
-    Plan: broadcast the smaller side against the other (the
-    r8_hard_negatives shape), per-side windows for neighborhood
-    averages and mutual ranks.  At 100 TB the all-pairs stage is
-    replaced by ivf_knn_join per side (cell-pruned candidate
-    generation) — the margin/mutual logic downstream is unchanged."""
-    from ..functions.vector import cosine, to_double_array
-    emb = _t(spark, d, "embeddings")
-    A = (emb.filter(F.col("label") == 0)
-         .select(F.col("vec_id").alias("a_id"),
-                 to_double_array(F.col("embedding")).alias("__va")))
-    B = (emb.filter(F.col("label") == 1)
-         .select(F.col("vec_id").alias("b_id"),
-                 to_double_array(F.col("embedding")).alias("__vb")))
-    pairs = (B.crossJoin(F.broadcast(A))
-             .select("a_id", "b_id",
-                     F.round(cosine(F.col("__va"), F.col("__vb")), 6)
-                      .alias("cos")))
-    wa = Window.partitionBy("a_id").orderBy(F.desc("cos"), "b_id")
-    wb = Window.partitionBy("b_id").orderBy(F.desc("cos"), "a_id")
-    a4 = (pairs.withColumn("rka", F.row_number().over(wa))
-          .filter(F.col("rka") <= 4)
-          .groupBy("a_id").agg(F.avg("cos").alias("avg_a")))
-    b4 = (pairs.withColumn("rkb", F.row_number().over(wb))
-          .filter(F.col("rkb") <= 4)
-          .groupBy("b_id").agg(F.avg("cos").alias("avg_b")))
-    m = (pairs.join(F.broadcast(a4), "a_id")
-         .join(F.broadcast(b4), "b_id")
-         .withColumn("margin",
-                     F.round(F.col("cos")
-                             / ((F.col("avg_a") + F.col("avg_b"))
-                                / F.lit(2.0)), 6)))
-    wma = Window.partitionBy("a_id").orderBy(F.desc("margin"), "b_id")
-    wmb = Window.partitionBy("b_id").orderBy(F.desc("margin"), "a_id")
-    return (m.withColumn("best_a", F.row_number().over(wma))
-            .withColumn("best_b", F.row_number().over(wmb))
-            .filter((F.col("best_a") == 1) & (F.col("best_b") == 1))
-            .select("a_id", "b_id", "cos", "margin"))
-
-
-# ===========================================================================
 # BPE merge learning: tokenizer training as a value-oracled iterative
 # operator (Sennrich et al. 2016)
 # ===========================================================================
@@ -914,86 +791,6 @@ def t20_bpe_apply(spark: SparkSession, d: str) -> DataFrame:
 
 
 # ===========================================================================
-# Matryoshka-truncated retrieval (Kusupati et al. 2022): serve from a
-# dimension-truncated prefix of the embedding
-# ===========================================================================
-
-_MRL_DIM = 16
-
-
-def _mrl_q16() -> list[float]:
-    from .oracle_vec import QUERY_VEC
-    return QUERY_VEC[:_MRL_DIM]
-
-
-def _mrl_topk_oracle() -> str:
-    from . import oracle_vec as OV
-    cos = OV.cosine_sql(f"list_slice(embedding, 1, {_MRL_DIM})",
-                        OV.vec_lit_sql(_mrl_q16()))
-    return f"""
-SELECT vec_id, round({cos}, 6) AS score
-FROM embeddings
-ORDER BY score DESC, vec_id LIMIT 10
-"""
-
-
-@register("r10_matryoshka_topk", oracle=_mrl_topk_oracle())
-def r10_matryoshka_topk(spark: SparkSession, d: str) -> DataFrame:
-    """Matryoshka-truncated retrieval (Kusupati et al. 2022, public —
-    MRL prefixes of an embedding remain usable at reduced dimension):
-    exact cosine top-10 over only the FIRST 16 of 64 dims — the 4x
-    cheaper serving path (cosine renormalizes, so truncation+renorm
-    is one expression).  Deterministic ranking, full value oracle.
-
-    Scale: same TakeOrderedAndProject scan shape as r4_knn_topk but
-    reading a quarter of the vector bytes; at 100 TB the truncated
-    prefix is materialized as its own narrow column/store."""
-    from ..functions.vector import cosine, to_double_array
-    emb = _t(spark, d, "embeddings")
-    q = F.array(*[F.lit(float(x)) for x in _mrl_q16()])
-    trunc = F.slice(to_double_array(F.col("embedding")), 1, _MRL_DIM)
-    return (emb.select("vec_id",
-                       F.round(cosine(trunc, q), 6).alias("score"))
-            .orderBy(F.desc("score"), "vec_id").limit(10))
-
-
-def _mrl_overlap_oracle() -> str:
-    from . import oracle_vec as OV
-    cos_t = OV.cosine_sql(f"list_slice(embedding, 1, {_MRL_DIM})",
-                          OV.vec_lit_sql(_mrl_q16()))
-    cos_f = OV.cosine_sql("embedding", OV.vec_lit_sql(OV.QUERY_VEC))
-    return f"""
-WITH t AS (
-  SELECT vec_id FROM embeddings
-  ORDER BY round({cos_t}, 6) DESC, vec_id LIMIT 10
-), f AS (
-  SELECT vec_id FROM embeddings
-  ORDER BY round({cos_f}, 6) DESC, vec_id LIMIT 10
-)
-SELECT (SELECT count(*) FROM t JOIN f USING (vec_id))::BIGINT
-         AS n_overlap,
-       10::BIGINT AS k
-"""
-
-
-@register("r10_matryoshka_overlap", oracle=_mrl_overlap_oracle())
-def r10_matryoshka_overlap(spark: SparkSession, d: str) -> DataFrame:
-    """Quality accounting for the truncated path: overlap@10 between
-    the 16-dim and full 64-dim exact rankings — BOTH rankings are
-    deterministic, so unlike the ANN recall gates this is a full
-    value oracle, and the number is the dimension-truncation quality
-    a Matryoshka serving tier monitors."""
-    from ..operators import similarity
-    from .oracle_vec import QUERY_VEC
-    emb = _t(spark, d, "embeddings")
-    full = similarity.knn_topk(emb, QUERY_VEC, k=10).select("vec_id")
-    trunc = r10_matryoshka_topk(spark, d).select("vec_id")
-    j = trunc.join(full, "vec_id")
-    return j.agg(F.count("*").alias("n_overlap"),
-                 F.lit(10).cast("long").alias("k"))
-
-
-# ===========================================================================
 # Sketch gates: HLL cardinality and quantile sketches vs their exact
 # twins — the only viable distinct/quantile tools at 100 TB
 # ===========================================================================
@@ -1089,11 +886,11 @@ def _line_dedup_merge(spark: SparkSession, batch_docs: DataFrame,
 def _st_line_dedup_oracle() -> str:
     """Stream == batch: the drained store must reproduce
     dd_line_dedup's exact answer."""
-    from .catalog import CATALOG
+    from .registry import CATALOG
     return CATALOG["dd_line_dedup"].oracle
 
 
-@register("st_dd_line_dedup", oracle=_st_line_dedup_oracle())
+@register("st_dd_line_dedup", oracle=_st_line_dedup_oracle)
 def st_dd_line_dedup(spark: SparkSession, d: str) -> DataFrame:
     """Continuous corpus-wide line dedup — the production shape of
     dd_line_dedup for a crawl that never stops: each micro-batch of
@@ -1210,212 +1007,6 @@ def dd_dupgram_profile(spark: SparkSession, d: str) -> DataFrame:
                  F.round(F.sum((F.col("c") > 1).cast("int"))
                          .cast("double") / F.count("*").cast("double"), 6)
                   .alias("dup_frac")))
-
-
-# ===========================================================================
-# Retrieval-quality evaluation harness (IR metrics) — the offline eval
-# a RAG deployment publishes next to its index build: recall@k, MRR,
-# nDCG@k against labeled relevance judgments.  The reference tunes its
-# search stack (index_manager.py analyzers, vector_search.py
-# numCandidates) but ships no measurement loop; at 100 TB the eval IS
-# the regression gate for every index/analyzer change.
-# ===========================================================================
-
-import math as _math
-
-# Integer-scaled DCG rank weights, computed ONCE here in Python and
-# injected as literals into BOTH engines (the shared-constant
-# discipline): w_r = round(1e6 / log2(r+1)).  Sums of these are exact
-# BIGINT arithmetic — no cross-engine log2/FP-fold risk anywhere in
-# the metric pipeline; the only float op is one final division.
-_IR_K = 10
-_DCG_W = [round(1_000_000 / _math.log2(r + 1)) for r in range(1, _IR_K + 1)]
-_IDCG_CUM = [sum(_DCG_W[:i + 1]) for i in range(_IR_K)]  # ideal DCG @ 1..K
-
-
-def _ir_cte_parts(dim: int | None = None, sfx: str = "") -> str:
-    """CTE chain (no WITH keyword) ending in ``perq{sfx}``; ``dim``
-    truncates both sides of the cosine to the first ``dim`` dims (the
-    Matryoshka serving path) — None scores full vectors."""
-    from . import oracle_vec as OV
-    emb = ("e.embedding" if dim is None
-           else f"list_slice(e.embedding, 1, {dim})")
-    qv = "q.qv" if dim is None else f"list_slice(q.qv, 1, {dim})"
-    cos = OV.cosine_sql(emb, qv)
-    dcg_case = " ".join(f"WHEN {r + 1} THEN {w}"
-                        for r, w in enumerate(_DCG_W))
-    idcg_case = " ".join(f"WHEN {i + 1} THEN {c}"
-                         for i, c in enumerate(_IDCG_CUM))
-    return f"""
-q{sfx} AS (
-  SELECT vec_id AS qid, label AS qlabel, embedding AS qv
-  FROM embeddings WHERE vec_id % 50 = 7
-), cnt{sfx} AS (
-  SELECT label, count(*)::BIGINT AS n FROM embeddings GROUP BY label
-), scored{sfx} AS (
-  SELECT q.qid, q.qlabel, e.vec_id AS rid, e.label AS rlabel,
-         row_number() OVER (PARTITION BY q.qid
-                            ORDER BY round({cos}, 6) DESC, e.vec_id)
-           AS rank
-  FROM embeddings e CROSS JOIN q{sfx} q
-  WHERE e.vec_id <> q.qid
-), agg{sfx} AS (
-  SELECT qid, qlabel,
-         CAST(sum((rlabel = qlabel)::INT) AS BIGINT) AS hits,
-         CAST(coalesce(min(CASE WHEN rlabel = qlabel THEN rank END), 0)
-              AS BIGINT) AS first_rank,
-         CAST(coalesce(sum((rlabel = qlabel)::INT
-                           * CASE rank {dcg_case} ELSE 0 END), 0)
-              AS BIGINT) AS dcg_s
-  FROM scored{sfx} WHERE rank <= {_IR_K}
-  GROUP BY qid, qlabel
-), perq{sfx} AS (
-  SELECT a.qid AS query_id, a.qlabel AS query_label,
-         (c.n - 1)::BIGINT AS n_rel, a.hits AS hits_10,
-         a.first_rank AS first_hit_rank,
-         CASE WHEN c.n - 1 = 0 THEN 0.0::DOUBLE
-              ELSE round(a.hits::DOUBLE
-                         / least({_IR_K}, c.n - 1)::DOUBLE, 6)
-         END AS recall_10,
-         CASE WHEN a.first_rank = 0 THEN 0.0::DOUBLE
-              ELSE round(1.0::DOUBLE / a.first_rank::DOUBLE, 6)
-         END AS mrr_10,
-         CASE WHEN c.n - 1 = 0 THEN 0.0::DOUBLE
-              ELSE round(a.dcg_s::DOUBLE
-                         / (CASE least({_IR_K}, c.n - 1)
-                            {idcg_case} ELSE {_IDCG_CUM[-1]} END)::DOUBLE,
-                         6)
-         END AS ndcg_10
-  FROM agg{sfx} a JOIN cnt{sfx} c ON c.label = a.qlabel
-)"""
-
-
-def _ir_per_query_cte() -> str:
-    return "\nWITH " + _ir_cte_parts()
-
-
-def _ir_per_query(spark: SparkSession, d: str,
-                  dim: int | None = None,
-                  max_queries: int | None = None) -> DataFrame:
-    """Shared Spark plan for the IR eval entries: label-match relevance
-    (the embeddings table's `label` column IS the judgment set), exact
-    cosine top-10 per held-out query (vec_id % 50 == 7), metrics as
-    exact integer sums of the shared _DCG_W weights.
-
-    ``max_queries`` caps the held-out query set (first N by qid) —
-    the FIXED-eval-set form stress_bench times (VERDICT r8 #3): with
-    the default, the eval set grows with the corpus, so scored pairs
-    grow quadratically across stress tiers and the tier ratio reads
-    the benchmark's growth, not the operator's."""
-    from ..functions.vector import cosine, to_double_array
-    vec = (to_double_array(F.col("embedding")) if dim is None
-           else F.slice(to_double_array(F.col("embedding")), 1, dim))
-    emb = _t(spark, d, "embeddings")
-    q = (emb.filter(F.pmod(F.col("vec_id"), F.lit(50)) == 7)
-         .select(F.col("vec_id").alias("qid"),
-                 F.col("label").alias("qlabel"),
-                 vec.alias("qv")))
-    if max_queries is not None:
-        q = q.orderBy("qid").limit(max_queries)
-    cnt = emb.groupBy("label").agg(F.count("*").alias("n"))
-    pairs = (emb.select(F.col("vec_id").alias("rid"),
-                        F.col("label").alias("rlabel"),
-                        vec.alias("cv"))
-             .crossJoin(F.broadcast(q))
-             .filter(F.col("rid") != F.col("qid")))
-    w = Window.partitionBy("qid").orderBy(
-        F.round(cosine(F.col("cv"), F.col("qv")), 6).desc(), F.col("rid"))
-    top = (pairs.withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= _IR_K))
-    rel = (F.col("rlabel") == F.col("qlabel")).cast("int")
-    dcg_w = F.array(*[F.lit(x) for x in _DCG_W])
-    idcg_w = F.array(*[F.lit(x) for x in _IDCG_CUM])
-    agg = (top.groupBy("qid", "qlabel")
-           .agg(F.sum(rel).cast("long").alias("hits"),
-                F.coalesce(F.min(F.when(rel == 1, F.col("rank"))),
-                           F.lit(0)).cast("long").alias("first_rank"),
-                F.coalesce(F.sum(rel * F.element_at(dcg_w, F.col("rank"))),
-                           F.lit(0)).cast("long").alias("dcg_s")))
-    n_rel = F.col("n") - 1
-    denom = F.least(F.lit(_IR_K), n_rel)
-    return (agg.join(F.broadcast(cnt),
-                     agg["qlabel"] == cnt["label"])
-            .select(F.col("qid").alias("query_id"),
-                    F.col("qlabel").alias("query_label"),
-                    n_rel.cast("long").alias("n_rel"),
-                    F.col("hits").alias("hits_10"),
-                    F.col("first_rank").alias("first_hit_rank"),
-                    F.when(n_rel == 0, F.lit(0.0))
-                     .otherwise(F.round(F.col("hits").cast("double")
-                                        / denom.cast("double"), 6))
-                     .alias("recall_10"),
-                    F.when(F.col("first_rank") == 0, F.lit(0.0))
-                     .otherwise(F.round(F.lit(1.0)
-                                        / F.col("first_rank").cast("double"),
-                                        6))
-                     .alias("mrr_10"),
-                    F.when(n_rel == 0, F.lit(0.0))
-                     .otherwise(F.round(
-                         F.col("dcg_s").cast("double")
-                         / F.element_at(idcg_w,
-                                        F.greatest(denom, F.lit(1))
-                                        .cast("int")).cast("double"), 6))
-                     .alias("ndcg_10")))
-
-
-@register("ir1_eval_per_query", oracle=_ir_per_query_cte() + """
-SELECT * FROM perq ORDER BY query_id
-""")
-def ir1_eval_per_query(spark: SparkSession, d: str) -> DataFrame:
-    """Per-query retrieval-quality report: recall@10 (R-truncated),
-    MRR@10, binary-relevance nDCG@10 for exact-cosine search against
-    the labeled embedding corpus (relevant = same `label`, the
-    standard ANN-benchmark protocol).  This is the harness every one
-    of the r4_* recall gates samples from, promoted to a first-class
-    published eval.
-
-    FP discipline: ranks come from the round-6 cosine (identical to
-    the r8 hard-negative entry), per-rank DCG gains are the Python-
-    computed integer weights _DCG_W injected into both engines, so
-    every aggregate is an exact BIGINT sum; each metric then does ONE
-    double division — engine-stable.
-
-    Scale shape: the query set is an eval sample (tiny, broadcast);
-    candidate scoring is map-side over the corpus; the only shuffle
-    is the per-query top-k window on qid (bounded by |eval set|, and
-    swappable for ivf_knn_join's equi-join form when the corpus is
-    cell-partitioned — same metrics CTE either way)."""
-    return _ir_per_query(spark, d).orderBy("query_id")
-
-
-@register("ir2_eval_summary", oracle=_ir_per_query_cte() + """
-SELECT CAST(count(*) AS BIGINT) AS n_queries,
-       round(sum(CAST(round(recall_10 * 1000000) AS BIGINT))::DOUBLE
-             / (count(*) * 1000000)::DOUBLE, 6) AS macro_recall_10,
-       round(sum(CAST(round(mrr_10 * 1000000) AS BIGINT))::DOUBLE
-             / (count(*) * 1000000)::DOUBLE, 6) AS macro_mrr_10,
-       round(sum(CAST(round(ndcg_10 * 1000000) AS BIGINT))::DOUBLE
-             / (count(*) * 1000000)::DOUBLE, 6) AS macro_ndcg_10
-FROM perq
-""")
-def ir2_eval_summary(spark: SparkSession, d: str) -> DataFrame:
-    """Macro-averaged scoreboard over the eval queries — the single
-    row a nightly index-quality dashboard tracks.  Averaging re-scales
-    the per-query 6-decimal metrics to BIGINTs (exact, since they ARE
-    6-decimal values) and sums integers, so the mean is one division
-    regardless of row order or partitioning."""
-    perq = _ir_per_query(spark, d)
-    def s(c):  # noqa: E306
-        return F.sum(F.round(F.col(c) * 1000000).cast("long"))
-    n = F.count("*")
-    return perq.agg(
-        n.cast("long").alias("n_queries"),
-        F.round(s("recall_10").cast("double")
-                / (n * 1000000).cast("double"), 6).alias("macro_recall_10"),
-        F.round(s("mrr_10").cast("double")
-                / (n * 1000000).cast("double"), 6).alias("macro_mrr_10"),
-        F.round(s("ndcg_10").cast("double")
-                / (n * 1000000).cast("double"), 6).alias("macro_ndcg_10"))
 
 
 # ===========================================================================
@@ -2149,54 +1740,6 @@ def st_ivf_ingest(spark: SparkSession, d: str) -> DataFrame:
             .distinct().orderBy("vec_id"))
 
 
-@register("ir3_eval_matryoshka", oracle=(
-    "WITH " + _ir_cte_parts(None, "_f") + ", "
-    + _ir_cte_parts(16, "_t") + """
-, s AS (
-  SELECT 'dim16' AS variant, * FROM perq_t
-  UNION ALL
-  SELECT 'full64', * FROM perq_f
-)
-SELECT variant, CAST(count(*) AS BIGINT) AS n_queries,
-       round(sum(CAST(round(recall_10 * 1000000) AS BIGINT))::DOUBLE
-             / (count(*) * 1000000)::DOUBLE, 6) AS macro_recall_10,
-       round(sum(CAST(round(mrr_10 * 1000000) AS BIGINT))::DOUBLE
-             / (count(*) * 1000000)::DOUBLE, 6) AS macro_mrr_10,
-       round(sum(CAST(round(ndcg_10 * 1000000) AS BIGINT))::DOUBLE
-             / (count(*) * 1000000)::DOUBLE, 6) AS macro_ndcg_10
-FROM s GROUP BY variant ORDER BY variant
-"""))
-def ir3_eval_matryoshka(spark: SparkSession, d: str) -> DataFrame:
-    """The Matryoshka serving decision quantified in RELEVANCE terms:
-    the same IR eval run twice — full 64-dim cosine vs the first-16-
-    dims truncation (r10's 4x-cheaper path) — reporting macro
-    recall@10 / MRR / nDCG side by side.  r10_matryoshka_overlap
-    measures rank agreement against the full ranking; this measures
-    what users feel: how much LABEL-relevance the truncation actually
-    costs (rank churn among same-label neighbors is free).  Same
-    integer-weight metric pipeline, same broadcast-scoring shape,
-    two passes over the corpus (one per variant)."""
-    def summarize(df: DataFrame, tag: str) -> DataFrame:
-        def s(c):
-            return F.sum(F.round(F.col(c) * 1000000).cast("long"))
-        n = F.count("*")
-        return df.agg(
-            F.lit(tag).alias("variant"),
-            n.cast("long").alias("n_queries"),
-            F.round(s("recall_10").cast("double")
-                    / (n * 1000000).cast("double"), 6)
-             .alias("macro_recall_10"),
-            F.round(s("mrr_10").cast("double")
-                    / (n * 1000000).cast("double"), 6)
-             .alias("macro_mrr_10"),
-            F.round(s("ndcg_10").cast("double")
-                    / (n * 1000000).cast("double"), 6)
-             .alias("macro_ndcg_10"))
-    t = summarize(_ir_per_query(spark, d, dim=16), "dim16")
-    f = summarize(_ir_per_query(spark, d), "full64")
-    return t.unionByName(f).orderBy("variant")
-
-
 def _bpe_fertility_oracle() -> str:
     from . import oracle_vec as OV
     return _bpe_chain(full=True) + f"""
@@ -2807,130 +2350,6 @@ def a19_source_gini(spark: SparkSession, d: str) -> DataFrame:
 
 
 # ===========================================================================
-# Pseudo-relevance feedback (r11) — Rocchio-style query expansion
-# (Rocchio 1971, public): retrieve, mine expansion terms from the top
-# documents, re-retrieve with the enriched query.  Unlike the r7
-# hybrid entries (whose query terms are compile-time literals), the
-# expansion terms here are DATA-DEPENDENT — both engines derive them
-# inside the plan, so the whole feedback loop is value-oracled.
-# ===========================================================================
-
-def _prf_ctes() -> str:
-    from . import oracle_vec as OV
-    from .oracle_sql import sql_str
-    terms = ", ".join(sql_str(t) for t in OV.QUERY_TERMS)
-    contrib = ("CAST(round(tf::DOUBLE * ln((nd.n + 1.0::DOUBLE) "
-               "/ (df.df + 1.0::DOUBLE)) * 1000000) AS BIGINT)")
-    return f"""
-WITH tf AS (
-  SELECT doc_id, tok, count(*)::BIGINT AS tf
-  FROM (SELECT doc_id, unnest({OV.tokens_sql('text')}) AS tok
-        FROM documents)
-  GROUP BY doc_id, tok
-), nd AS (
-  SELECT count(*)::BIGINT AS n FROM documents
-), df AS (
-  SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY tok
-), qs AS (
-  SELECT unnest([{terms}]) AS tok
-), s0 AS (
-  SELECT tf.doc_id, CAST(sum({contrib}) AS BIGINT) AS s
-  FROM tf JOIN qs USING (tok) JOIN df USING (tok) CROSS JOIN nd
-  GROUP BY tf.doc_id
-), top5 AS (
-  SELECT doc_id FROM s0 ORDER BY s DESC, doc_id LIMIT 5
-), cand AS (
-  SELECT tf.tok, CAST(sum({contrib}) AS BIGINT) AS w
-  FROM tf JOIN top5 USING (doc_id) JOIN df USING (tok) CROSS JOIN nd
-  WHERE tf.tok NOT IN ({terms})
-  GROUP BY tf.tok
-), expn AS (
-  SELECT tok, w FROM cand ORDER BY w DESC, tok LIMIT 3
-), allterms AS (
-  SELECT tok FROM qs UNION SELECT tok FROM expn
-), s1 AS (
-  SELECT tf.doc_id, CAST(sum({contrib}) AS BIGINT) AS score_s,
-         count(*)::BIGINT AS n_matched
-  FROM tf JOIN allterms USING (tok) JOIN df USING (tok) CROSS JOIN nd
-  GROUP BY tf.doc_id
-)"""
-
-
-def _prf_frames(spark: SparkSession, d: str):
-    """Shared Spark chain.  Scale shape: tf/df are the inverted-index
-    aggregates every text entry pays (flat token keys); the query and
-    expansion term sets are <=9 rows — every scoring join broadcasts;
-    top-5/top-3 are TakeOrdered.  Per-term contributions quantize to
-    BIGINT before summing (commutative — partition-order-proof)."""
-    from ..operators.dedup import tokens
-    from . import oracle_vec as OV
-    docs = _t(spark, d, "documents")
-    tf = (docs.select("doc_id", F.explode(tokens(F.col("text")))
-                      .alias("tok"))
-          .groupBy("doc_id", "tok").agg(F.count("*").alias("tf")))
-    nd = docs.agg(F.count("*").alias("n"))
-    df = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    qs = spark.createDataFrame([(t,) for t in OV.QUERY_TERMS], ["tok"])
-    contrib = F.round(
-        F.col("tf").cast("double")
-        * F.log((F.col("n") + 1.0) / (F.col("df") + 1.0))
-        * 1000000).cast("long")
-
-    def scored(term_df: DataFrame) -> DataFrame:
-        return (tf.join(F.broadcast(term_df), "tok")
-                .join(F.broadcast(df), "tok")
-                .crossJoin(F.broadcast(nd))
-                .groupBy("doc_id")
-                .agg(F.sum(contrib).cast("long").alias("score_s"),
-                     F.count("*").alias("n_matched")))
-
-    # the mining half is the shared operator the engine facade also
-    # uses (textscore.prf_expansion_terms) — one implementation, one
-    # oracle
-    from ..operators.textscore import prf_expansion_terms
-    expn = prf_expansion_terms(docs, list(OV.QUERY_TERMS))
-    allterms = qs.unionByName(expn.select("tok")).distinct()
-    return scored(allterms), expn
-
-
-@register("r11_prf_terms", oracle=_prf_ctes() + """
-SELECT tok AS term, round(w::DOUBLE / 1000000.0, 6) AS weight
-FROM expn ORDER BY w DESC, term
-""")
-def r11_prf_terms(spark: SparkSession, d: str) -> DataFrame:
-    """The expansion terms the feedback loop mined: top-3 TF-IDF-mass
-    terms across the initial top-5 documents, original query terms
-    excluded — published separately so the expansion itself is
-    auditable (the 'why did my query grow' surface)."""
-    _, expn = _prf_frames(spark, d)
-    return (expn.select(F.col("tok").alias("term"),
-                        F.round(F.col("w").cast("double") / 1000000.0, 6)
-                         .alias("weight"))
-            .orderBy(F.desc("w"), "term"))
-
-
-@register("r11_prf_rerank", oracle=_prf_ctes() + """
-SELECT doc_id, round(score_s::DOUBLE / 1000000.0, 6) AS score,
-       n_matched
-FROM s1 ORDER BY score_s DESC, doc_id LIMIT 10
-""")
-def r11_prf_rerank(spark: SparkSession, d: str) -> DataFrame:
-    """Rocchio pseudo-relevance feedback end to end: TF-IDF retrieve
-    with the shared query terms, mine top-3 expansion terms from the
-    top-5 hits, re-retrieve with the enriched query — the classic
-    recall-widening loop (docs matching only expansion vocabulary
-    can now surface).  Entirely in-plan on both engines: the
-    expansion term set is derived data, not a literal."""
-    s1, _ = _prf_frames(spark, d)
-    return (s1.select("doc_id",
-                      F.round(F.col("score_s").cast("double") / 1000000.0,
-                              6).alias("score"),
-                      F.col("n_matched").cast("long").alias("n_matched"))
-            .orderBy(F.desc("score_s"), "doc_id").limit(10)
-            .drop("score_s"))
-
-
-# ===========================================================================
 # Multimodal composition: video keyframe election (shot-boundary
 # detection shape) — frame sampling -> per-frame decode/feature
 # extraction through the Arrow plumbing -> per-video temporal
@@ -3108,113 +2527,6 @@ def st_late_data_audit(spark: SparkSession, d: str) -> DataFrame:
         "dropped_by_watermark long, window9_stream long, "
         "window9_batch long, late_counted_in_batch boolean, "
         "window12_finalized boolean")
-
-
-# ===========================================================================
-# Late-interaction retrieval (r12) — ColBERT-style MaxSim scoring
-# (Khattab & Zaharia 2020, public): score(d) = sum over query tokens
-# of the MAX cosine against the document's per-token vectors.  The
-# per-token embedder here is the md5-hexpair feature map (the same
-# deterministic family the multimodal fake decoder uses), so the
-# whole late-interaction plan is value-oracled; a learned token
-# embedder slots into the same shape.
-# ===========================================================================
-
-_MAXSIM_DIM = 8
-
-
-def _tokvec_py(tok: str) -> list[float]:
-    import hashlib as _hl
-    h = _hl.md5(tok.encode()).hexdigest()
-    return [int(h[2 * i: 2 * i + 2], 16) / 255.0
-            for i in range(_MAXSIM_DIM)]
-
-
-def _maxsim_oracle() -> str:
-    from . import oracle_vec as OV
-    tv = ", ".join(
-        f"('0x' || substr(md5(tok), {2 * i + 1}, 2))::BIGINT / 255.0"
-        for i in range(_MAXSIM_DIM))
-    cols = []
-    for qi, term in enumerate(OV.QUERY_TERMS):
-        qlit = OV.vec_lit_sql(_tokvec_py(term))
-        cols.append(f"max({OV.cosine_sql('tv', qlit)}) AS m{qi}")
-    total = " + ".join(f"round(m{qi}, 6)"
-                       for qi in range(len(OV.QUERY_TERMS)))
-    return f"""
-WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({OV.tokens_sql('text')}) AS tok
-  FROM documents
-), tv AS (
-  SELECT doc_id, [{tv}] AS tv FROM dt
-), perq AS (
-  SELECT doc_id, {", ".join(cols)} FROM tv GROUP BY doc_id
-)
-SELECT doc_id, round({total}, 6) AS maxsim_score
-FROM perq ORDER BY round({total}, 6) DESC, doc_id LIMIT 10
-"""
-
-
-@register("r12_maxsim_topk", oracle=_maxsim_oracle())
-def r12_maxsim_topk(spark: SparkSession, d: str) -> DataFrame:
-    """Late-interaction top-10: per-token document vectors meet each
-    query-token vector under MaxSim — the retrieval model BETWEEN
-    bag-of-words (r7 BM25: token identity only) and single-vector
-    dense (r4: one pooled embedding), completing the family.  Query
-    token vectors are Python-computed literals (shared-constant
-    discipline); per-query maxes are PARTIAL-AGGREGABLE (max combines
-    map-side), so the per-doc reduction shuffles one row per doc per
-    query token — never the token stream; the 6 rounded maxes sum in
-    one fixed-order expression on both engines."""
-    from ..operators.dedup import tokens
-    from ..functions.vector import cosine
-    from . import oracle_vec as OV
-    docs = _t(spark, d, "documents")
-    dt = (docs.select("doc_id", F.explode(tokens(F.col("text")))
-                      .alias("tok")).distinct())
-    tv = F.array(*[
-        F.conv(F.substring(F.md5(F.col("tok")), 2 * i + 1, 2), 16, 10)
-        .cast("double") / 255.0 for i in range(_MAXSIM_DIM)])
-    scored = dt.withColumn("tv", tv)
-    aggs = []
-    for qi, term in enumerate(OV.QUERY_TERMS):
-        qlit = F.array(*[F.lit(x) for x in _tokvec_py(term)])
-        aggs.append(F.max(cosine(F.col("tv"), qlit)).alias(f"m{qi}"))
-    perq = scored.groupBy("doc_id").agg(*aggs)
-    total = None
-    for qi in range(len(OV.QUERY_TERMS)):
-        t = F.round(F.col(f"m{qi}"), 6)
-        total = t if total is None else total + t
-    return (perq.select("doc_id", F.round(total, 6).alias("maxsim_score"))
-            .orderBy(F.desc("maxsim_score"), "doc_id").limit(10))
-
-
-@register("eng_prf_terms", oracle=_prf_ctes() + """
-SELECT tok AS term, round(w::DOUBLE / 1000000.0, 6) AS weight
-FROM expn ORDER BY w DESC, term
-""")
-def eng_prf_terms(spark: SparkSession, d: str) -> DataFrame:
-    """ENGINE-level PRF proof: SparkRagEngine.prf_terms over the
-    engine's own doc⋈embedding index (config.query_expansion='prf'
-    widens the hybrid text branch with exactly these terms) must
-    hash-match the r11 mining oracle — pinning that the facade path
-    and the standalone operator share one implementation (the same
-    one-impl-one-oracle contract as eng_ann_recall for the vector
-    side).  The index's content column is the documents text 1:1, so
-    the corpus statistics are identical by construction."""
-    from ..engine import SparkRagEngine
-    from . import oracle_vec as OV
-    eng = SparkRagEngine(spark)
-    docs = _t(spark, d, "documents")
-    emb = _t(spark, d, "embeddings")
-    index = (docs.join(emb, docs.doc_id == emb.vec_id)
-             .select("doc_id", F.col("text").alias("content"),
-                     "embedding", "lang"))
-    expn = eng.prf_terms(index, list(OV.QUERY_TERMS))
-    return (expn.select(F.col("tok").alias("term"),
-                        F.round(F.col("w").cast("double") / 1000000.0, 6)
-                         .alias("weight"))
-            .orderBy(F.desc("w"), "term"))
 
 
 # ===========================================================================

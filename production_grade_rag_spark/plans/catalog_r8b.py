@@ -22,10 +22,6 @@ operators between curation and release:
   selection step) with the same map-side integer-threshold accept
   as t19 (no per-cluster window).
 
-Registered after catalog_r8 so the driver's existing correctness
-window is unchanged (REGISTRATION ORDER IS LOAD-BEARING — see
-plans/catalog.py).
-
 Reference parity note: the reference repo has no corpus-selection
 surface (its pipeline is RAG ETL, feature_pipeline/*.py); these are
 the beyond-reference training-data operators SURVEY §2.12-2.14
@@ -37,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 
 
 # ===========================================================================
@@ -1860,92 +1856,6 @@ def st_cms_ingest(spark: SparkSession, d: str) -> DataFrame:
     final = read_version(spark, store)
     return final.select("i", F.col("bucket").cast("long").alias("bucket"),
                         "cell_sum").orderBy("i", "bucket")
-
-
-# ===========================================================================
-# Diversity-aware retrieval eval (alpha-DCG, Clarke et al. 2008) —
-# the IR-harness extension the plain nDCG can't see: a result list
-# of 10 same-topic hits scores perfect nDCG but zero novelty.
-# alpha = 0.5 makes the novelty decay (1-alpha)^seen an EXACT
-# dyadic rational, so gains become integers (2^(10-seen)) and the
-# whole metric is a BIGINT sum — the ir1 integer-DCG trick extended
-# to data-dependent gains.
-# ===========================================================================
-
-def _ir4_oracle() -> str:
-    from .catalog_r8 import _DCG_W, _IR_K, _ir_cte_parts
-    gain_case = " ".join(f"WHEN {s} THEN {2 ** (10 - s)}"
-                         for s in range(10))
-    dcg_case = " ".join(f"WHEN {r + 1} THEN {w}"
-                        for r, w in enumerate(_DCG_W))
-    return f"""
-WITH {_ir_cte_parts()}
-, seen AS (
-  SELECT qid, rank, rlabel,
-         count(*) OVER (PARTITION BY qid, rlabel ORDER BY rank
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prior
-  FROM scored WHERE rank <= {_IR_K}
-)
-SELECT qid AS query_id,
-       CAST(count(DISTINCT rlabel) AS BIGINT) AS n_subtopics_10,
-       CAST(sum((CASE prior {gain_case} ELSE 1 END)
-                * (CASE rank {dcg_case} ELSE 0 END)) AS BIGINT)
-         AS alpha_dcg_s
-FROM seen GROUP BY qid ORDER BY query_id
-"""
-
-
-@register("ir4_diversity_eval", oracle=_ir4_oracle())
-def ir4_diversity_eval(spark: SparkSession, d: str) -> DataFrame:
-    """alpha-DCG@10 (Clarke et al. 2008, alpha = 0.5) over the same
-    ranked runs as ir1, with the result's label as its subtopic:
-    each hit's gain decays by half per already-seen same-subtopic
-    result above it — a run of 10 interchangeable near-dupes scores
-    ~2x the top weight where a diverse run scores ~5x.  At
-    alpha = 0.5 the decay is exactly 2^(10-seen), so gain x rank
-    weight is a pure integer product and the per-query metric an
-    exact BIGINT sum (the ir1 convention, extended to the
-    data-dependent gains diversity needs); the ideal-ranking
-    normalizer is greedy/NP-hard, so the standard unnormalized
-    alpha-DCG is reported alongside the subtopic count.
-
-    Scale shape: the ir1 broadcast-scoring pass plus one
-    (qid, rlabel)-keyed running count over k-bounded rows."""
-    from pyspark.sql import Window as W
-
-    from ..functions.vector import cosine, to_double_array
-    from .catalog_r8 import _DCG_W, _IR_K
-
-    emb = _t(spark, d, "embeddings").select(
-        "vec_id", to_double_array(F.col("embedding")).alias("emb"),
-        "label")
-    q = (emb.filter(F.col("vec_id") % 50 == 7)
-         .select(F.col("vec_id").alias("qid"),
-                 F.col("emb").alias("qv")))
-    cos = cosine(F.col("emb"), F.col("qv"))
-    wr = W.partitionBy("qid").orderBy(F.desc("cos"), "vec_id")
-    scored = (emb.crossJoin(F.broadcast(q))
-              .filter(F.col("vec_id") != F.col("qid"))
-              .select("qid", "vec_id", F.col("label").alias("rlabel"),
-                      F.round(cos, 6).alias("cos"))
-              .withColumn("rank", F.row_number().over(wr))
-              .filter(F.col("rank") <= _IR_K))
-    ws = (W.partitionBy("qid", "rlabel").orderBy("rank")
-          .rowsBetween(W.unboundedPreceding, -1))
-    seen = scored.withColumn("prior", F.count("*").over(ws))
-    gain = F.when(F.col("prior") >= 10, F.lit(1))
-    for s in range(9, -1, -1):
-        gain = F.when(F.col("prior") == s, F.lit(2 ** (10 - s))) \
-                .otherwise(gain)
-    wcase = F.lit(0)
-    for r, wgt in enumerate(_DCG_W):
-        wcase = F.when(F.col("rank") == r + 1, F.lit(wgt)).otherwise(wcase)
-    return (seen.groupBy(F.col("qid").alias("query_id"))
-            .agg(F.count_distinct("rlabel").cast("long")
-                  .alias("n_subtopics_10"),
-                 F.sum((gain * wcase).cast("long")).cast("long")
-                  .alias("alpha_dcg_s"))
-            .orderBy("query_id"))
 
 
 # ===========================================================================

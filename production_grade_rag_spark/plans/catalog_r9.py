@@ -37,17 +37,17 @@ oracle each:
   — statistical tests with all-integer decisions.
 - engine: ann_backend='lsh' (MLlib BRP-LSH) + eng_lsh_recall.
 
-Registered after catalog_r8b so the driver's existing correctness
-window is unchanged (REGISTRATION ORDER IS LOAD-BEARING — see
-plans/catalog.py).
+The retrieval entries named here (r9_*, eng_*, ir5, ir7) now live in
+plans/retrieval.py.
+
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _t, register
+from .registry import _t, register
 from ..session import materialize
 
 
@@ -152,157 +152,6 @@ def cc_release_funnel_approx(spark: SparkSession, d: str) -> DataFrame:
                                    F.col("docs").cast("double") * 0.01))
                     .alias("approx_ok"))
             .orderBy("stage_no"))
-
-
-# ===========================================================================
-# Adaptive multi-probe as the engine DEFAULT (VERDICT r8 #5)
-# ===========================================================================
-
-@register("eng_ivfpq_adaptive_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def eng_ivfpq_adaptive_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Engine-level recall gate for the NEW DEFAULT operating point:
-    SparkRagEngine.search with ann_backend='ivfpq' and everything
-    else at EngineConfig defaults — which now means adaptive
-    multi-probe (ann_mass_target=0.8, floor ann_n_probe=4) with the
-    shortlist scaled by the achieved probe count — must keep
-    recall@10 >= 0.9 vs the exact backend.  This is the gate the r8
-    verdict asked to pin the default flip with: the stress tiers
-    showed fixed p16 at 0.695 multi-query recall vs adaptive t0.8 at
-    0.97, so 0.8-mass probing is the right default for a store whose
-    query stream contains ambiguous (between-cell) queries; the
-    eng_ivfpq_recall entry keeps gating the explicit fixed-knob
-    configuration (its floor=16 makes adaptive a superset there)."""
-    from ..config import EngineConfig
-    from ..engine import SparkRagEngine
-    from .catalog_more import _recall_summary
-    from .catalog_r7 import _ivfpq_store32
-    from .oracle_vec import QUERY_VEC
-    emb = _t(spark, d, "embeddings")
-    path = _ivfpq_store32(spark, d)
-    exact = SparkRagEngine(spark).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    approx = SparkRagEngine(spark, EngineConfig(
-        ann_backend="ivfpq", ann_store_path=path)).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.9)
-
-
-# ===========================================================================
-# Bitext mining, IVF candidate generation (VERDICT r8 #2): the 100 TB
-# path of r9_bitext_pairs as CODE, not prose
-# ===========================================================================
-
-_BITEXT_K = 8          # ANN candidates per query per direction
-_BITEXT_LISTS = 8
-_BITEXT_PROBE = 4
-
-
-def _bitext_ivf_frame(spark: SparkSession, d: str,
-                      n_lists: int = _BITEXT_LISTS,
-                      n_probe: int = _BITEXT_PROBE,
-                      k: int = _BITEXT_K,
-                      cents_a=None, cents_b=None) -> DataFrame:
-    """Margin-based bitext mining over IVF-generated candidates: the
-    all-pairs stage of r9_bitext_pairs (catalog_r8) replaced by
-    ivf_knn_join candidate generation PER SIDE — each query scores
-    n_probe/n_lists of the other side instead of all of it, so the
-    pair stage is corpus-linear where the exact form is quadratic
-    (at the 10x stress tier the exact form is 1e10 pairs — not
-    runnable; this one is).  Downstream margin/mutual logic is the
-    exact entry's, evaluated over the candidate set: top-4
-    neighborhood averages (Artetxe & Schwenk 2019's ratio margin)
-    and mutual-best election.  Recall vs the exact mutual-best set
-    is gated by r9_bitext_ivf_recall (the dd_semdedup_recall
-    pattern); at 100 TB the two KMeans fits are the offline store
-    layouts both language sides already maintain (ivf_build_store),
-    so candidate generation reads cell-pruned partitions.
-
-    Crossover honesty (STRESS_r09): at catalog-tier side sizes
-    (hundreds to low thousands of rows) the exact broadcast
-    all-pairs form is FASTER — the two KMeans fits dominate.  The
-    IVF form wins once |A| x |B| outgrows the one-off fit cost
-    (which prebuilt stores amortize to zero — ``cents_a``/``cents_b``
-    accept those prebuilt layouts and the stress ledger times the
-    prefit form separately); the stress ledger
-    reports exact scored pairs growing ~100x across a 10x tier
-    while the candidate set stays k-per-query bounded."""
-    from ..functions.vector import to_double_array
-    from ..operators.similarity import ivf_knn_join
-    emb = _t(spark, d, "embeddings")
-    A = (emb.filter(F.col("label") == 0)
-         .select(F.col("vec_id").alias("a_id"),
-                 to_double_array(F.col("embedding")).alias("av")))
-    B = (emb.filter(F.col("label") == 1)
-         .select(F.col("vec_id").alias("b_id"),
-                 to_double_array(F.col("embedding")).alias("bv")))
-    ab = (ivf_knn_join(A, B, k=k, n_lists=n_lists,
-                       n_probe=n_probe, q_vec="av", q_id="a_id",
-                       c_vec="bv", c_id="b_id", centroids=cents_b)
-          .select(F.col("query_id").alias("a_id"),
-                  F.col("result_id").alias("b_id"),
-                  F.round("score", 6).alias("cos")))
-    ba = (ivf_knn_join(B, A, k=k, n_lists=n_lists,
-                       n_probe=n_probe, q_vec="bv", q_id="b_id",
-                       c_vec="av", c_id="a_id", centroids=cents_a)
-          .select(F.col("result_id").alias("a_id"),
-                  F.col("query_id").alias("b_id"),
-                  F.round("score", 6).alias("cos")))
-    pairs = ab.unionByName(ba).distinct()
-    wa = Window.partitionBy("a_id").orderBy(F.desc("cos"), "b_id")
-    wb = Window.partitionBy("b_id").orderBy(F.desc("cos"), "a_id")
-    a4 = (pairs.withColumn("rka", F.row_number().over(wa))
-          .filter(F.col("rka") <= 4)
-          .groupBy("a_id").agg(F.avg("cos").alias("avg_a")))
-    b4 = (pairs.withColumn("rkb", F.row_number().over(wb))
-          .filter(F.col("rkb") <= 4)
-          .groupBy("b_id").agg(F.avg("cos").alias("avg_b")))
-    m = (pairs.join(a4, "a_id").join(b4, "b_id")
-         .withColumn("margin",
-                     F.round(F.col("cos")
-                             / ((F.col("avg_a") + F.col("avg_b"))
-                                / F.lit(2.0)), 6)))
-    wma = Window.partitionBy("a_id").orderBy(F.desc("margin"), "b_id")
-    wmb = Window.partitionBy("b_id").orderBy(F.desc("margin"), "a_id")
-    return (m.withColumn("best_a", F.row_number().over(wma))
-            .withColumn("best_b", F.row_number().over(wmb))
-            .filter((F.col("best_a") == 1) & (F.col("best_b") == 1))
-            .select("a_id", "b_id", "cos", "margin"))
-
-
-@register("r9_bitext_ivf")   # rows-only: approximate by design
-def r9_bitext_ivf(spark: SparkSession, d: str) -> DataFrame:
-    """IVF-candidate bitext mining — the scale form of
-    r9_bitext_pairs; recall vs the exact mutual-best set gated by
-    r9_bitext_ivf_recall."""
-    return _bitext_ivf_frame(spark, d)
-
-
-def _bitext_ivf_recall_oracle() -> str:
-    from .catalog_r8 import _bitext_oracle
-    return f"""
-WITH exact_pairs AS ({_bitext_oracle()})
-SELECT count(*)::BIGINT AS n_exact, TRUE AS floor_met
-FROM exact_pairs
-"""
-
-
-@register("r9_bitext_ivf_recall", oracle=_bitext_ivf_recall_oracle())
-def r9_bitext_ivf_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Recall gate for the IVF bitext path with a data-dependent
-    oracle: n_exact is DuckDB's own count of the exact mutual-best
-    pair set (not a pinned constant), and floor_met gates the IVF
-    path's recovery of those pairs at >= 0.7 (k=8 candidates per
-    direction, 4/8 cells probed; measured 0.97 at BOTH
-    sf0.001/sf0.01 — cross-cell misses and truncated top-4
-    neighborhoods are the designed loss, exactly the
-    dd_semdedup_recall trade)."""
-    from .catalog_more import _recall_summary
-    from .catalog_r8 import r9_bitext_pairs
-    exact = r9_bitext_pairs(spark, d).select("a_id", "b_id")
-    approx = _bitext_ivf_frame(spark, d).select("a_id", "b_id")
-    return _recall_summary(exact, approx, ["a_id", "b_id"], floor=0.7)
 
 
 # ===========================================================================
@@ -636,64 +485,6 @@ def w12_curriculum_interleave(spark: SparkSession, d: str) -> DataFrame:
         "doc_id", "bucket", "rank_in_bucket",
         (F.col("rank_in_bucket") * 10 + F.col("bucket"))
         .alias("curriculum_pos"))
-
-
-# ===========================================================================
-# Paired sign test between rankers — the significance read on top of
-# the ir3 Matryoshka cost table
-# ===========================================================================
-
-def _ir5_oracle() -> str:
-    from .catalog_r8 import _ir_cte_parts
-    return ("WITH " + _ir_cte_parts(None, "_f") + ", "
-            + _ir_cte_parts(16, "_t") + """
-, j AS (
-  SELECT f.query_id, f.ndcg_10 AS ndcg_full, t.ndcg_10 AS ndcg_dim16
-  FROM perq_f f JOIN perq_t t USING (query_id)
-)
-SELECT count(*)::BIGINT AS n_queries,
-       CAST(sum((ndcg_full > ndcg_dim16)::INT) AS BIGINT) AS full_wins,
-       CAST(sum((ndcg_full < ndcg_dim16)::INT) AS BIGINT) AS dim16_wins,
-       CAST(sum((ndcg_full = ndcg_dim16)::INT) AS BIGINT) AS ties,
-       round(sum(CAST(round(ndcg_full * 1000000) AS BIGINT)
-               - CAST(round(ndcg_dim16 * 1000000) AS BIGINT))::DOUBLE
-             / (count(*) * 1000000)::DOUBLE, 6) AS mean_ndcg_delta
-FROM j
-""")
-
-
-@register("ir5_sign_test", oracle=_ir5_oracle())
-def ir5_sign_test(spark: SparkSession, d: str) -> DataFrame:
-    """Paired per-query SIGN TEST between the full-64-dim ranker and
-    the 16-dim Matryoshka truncation: wins / losses / ties over the
-    shared eval-query set plus the mean per-query nDCG delta — the
-    standard IR-evaluation significance read (a macro-average delta
-    like ir3's can hide that one ranker wins on a handful of queries
-    and loses everywhere else; the win/loss split is what a paired
-    test actually consumes).  Comparisons are over the 6-dp-rounded
-    nDCG both engines derive from exact integer DCG sums, so
-    equality (a TIE) is engine-stable — no float-comparison lottery —
-    and the mean delta is summed on the 1e-6 integer grid (the ir2
-    convention) so even the summation order cannot move a digit.
-
-    Plan: the two _ir_per_query passes the ir3 entry already pays,
-    one query_id equi-join (eval-set sized), one 1-row aggregate."""
-    from .catalog_r8 import _ir_per_query
-    f = _ir_per_query(spark, d).select(
-        "query_id", F.col("ndcg_10").alias("ndcg_full"))
-    t = _ir_per_query(spark, d, dim=16).select(
-        "query_id", F.col("ndcg_10").alias("ndcg_dim16"))
-    j = f.join(t, "query_id")
-    full, dim = F.col("ndcg_full"), F.col("ndcg_dim16")
-    return j.agg(
-        F.count("*").alias("n_queries"),
-        F.sum((full > dim).cast("int")).cast("long").alias("full_wins"),
-        F.sum((full < dim).cast("int")).cast("long").alias("dim16_wins"),
-        F.sum((full == dim).cast("int")).cast("long").alias("ties"),
-        F.round(F.sum(F.round(full * 1000000).cast("long")
-                      - F.round(dim * 1000000).cast("long")).cast("double")
-                / (F.count("*") * 1000000).cast("double"), 6)
-         .alias("mean_ndcg_delta"))
 
 
 # ===========================================================================
@@ -1550,116 +1341,6 @@ def _census_from_und(und: DataFrame) -> DataFrame:
                     F.round(F.col("n_triangles").cast("double") * 3
                             / F.col("n_wedges").cast("double"), 6)
                      .alias("global_clustering")))
-
-
-# ===========================================================================
-# Kendall rank correlation between the full-dim and Matryoshka
-# rankings — the pairwise-order read ir3's macro averages hide
-# ===========================================================================
-
-def _ir7_oracle() -> str:
-    from .catalog_r8 import _IR_K, _ir_cte_parts
-    return ("\nWITH " + _ir_cte_parts() + ","
-            + _ir_cte_parts(dim=16, sfx="t") + f""",
-ta AS (
-  SELECT qid, rid, rank FROM scored WHERE rank <= {_IR_K}
-), tb AS (
-  SELECT qid, rid, rank FROM scoredt WHERE rank <= {_IR_K}
-), cm AS (
-  SELECT ta.qid, ta.rid, ta.rank AS ra, tb.rank AS rb
-  FROM ta JOIN tb ON tb.qid = ta.qid AND tb.rid = ta.rid
-), pr AS (
-  SELECT a.qid,
-         CAST(sum(((a.ra - b.ra) * (a.rb - b.rb) > 0)::INT) AS BIGINT)
-           AS concordant,
-         CAST(sum(((a.ra - b.ra) * (a.rb - b.rb) < 0)::INT) AS BIGINT)
-           AS discordant
-  FROM cm a JOIN cm b ON b.qid = a.qid AND a.rid < b.rid
-  GROUP BY a.qid
-), base AS (
-  SELECT qid, count(*)::BIGINT AS n_common FROM cm GROUP BY qid
-)
-SELECT b.qid AS query_id, b.n_common,
-       coalesce(p.concordant, 0)::BIGINT AS concordant,
-       coalesce(p.discordant, 0)::BIGINT AS discordant,
-       CASE WHEN b.n_common < 2 THEN 0.0::DOUBLE
-            ELSE round((coalesce(p.concordant, 0)
-                        - coalesce(p.discordant, 0))::DOUBLE * 2
-                       / (b.n_common * (b.n_common - 1))::DOUBLE, 6)
-       END AS kendall_tau
-FROM base b LEFT JOIN pr p ON p.qid = b.qid
-ORDER BY b.qid
-""")
-
-
-@register("ir7_kendall_tau", oracle=_ir7_oracle())
-def ir7_kendall_tau(spark: SparkSession, d: str) -> DataFrame:
-    """Kendall rank correlation (Kendall 1938, public) between the
-    full-64-dim and dim-16 Matryoshka top-10 rankings, per query,
-    over the items BOTH rankings retrieved: the pairwise-order read
-    that ir3 (metric deltas) and ir5 (sign test) both hide — two
-    rankings can have identical nDCG yet serve results in a visibly
-    different order, and tau is the standard number for that.
-
-    Exactness: ranks are small distinct integers, so concordant /
-    discordant pair counts are exact integer sums and tau =
-    2(C - D)/(m(m-1)) divides once for display (no-tie form — ranks
-    within a top-10 are unique by construction).
-
-    Scale shape: both rankings reuse the ir1 plan (eval queries
-    broadcast, per-query TakeOrdered); the common-item join is keyed
-    by (qid, rid) and the pair join fans out <= K² = 100 rows per
-    query — eval-set-sized, never corpus-sized."""
-    from pyspark.sql import Window as W
-    from ..functions.vector import cosine, to_double_array
-    from .catalog_r8 import _IR_K
-
-    emb = _t(spark, d, "embeddings")
-
-    def top(dim):
-        vec = (to_double_array(F.col("embedding")) if dim is None
-               else F.slice(to_double_array(F.col("embedding")), 1, dim))
-        q = (emb.filter(F.pmod(F.col("vec_id"), F.lit(50)) == 7)
-             .select(F.col("vec_id").alias("qid"), vec.alias("qv")))
-        pairs = (emb.select(F.col("vec_id").alias("rid"), vec.alias("cv"))
-                 .crossJoin(F.broadcast(q))
-                 .filter(F.col("rid") != F.col("qid")))
-        w = W.partitionBy("qid").orderBy(
-            F.round(cosine(F.col("cv"), F.col("qv")), 6).desc(),
-            F.col("rid"))
-        return (pairs.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= _IR_K)
-                .select("qid", "rid", "rank"))
-
-    ta = top(None).withColumnRenamed("rank", "ra")
-    tb = top(16).withColumnRenamed("rank", "rb")
-    cm = ta.join(tb, ["qid", "rid"])
-    a, b = cm.alias("a"), cm.alias("b")
-    sgn = ((F.col("a.ra") - F.col("b.ra"))
-           * (F.col("a.rb") - F.col("b.rb")))
-    pr = (a.join(b, (F.col("b.qid") == F.col("a.qid"))
-                 & (F.col("a.rid") < F.col("b.rid")))
-          .groupBy(F.col("a.qid").alias("qid"))
-          .agg(F.sum((sgn > 0).cast("int")).cast("long")
-               .alias("concordant"),
-               F.sum((sgn < 0).cast("int")).cast("long")
-               .alias("discordant")))
-    base = cm.groupBy("qid").agg(F.count("*").alias("n_common"))
-    m = F.col("n_common")
-    return (base.join(pr, "qid", "left")
-            .select(F.col("qid").alias("query_id"), "n_common",
-                    F.coalesce("concordant", F.lit(0)).cast("long")
-                     .alias("concordant"),
-                    F.coalesce("discordant", F.lit(0)).cast("long")
-                     .alias("discordant"),
-                    F.when(m < 2, F.lit(0.0))
-                     .otherwise(F.round(
-                         (F.coalesce("concordant", F.lit(0))
-                          - F.coalesce("discordant", F.lit(0)))
-                         .cast("double") * 2
-                         / (m * (m - 1)).cast("double"), 6))
-                     .alias("kendall_tau"))
-            .orderBy("query_id"))
 
 
 # ===========================================================================
@@ -2775,42 +2456,6 @@ def a24_sampled_join_estimate(spark: SparkSession, d: str) -> DataFrame:
                       - F.sum("contrib")).cast("double")
                 / F.sum("contrib").cast("double"), 6).alias("rel_err"))
 
-# ===========================================================================
-# Engine LSH backend gate — the fourth ANN backend behind the same
-# search API (exact / ivf / ivfpq / now lsh)
-# ===========================================================================
-
-@register("eng_lsh_recall", oracle="""
-SELECT 10::BIGINT AS n_exact, TRUE AS floor_met
-""")
-def eng_lsh_recall(spark: SparkSession, d: str) -> DataFrame:
-    """Engine-level gate for ann_backend='lsh' (MLlib
-    BucketedRandomProjectionLSH, Datar et al. 2004 — random
-    projection buckets, public): SparkRagEngine.search with the LSH
-    backend must keep recall >= 0.6 vs the exact backend at the
-    default knobs (8 tables, bucket length 2.0) — proving the fourth
-    backend drives the SAME search API end to end with
-    backend-agnostic columns.  On the hash corpus's normalized
-    embeddings, Euclidean bucket pruning preserves cosine order, so
-    the only loss is bucket misses — which more tables buy back
-    (the n_probe analog, stated in EngineConfig).
-
-    Scale shape: the fit is numTables random projections (no
-    training data pass beyond one projection matrix broadcast);
-    the query prunes to same-bucket candidates before the exact
-    distance sort — sublinear candidate scans at corpus scale where
-    exact is a full scan per query."""
-    from ..config import EngineConfig
-    from ..engine import SparkRagEngine
-    from .catalog_more import _recall_summary
-    from .oracle_vec import QUERY_VEC
-    emb = _t(spark, d, "embeddings")
-    exact = SparkRagEngine(spark).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    approx = SparkRagEngine(spark, EngineConfig(
-        ann_backend="lsh")).search(
-        emb, query_vector=QUERY_VEC, limit=10, id_col="vec_id")
-    return _recall_summary(exact, approx, ["vec_id"], floor=0.6)
 
 # ===========================================================================
 # Markov removal-effect attribution — multi-touch attribution over
@@ -3507,7 +3152,6 @@ def g8_hub_attack(spark: SparkSession, d: str) -> DataFrame:
     Scale shape: the kNN build is the documented exact/ivf swap
     (_g6_und); degree count partial-aggregates; the attack is two
     broadcast-able anti-joins against an {H}-row hub list."""
-    from pyspark.sql import functions as _F
     und = _g6_und(spark, d)
     ends = (und.select(F.col("u").alias("node"))
             .unionAll(und.select(F.col("v").alias("node"))))
@@ -3596,7 +3240,6 @@ def ta_pmi_pairs(spark: SparkSession, d: str) -> DataFrame:
     against itself RESTRICTED to head tokens (two broadcast
     semi-joins, then a doc-keyed equi-join), so the join input is
     corpus x {top}/vocab-share, not corpus²."""
-    from pyspark.sql import Window as W
     from ..operators.dedup import tokens
     docs = _t(spark, d, "documents")
     dt = (docs.select("doc_id", F.explode(tokens(F.col("text")))
@@ -4068,7 +3711,6 @@ def a29_equidepth_histogram(spark: SparkSession, d: str) -> DataFrame:
     ta_perplexity_approx gate pattern applies verbatim), one
     conditional-count scan against the broadcast {B}-row boundary
     table."""
-    from pyspark.sql import Window as W
     orders = _t(spark, d, "orders")
     v = orders.select(F.round(F.col("o_totalprice") * 100).cast("long")
                       .alias("cents"))
@@ -4286,7 +3928,6 @@ _T40_LENS = (512, 1024, 2048, 4096)
 
 def _t40_oracle() -> str:
     from .catalog_r8 import _N_SHARDS
-    from . import oracle_sql as O  # noqa: F401  (convention import)
     per_len = " UNION ALL ".join(
         f"""SELECT {L}::BIGINT AS seq_len,
        CAST(sum((toks + {L - 1}) // {L}) AS BIGINT) AS n_sequences,

@@ -152,3 +152,27 @@ SELECT md5(doc_id::VARCHAR || '_' || chunk_index::VARCHAR || '_' || substr(raw_c
 FROM raw
 WHERE length({pystrip_sql('raw_chunk')}) >= {min_chars}
 """
+
+
+# Fixed-stride parent/child hierarchy (chunking.chunk_parent_child_fixed:
+# 2000-char parents at stride 1600, 400-char children at stride 300) as
+# the CTE chain parents -> p2 -> p3 that its oracles select from.
+PARENT_CHILD_FIXED_CTE = """
+WITH parents AS (
+  SELECT doc_id, p_idx::INT AS p_idx,
+         substr(text, p_idx::INT * 1600 + 1, 2000) AS p_content
+  FROM documents, LATERAL unnest(range(0,
+    CASE WHEN length(text) = 0 THEN 0
+         ELSE (length(text) - 1) // 1600 + 1 END)) AS t(p_idx)
+), p2 AS (
+  SELECT *, (CASE WHEN length(p_content) = 0 THEN 0
+                  ELSE (length(p_content) - 1) // 300 + 1 END)::INT AS child_count
+  FROM parents
+), p3 AS (
+  SELECT *, coalesce(sum(child_count + 1) OVER (
+              PARTITION BY doc_id ORDER BY p_idx
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::INT AS p_global,
+         doc_id || '_parent_' || p_idx AS parent_id
+  FROM p2
+)
+"""

@@ -21,9 +21,6 @@ def first_sentence(doc: str | None) -> str:
 
 
 def main() -> None:
-    import importlib
-    for m in ("catalog", "catalog_ext", "catalog_more", "catalog_r6"):
-        importlib.import_module(f"production_grade_rag_spark.plans.{m}")
     from production_grade_rag_spark.plans.catalog import CATALOG
 
     n_oracle = sum(1 for s in CATALOG.values() if s.oracle is not None)

@@ -8,7 +8,7 @@ comparison so oracle-type bugs surface before the round snapshot.
 
 Usage:
     python scripts/driver_check.py [query_name ...]      # default: all
-    python scripts/driver_check.py --since catalog_r13[,catalog_r12...]
+    python scripts/driver_check.py --since retrieval[,catalog_r14...]
         run only the entries REGISTERED BY the named catalog module(s)
         (matched against each builder fn's __module__ basename) — the
         fast smoke for a new module before the full sweep (VERDICT r12
@@ -58,7 +58,7 @@ def _select_names(argv: list[str], queries: dict) -> list[str]:
     if argv and argv[0] == "--since":
         if len(argv) < 2:
             raise SystemExit("--since needs a module list, "
-                             "e.g. --since catalog_r13")
+                             "e.g. --since retrieval")
         wanted = {m.strip() for m in argv[1].split(",") if m.strip()}
         names = [n for n, fn in queries.items()
                  if getattr(fn, "__module__", "").rsplit(".", 1)[-1]

@@ -859,7 +859,7 @@ def main() -> None:
     # per ADVICE r9).  The ratio then reads the operator's own
     # corpus-linear scaling — the default entry's eval set grows
     # WITH the corpus, making scored pairs grow 100x across tiers ---
-    from production_grade_rag_spark.plans.catalog_r8 import _ir_per_query
+    from production_grade_rag_spark.plans.retrieval import _ir_per_query
     n_fixed = min(100, _ir_per_query(spark, SF_DIR).count())
 
     def _eval_fingerprint(d: str):
@@ -893,9 +893,8 @@ def main() -> None:
     # ~probe-fraction-linearly; at these toy sizes the two KMeans
     # fits dominate IVF wall-clock — the crossover argument is the
     # PAIR ledger below, reported honestly, not the wall-clock ------
-    from production_grade_rag_spark.plans.catalog_r8 import r9_bitext_pairs
-    from production_grade_rag_spark.plans.catalog_r9 import \
-        _bitext_ivf_frame
+    from production_grade_rag_spark.plans.retrieval import (
+        _bitext_ivf_frame, r9_bitext_pairs)
     for tag, d in (("1x", SF_DIR), ("10x", STRESS_DIR)):
         n, t = _timed_steady(
             lambda d=d: r9_bitext_pairs(spark, d).count())

@@ -261,33 +261,9 @@ def test_epoch_write_replay_is_idempotent(spark, tmp_path):
 # r15 optimization pins: the factored query-cosine (materialized cast,
 # driver-side query norm) is BIT-identical to the inline
 # cosine(to_double_array(embedding), qvec) it replaced — every corpus
-# row, packed-double comparison, both the catalog_ext frame helper and
-# the knn_topk operator path.
+# row, packed-double comparison, on the knn_topk operator path (the
+# frame helper's pin is in tests/test_retrieval.py).
 # ---------------------------------------------------------------------------
-
-def test_with_cosine_q_bit_identical(spark):
-    import struct
-
-    from pyspark.sql import functions as F
-
-    from production_grade_rag_spark.functions.vector import (cosine,
-                                                             to_double_array)
-    from production_grade_rag_spark.plans import catalog  # noqa: F401
-    from production_grade_rag_spark.plans.catalog_ext import (_qvec_col,
-                                                              with_cosine_q)
-    from production_grade_rag_spark.sources import load_table
-
-    emb = load_table(spark, SF001, "embeddings")
-    old = emb.select("vec_id", cosine(to_double_array(F.col("embedding")),
-                                      _qvec_col()).alias("s")) \
-             .orderBy("vec_id").collect()
-    new = with_cosine_q(emb).select("vec_id", F.col("__cos_q").alias("s")) \
-                            .orderBy("vec_id").collect()
-    assert len(old) == len(new) > 0
-    for a, b in zip(old, new):
-        assert a["vec_id"] == b["vec_id"]
-        assert struct.pack("<d", a["s"]) == struct.pack("<d", b["s"])
-
 
 def test_knn_topk_factored_bit_identical(spark):
     import struct

@@ -262,7 +262,7 @@ def test_recall_summary_gate_actually_trips(spark):
     itself works: a degraded approx set must flip floor_met to False,
     a healthy one must pass, and n_exact must be the exact-side count
     (what the oracles value-check)."""
-    from production_grade_rag_spark.plans.catalog_more import (
+    from production_grade_rag_spark.plans.retrieval import (
         _recall_summary)
     exact = spark.createDataFrame([(i,) for i in range(10)], "vec_id long")
     good = spark.createDataFrame([(i,) for i in range(6)], "vec_id long")
